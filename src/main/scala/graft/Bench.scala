@@ -48,6 +48,7 @@ object Bench {
       // measured pass re-COMPILES code the warmup already compiled
       // (measured ~2s inflation on the widest aggregate).
       .config("spark.sql.codegen.cache.maxEntries", "4000")
+      .config(Tables.NanosAsLong, "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark

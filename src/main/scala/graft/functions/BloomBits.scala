@@ -19,9 +19,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * (idx_i = (a + i·b) mod m) over the two 32-bit halves `(a, b)` of
   * `xxhash64(key)` — one codegen'd non-cryptographic hash per key
   * (`a = h >>> 32`, `b = h & 0xffffffff`), so the probe side can
-  * rebuild every index with BUILTIN column arithmetic (pmod +
-  * element_at + bitwiseAND against a power-of-two literal array — no
-  * UDF on the probe path, stays in codegen).
+  * rebuild every index in the native [[BloomMightContain]] expression
+  * (no UDF on the probe path, stays in codegen).
   * `a, b < 2^32` and `i < K`, so `a + i·b < 2^35` — no overflow.
   *
   * Why a Bloom aggregate at 100 TB: the buffer is a CONSTANT m/64

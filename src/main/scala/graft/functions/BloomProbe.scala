@@ -4,12 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Probe-side companion of [[BloomBits]]: rebuilds the aggregator's
-  * Kirsch–Mitzenmacher bit positions with BUILTIN column arithmetic
-  * (pmod + element_at + bitwiseAND against a power-of-two literal
-  * array), so a Bloom probe over a broadcast/literal bitset stays
-  * entirely inside whole-stage codegen — no UDF on the hot path.
-  * Factored out of the inline form [[graft.queries.LlmDedup.bloomDedup]]
-  * pioneered so join prefilters and specs share one definition. */
+  * Kirsch–Mitzenmacher bit positions inside the native
+  * [[BloomMightContain]] expression (the bitset is a constructor field,
+  * not an array literal), so a Bloom probe stays entirely inside
+  * whole-stage codegen — no UDF on the hot path. Factored out of the
+  * inline form [[graft.queries.LlmDedup.bloomDedup]] pioneered so join
+  * prefilters and specs share one definition. */
 object BloomProbe {
 
   /** Unsigned 32-bit halves (a, b) of xxhash64 over the key column(s) —

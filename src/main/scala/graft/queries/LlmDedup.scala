@@ -721,11 +721,13 @@ object LlmDedup {
     // Batch side: the dedup rides a doc_id repartition instead — the
     // per-doc gram-count agg below (bsz) then reuses that partitioning
     // exchange-free, and per-doc locality is bounded by document length
-    // (no corpus-hot key class on this side).
+    // (no corpus-hot key class on this side). `hot` is pinned broadcast:
+    // a sort-merge anti join would re-shuffle bs on (a, b) and cost bsz
+    // a fresh doc_id exchange. It is bounded by the over-cap key count.
     val bs = hashedGrams(bd)
       .repartition(col("doc_id"))
       .dropDuplicates("doc_id", "a", "b")
-      .join(hot, Seq("a", "b"), "left_anti").persist(sl)
+      .join(broadcast(hot), Seq("a", "b"), "left_anti").persist(sl)
     val csz = cs.groupBy(col("doc_id")).agg(count(lit(1)).as("cn"))
     val bsz = bs.groupBy(col("doc_id")).agg(count(lit(1)).as("bn"))
     val sh = bs.select(col("doc_id").as("batch_id"), col("a"), col("b"))

@@ -18,6 +18,7 @@ object ExchangeCount {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.Tables.NanosAsLong, "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted

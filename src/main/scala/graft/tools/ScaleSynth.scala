@@ -33,6 +33,7 @@ object ScaleSynth {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.Tables.NanosAsLong, "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -14,6 +14,7 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    .config(Tables.NanosAsLong, "true")
     .getOrCreate()
 
   val sf0001 = "/root/testdata/sf0.001"

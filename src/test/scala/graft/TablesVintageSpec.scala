@@ -61,4 +61,40 @@ class TablesVintageSpec extends SparkSpec {
     assert(df.schema("ts").dataType == TimestampType)
     assert(df.limit(1).count() == 1)
   }
+
+  test("parquet TIMESTAMP(NANOS) loads under the session conf and fails without it") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft_vintage_nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(dir.resolve("events.parquet").toString))
+      .withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try micros.foreach(m => w.write(rows.newGroup().append("ts", m * 1000L)))
+    finally w.close()
+
+    val got = loadEvents(dir).map(ts => ts.getTime / 1000 * 1000000 + ts.getNanos / 1000)
+    assert(got == micros.sorted)
+
+    val bare = spark.newSession()
+    bare.conf.set(Tables.NanosAsLong, "false")
+    val e = intercept[IllegalStateException](Tables.load(bare, dir.toString, "events"))
+    assert(e.getMessage.contains(Tables.NanosAsLong))
+  }
+
+  test("events.ts that is neither a timestamp nor INT64 nanos fails the load") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vintage_string")
+    Seq("2024-01-01 00:00:00").toDF("ts")
+      .write.parquet(dir.resolve("events.parquet").toString)
+    val e = intercept[IllegalStateException](Tables.load(spark, dir.toString, "events"))
+    assert(e.getMessage.contains("events.ts"))
+  }
+
+  test("an unknown table name fails the load") {
+    val e = intercept[IllegalArgumentException](Tables.load(spark, sf0001, "lineitems"))
+    assert(e.getMessage.contains("lineitems"))
+  }
 }
