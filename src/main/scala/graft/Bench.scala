@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with per-query wall seconds.
   *
   * Methodology (fixes the r1 harness flaws flagged in VERDICT.md):
@@ -15,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   *    rounds);
   *  - a failing query reports in `errors` instead of producing a bogus
   *    fast time;
-  *  - UTC session, AQE on, shuffle partitions = cores (local mode).
+  *  - the shared [[Tables.session]] (UTC, AQE on, shuffle partitions =
+  *    cores, local mode), the same one [[One]] and the plan tools use.
   *
   * Self-defense against contended measurement (r15 verdict item 2: ~19
   * queries inflated 1.3-1.8x by box-wide load, diagnosable only by
@@ -31,29 +30,6 @@ import org.apache.spark.sql.SparkSession
   * a regression is visible in the artifact itself, not a rerun later.
   */
 object Bench {
-
-  /** The measurement session, shared with [[One]] so isolated timings
-    * stay comparable with bench numbers. */
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Default generated-class cache holds 100 entries; 50+ queries x
-      // several codegen units evict each other, so without this the
-      // measured pass re-COMPILES code the warmup already compiled
-      // (measured ~2s inflation on the widest aggregate).
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config(Tables.NanosAsLong, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Contention discriminator: loadavg can't tell the bench's OWN
@@ -83,7 +59,8 @@ object Bench {
         }.toMap.filterNot { case (k, _) => k == "pass_loadavg" }
       } catch { case _: Throwable => Map.empty }
 
-    val spark = session("graft-bench")
+    val spark = Tables.session("graft-bench")
+    spark.sparkContext.setLogLevel("ERROR")
 
     val names = SparkEntry.queries.keys.toSeq.sorted
 
@@ -146,7 +123,7 @@ object Bench {
           // time with an empty errors map (the header contract).
           if (!retry || !passTimes.contains(name)) {
             if (!retry) { passTimes.remove(name): Unit }
-            errors(name) = err.take(200).replaceAll("[\"\\\\\n\r\t]", " ")
+            errors(name) = err.take(200)
           }
       }
     }
@@ -196,7 +173,7 @@ object Bench {
     def f3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     val qs = times.map { case (k, v) => s""""$k":${f3(v)}""" }
       .mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => s""""$k":${Serve.jstr(v)}""" }.mkString("{", ",", "}")
     val total = times.values.sum
     val load = loadavg
     val loadsJson = passLoads

@@ -1,8 +1,9 @@
 package graft
 
-/** Dev tool: run one named query from [[SparkEntry.queries]] with the
-  * Bench session config, print per-iteration wall time (cache cleared
-  * between iterations, like Bench), and optionally the formatted plan.
+/** Dev tool: run one named query from [[SparkEntry.queries]] on the
+  * [[Tables.session]] Bench measures with, print per-iteration wall
+  * time (cache cleared between iterations, like Bench), and optionally
+  * the formatted plan.
   *
   * Usage: runMain graft.One <queryName>[,<queryName>...] [iters] [explain]
   */
@@ -17,7 +18,8 @@ object One {
     val iters = args.drop(1).flatMap(_.toIntOption).headOption.getOrElse(3)
     val explain = args.contains("explain")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Bench.session("graft-one")
+    val spark = Tables.session("graft-one")
+    spark.sparkContext.setLogLevel("ERROR")
 
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -6,6 +6,7 @@ import java.security.KeyStore
 
 import javax.net.ssl.{KeyManagerFactory, SSLContext}
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import com.sun.net.httpserver.{HttpExchange, HttpServer, HttpsConfigurator, HttpsServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -797,7 +798,7 @@ object Serve {
               graft.queries.TextAnalysis.newsSearchHits(
                 spark.table("news"), terms, page, size), size))
           case Some(other) =>
-            (400, s"""{"error":"unknown index ${jstr(other.take(40)).drop(1).dropRight(1)} (use news, or omit for documents)"}""")
+            (400, s"""{"error":${jstr(s"unknown index ${other.take(40)} (use news, or omit for documents)")}}""")
           case None =>
             val ranker = if (p.get("rank").contains("overlap")) "overlap" else "bm25"
             (200, render(
@@ -892,7 +893,7 @@ object Serve {
               if (spark.catalog.tableExists("vocab")) Right(spark.table("vocab"))
               else Left((400, """{"error":"no vocab index registered (run the vocab_index flow with --lake)"}"""))
             case Some(other) =>
-              Left((400, s"""{"error":"unknown index ${jstr(other.take(40)).drop(1).dropRight(1)} (use news, or omit for documents)"}"""))
+              Left((400, s"""{"error":${jstr(s"unknown index ${other.take(40)} (use news, or omit for documents)")}}"""))
             case None => Right(docsVocab) // memoized: one fold per server
           }
           vocab match {
@@ -968,16 +969,10 @@ object Serve {
     "evt_growth_accounting" ->
       ((s, d, f, t) => graft.queries.Growth.growthAccounting(s, d, f, t)))
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** `s` as a JSON string literal, quoted and escaped by jackson-core;
+    * the one escaper behind every hand-assembled JSON body in graft. */
+  private[graft] def jstr(s: String): String =
+    "\"" + String.valueOf(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
 
   def main(args: Array[String]): Unit = {
     val bindAll = args.contains("--bind-all")

@@ -8,6 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * operator from SURVEY.md §2 plus the training-data-pipeline extensions);
   * `oracleSql` carries the DuckDB-equivalent SQL the driver hash-compares
   * against at sf0.01.
+  *
+  * Every query expects a session from [[Tables.session]]. A session built
+  * elsewhere must set `spark.sql.extensions=graft.functions.GraftExtensions`:
+  * the native functions and the as-of join plan layer exist only there.
   */
 object SparkEntry {
 

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZT
 object Tables {
   /** Session conf that reads parquet TIMESTAMP(NANOS) as raw INT64 nanos;
     * without it Spark rejects that type outright (PARQUET_TYPE_ILLEGAL).
-    * Every session builder sets it once; `load` only checks it. */
+    * [[session]] sets it once; `load` only checks it. */
   val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** Each table's declared schema as DDL, in [[names]] order. */
@@ -128,19 +128,36 @@ object Tables {
     }
   }
 
-  /** Common SparkSession config for mains (local mode, UTC, AQE on,
-    * graft's native functions injected via SparkSessionExtensions — the
-    * production registration path; queries also self-register for
-    * sessions built elsewhere). */
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** The one SparkSession builder, for every main, tool and test: local
+    * mode over `cpus` threads and shuffle partitions, UTC, AQE on, UI
+    * off, [[NanosAsLong]], and graft's native functions and plan layer
+    * injected through [[graft.functions.GraftExtensions]] (so every
+    * session, and every `newSession()` clone of it, resolves them).
+    *
+    * Master resolution order: `SPARK_GRAFT_MASTER`, then whatever
+    * spark-submit injected (`spark.master`), then `local[cpus]`. The
+    * first two let the oracle gate re-run under `local-cluster[...]` —
+    * separate executor PROCESSES — to prove no query depends on
+    * shared-JVM state (driver-side locks, object vals) that local[N]
+    * would mask. */
+  def session(appName: String,
+      cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
+    val master = sys.env.get("SPARK_GRAFT_MASTER")
+      .orElse(sys.props.get("spark.master"))
+      .getOrElse(s"local[$cpus]")
     SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Default generated-class cache holds 100 entries; 50+ queries x
+      // several codegen units evict each other, so without this a
+      // measured pass re-COMPILES code the warmup already compiled
+      // (measured ~2s inflation on the widest aggregate).
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config(NanosAsLong, "true")
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,23 +13,7 @@ object Verify {
     val t0 = System.nanoTime()
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Master resolution order: explicit env override, then whatever
-    // spark-submit injected (system property), then local[cpus]. The
-    // first two exist so the gate can be re-run under
-    // local-cluster[2,8,3072] — separate executor PROCESSES — to prove
-    // no query depends on shared-JVM state (driver-side locks, object
-    // vals) that local[N] would mask.
-    val master = sys.env.get("SPARK_GRAFT_MASTER")
-      .orElse(sys.props.get("spark.master"))
-      .getOrElse(s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosAsLong, "true")
-      .getOrCreate()
+    val spark = Tables.session("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Failed queries must be DURABLE in the artifact, not just stderr:
@@ -52,24 +35,15 @@ object Verify {
       // the whole 50+-query session.
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Every string is escaped: a tab or CR in oracle SQL must not make
+    // oracle_sql.json unreadable and silently skip the oracle compare.
+    import Serve.jstr
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.exists(k.contains)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/errors.json"),
-      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      failed.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}"))
     // Environment evidence riding with the artifact (the Bench
     // convention, VERDICT r12 item 8): per-run wall time and start/end
     // 1-min loadavg, so a contended correctness run is diagnosable from
@@ -81,7 +55,7 @@ object Verify {
     val wallSec = (System.nanoTime() - t0) / 1e9
     def f3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     Files.writeString(Paths.get(s"$outDir/run_env.json"),
-      s"""{"sf":${q(sfDir)},"wall_sec":${f3(wallSec)},"loadavg_start":${f3(loadStart)},"loadavg_end":${f3(loadEnd)}}""")
+      s"""{"sf":${jstr(sfDir)},"wall_sec":${f3(wallSec)},"loadavg_start":${f3(loadStart)},"loadavg_end":${f3(loadEnd)}}""")
     spark.stop()
   }
 }

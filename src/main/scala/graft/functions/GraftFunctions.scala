@@ -1,20 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** Registration of graft's native expressions.
+/** graft's native expressions, as `spark.sql.extensions` entries.
   *
-  * Two paths:
-  *  - [[GraftExtensions]] — the production path: set
-  *    `spark.sql.extensions=graft.functions.GraftExtensions` (or
-  *    `builder.withExtensions`) and the functions exist in every session
-  *    derived from that config.
-  *  - [[GraftFunctions.register]] — imperative, idempotent registration
-  *    into an already-running session (used by the query catalog so the
-  *    harness works regardless of who built the session).
+  * [[GraftExtensions]] injects them (with the as-of join plan layer) into
+  * every session [[graft.Tables.session]] builds and every clone of one,
+  * so no query registers anything at run time. A session built elsewhere
+  * must set the extension itself (see [[graft.SparkEntry]]).
   */
 object GraftFunctions {
 
@@ -50,14 +45,6 @@ object GraftFunctions {
     (FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
       binary(CosineSim.apply, "cosine_sim") _))
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    all.foreach { case (ident, _, builder) =>
-      registry.createOrReplaceTempFunction(ident.funcName, builder, "built-in")
-    }
-  }
 }
 
 /** `spark.sql.extensions` entry point: native functions plus the custom

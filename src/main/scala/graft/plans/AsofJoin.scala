@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -18,7 +18,7 @@ import org.apache.spark.sql.graft.PlanShim
   * a range join + per-key max (quadratic in band width). Hence the full
   * custom-plan path from the build plan's preference order (c): logical
   * node → optimizer rule → strategy → physical exec, registered through
-  * `SparkSessionExtensions` / `ExperimentalMethods`.
+  * `SparkSessionExtensions`.
   *
   * Scale design: the physical plan co-partitions both sides on the key
   * (`ClusteredDistribution`) and sorts within partitions by (key, time)
@@ -83,20 +83,9 @@ object AsofJoinStrategy extends SparkStrategy {
   }
 }
 
-/** Registration + DataFrame-level API for graft's custom plans. */
+/** DataFrame-level API for graft's custom plans. The rule and strategy
+  * that plan them ride [[graft.functions.GraftExtensions]]. */
 object GraftPlans {
-
-  /** Idempotently add the rule + strategy to an existing session (the
-    * production path is [[graft.functions.GraftExtensions]] via
-    * `spark.sql.extensions`; this imperative path covers harness-built
-    * sessions, mirroring `GraftFunctions.register`). */
-  def install(spark: SparkSession): Unit = synchronized {
-    val em = spark.experimental
-    if (!em.extraOptimizations.exists(_ eq AsofJoinPruning))
-      em.extraOptimizations ++= Seq(AsofJoinPruning)
-    if (!em.extraStrategies.exists(_ eq AsofJoinStrategy))
-      em.extraStrategies ++= Seq(AsofJoinStrategy)
-  }
 
   /** `left ASOF LEFT JOIN right ON left.leftKey = right.rightKey AND
     * right.rightTime <= left.leftTime`, matching the latest such right
@@ -106,7 +95,6 @@ object GraftPlans {
       leftKey: String, leftTime: String,
       rightKey: String, rightTime: String): DataFrame = {
     val spark = left.sparkSession
-    install(spark)
     val lPlan = PlanShim.analyzed(left)
     var rPlan = PlanShim.analyzed(right)
     // Self-join safety: if the two plans share attribute ids, re-alias

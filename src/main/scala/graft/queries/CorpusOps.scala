@@ -41,7 +41,7 @@ object CorpusOps {
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val g0 = docs
-      .select(col("doc_id"), split(LlmDedup.normText(col("text")), " ").as("t"))
+      .select(col("doc_id"), Text.tokens(col("text")).as("t"))
       .select(col("doc_id"), explode(LlmDedup.shingleCol(col("t"))).as("shingle"))
       .select(col("doc_id"), md5(col("shingle")).as("h"))
       .select(col("doc_id"),
@@ -79,7 +79,7 @@ object CorpusOps {
        |      ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS a,
        |      ('0x' || substr(md5(shingle), 9, 8))::BIGINT AS b
        |    FROM (SELECT doc_id, concat_ws(' ', t[i], t[i+1], t[i+2]) AS shingle
-       |          FROM (SELECT doc_id, string_split(${LlmDedup.normTextSql()}, ' ') AS t
+       |          FROM (SELECT doc_id, ${Text.tokensSql()} AS t
        |                FROM documents),
        |               unnest(range(1, len(t)-1)) AS r(i))),
        |hot AS (SELECT a, b FROM g0 GROUP BY a, b HAVING COUNT(*) > ${LlmDedup.DfCap}),
@@ -110,7 +110,7 @@ object CorpusOps {
   def repetition(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val grams = docs
-      .select(col("doc_id"), split(LlmDedup.normText(col("text")), " ").as("t"))
+      .select(col("doc_id"), Text.tokens(col("text")).as("t"))
       .select(col("doc_id"),
         explode(concat(gramArr(col("t"), 2), gramArr(col("t"), 5))).as("g"))
       .select(col("doc_id"), col("g.kind").as("kind"), col("g.gram").as("gram"))
@@ -148,7 +148,7 @@ object CorpusOps {
   }
 
   val repetitionSql: String =
-    s"""WITH toks AS (SELECT doc_id, string_split(${LlmDedup.normTextSql()}, ' ') AS t
+    s"""WITH toks AS (SELECT doc_id, ${Text.tokensSql()} AS t
        |             FROM documents),
        |g2 AS (SELECT doc_id, 2 AS kind, concat_ws(' ', t[i], t[i+1]) AS gram
        |       FROM toks, unnest(range(1, len(t))) AS r(i)),
@@ -221,7 +221,7 @@ object CorpusOps {
   def packBins(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val d = docs.select(col("lang"), col("doc_id"),
-        size(split(LlmDedup.normText(col("text")), " ")).cast("long").as("toks"),
+        size(Text.tokens(col("text"))).cast("long").as("toks"),
         md5(col("doc_id").cast("string")).as("skey"))
       .withColumn("bucket",
         conv(substring(col("skey"), 1, 2), 16, 10).cast("long") % PackBuckets)
@@ -237,7 +237,7 @@ object CorpusOps {
 
   val packBinsSql: String =
     s"""WITH d AS (SELECT lang, doc_id,
-       |    len(string_split(${LlmDedup.normTextSql()}, ' ')) AS toks,
+       |    len(${Text.tokensSql()}) AS toks,
        |    md5(CAST(doc_id AS VARCHAR)) AS skey,
        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2))::BIGINT % $PackBuckets AS BIGINT) AS bucket
        |  FROM documents),
@@ -469,7 +469,7 @@ object CorpusOps {
     * documents (bounded sketch state, same output shape). */
   def corpusCard(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val t = split(LlmDedup.normText(col("text")), " ")
+    val t = Text.tokens(col("text"))
     val perDoc = docs.select(
       col("lang"), col("n_chars").cast("double").as("nc"),
       size(t).cast("long").as("toks"),
@@ -498,7 +498,7 @@ object CorpusOps {
 
   val corpusCardSql: String =
     s"""WITH d AS (SELECT lang, CAST(n_chars AS DOUBLE) AS nc,
-       |    string_split(${LlmDedup.normTextSql()}, ' ') AS t,
+       |    ${Text.tokensSql()} AS t,
        |    md5(text) AS h
        |  FROM documents),
        |p AS (SELECT lang, nc, CAST(len(t) AS BIGINT) AS toks,

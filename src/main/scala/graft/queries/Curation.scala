@@ -56,12 +56,12 @@ object Curation {
   def corpusFilter(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val t = col("t")
-    // duplicate identity + tokenization shared with LlmDedup.normText —
-    // the 'dup' classification here and llm_exact_dedup's survivor set
-    // stay definitionally identical
+    // duplicate identity + tokenization from [[Text]], as in
+    // llm_exact_dedup — the 'dup' classification here and its survivor
+    // set stay definitionally identical
     val withT = docs
-      .withColumn("h", md5(LlmDedup.normText(col("text"))))
-      .withColumn("t", split(LlmDedup.normText(col("text")), " "))
+      .withColumn("h", md5(Text.norm(col("text"))))
+      .withColumn("t", Text.tokens(col("text")))
     val surv = min(col("doc_id")).over(Window.partitionBy(col("h")))
     val ttr = size(array_distinct(t)).cast("double") / size(t)
     val reason = when(col("doc_id") =!= col("surv"), "dup")
@@ -77,8 +77,8 @@ object Curation {
 
   val corpusFilterSql: String =
     s"""WITH d AS (SELECT lang, doc_id,
-      |    md5(${LlmDedup.normTextSql()}) AS h,
-      |    string_split(${LlmDedup.normTextSql()}, ' ') AS t
+      |    md5(${Text.normSql()}) AS h,
+      |    ${Text.tokensSql()} AS t
       |  FROM documents),
       |e AS (SELECT lang, doc_id,
       |    MIN(doc_id) OVER (PARTITION BY h) AS surv,
@@ -147,8 +147,8 @@ object Curation {
     val docs = Tables.load(spark, dir, "documents")
     val t = col("t")
     val withT = docs
-      .withColumn("h", md5(LlmDedup.normText(col("text"))))
-      .withColumn("t", split(LlmDedup.normText(col("text")), " "))
+      .withColumn("h", md5(Text.norm(col("text"))))
+      .withColumn("t", Text.tokens(col("text")))
     val surv = min(col("doc_id")).over(Window.partitionBy(col("h")))
     val kept = withT
       .withColumn("surv", surv)
@@ -172,8 +172,8 @@ object Curation {
 
   val curationPipelineSql: String =
     s"""WITH d AS (SELECT doc_id, n_chars,
-      |    md5(${LlmDedup.normTextSql()}) AS h,
-      |    string_split(${LlmDedup.normTextSql()}, ' ') AS t
+      |    md5(${Text.normSql()}) AS h,
+      |    ${Text.tokensSql()} AS t
       |  FROM documents),
       |e AS (SELECT doc_id, n_chars,
       |    MIN(doc_id) OVER (PARTITION BY h) AS surv,
@@ -217,7 +217,7 @@ object Curation {
   def chunkDocs(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     chunkPlan(docs.select(col("doc_id"),
-      split(LlmDedup.normText(col("text")), " ").as("t")))
+      Text.tokens(col("text")).as("t")))
   }
 
   /** [[chunkDocs]] over the TRAINED tokenizer's token stream
@@ -267,7 +267,7 @@ object Curation {
        |FROM c""".stripMargin
 
   val chunkDocsSql: String =
-    s"""WITH d AS (SELECT doc_id, ${LlmDedup.normTextSql()} AS norm FROM documents),
+    s"""WITH d AS (SELECT doc_id, ${Text.normSql()} AS norm FROM documents),
        |s AS (SELECT doc_id, string_split(norm, ' ') AS t FROM d),
        |${chunkSqlFrom("s")}""".stripMargin
 
@@ -302,7 +302,7 @@ object Curation {
     val w = Window.partitionBy(col("source"))
       .orderBy(col("ws_toks").desc, col("doc_id").asc)
     docs.select(col("source"), col("doc_id"),
-        size(split(LlmDedup.normText(col("text")), " ")).cast("long").as("ws_toks"))
+        size(Text.tokens(col("text"))).cast("long").as("ws_toks"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= DomainCap)
   }
@@ -310,9 +310,9 @@ object Curation {
   val domainCapSql: String =
     s"""SELECT source, doc_id, ws_toks, CAST(rank AS BIGINT) AS rank
        |FROM (SELECT source, doc_id,
-       |        CAST(len(string_split(${LlmDedup.normTextSql()}, ' ')) AS BIGINT) AS ws_toks,
+       |        CAST(len(${Text.tokensSql()}) AS BIGINT) AS ws_toks,
        |        row_number() OVER (PARTITION BY source
-       |          ORDER BY len(string_split(${LlmDedup.normTextSql()}, ' ')) DESC,
+       |          ORDER BY len(${Text.tokensSql()}) DESC,
        |            doc_id ASC) AS rank
        |      FROM documents)
        |WHERE rank <= $DomainCap""".stripMargin
@@ -363,7 +363,7 @@ object Curation {
     // explode-alias trap).
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"),
-        split(LlmDedup.normText(col("text")), " ").as("t"))
+        Text.tokens(col("text")).as("t"))
       .select(col("doc_id"), size(col("t")).cast("long").as("ws_toks"),
         size(array_distinct(col("t"))).cast("long").as("nd"))
       .select(col("doc_id"), col("ws_toks"),
@@ -382,7 +382,7 @@ object Curation {
     val cnt = Bpe.tokenCountCol(Bpe.fixtureMerges)
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), cnt(col("text")).as("bpe_toks"),
-        split(LlmDedup.normText(col("text")), " ").as("t"))
+        Text.tokens(col("text")).as("t"))
       .select(col("doc_id"), col("bpe_toks"),
         size(col("t")).cast("long").as("ws_toks"),
         size(array_distinct(col("t"))).cast("long").as("nd"))
@@ -419,7 +419,7 @@ object Curation {
     s"""WITH d AS (SELECT doc_id,
        |    CAST(len(t) AS BIGINT) AS ws_toks,
        |    CAST(FLOOR(len(list_distinct(t)) * 10000.0 / len(t)) AS BIGINT) AS ttr
-       |  FROM (SELECT doc_id, string_split(${LlmDedup.normTextSql()}, ' ') AS t
+       |  FROM (SELECT doc_id, ${Text.tokensSql()} AS t
        |        FROM documents)),
        |tot AS (SELECT CAST(FLOOR(SUM(ws_toks) * $BudgetPct / 100.0) AS BIGINT)
        |          AS budget FROM d),
@@ -434,7 +434,7 @@ object Curation {
        |${Bpe.oracleCtes()},
        |d AS (SELECT doc_id, b.n_toks AS bpe_toks,
        |    CAST(FLOOR(len(list_distinct(t)) * 10000.0 / len(t)) AS BIGINT) AS ttr
-       |  FROM (SELECT doc_id, string_split(${LlmDedup.normTextSql()}, ' ') AS t
+       |  FROM (SELECT doc_id, ${Text.tokensSql()} AS t
        |        FROM documents) x JOIN bpe_doc_toks b USING (doc_id)),
        |tot AS (SELECT CAST(FLOOR(SUM(bpe_toks) * $BudgetPct / 100.0) AS BIGINT)
        |          AS budget FROM d),
@@ -461,7 +461,7 @@ object Curation {
     * decision is embarrassingly parallel. */
   def weightedSample(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val t = split(LlmDedup.normText(col("text")), " ")
+    val t = Text.tokens(col("text"))
     val ttr = floor(size(array_distinct(t)).cast("long") * 10000 /
       size(t).cast("long"))
     val bucket = pmod(
@@ -488,7 +488,7 @@ object Curation {
        |      AS weight_bp,
        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000
        |      AS bucket
-       |  FROM (SELECT doc_id, string_split(${LlmDedup.normTextSql()}, ' ') AS t
+       |  FROM (SELECT doc_id, ${Text.tokensSql()} AS t
        |        FROM documents))
        |WHERE bucket < weight_bp""".stripMargin
 

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Geo-grid bucketing (A2/U2 proper): geohash cells over a lat/lon
   * domain, aggregated per cell — the Kibana map-tile aggregation
@@ -26,7 +25,6 @@ object Geo {
 
   /** Geohash length-4 cells: groupBy on a native-codegen expression. */
   def geoCellAgg(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val cust = Tables.load(spark, dir, "customer")
     val lat = (col("c_custkey") * 37 % 1700) / lit(10.0) - 85.0
     val lon = (col("c_custkey") * 73 % 3500) / lit(10.0) - 175.0

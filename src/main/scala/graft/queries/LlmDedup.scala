@@ -60,19 +60,6 @@ object LlmDedup {
     * interpolate it at object init.) */
   private[queries] val DfCap = 256
 
-  /** Normalized text (lower, trim, collapsed whitespace) — THE duplicate
-    * identity every dedup operator and the curation report share; one
-    * definition so they cannot silently diverge. */
-  private[queries] def normText(c: Column): Column =
-    regexp_replace(lower(trim(c)), "\\s+", " ")
-
-  /** DuckDB mirror of [[normText]], column-parameterized like its twin. */
-  private[queries] def normTextSql(col: String = "text"): String =
-    s"regexp_replace(lower(trim($col)), '\\s+', ' ', 'g')"
-
-  /** tokens of normalized text. */
-  private def toks(text: Column): Column = split(normText(text), " ")
-
   /** word 3-gram shingles (empty array when < 3 tokens — mirrors DuckDB's
     * empty `range`). Shared with [[CorpusOps.decontaminate]] so the
     * dedup family and decontamination agree on the shingle identity. */
@@ -87,7 +74,7 @@ object LlmDedup {
     * the df cap cannot silently diverge between them). */
   private val shingleSqlCte =
     s"""rep AS (SELECT MIN(doc_id) AS doc_id, MIN(norm) AS norm
-      |        FROM (SELECT doc_id, ${normTextSql()} AS norm FROM documents)
+      |        FROM (SELECT doc_id, ${Text.normSql()} AS norm FROM documents)
       |        GROUP BY md5(norm)),
       |toks AS (SELECT doc_id, string_split(norm, ' ') AS t FROM rep),
       |sh AS (SELECT DISTINCT doc_id, concat_ws(' ', t[i], t[i+1], t[i+2]) AS shingle
@@ -109,13 +96,13 @@ object LlmDedup {
   def exactDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     docs
-      .select(md5(normText(col("text"))).as("text_hash"), col("doc_id"))
+      .select(md5(Text.norm(col("text"))).as("text_hash"), col("doc_id"))
       .groupBy(col("text_hash"))
       .agg(min(col("doc_id")).as("survivor_id"), count(lit(1)).as("n_dups"))
   }
 
   val exactDedupSql: String =
-    s"""SELECT md5(${normTextSql()}) AS text_hash,
+    s"""SELECT md5(${Text.normSql()}) AS text_hash,
       |  MIN(doc_id) AS survivor_id, COUNT(*) AS n_dups
       |FROM documents GROUP BY 1""".stripMargin
 
@@ -134,7 +121,7 @@ object LlmDedup {
   private def repDocs(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     docs
-      .select(col("doc_id"), normText(col("text")).as("norm"))
+      .select(col("doc_id"), Text.norm(col("text")).as("norm"))
       .groupBy(md5(col("norm")).as("th"))
       .agg(min(col("doc_id")).as("doc_id"), min(col("norm")).as("norm"))
   }
@@ -309,7 +296,7 @@ object LlmDedup {
     * the oracle's CASE-per-digit SQL). */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("tok"))
+    val tok = docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
       .withColumn("h", md5(col("tok")))
       .select(col("doc_id"),
         conv(substring(col("h"), 1, 8), 16, 10).cast("long").as("v1"),
@@ -330,7 +317,7 @@ object LlmDedup {
       .mkString(", ")
     val fp = (0 until 16).map(j => s"CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END")
       .mkString(" + ")
-    s"""WITH t AS (SELECT doc_id, unnest(string_split(${normTextSql()}, ' ')) AS tok
+    s"""WITH t AS (SELECT doc_id, unnest(${Text.tokensSql()}) AS tok
        |           FROM documents),
        |v AS (SELECT doc_id, $votes FROM t GROUP BY doc_id)
        |SELECT doc_id, CAST($fp AS BIGINT) AS simhash FROM v""".stripMargin
@@ -399,7 +386,7 @@ object LlmDedup {
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val byText = docs.select(
-      md5(normText(col("text"))).as("th"), col("doc_id"))
+      md5(Text.norm(col("text"))).as("th"), col("doc_id"))
     val reps = byText.groupBy(col("th")).agg(min(col("doc_id")).as("rep"))
     // Feeds two subtrees (star-rep vertex set + member attachment);
     // localCheckpoint (not persist) so the documents scan + rep groupBy
@@ -630,7 +617,7 @@ object LlmDedup {
 
   val dedupClustersSql: String =
     s"""WITH RECURSIVE
-       |ex AS (SELECT md5(${normTextSql()}) AS th, doc_id FROM documents),
+       |ex AS (SELECT md5(${Text.normSql()}) AS th, doc_id FROM documents),
        |exr AS (SELECT th, MIN(doc_id) AS rep FROM ex GROUP BY th),
        |pairs AS (SELECT x_id, y_id FROM ($minhashNearDupSql)
        |          UNION ALL
@@ -672,7 +659,7 @@ object LlmDedup {
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docs = Tables.load(spark, dir, "documents")
-    val d = docs.select(col("doc_id"), normText(col("text")).as("norm"))
+    val d = docs.select(col("doc_id"), Text.norm(col("text")).as("norm"))
       .withColumn("th", md5(col("norm")))
       .withColumn("is_batch", col("doc_id") % BatchMod === 0)
       .persist(sl)
@@ -764,8 +751,8 @@ object LlmDedup {
     * `left_anti` (and the anti join here) keeps every non-matching batch
     * doc. */
   val incrementalDedupSql: String =
-    s"""WITH d AS (SELECT doc_id, ${normTextSql()} AS norm,
-       |             md5(${normTextSql()}) AS th,
+    s"""WITH d AS (SELECT doc_id, ${Text.normSql()} AS norm,
+       |             md5(${Text.normSql()}) AS th,
        |             (doc_id % $BatchMod = 0) AS is_batch FROM documents),
        |cr AS (SELECT th, MIN(doc_id) AS rep FROM d WHERE NOT is_batch GROUP BY th),
        |ex AS (SELECT d.doc_id AS batch_id, cr.rep AS dup_of
@@ -835,7 +822,7 @@ object LlmDedup {
     * fence needed. */
   def substrDupCoverage(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-      .withColumn("t", toks(col("text")))
+      .withColumn("t", Text.tokens(col("text")))
     val gramArr = when(size(col("t")) >= 5,
       transform(sequence(lit(1), size(col("t")) - 4),
         p => md5(array_join(slice(col("t"), p, lit(5)), " "))))
@@ -874,7 +861,7 @@ object LlmDedup {
   }
 
   val substrDupCoverageSql: String =
-    s"""WITH d AS (SELECT doc_id, string_split(${normTextSql()}, ' ') AS t FROM documents),
+    s"""WITH d AS (SELECT doc_id, ${Text.tokensSql()} AS t FROM documents),
        |gr AS (SELECT doc_id, i AS p, md5(array_to_string(t[i:i+4], ' ')) AS g
        |       FROM d, unnest(range(1, len(t) - 3)) AS r(i)
        |       WHERE len(t) >= 5),
@@ -936,7 +923,7 @@ object LlmDedup {
   def bloomDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.BloomBits
     val docs = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), toks(col("text")).as("t"))
+      .select(col("doc_id"), Text.tokens(col("text")).as("t"))
       .withColumn("is_batch", col("doc_id") % BatchMod === 0)
     val gramArr = when(size(col("t")) >= 5,
       transform(sequence(lit(1), size(col("t")) - 4),
@@ -1012,7 +999,7 @@ object LlmDedup {
     * division of identical exact ints — bit-identical cross-engine, no
     * rounding fence needed (the [[substrDupCoverage]] precedent). */
   val bloomDedupSql: String =
-    s"""WITH d AS (SELECT doc_id, string_split(${normTextSql()}, ' ') AS t,
+    s"""WITH d AS (SELECT doc_id, ${Text.tokensSql()} AS t,
        |            doc_id % $BatchMod = 0 AS is_batch FROM documents),
        |g0 AS (SELECT doc_id, is_batch,
        |         md5(array_to_string(t[i:i+4], ' ')) AS h
@@ -1062,7 +1049,7 @@ object LlmDedup {
     * the composite clean pipeline ([[TextClean.cleanPipeline]]). */
   private[queries] def paragraphAudit(docs: DataFrame): DataFrame = {
     val paras = docs
-      .select(col("doc_id"), split(normText(col("text")), " ").as("t"))
+      .select(col("doc_id"), Text.tokens(col("text")).as("t"))
       .select(col("doc_id"), posexplode(
         transform(
           expr(s"sequence(0, (size(t) + ${ParaTokens - 1}) div $ParaTokens - 1)"),
@@ -1084,7 +1071,7 @@ object LlmDedup {
   }
 
   val paragraphDedupSql: String =
-    s"""WITH toks AS (SELECT doc_id, string_split(${normTextSql()}, ' ') AS t
+    s"""WITH toks AS (SELECT doc_id, ${Text.tokensSql()} AS t
        |             FROM documents),
        |p AS (SELECT doc_id, CAST(i AS INT) AS idx,
        |        array_to_string(t[(CAST(i AS INT)*$ParaTokens + 1):(CAST(i AS INT)*$ParaTokens + $ParaTokens)], ' ') AS para
@@ -1202,7 +1189,7 @@ object LlmDedup {
         .mkString(" + ")
     val ham = (0 until 4).map(k => s"bit_count(xor(x.b$k, y.b$k))").mkString(" + ")
     s"""WITH rep AS (SELECT MIN(doc_id) AS doc_id, MIN(norm) AS norm
-       |            FROM (SELECT doc_id, ${normTextSql()} AS norm FROM documents)
+       |            FROM (SELECT doc_id, ${Text.normSql()} AS norm FROM documents)
        |            GROUP BY md5(norm)),
        |t AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS tok FROM rep),
        |hx AS (SELECT doc_id,

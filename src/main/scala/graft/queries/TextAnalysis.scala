@@ -26,14 +26,6 @@ import graft.functions.Bpe
   */
 object TextAnalysis {
 
-  private def toks(text: Column): Column =
-    split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
-
-  private def toksSqlOf(col: String): String =
-    s"string_split(regexp_replace(lower(trim($col)), '\\s+', ' ', 'g'), ' ')"
-
-  private val toksSql = toksSqlOf("text")
-
   // --------------------------------------------------------------- search
 
   /** Best-fields full-text search with pagination: query tokens scored
@@ -52,7 +44,6 @@ object TextAnalysis {
       page: Int, pageSize: Int): DataFrame = {
     require(terms.nonEmpty && page >= 1 && pageSize >= 1,
       s"search needs >=1 term, page>=1, pageSize>=1 (got $terms, $page, $pageSize)")
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.load(spark, dir, "documents")
     val qtoks = array(terms.map(lit): _*)
     val sText = call_function("token_overlap", col("text"), lit(terms.mkString(" ")))
@@ -74,7 +65,7 @@ object TextAnalysis {
     s"""WITH s AS (
        |  SELECT doc_id,
        |    greatest(
-       |      len(list_filter(['spark','join','src3'], q -> list_contains($toksSql, q))),
+       |      len(list_filter(['spark','join','src3'], q -> list_contains(${Text.tokensSql()}, q))),
        |      len(list_filter(['spark','join','src3'], q -> q = source))) AS score
        |  FROM documents),
        |r AS (SELECT doc_id, score,
@@ -114,7 +105,7 @@ object TextAnalysis {
     * transcendental (`ln`) fenced by round(…, 6) on both sides. */
   def searchBm25(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-      .withColumn("t", toks(col("text"))) // materialize once (see LlmDedup)
+      .withColumn("t", Text.tokens(col("text"))) // materialize once (see LlmDedup)
     val dl = size(col("t")).cast("long")
     val statCols: Seq[Column] =
       count(lit(1)).cast("double").as("n") +:
@@ -151,7 +142,7 @@ object TextAnalysis {
          |      ((len(list_filter(t, w -> w = '$term')) * ${Bm25K1 + 1.0}) /
          |       (len(list_filter(t, w -> w = '$term')) + $Bm25K1 * (1.0 - $Bm25B + $Bm25B * len(t) / avgdl)))""".stripMargin
     }.mkString(" +\n      ")
-    s"""WITH d AS (SELECT doc_id, $toksSql AS t FROM documents),
+    s"""WITH d AS (SELECT doc_id, ${Text.tokensSql()} AS t FROM documents),
        |st AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
        |    CAST(CAST(SUM(len(t)) AS BIGINT) AS DOUBLE) / COUNT(*) AS avgdl,
        |    $statCols
@@ -217,9 +208,9 @@ object TextAnalysis {
   def bm25Search(spark: SparkSession, dir: String, terms: Seq[String],
       page: Int, pageSize: Int): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-      .withColumn("t", toks(col("text"))) // materialize once (see LlmDedup)
+      .withColumn("t", Text.tokens(col("text"))) // materialize once (see LlmDedup)
       .withColumn("ttl", slice(col("t"), 1, Bm25TitleLen))
-      .withColumn("src_t", toks(col("source")))
+      .withColumn("src_t", Text.tokens(col("source")))
     bm25Rank(docs, bm25Fields, "doc_id", terms, page, pageSize)
   }
 
@@ -288,9 +279,9 @@ object TextAnalysis {
       .withColumn("_rn", row_number().over(latestW))
       .filter(col("_rn") === 1).drop("_rn")
     val prepared = latest
-      .withColumn("ttl_t", toks(col("title")))
-      .withColumn("desc_t", toks(coalesce(col("desc"), lit(""))))
-      .withColumn("site_t", toks(coalesce(col("source.website"), lit(""))))
+      .withColumn("ttl_t", Text.tokens(col("title")))
+      .withColumn("desc_t", Text.tokens(coalesce(col("desc"), lit(""))))
+      .withColumn("site_t", Text.tokens(coalesce(col("source.website"), lit(""))))
     val fields = Seq(
       "title" -> col("ttl_t"), "desc" -> col("desc_t"),
       "lang" -> array(col("lang")), "site" -> col("site_t"))
@@ -353,9 +344,9 @@ object TextAnalysis {
     Tables.load(spark, dir, "documents")
       .join(broadcast(ranked), "doc_id")
       .select(col("doc_id"), col("score"), col("rank"),
-        concat_ws(" ", slice(toks(col("text")), 1, Bm25TitleLen)).as("title"),
+        concat_ws(" ", slice(Text.tokens(col("text")), 1, Bm25TitleLen)).as("title"),
         substring(col("text"), 1, SnippetChars).as("snippet"),
-        concat_ws(",", filter(qtoks, q => array_contains(toks(col("text")), q)))
+        concat_ws(",", filter(qtoks, q => array_contains(Text.tokens(col("text")), q)))
           .as("matched_terms"),
         col("text").substr(hlStart, lit(SnippetChars)).as("highlight"),
         col("lang"), col("source"), col("n_chars"))
@@ -375,10 +366,10 @@ object TextAnalysis {
     val posList = Bm25Terms
       .map(t => s"instr(lower(text), '$t')").mkString("[", ",", "]")
     s"""SELECT d.doc_id, r.score, r.rank,
-       |  array_to_string(($toksSql)[1:$Bm25TitleLen], ' ') AS title,
+       |  array_to_string((${Text.tokensSql()})[1:$Bm25TitleLen], ' ') AS title,
        |  substr(text, 1, $SnippetChars) AS snippet,
        |  coalesce(array_to_string(
-       |    list_filter($termList, q -> list_contains($toksSql, q)), ','), '')
+       |    list_filter($termList, q -> list_contains(${Text.tokensSql()}, q)), ','), '')
        |    AS matched_terms,
        |  substr(text,
        |    greatest(1, coalesce(
@@ -414,8 +405,8 @@ object TextAnalysis {
       }.mkString(" +\n      ")
     val best = bm25FieldsSql.map { case (f, tc) => fieldScore(f, tc) }
       .mkString("greatest(", ",\n      ", ")")
-    s"""WITH d AS (SELECT doc_id, lang, n_chars, $toksSql AS t,
-       |    ${toksSqlOf("source")} AS src_t FROM documents),
+    s"""WITH d AS (SELECT doc_id, lang, n_chars, ${Text.tokensSql()} AS t,
+       |    ${Text.tokensSql("source")} AS src_t FROM documents),
        |st AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
        |    $statCols
        |  FROM d),
@@ -452,7 +443,7 @@ object TextAnalysis {
     // aliased token column trips InferFiltersFromGenerate into inlining
     // the regex+split 2× more into a pre-Generate Filter (the r13
     // "explode-alias trap", PLANS.md)
-    val tf = docs.select(col("doc_id"), explode(toks(col("text"))).as("w"))
+    val tf = docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
     val dfx = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val n = docs.select(count(lit(1)).cast("double").as("n"))
@@ -467,7 +458,7 @@ object TextAnalysis {
   }
 
   val keywordTopkSql: String =
-    s"""WITH d AS (SELECT doc_id, $toksSql AS t FROM documents),
+    s"""WITH d AS (SELECT doc_id, ${Text.tokensSql()} AS t FROM documents),
        |tok AS (SELECT doc_id, unnest(t) AS w FROM d),
        |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
        |dfx AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY 1),
@@ -506,7 +497,7 @@ object TextAnalysis {
     import graft.functions.CmsSketch
     val cms = udaf(CmsSketch, org.apache.spark.sql.Encoders.STRING)
     val stream = Tables.load(spark, dir, "documents")
-      .select(explode(toks(col("text"))).as("term"))
+      .select(explode(Text.tokens(col("text"))).as("term"))
     val sketch = stream.agg(cms(col("term")).as("sk"),
       count(lit(1)).cast("long").as("total"))
     def estRow(r: Int): Column = element_at(col("sk"),
@@ -525,7 +516,7 @@ object TextAnalysis {
   val heavyHittersSql: String = {
     val w = graft.functions.CmsSketch.Width
     val d = graft.functions.CmsSketch.Depth
-    s"""WITH dd AS (SELECT $toksSql AS t FROM documents),
+    s"""WITH dd AS (SELECT ${Text.tokensSql()} AS t FROM documents),
        |tok AS (SELECT unnest(t) AS term FROM dd),
        |tt AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM tok),
        |cells AS (SELECT r,
@@ -571,11 +562,11 @@ object TextAnalysis {
     * on both sides. */
   def unigramLm(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-      .withColumn("t", toks(col("text")))
+      .withColumn("t", Text.tokens(col("text")))
     // tokenization exploded as an EXPRESSION, not via the t alias — the
     // alias form pays the explode-alias trap (PLANS.md r13) in BOTH
     // consumers of tok
-    val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("w"))
+    val tok = docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
     val tf = tok.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
     val uni = tok.groupBy(col("w")).agg(count(lit(1)).as("c"))
     // T = Σ_w c(w) = Σ_d |t_d|: fold doc lengths instead of re-aggregating
@@ -595,7 +586,7 @@ object TextAnalysis {
   }
 
   val unigramLmSql: String =
-    s"""WITH d AS (SELECT doc_id, $toksSql AS t FROM documents),
+    s"""WITH d AS (SELECT doc_id, ${Text.tokensSql()} AS t FROM documents),
        |tok AS (SELECT doc_id, unnest(t) AS w FROM d),
        |tf AS (SELECT doc_id, w, count(*) AS tf FROM tok GROUP BY doc_id, w),
        |uni AS (SELECT w, count(*) AS c FROM tok GROUP BY w),
@@ -639,7 +630,7 @@ object TextAnalysis {
     // (InferFiltersFromGenerate, PLANS.md r13; PlanInvariantSpec caught
     // exactly this op's first draft); the [[TextIndex]] zip_with shape
     // yields (w1, w2) pairs from one generator, no positional probing.
-    def tokExpr: Column = toks(col("text"))
+    def tokExpr: Column = Text.tokens(col("text"))
     def bigramPairs: Column = zip_with(
       slice(tokExpr, lit(1), size(tokExpr) - 1),
       slice(tokExpr, lit(2), size(tokExpr) - 1),
@@ -688,7 +679,7 @@ object TextAnalysis {
   private val PerplexityGate = 3.42
 
   val perplexityFilterSql: String =
-    s"""WITH d AS (SELECT doc_id, $toksSql AS t FROM documents),
+    s"""WITH d AS (SELECT doc_id, ${Text.tokensSql()} AS t FROM documents),
        |tr AS (SELECT * FROM d WHERE doc_id % 5 != 0),
        |ev AS (SELECT * FROM d WHERE doc_id % 5 = 0),
        |uni AS (SELECT w, count(*) AS u
@@ -727,7 +718,6 @@ object TextAnalysis {
     * argmax with deterministic alphabetical priority), reported as a
     * confusion matrix against the labeled `lang`. */
   def langId(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.load(spark, dir, "documents")
     // Per-lexicon hit count IS token_overlap(text, lexicon words): the
     // lexicon words are distinct, so "query tokens present in the text's
@@ -753,7 +743,7 @@ object TextAnalysis {
 
   val langIdSql: String = {
     val scoreDefs = lexicons.map { case (l, ws) =>
-      s"len(list_filter([${ws.map(w => s"'$w'").mkString(",")}], w -> list_contains($toksSql, w))) AS s_$l"
+      s"len(list_filter([${ws.map(w => s"'$w'").mkString(",")}], w -> list_contains(${Text.tokensSql()}, w))) AS s_$l"
     }.mkString(",\n    ")
     val m = s"greatest(${lexicons.map("s_" + _._1).mkString(", ")})"
     val pred = lexicons.foldRight("'zz'") { case ((l, _), e) =>
@@ -772,7 +762,7 @@ object TextAnalysis {
     * order-independent. */
   def quality(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-      .withColumn("t", toks(col("text"))) // materialize once (see LlmDedup)
+      .withColumn("t", Text.tokens(col("text"))) // materialize once (see LlmDedup)
     val t = col("t")
     val en = array(lexicons.toMap.apply("en").map(lit): _*)
     val perDoc = docs.select(
@@ -790,9 +780,9 @@ object TextAnalysis {
 
   val qualitySql: String =
     s"""WITH d AS (SELECT
-       |    CAST(len(list_distinct($toksSql)) AS DOUBLE) / len($toksSql) AS ttr,
-       |    CAST(len(list_filter($toksSql, w -> list_contains(['the','a','of','to','and'], w))) AS DOUBLE)
-       |      / len($toksSql) AS stop_ratio
+       |    CAST(len(list_distinct(${Text.tokensSql()})) AS DOUBLE) / len(${Text.tokensSql()}) AS ttr,
+       |    CAST(len(list_filter(${Text.tokensSql()}, w -> list_contains(['the','a','of','to','and'], w))) AS DOUBLE)
+       |      / len(${Text.tokensSql()}) AS stop_ratio
        |  FROM documents),
        |b AS (SELECT *, CASE WHEN ttr >= 0.8 THEN 'high'
        |                     WHEN ttr >= 0.5 THEN 'mid' ELSE 'low' END AS bucket
@@ -808,7 +798,7 @@ object TextAnalysis {
     * (letter runs / digit runs / single punctuation marks). */
   def tokenStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val ws = size(toks(col("text"))).cast("long")
+    val ws = size(Text.tokens(col("text"))).cast("long")
     val bpe = size(regexp_extract_all(lower(col("text")),
       lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))).cast("long")
     docs.select(col("source"), ws.as("ws_toks"), bpe.as("bpe_toks"))
@@ -821,7 +811,7 @@ object TextAnalysis {
 
   val tokenStatsSql: String =
     s"""SELECT source, COUNT(*) AS n_docs,
-       |  CAST(SUM(len($toksSql)) AS BIGINT) AS sum_ws_toks,
+       |  CAST(SUM(len(${Text.tokensSql()})) AS BIGINT) AS sum_ws_toks,
        |  CAST(SUM(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))) AS BIGINT) AS sum_bpe_toks,
        |  MAX(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))) AS max_bpe_toks
        |FROM documents GROUP BY source""".stripMargin
@@ -869,7 +859,7 @@ object TextAnalysis {
     val cnt = Bpe.tokenCountCol(Bpe.fixtureMerges)
     docs.select(col("lang"),
         cnt(col("text")).as("n_toks"),
-        size(toks(col("text"))).cast("long").as("n_words"))
+        size(Text.tokens(col("text"))).cast("long").as("n_words"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_toks")).as("sum_toks"),
@@ -884,9 +874,9 @@ object TextAnalysis {
        |${Bpe.oracleCtes()}
        |SELECT d.lang, COUNT(*) AS n_docs,
        |  CAST(SUM(t.n_toks) AS BIGINT) AS sum_toks,
-       |  CAST(SUM(len(${toksSqlOf("d.text")})) AS BIGINT) AS sum_words,
+       |  CAST(SUM(len(${Text.tokensSql("d.text")})) AS BIGINT) AS sum_words,
        |  CAST(SUM(t.n_toks) AS DOUBLE) /
-       |    CAST(SUM(len(${toksSqlOf("d.text")})) AS DOUBLE) AS fertility
+       |    CAST(SUM(len(${Text.tokensSql("d.text")})) AS DOUBLE) AS fertility
        |FROM bpe_doc_toks t JOIN documents d USING (doc_id)
        |GROUP BY 1""".stripMargin
 
@@ -905,7 +895,7 @@ object TextAnalysis {
     val docs = Tables.load(spark, dir, "documents")
     val w = Window.orderBy(col("n_occ").desc, col("token").asc)
     // expression-explode: see the explode-alias trap (PLANS.md r13)
-    docs.select(explode(toks(col("text"))).as("token"))
+    docs.select(explode(Text.tokens(col("text"))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("n_occ"))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -913,7 +903,7 @@ object TextAnalysis {
   }
 
   val vocabTopkSql: String =
-    s"""WITH tok AS (SELECT unnest($toksSql) AS token FROM documents),
+    s"""WITH tok AS (SELECT unnest(${Text.tokensSql()}) AS token FROM documents),
        |v AS (SELECT token, COUNT(*) AS n_occ FROM tok GROUP BY token),
        |r AS (SELECT token, n_occ,
        |        row_number() OVER (ORDER BY n_occ DESC, token ASC) AS rank
@@ -928,8 +918,7 @@ object TextAnalysis {
     * locality-robust document signature computed in one narrow pass. */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-    docs.select(col("doc_id"), norm.as("s"))
+    docs.select(col("doc_id"), Text.norm(col("text")).as("s"))
       .select(col("doc_id"),
         when(length(col("s")) >= 16,
           array_min(transform(sequence(lit(1), length(col("s")) - 15, lit(4)),
@@ -938,14 +927,14 @@ object TextAnalysis {
   }
 
   val fingerprintSql: String =
-    """WITH n AS (SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS s
-      |           FROM documents)
-      |SELECT doc_id,
-      |  CASE WHEN len(s) >= 16
-      |       THEN list_aggregate(list_transform(range(1, len(s)-14, 4),
-      |              i -> md5(substr(s, i, 16))), 'min')
-      |       ELSE md5(s) END AS fp
-      |FROM n""".stripMargin
+    s"""WITH n AS (SELECT doc_id, ${Text.normSql()} AS s
+       |           FROM documents)
+       |SELECT doc_id,
+       |  CASE WHEN len(s) >= 16
+       |       THEN list_aggregate(list_transform(range(1, len(s)-14, 4),
+       |              i -> md5(substr(s, i, 16))), 'min')
+       |       ELSE md5(s) END AS fp
+       |FROM n""".stripMargin
 
   // ---------------------------------------------------------------- scrub
 
@@ -1020,7 +1009,7 @@ object TextAnalysis {
     * map-side — the text column never shuffles. */
   def gopherRules(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-      .withColumn("t", toks(col("text")))
+      .withColumn("t", Text.tokens(col("text")))
     val t = col("t")
     val en = array(lexicons.toMap.apply("en").map(lit): _*)
     val wc = size(t)
@@ -1049,7 +1038,7 @@ object TextAnalysis {
   }
 
   val gopherRulesSql: String =
-    s"""WITH d AS (SELECT source, $toksSql AS t FROM documents),
+    s"""WITH d AS (SELECT source, ${Text.tokensSql()} AS t FROM documents),
        |f AS (SELECT source,
        |    NOT (len(t) BETWEEN 25 AND 90) AS f_wordcount,
        |    NOT (CAST(list_sum(list_transform(t, w -> len(w))) AS DOUBLE) / len(t)
@@ -1094,7 +1083,7 @@ object TextAnalysis {
     * compare the same 6-dp number. */
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), LlmDedup.normText(col("text")).as("norm"))
+      .select(col("doc_id"), Text.norm(col("text")).as("norm"))
       .withColumn("cs", split(col("norm"), ""))
     val n = length(col("norm"))
     // Per-char histogram as ONE sorted run-length fold (O(L log L) sort +
@@ -1134,7 +1123,7 @@ object TextAnalysis {
   }
 
   val charEntropySql: String =
-    s"""WITH nm AS (SELECT doc_id, ${graft.queries.LlmDedup.normTextSql()} AS norm FROM documents),
+    s"""WITH nm AS (SELECT doc_id, ${Text.normSql()} AS norm FROM documents),
        |ch AS (SELECT doc_id, substr(norm, CAST(i AS INT), 1) AS c
        |       FROM nm, unnest(range(1, len(norm) + 1)) AS r(i)),
        |cc AS (SELECT doc_id, c, COUNT(*) AS n_c FROM ch GROUP BY doc_id, c),
@@ -1178,8 +1167,8 @@ object TextAnalysis {
     * doc_id) — unique tiebreak key, the catalog's window rule. */
   def ccnetBuckets(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-      .withColumn("t", toks(col("text")))
-    val tok = docs.select(col("doc_id"), col("lang"), explode(toks(col("text"))).as("w"))
+      .withColumn("t", Text.tokens(col("text")))
+    val tok = docs.select(col("doc_id"), col("lang"), explode(Text.tokens(col("text"))).as("w"))
     val tf = tok.groupBy(col("doc_id"), col("lang"), col("w")).agg(count(lit(1)).as("tf"))
     val uni = tok.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val tot = docs.agg(sum(size(col("t")).cast("long")).cast("double").as("tot"))
@@ -1203,7 +1192,7 @@ object TextAnalysis {
   }
 
   val ccnetBucketsSql: String =
-    s"""WITH d AS (SELECT doc_id, lang, $toksSql AS t FROM documents),
+    s"""WITH d AS (SELECT doc_id, lang, ${Text.tokensSql()} AS t FROM documents),
        |tok AS (SELECT doc_id, lang, unnest(t) AS w FROM d),
        |tf AS (SELECT doc_id, lang, w, count(*) AS tf FROM tok GROUP BY doc_id, lang, w),
        |uni AS (SELECT w, count(*) AS c FROM tok GROUP BY w),

@@ -168,7 +168,7 @@ object TextClean {
        |      '${Pii.PhoneRe}', '[PHONE]', 'g'),
        |      '${Pii.Ipv4Re}', '[IP]', 'g') AS redacted
        |  FROM cleaned),
-       |toks AS (SELECT doc_id, string_split(${LlmDedup.normTextSql("redacted")}, ' ') AS t
+       |toks AS (SELECT doc_id, ${Text.tokensSql("redacted")} AS t
        |         FROM scrubbed),
        |p AS (SELECT doc_id, CAST(i AS INT) AS idx,
        |        array_to_string(t[(CAST(i AS INT)*$P + 1):(CAST(i AS INT)*$P + $P)], ' ') AS para
@@ -222,7 +222,7 @@ object TextClean {
         s"i -> concat_ws(' ', slice(t, i*$P + 1, $P)))")
     val withParas = docs
       .select(col("doc_id"), col("source"),
-        split(LlmDedup.normText(col("text")), " ").as("t"))
+        Text.tokens(col("text")).as("t"))
       .withColumn("paras", parasExpr)
     val boilerSets = withParas
       // explode the EXPRESSION, not the aliased column:
@@ -255,7 +255,7 @@ object TextClean {
   val lineScrubSql: String = {
     val P = LlmDedup.ParaTokens
     s"""WITH toks AS (SELECT doc_id, source,
-       |    string_split(${LlmDedup.normTextSql()}, ' ') AS t FROM documents),
+       |    ${Text.tokensSql()} AS t FROM documents),
        |p AS (SELECT doc_id, source, CAST(i AS INT) AS idx,
        |        array_to_string(t[(CAST(i AS INT)*$P + 1):(CAST(i AS INT)*$P + $P)], ' ') AS para
        |      FROM toks, unnest(range(0, (len(t) + ${P - 1}) // $P)) AS r(i)),

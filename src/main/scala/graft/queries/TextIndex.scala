@@ -16,9 +16,8 @@ import graft.Tables
   *  - collocation mining (PMI-style association scoring over adjacent
   *    token pairs — the classic corpus-analysis companion of the two).
   *
-  * All three share one tokenization (lower, whitespace-collapse, split
-  * on single spaces — identical to TextAnalysis.tokens so every text
-  * operator in the catalog agrees on what a token is), and every score
+  * All three tokenize through [[Text.tokens]], so every text operator
+  * in the catalog agrees on what a token is, and every score
   * is a pinned single-division over exact integer counts, so the DuckDB
   * hash can never drift on float fold order.
   */
@@ -28,16 +27,15 @@ object TextIndex {
     * shape. Built by scan + posexplode: no shuffle; the phrase join
     * below is the only exchange. */
   private def postings(docs: DataFrame): DataFrame = {
-    val toks = split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
-    docs.select(col("doc_id"), posexplode(toks).as(Seq("pos0", "w")))
+    docs.select(col("doc_id"), posexplode(Text.tokens(col("text"))).as(Seq("pos0", "w")))
       .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("w"))
   }
 
   private val oraclePostings: String =
-    """SELECT doc_id,
-      |    unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w,
-      |    CAST(generate_subscripts(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '), 1) AS BIGINT) AS pos
-      |  FROM documents""".stripMargin
+    s"""SELECT doc_id,
+       |    unnest(${Text.tokensSql()}) AS w,
+       |    CAST(generate_subscripts(${Text.tokensSql()}, 1) AS BIGINT) AS pos
+       |  FROM documents""".stripMargin
 
   // ------------------------------------------------------ match_phrase
 
@@ -91,9 +89,8 @@ object TextIndex {
     * (lift, term) total order, so the limit is deterministic. */
   def significantTerms(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val toks = split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
     val docTerms = docs
-      .select(col("doc_id"), col("lang"), explode(toks).as("w"))
+      .select(col("doc_id"), col("lang"), explode(Text.tokens(col("text"))).as("w"))
       .distinct()
     val perTerm = docTerms.groupBy(col("w")).agg(
       count(when(col("lang") === "de", 1)).as("fg_df"),
@@ -112,20 +109,20 @@ object TextIndex {
   }
 
   val significantTermsSql: String =
-    """WITH n AS (SELECT doc_id, lang,
-      |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS a
-      |  FROM documents),
-      |dt AS (SELECT DISTINCT doc_id, lang, unnest(a) AS w FROM n),
-      |per AS (SELECT w, COUNT(*) FILTER (lang = 'de') AS fg_df, COUNT(*) AS bg_df
-      |  FROM dt GROUP BY 1),
-      |t AS (SELECT COUNT(*) FILTER (lang = 'de') AS fg_n, COUNT(*) AS bg_n
-      |  FROM documents)
-      |SELECT w, fg_df, bg_df,
-      |  CAST(fg_df * bg_n AS DOUBLE) / CAST(bg_df * fg_n AS DOUBLE) AS lift
-      |FROM per, t
-      |WHERE fg_df >= 3
-      |ORDER BY lift DESC, w
-      |LIMIT 15""".stripMargin
+    s"""WITH n AS (SELECT doc_id, lang,
+       |    ${Text.tokensSql()} AS a
+       |  FROM documents),
+       |dt AS (SELECT DISTINCT doc_id, lang, unnest(a) AS w FROM n),
+       |per AS (SELECT w, COUNT(*) FILTER (lang = 'de') AS fg_df, COUNT(*) AS bg_df
+       |  FROM dt GROUP BY 1),
+       |t AS (SELECT COUNT(*) FILTER (lang = 'de') AS fg_n, COUNT(*) AS bg_n
+       |  FROM documents)
+       |SELECT w, fg_df, bg_df,
+       |  CAST(fg_df * bg_n AS DOUBLE) / CAST(bg_df * fg_n AS DOUBLE) AS lift
+       |FROM per, t
+       |WHERE fg_df >= 3
+       |ORDER BY lift DESC, w
+       |LIMIT 15""".stripMargin
 
   // -------------------------------------------------- collocations
 
@@ -143,7 +140,7 @@ object TextIndex {
     * joins that stay O(vocab), never O(corpus). */
   def collocations(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    def toks = split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
+    def toks = Text.tokens(col("text"))
     // Every consumer explodes/aggregates the tokenizer EXPRESSION
     // directly — never an aliased array column. Aliasing lets
     // InferFiltersFromGenerate + pushdown inline the split into a
@@ -215,8 +212,7 @@ object TextIndex {
     * `vocab_index` flow materializes to the lake so serving doesn't
     * re-scan the corpus per request. */
   def vocabOf(corpus: DataFrame, textCol: String, keyCol: String): DataFrame = {
-    val toks = split(regexp_replace(lower(trim(col(textCol))), "\\s+", " "), " ")
-    corpus.select(col(keyCol).as("k"), explode(toks).as("w")).distinct()
+    corpus.select(col(keyCol).as("k"), explode(Text.tokens(col(textCol))).as("w")).distinct()
       .groupBy(col("w")).agg(count(lit(1)).as("df"))
   }
 
@@ -264,7 +260,7 @@ object TextIndex {
 
   val fuzzySearchSql: String =
     s"""WITH n AS (SELECT doc_id,
-       |    string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS a
+       |    ${Text.tokensSql()} AS a
        |  FROM documents),
        |v AS (SELECT w, COUNT(*) AS df FROM
        |    (SELECT DISTINCT doc_id, unnest(a) AS w FROM n) GROUP BY 1)
@@ -284,8 +280,7 @@ object TextIndex {
     * (score, doc_id) total order. */
   def moreLikeThis(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val toks = split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
-    val docTerms = docs.select(col("doc_id"), explode(toks).as("w")).distinct()
+    val docTerms = docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("w")).distinct()
     val df = docTerms.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val srcTerms = docTerms.filter(col("doc_id") === 42)
       .select(col("w")).join(df, "w")
@@ -299,17 +294,17 @@ object TextIndex {
   }
 
   val moreLikeThisSql: String =
-    """WITH n AS (SELECT doc_id,
-      |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS a
-      |  FROM documents),
-      |dt AS (SELECT DISTINCT doc_id, unnest(a) AS w FROM n),
-      |f AS (SELECT w, COUNT(*) AS df FROM dt GROUP BY 1),
-      |src AS (SELECT dt.w, CAST(1000000 // f.df AS BIGINT) AS weight
-      |  FROM dt JOIN f ON dt.w = f.w WHERE dt.doc_id = 42)
-      |SELECT dt.doc_id, CAST(SUM(src.weight) AS BIGINT) AS score, COUNT(*) AS n_shared
-      |FROM dt JOIN src ON dt.w = src.w
-      |WHERE dt.doc_id != 42
-      |GROUP BY 1 ORDER BY score DESC, doc_id ASC LIMIT 10""".stripMargin
+    s"""WITH n AS (SELECT doc_id,
+       |    ${Text.tokensSql()} AS a
+       |  FROM documents),
+       |dt AS (SELECT DISTINCT doc_id, unnest(a) AS w FROM n),
+       |f AS (SELECT w, COUNT(*) AS df FROM dt GROUP BY 1),
+       |src AS (SELECT dt.w, CAST(1000000 // f.df AS BIGINT) AS weight
+       |  FROM dt JOIN f ON dt.w = f.w WHERE dt.doc_id = 42)
+       |SELECT dt.doc_id, CAST(SUM(src.weight) AS BIGINT) AS score, COUNT(*) AS n_shared
+       |FROM dt JOIN src ON dt.w = src.w
+       |WHERE dt.doc_id != 42
+       |GROUP BY 1 ORDER BY score DESC, doc_id ASC LIMIT 10""".stripMargin
 
   // --------------------------------------------------- autocomplete
 
@@ -335,12 +330,12 @@ object TextIndex {
       .limit(limit)
 
   val autocompleteSql: String =
-    """WITH n AS (SELECT doc_id,
-      |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS a
-      |  FROM documents),
-      |dt AS (SELECT DISTINCT doc_id, unnest(a) AS w FROM n)
-      |SELECT w, COUNT(*) AS df FROM dt WHERE w LIKE 's%'
-      |GROUP BY 1 ORDER BY df DESC, w ASC LIMIT 8""".stripMargin
+    s"""WITH n AS (SELECT doc_id,
+       |    ${Text.tokensSql()} AS a
+       |  FROM documents),
+       |dt AS (SELECT DISTINCT doc_id, unnest(a) AS w FROM n)
+       |SELECT w, COUNT(*) AS df FROM dt WHERE w LIKE 's%'
+       |GROUP BY 1 ORDER BY df DESC, w ASC LIMIT 8""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "txt_phrase_search" -> (phraseSearch _),

@@ -47,14 +47,6 @@ import graft.Tables
   */
 object TrainingMix {
 
-  /** Whitespace tokenizer shared with [[TextAnalysis]] (same contract:
-    * lower, trim, collapse whitespace, split on single space). */
-  private def toks(text: Column): Column =
-    split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
-
-  private val toksSql =
-    "string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')"
-
   /** Hashed feature space: 2 hex chars of md5 → 256 buckets. md5 (not
     * murmur3 `hash`) for the catalog-wide reason: both engines implement
     * identical md5, so the bucketing is bit-reproducible cross-engine. */
@@ -81,7 +73,7 @@ object TrainingMix {
   def dsirWeights(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val tok = docs.select(col("doc_id"), col("lang"),
-      explode(toks(col("text"))).as("w"))
+      explode(Text.tokens(col("text"))).as("w"))
     val db = tok
       .select(col("doc_id"), col("lang"), substring(md5(col("w")), 1, 2).as("b"))
       .groupBy(col("doc_id"), col("lang"), col("b"))
@@ -91,9 +83,9 @@ object TrainingMix {
       sum(when(col("lang") === "en", col("cnt")).otherwise(0L)).as("ct"),
       sum(col("cnt")).as("cr"))
     val scal = docs.agg(
-      sum(when(col("lang") === "en", size(toks(col("text"))))
+      sum(when(col("lang") === "en", size(Text.tokens(col("text"))))
         .otherwise(0)).cast("double").as("nt"),
-      sum(size(toks(col("text")))).cast("double").as("nr"))
+      sum(size(Text.tokens(col("text")))).cast("double").as("nr"))
     val term = (col("cnt").cast("double") *
       (log((col("ct").cast("double") + 1.0) / (col("nt") + NumBuckets)) -
         log((col("cr").cast("double") + 1.0) / (col("nr") + NumBuckets))))
@@ -109,7 +101,7 @@ object TrainingMix {
   }
 
   val dsirWeightsSql: String =
-    s"""WITH d AS (SELECT doc_id, lang, $toksSql AS t FROM documents),
+    s"""WITH d AS (SELECT doc_id, lang, ${Text.tokensSql()} AS t FROM documents),
        |db AS (SELECT doc_id, lang, substr(md5(w),1,2) AS b, count(*) AS cnt
        |       FROM (SELECT doc_id, lang, unnest(t) AS w FROM d)
        |       GROUP BY doc_id, lang, b),
@@ -147,7 +139,7 @@ object TrainingMix {
     * moment agg (1 row, broadcast), one 8-key final agg. */
   def curriculumBands(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    def t: Column = toks(col("text"))
+    def t: Column = Text.tokens(col("text"))
     val scored = docs.select(col("lang"),
       (size(array_distinct(t)).cast("double") / size(t).cast("double") *
         log(lit(1.0) + size(t).cast("double"))).as("s"))
@@ -172,7 +164,7 @@ object TrainingMix {
     s"""WITH sc AS (SELECT lang,
        |    CAST(len(list_distinct(t)) AS DOUBLE) / CAST(len(t) AS DOUBLE)
        |      * ln(1.0 + CAST(len(t) AS DOUBLE)) AS s
-       |  FROM (SELECT lang, $toksSql AS t FROM documents)),
+       |  FROM (SELECT lang, ${Text.tokensSql()} AS t FROM documents)),
        |mom AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
        |    CAST(SUM(CAST(s AS DECIMAL(28,12))) AS DOUBLE) AS sx,
        |    CAST(SUM(CAST(s * s AS DECIMAL(28,12))) AS DOUBLE) AS sxx
@@ -224,7 +216,7 @@ object TrainingMix {
     // 100x corpus vs dsirWeights' raw-column passthrough); post-collapse
     // it runs once per cell, ~40x fewer evaluations
     val tok = docs.select(col("doc_id"), col("source"),
-      explode(toks(col("text"))).as("w"))
+      explode(Text.tokens(col("text"))).as("w"))
     val db = tok
       .select(col("doc_id"), col("source"), substring(md5(col("w")), 1, 2).as("b"))
       .groupBy(col("doc_id"), col("source"), col("b"))
@@ -234,8 +226,8 @@ object TrainingMix {
       sum(when(col("hi"), col("cnt")).otherwise(0L)).as("ch"),
       sum(when(!col("hi"), col("cnt")).otherwise(0L)).as("cl"))
     val scal = docs.agg(
-      sum(when(isHi, size(toks(col("text")))).otherwise(0)).cast("double").as("nh"),
-      sum(when(!isHi, size(toks(col("text")))).otherwise(0)).cast("double").as("nl"),
+      sum(when(isHi, size(Text.tokens(col("text")))).otherwise(0)).cast("double").as("nh"),
+      sum(when(!isHi, size(Text.tokens(col("text")))).otherwise(0)).cast("double").as("nl"),
       sum(when(isHi, 1L).otherwise(0L)).cast("double").as("dh"),
       sum(when(!isHi, 1L).otherwise(0L)).cast("double").as("dl"))
     val term = (col("cnt").cast("double") *
@@ -255,7 +247,7 @@ object TrainingMix {
   val nbQualitySql: String =
     s"""WITH d AS (SELECT doc_id,
        |    COALESCE(TRY_CAST(substr(source, 4, 10) AS INT) < 10, FALSE)
-       |      AS hi, $toksSql AS t
+       |      AS hi, ${Text.tokensSql()} AS t
        |  FROM documents),
        |db AS (SELECT doc_id, hi, substr(md5(w),1,2) AS b, count(*) AS cnt
        |       FROM (SELECT doc_id, hi, unnest(t) AS w FROM d)

@@ -67,7 +67,6 @@ object VectorSearch {
       k: Int): DataFrame = {
     require(queryIds.nonEmpty && k >= 1,
       s"annSearch needs >=1 query id and k>=1 (got $queryIds, $k)")
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val q = emb.filter(col("vec_id").isin(queryIds: _*))
@@ -97,7 +96,6 @@ object VectorSearch {
     * bucket via a keyed join. */
   def lshBucketTopk(spark: SparkSession, dir: String,
       ids: Seq[Long] = 100L until 105L, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val planes = emb.filter(col("vec_id") < 8)
@@ -147,7 +145,6 @@ object VectorSearch {
     * is cross-engine deterministic. */
   def ivfTopk(spark: SparkSession, dir: String,
       ids: Seq[Long] = 200L until 205L, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val cents = emb.filter(col("vec_id") < 16)
@@ -207,7 +204,6 @@ object VectorSearch {
     * here: the synthetic embeddings carry no true near-dups (max pairwise
     * cosine 0.51), so a production-style 0.95+ would verify nothing. */
   def embedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val planes = emb.filter(col("vec_id") < 8)
@@ -259,7 +255,6 @@ object VectorSearch {
     * k ~ √N LEARNED centroids is [[semDedupKmeans]] (its own catalog
     * row, rows-only checked). */
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val cents = emb.filter(col("vec_id") < 16)
@@ -335,7 +330,6 @@ object VectorSearch {
   def semDedupKmeans(spark: SparkSession, dir: String, k: Int = 0,
       lloydIters: Int = 2, threshold: Double = 0.4): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val k0 = if (k > 0) k else math.ceil(math.sqrt(emb.count().toDouble)).toInt
@@ -413,7 +407,6 @@ object VectorSearch {
     * vectors by key. */
   def pqTopk(spark: SparkSession, dir: String,
       ids: Seq[Long] = 200L until 205L, k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val sub = emb
@@ -521,7 +514,6 @@ object VectorSearch {
     * move as integer code sums; rerank touches |queries|×100 rows. */
   def ivfPqTopk(spark: SparkSession, dir: String,
       ids: Seq[Long] = 300L until 305L, k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val cents = emb.filter(col("vec_id") < 16)
@@ -661,7 +653,6 @@ object VectorSearch {
     * confusion fold collapses map-side — no stage shuffles the
     * embedding column. */
   def centroidClassify(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val tr = emb.filter(col("vec_id") % 5 =!= 0)
@@ -751,7 +742,6 @@ object VectorSearch {
     * unchanged. */
   def hardNegatives(spark: SparkSession, dir: String,
       queryIds: Seq[Long] = 0L until 5L, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val q = emb.filter(col("vec_id").isin(queryIds: _*))
@@ -803,7 +793,6 @@ object VectorSearch {
     * |labels| rows (broadcast back), and the verdict pass is map-only —
     * the embedding column is never shuffled. */
   def embedOutliers(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val cent = emb
@@ -871,7 +860,6 @@ object VectorSearch {
     * embedding column never shuffles); the per-label fold collapses
     * map-side into |labels| rows. */
   def embedQuantize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val scale = array_max(transform(col("v"), x => abs(x))) / lit(127.0)

@@ -18,9 +18,10 @@ object PlanDump {
       else args(2).split(',').toSeq.filter(_.nonEmpty)
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Same session config as Bench so the dumped plan is the one the
-    // bench actually executes (shuffle partitions, AQE, UTC).
-    val spark = graft.Bench.session("graft-plandump")
+    // The session Bench measures with, so the dumped plan is the one
+    // the bench actually executes (shuffle partitions, AQE, UTC).
+    val spark = graft.Tables.session("graft-plandump")
+    spark.sparkContext.setLogLevel("ERROR")
     wanted.foreach { name =>
       val txt =
         try {

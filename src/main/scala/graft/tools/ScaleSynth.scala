@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize the adversarial 10× measurement corpus from an
@@ -28,13 +27,7 @@ import org.apache.spark.sql.functions._
 object ScaleSynth {
   def main(args: Array[String]): Unit = {
     val (src, out) = (args(0), args(1))
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.Tables.NanosAsLong, "true")
-      .getOrCreate()
+    val spark = graft.Tables.session("graft-scalesynth", cpus = 8)
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = spark.read.parquet(s"$src/documents.parquet")

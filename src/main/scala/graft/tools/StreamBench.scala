@@ -316,7 +316,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val which = args.headOption.getOrElse("all")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Bench.session("graft-streambench")
+    val spark = Tables.session("graft-streambench")
     spark.sparkContext.setLogLevel("WARN")
     if (which == "news" || which == "all")
       report("news_dedup", newsLadder(spark,

@@ -1,24 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.{AsofJoin, AsofJoinExec, GraftPlans}
 
 /** Custom as-of join: correctness vs an independently-composed oracle,
   * physical-plan shape (co-partition + sort + merge exec), column
   * pruning through the custom node, and null/empty edge cases. */
-class AsofJoinSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsofJoinSpec extends SparkSpec {
 
   private def asof(left: org.apache.spark.sql.DataFrame, right: org.apache.spark.sql.DataFrame) =
     GraftPlans.asofJoin(left, right, "k", "t", "rk", "rt")

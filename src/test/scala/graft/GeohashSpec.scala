@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GeohashUtil, GraftFunctions}
+import graft.functions.GeohashUtil
 
 /** Geohash expression: published known values, boundary behavior, prefix
   * property, and the registered codegen expression end-to-end. */
@@ -33,7 +33,6 @@ class GeohashSpec extends SparkSpec {
   }
 
   test("registered expression runs inside a DataFrame plan") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val out = Seq((57.64911, 10.40744)).toDF("lat", "lon")
       .select(call_function("geohash_encode", $"lat", $"lon", lit(6)).as("g"))
@@ -42,7 +41,6 @@ class GeohashSpec extends SparkSpec {
   }
 
   test("token_overlap expression: known scores, dup query tokens, null") {
-    GraftFunctions.register(spark)
     val rows = spark.sql(
       """SELECT token_overlap('The quick  Brown fox', 'quick fox none') AS a,
         |       token_overlap('a b c', 'a a b') AS dup,
@@ -54,7 +52,6 @@ class GeohashSpec extends SparkSpec {
   }
 
   test("null inputs propagate null") {
-    GraftFunctions.register(spark)
     val out = spark.sql(
       "SELECT geohash_encode(CAST(NULL AS DOUBLE), CAST(1.0 AS DOUBLE), 4) AS g")
       .collect()(0)

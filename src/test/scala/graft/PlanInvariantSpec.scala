@@ -225,23 +225,10 @@ class PlanInvariantSpec extends SparkSpec {
       // standalone: the (type,day) corpus agg + the per-type day-index
       // window; the |types|-row normal-equation fold collapses map-side
       "evt_forecast_linreg" -> 2)
-    def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-      var n = 0
-      def walk(q: org.apache.spark.sql.execution.SparkPlan): Unit = {
-        q match {
-          case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => n += 1
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            walk(a.executedPlan)
-          case st: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            walk(st.plan)
-          case _ =>
-        }
-        q.children.foreach(walk)
-        q.subqueries.foreach(walk)
-      }
-      walk(p)
-      n
-    }
+    // LIVE shuffles: a persisted intermediate's build plan runs once
+    def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int =
+      graft.plans.PlanWalk.nodes(p)
+        .count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
     budgets.toSeq.sortBy(_._1).foreach { case (name, budget) =>
       // Pin STANDALONE plans: drop caches registered by earlier
       // constructions so a pin never encodes cross-query CacheManager

@@ -1,23 +1,16 @@
 package graft
 
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+
+import graft.plans.PlanWalk
 
 /** Shared plan-inspection helpers for specs. */
 object PlanTestUtil {
 
-  /** collect() that crosses AQE query-stage boundaries (stage sub-plans
-    * are fields, not children, so a plain collect stops at them — known
-    * Spark-4 quirk) AND persist() cache boundaries (a persisted
-    * intermediate hides its build plan — including the file scans whose
-    * PushedFilters specs assert on — inside the InMemoryRelation). */
-  def deepCollect[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    val nested = p.collect {
-      case q: QueryStageExec => deepCollect(q.plan)(pf)
-      case a: AdaptiveSparkPlanExec => deepCollect(a.executedPlan)(pf)
-      case c: InMemoryTableScanExec => deepCollect(c.relation.cachedPlan)(pf)
-    }.flatten
-    p.collect(pf) ++ nested
-  }
+  /** collect() over [[PlanWalk]] with cache boundaries crossed: AQE
+    * stages, subqueries, and the build plan a persisted intermediate
+    * hides (including the file scans whose PushedFilters specs assert
+    * on) inside its InMemoryRelation. */
+  def deepCollect[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
+    PlanWalk.nodes(p, cached = true).collect(pf)
 }

@@ -545,6 +545,13 @@ class ServeSpec extends SparkSpec {
     val (code, body) = get("/sql?q=" + java.net.URLEncoder.encode(
       "SELECT FROM WHERE", "UTF-8"))
     assert(code === 400 && body.contains("\"error\""))
+    // an error echoing a quote, a backslash and a control character
+    // still parses as JSON, with the text intact
+    val hostile = "a\"b\\c\u0001d"
+    val (c2, b2) = get("/search?q=x&index=" + java.net.URLEncoder.encode(hostile, "UTF-8"))
+    assert(c2 === 400, b2)
+    val error = new com.fasterxml.jackson.databind.ObjectMapper().readTree(b2).get("error")
+    assert(error.asText === s"unknown index $hostile (use news, or omit for documents)", b2)
   }
 
   test("/sql rejects commands, writes, and path relations (read-only allowlist)") {

@@ -3,19 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for the test suites (one per JVM; suites
-  * run in the single forked test JVM). */
+/** The shared local SparkSession for the test suites: one per JVM (the
+  * suites run in the single forked test JVM), built by the production
+  * [[Tables.session]] so every suite sees the same confs and graft's
+  * injected functions. A suite must never build its own: a second
+  * builder in the JVM returns this session and rewrites its confs. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
+  lazy val spark: SparkSession = {
+    // a static conf, so it reaches the one builder as a system property
+    sys.props.getOrElseUpdate("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config(Tables.NanosAsLong, "true")
-    .getOrCreate()
+    Tables.session("graft-test", cpus = 2)
+  }
 
   val sf0001 = "/root/testdata/sf0.001"
 }

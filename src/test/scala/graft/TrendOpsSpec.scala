@@ -153,23 +153,9 @@ class TrendOpsSpec extends SparkSpec {
     // LIVE exchanges only: unlike deepCollect, stop at the
     // InMemoryRelation boundary — exchanges inside the cached build
     // plan run once at materialization, which is the point.
-    def live(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-      var n = 0
-      def walk(q: org.apache.spark.sql.execution.SparkPlan): Unit = {
-        q match {
-          case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => n += 1
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            walk(a.executedPlan)
-          case st: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            walk(st.plan)
-          case _ =>
-        }
-        q.children.foreach(walk)
-        q.subqueries.foreach(walk)
-      }
-      walk(p)
-      n
-    }
+    def live(p: org.apache.spark.sql.execution.SparkPlan): Int =
+      graft.plans.PlanWalk.nodes(p)
+        .count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
     spark.catalog.clearCache()
     try {
       TrendOps.anomalyMad(spark, tmp) // registers dense + counts caches

@@ -1,24 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-
-import graft.functions.GraftFunctions
 
 /** Native dot_product / cosine_sim vs the composed higher-order-function
   * forms they replaced: bit-identical on random data, null/length edge
   * cases, float coercion. */
-class VectorExprSpec extends AnyFunSuite {
-
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftFunctions.register(s)
-    s
-  }
+class VectorExprSpec extends SparkSpec {
 
   private def composedDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
