@@ -36,7 +36,9 @@ import org.apache.spark.sql.graft.PlanShim
   *     carry their document payload (title/snippet/lang/source/
   *     n_chars — [[graft.queries.TextAnalysis.searchHits]]), the
   *     `_source` doc the reference's UI renders per hit
-  *     (SearchUI.js:71-99), so a results page is ONE request
+  *     (SearchUI.js:71-99), so a results page is ONE request. At most
+  *     32 terms: a longer `q` is a shaped 400, as a `/suggest` prefix
+  *     over 64 chars is
   *   - `GET /ann?id=<vec_id>&k=N`          exact cosine top-k neighbors
   *     of an embedding ([[graft.queries.VectorSearch.annSearch]]) — the
   *     interactive face of the similarity-search family
@@ -79,6 +81,11 @@ import org.apache.spark.sql.graft.PlanShim
 object Serve {
 
   private val MaxLimit = 10000
+
+  /** Most `/search` query terms: every term adds one df aggregate per
+    * field to the statistics fold, so an unbounded term list would hold
+    * a handler thread for as long as the client likes. */
+  private val MaxSearchTerms = 32
 
   private def clamp(v: Int, hi: Int): Int = math.min(math.max(v, 1), hi)
 
@@ -775,6 +782,8 @@ object Serve {
           fuzzyExpand(rawTerms, idx)
         else rawTerms
       if (terms.isEmpty) (400, """{"error":"missing q parameter"}""")
+      else if (terms.size > MaxSearchTerms)
+        (400, s"""{"error":"q must have <= $MaxSearchTerms terms (got ${terms.size})"}""")
       else {
         // Clamp BEFORE the query: render() caps the collect, but the
         // rank pre-limit is page*size — an absurd page/size would turn

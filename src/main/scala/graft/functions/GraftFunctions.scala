@@ -10,6 +10,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * every session [[graft.Tables.session]] builds and every clone of one,
   * so no query registers anything at run time. A session built elsewhere
   * must set the extension itself (see [[graft.SparkEntry]]).
+  *
+  * Two native expressions carry non-SQL constructor state and so are
+  * not registered here: [[BloomMightContain]] (a bitset) and
+  * [[Bm25Score]] (the query terms of one BM25 search field). Callers
+  * build them as Columns through [[BloomProbe.might]] and
+  * [[Bm25Score.score]].
   */
 object GraftFunctions {
 

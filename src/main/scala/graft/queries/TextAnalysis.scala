@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
-import graft.functions.Bpe
+import graft.functions.{Bm25Score, Bpe}
+import graft.functions.Bm25Score.{B => Bm25B, K1 => Bm25K1}
 
 /** Text-analysis operators over `documents`: full-text search, language
   * ID, quality scoring, token counting, fingerprinting — the text side of
@@ -76,10 +77,6 @@ object TextAnalysis {
 
   // ----------------------------------------------------------- bm25 search
 
-  /** BM25 shape parameters (the textbook defaults). */
-  private val Bm25K1 = 1.2
-  private val Bm25B = 0.75
-
   /** The fixed demo query shared by [[searchBm25]] and its oracle. */
   private val Bm25Terms = Seq("spark", "join", "src3")
 
@@ -94,43 +91,17 @@ object TextAnalysis {
     * idf(t) = ln(1 + (N−df+0.5)/(df+0.5)) — BM25 with the standard
     * k1=1.2, b=0.75.
     *
-    * Scale shape: pass 1 folds the corpus statistics (N, Σdl, per-term
-    * df) to ONE row — integer sums only, so the fold is order-exact —
-    * which then rides a broadcast to pass 2's narrow per-doc scoring;
-    * the final top-k is the same WindowGroupLimit rank the other search
-    * uses (per-partition top-k, one k-row merge — never a corpus-wide
-    * single-partition window). Cross-engine determinism: every input to
+    * Scale shape: [[bm25Rank]] over the single `text` field — one
+    * stats fold to a one-row broadcast, one native
+    * [[graft.functions.Bm25Score]] call per document, and the
+    * WindowGroupLimit top-k. Cross-engine determinism: every input to
     * the float math is exact (counts, lengths, shared literals) and the
     * expression order is mirrored in the oracle, with the one
     * transcendental (`ln`) fenced by round(…, 6) on both sides. */
   def searchBm25(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
       .withColumn("t", Text.tokens(col("text"))) // materialize once (see LlmDedup)
-    val dl = size(col("t")).cast("long")
-    val statCols: Seq[Column] =
-      count(lit(1)).cast("double").as("n") +:
-        (sum(dl).cast("double") / count(lit(1))).as("avgdl") +:
-        Bm25Terms.zipWithIndex.map { case (term, i) =>
-          sum(array_contains(col("t"), term).cast("long"))
-            .cast("double").as(s"df$i")
-        }
-    val stats = docs.select(struct(statCols: _*).as("st"))
-    val scored = docs.join(broadcast(stats))
-    val dlD = size(col("t")).cast("double")
-    val score = Bm25Terms.zipWithIndex.map { case (term, i) =>
-      val tf = size(filter(col("t"), w => w === term)).cast("double")
-      val df = col("st").getField(s"df$i")
-      val idf = log(lit(1.0) + (col("st").getField("n") - df + 0.5) / (df + 0.5))
-      val tfc = (tf * (Bm25K1 + 1.0)) /
-        (tf + lit(Bm25K1) * (lit(1.0 - Bm25B) +
-          lit(Bm25B) * dlD / col("st").getField("avgdl")))
-      idf * tfc
-    }.reduce(_ + _)
-    val w = Window.orderBy(col("score").desc, col("doc_id").asc)
-    scored.select(col("doc_id"), round(score, 6).as("score"))
-      .filter(col("score") > 0)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 10)
+    bm25Rank(docs, Seq("text" -> col("t")), "doc_id", Bm25Terms, page = 1, pageSize = 10)
   }
 
   val searchBm25Sql: String = {
@@ -179,13 +150,13 @@ object TextAnalysis {
     * this closes the field-less multi_match gap on top of it
     * (VERDICT r12 item 3 — r12's form scored 2 fields).
     *
-    * Scale shape (unchanged from the single-field op): pass 1 folds ALL
-    * per-field statistics — shared N, per-field Σdl, per-(field, term)
-    * df — into the SAME one-row broadcast (integer sums only, so the
-    * fold is order-exact; 5 fields × 3 terms = 20 numbers, constant
-    * size at any corpus), pass 2 scores each field narrowly per doc and
-    * takes `greatest`, and the top-k is the WindowGroupLimit pre-limit
-    * rank (per-partition top-k, one k-row merge). Cross-engine
+    * Scale shape: [[bm25Rank]] over the five fields — pass 1 folds
+    * every field's statistics into the SAME one-row broadcast
+    * (5 × (2 + T) numbers for T terms, constant size at any corpus),
+    * pass 2 makes five native [[graft.functions.Bm25Score]] calls per
+    * document (one per field, whatever T) and takes `greatest`, and the
+    * top-k is the WindowGroupLimit pre-limit rank (per-partition top-k,
+    * one k-row merge). Cross-engine
     * determinism: same contract as [[searchBm25]] — exact inputs,
     * mirrored expression order, one round(…,6) fence at the end. */
   def searchBm25Fields(spark: SparkSession, dir: String): DataFrame =
@@ -214,50 +185,41 @@ object TextAnalysis {
     bm25Rank(docs, bm25Fields, "doc_id", terms, page, pageSize)
   }
 
-  /** The best_fields BM25 core behind [[bm25Search]] — and, with a
-    * different field set, the crawled-news search
+  /** The best_fields BM25 core behind [[bm25Search]], [[searchBm25]]
+    * and — with a different field set — the crawled-news search
     * ([[newsSearchHits]]): two-pass ranking over ANY prepared corpus.
     * `prepared` carries the token columns `fields` reference plus
-    * `keyCol`, a unique ascending tiebreaker; pass 1 folds the corpus
-    * statistics to ONE broadcast row, pass 2 scores per doc and
-    * `greatest`s across fields, top-k is the WindowGroupLimit
-    * pre-limit rank. */
+    * `keyCol`, a unique ascending tiebreaker.
+    *
+    * Scale shape: pass 1 folds every field's statistics
+    * ([[graft.functions.Bm25Score.stats]]: shared N, per-field Σdl,
+    * per-(field, term) df — integer sums, constant size at any corpus)
+    * into ONE broadcast row. Pass 2 is narrow: one native
+    * [[graft.functions.Bm25Score]] call per (document, field) — O(fields)
+    * expression nodes whatever the term count — then `greatest` across
+    * fields, so each document is scored exactly once. The top-k is the
+    * WindowGroupLimit pre-limit rank (per-partition top-k, one k-row
+    * merge). `score > 0` is tested after the rank, not before it: a
+    * filter below the window is pushed below the scoring projection,
+    * which scores every document twice (filter, then projection); and
+    * since BM25 scores are ≥ 0, zero scores rank after every positive
+    * one, so positive ranks are the same either way. */
   private[queries] def bm25Rank(prepared: DataFrame,
       fields: Seq[(String, Column)], keyCol: String,
       terms: Seq[String], page: Int, pageSize: Int): DataFrame = {
     require(terms.nonEmpty && page >= 1 && pageSize >= 1,
       s"bm25 rank needs >=1 term, page>=1, pageSize>=1 (got $terms, $page, $pageSize)")
-    val statCols: Seq[Column] =
-      count(lit(1)).cast("double").as("n") +:
-        fields.flatMap { case (f, tc) =>
-          (sum(size(tc).cast("long")).cast("double") / count(lit(1)))
-            .as(s"avgdl_$f") +:
-            terms.zipWithIndex.map { case (term, i) =>
-              sum(array_contains(tc, term).cast("long"))
-                .cast("double").as(s"df_${f}_$i")
-            }
-        }
-    val stats = prepared.select(struct(statCols: _*).as("st"))
-    val scored = prepared.join(broadcast(stats))
-    def fieldScore(f: String, tc: Column): Column = {
-      val dlD = size(tc).cast("double")
-      terms.zipWithIndex.map { case (term, i) =>
-        val tf = size(filter(tc, w => w === term)).cast("double")
-        val df = col("st").getField(s"df_${f}_$i")
-        val idf = log(lit(1.0) + (col("st").getField("n") - df + 0.5) / (df + 0.5))
-        val tfc = (tf * (Bm25K1 + 1.0)) /
-          (tf + lit(Bm25K1) * (lit(1.0 - Bm25B) +
-            lit(Bm25B) * dlD / col("st").getField(s"avgdl_$f")))
-        idf * tfc
-      }.reduce(_ + _)
-    }
-    val best = greatest(fields.map { case (f, tc) => fieldScore(f, tc) }: _*)
+    val stats = prepared.select(struct(fields.map { case (f, tc) =>
+      Bm25Score.stats(tc, terms).as(f) }: _*).as("st"))
+    val fieldScores = fields.map { case (f, tc) =>
+      Bm25Score.score(tc, col("st").getField(f), terms) }
+    val best = if (fieldScores.size == 1) fieldScores.head else greatest(fieldScores: _*)
     val w = Window.orderBy(col("score").desc, col(keyCol).asc)
     val (lo, hi) = ((page - 1) * pageSize + 1, page * pageSize)
-    scored.select(col(keyCol), round(best, 6).as("score"))
-      .filter(col("score") > 0)
+    prepared.join(broadcast(stats))
+      .select(col(keyCol), round(best, 6).as("score"))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") >= lo && col("rank") <= hi)
+      .filter(col("rank") >= lo && col("rank") <= hi && col("score") > 0)
   }
 
   /** EP3 over the CRAWLED news store — the corpus the reference's
@@ -337,17 +299,22 @@ object TextAnalysis {
     //    field (all-field best_fields) fall back to the prefix window.
     // All of it is deterministic string arithmetic, so the whole payload
     // stays oracle-hash-checkable.
-    val qtoks = array(terms.map(lit): _*)
-    val positions = array(terms.map(tm => instr(lower(col("text")), tm)): _*)
-    val firstPos = array_min(filter(positions, p => p > 0))
+    // Per-term scalar columns, no lambdas: concat_ws and least skip the
+    // nulls that stand for "absent".
+    val matched = terms.map(tm =>
+      when(array_contains(Text.tokens(col("text")), tm), lit(tm)))
+    val positions = terms.map { tm =>
+      val p = instr(lower(col("text")), tm)
+      when(p > 0, p)
+    }
+    val firstPos = if (positions.size == 1) positions.head else least(positions: _*)
     val hlStart = greatest(lit(1), coalesce(firstPos, lit(1)) - HighlightLead)
     Tables.load(spark, dir, "documents")
       .join(broadcast(ranked), "doc_id")
       .select(col("doc_id"), col("score"), col("rank"),
         concat_ws(" ", slice(Text.tokens(col("text")), 1, Bm25TitleLen)).as("title"),
         substring(col("text"), 1, SnippetChars).as("snippet"),
-        concat_ws(",", filter(qtoks, q => array_contains(Text.tokens(col("text")), q)))
-          .as("matched_terms"),
+        concat_ws(",", matched: _*).as("matched_terms"),
         col("text").substr(hlStart, lit(SnippetChars)).as("highlight"),
         col("lang"), col("source"), col("n_chars"))
       .orderBy(col("rank").asc)

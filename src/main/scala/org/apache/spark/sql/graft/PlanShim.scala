@@ -47,4 +47,10 @@ object PlanShim {
     * before deciding to run it. */
   def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
     spark.asInstanceOf[classic.SparkSession].sessionState.sqlParser.parsePlan(sql)
+
+  /** Spark's own DIVIDE_BY_ZERO error (`QueryExecutionErrors` is
+    * `private[sql]`), so a native expression fails exactly as the ANSI
+    * `Divide` it replaces. */
+  def divideByZero(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.ArrayFilter
 import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.functions.{lit, struct}
 
 /** Engine-wide physical-plan invariants over the whole query catalog:
   * every batch query must plan without an unbroadcast cartesian product
@@ -332,6 +334,35 @@ class PlanInvariantSpec extends SparkSpec {
     }
     assert(hashShuffles.isEmpty,
       s"searchHits hash-shuffles (payload must ride the broadcast):\n$plan")
+  }
+
+  test("BM25 searches score each document once: one native kernel per field, no ArrayFilter") {
+    // bm25_score replaced the 5 × T size(filter(tokens, w -> w = term))
+    // trees (an interpreted lambda per field and term). Exactly one
+    // kernel per field in the executed plan means each document's score
+    // is computed once: a `score > 0` filter pushed below the scoring
+    // projection would evaluate every kernel a second time.
+    import spark.implicits._
+    val news = Seq(("corona surge", "daily report", "https://n/1"))
+      .toDF("title", "desc", "link")
+      .withColumn("lang", lit("en"))
+      .withColumn("date", lit("2021-03-01 10:00:00").cast("timestamp"))
+      .withColumn("source", struct(lit("googlenews").as("crawler"),
+        lit("news.example").as("website")))
+    Seq(
+      ("txt_search_bm25", SparkEntry.queries("txt_search_bm25")(spark, sf0001), 1),
+      ("txt_search_bm25_fields", SparkEntry.queries("txt_search_bm25_fields")(spark, sf0001), 5),
+      ("searchHits", graft.queries.TextAnalysis.searchHits(
+        spark, sf0001, Seq("spark", "join"), page = 1, pageSize = 5), 5),
+      ("newsSearchHits", graft.queries.TextAnalysis.newsSearchHits(
+        news, Seq("corona"), page = 1, pageSize = 10), 4)).foreach { case (name, df, fields) =>
+      val plan = df.queryExecution.executedPlan
+      val exprs = graft.plans.PlanWalk.nodes(plan)
+        .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      val kernels = exprs.count(_.isInstanceOf[graft.functions.Bm25Score])
+      assert(kernels === fields, s"$name plans $kernels bm25_score calls for $fields fields:\n$plan")
+      assert(!exprs.exists(_.isInstanceOf[ArrayFilter]), s"$name evaluates an ArrayFilter:\n$plan")
+    }
   }
 
   test("chunking stays a map-only pass: zero exchanges of any kind") {

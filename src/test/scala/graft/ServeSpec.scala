@@ -460,6 +460,14 @@ class ServeSpec extends SparkSpec {
     assert(ok === 200)
   }
 
+  test("/search caps the query at 32 terms with a shaped 400") {
+    def q(n: Int) = (1 to n).map(i => s"t$i").mkString("+")
+    val (code, body) = get(s"/search?q=${q(33)}")
+    assert(code === 400 && body.contains("<= 32 terms (got 33)"), body.take(200))
+    val (ok, okBody) = get(s"/search?q=${q(32)}&size=3")
+    assert(ok === 200 && okBody.contains("\"rows\""), okBody.take(200))
+  }
+
   test("every numeric parameter rejects non-numeric input with a shaped 400") {
     Seq(
       "/search?q=spark&page=two" -> "page",
