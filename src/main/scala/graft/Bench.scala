@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 /** Benchmark main: one JSON line with per-query wall seconds.
   *
   * Methodology (fixes the r1 harness flaws flagged in VERDICT.md):
@@ -14,7 +18,9 @@ package graft
   *  - a failing query reports in `errors` instead of producing a bogus
   *    fast time;
   *  - the shared [[Tables.session]] (UTC, AQE on, shuffle partitions =
-  *    cores, local mode), the same one [[One]] and the plan tools use.
+  *    cores, local mode), the same one the plan tools use;
+  *  - each measured run goes through [[SparkEntry.isolated]] (cache
+  *    cleared, GC run, error captured), like every other catalog main.
   *
   * Self-defense against contended measurement (r15 verdict item 2: ~19
   * queries inflated 1.3-1.8x by box-wide load, diagnosable only by
@@ -28,9 +34,66 @@ package graft
   * carries per-query deltas vs the previous BENCH_DETAIL.json (the
   * tools/bench_compare.py movers rule, computed at measurement time), so
   * a regression is visible in the artifact itself, not a rerun later.
+  *
+  * Usage: runMain graft.Bench [name,name,...] — a [[SparkEntry.select]]
+  * filter times only those entries and leaves BENCH_DETAIL.json, the
+  * full-catalog record the next run's movers compare against, alone.
   */
 object Bench {
+
+  /** One run: per query, each pass's (wall sec, loadavg at start,
+    * external-CPU share); `prevTimes` are the previous file's minima. */
+  final case class Run(sfDir: String, warmupSec: Double,
+      passLoads: Seq[(Double, Double)], finalLoad: Double, extCpuThreshold: Double,
+      retried: Seq[String], passTimes: Seq[(String, Seq[(Double, Double, Double)])],
+      errors: Seq[(String, String)], prevTimes: Map[String, Double])
+
+  private def bestOf(ts: Seq[(Double, Double, Double)]): (Double, Double, Double) =
+    ts.minBy(_._1)
+
+  /** The stdout line and the BENCH_DETAIL.json text of `r`. */
+  def documents(r: Run): (String, String) = {
+    val best = r.passTimes.map { case (k, ts) => k -> bestOf(ts) }
+    val times = best.map { case (k, b) => k -> b._1 }
+    // Movers vs the previous detail artifact (the bench_compare rule:
+    // >60% relative AND >0.3 s absolute delta on the per-query minima).
+    val movers = times.flatMap { case (k, v) =>
+      r.prevTimes.get(k).collect {
+        case p if (v - p).abs > 0.3 && p > 0 && (v - p).abs / p > 0.6 =>
+          k -> Json.obj("prev" -> Json.fixed(p, 3), "now" -> Json.fixed(v, 3))
+      }
+    }
+    def byQuery(f: ((Double, Double, Double)) => Double) =
+      Json.obj(best.map { case (k, b) => k -> Json.fixed(f(b), 3) }: _*)
+    val errors = Json.obj(r.errors: _*)
+    val passLoads = r.passLoads.map { case (a, b) => Seq(Json.fixed(a, 3), Json.fixed(b, 3)) }
+    val line = Json.obj("metric" -> "total", "value" -> Json.fixed(times.map(_._2).sum, 3),
+      "unit" -> "sec", "queries" -> byQuery(_._1), "errors" -> errors, "sf" -> r.sfDir,
+      "loadavg" -> Json.fixed(r.finalLoad, 3), "pass_loadavg" -> passLoads,
+      "warmup_sec" -> Json.fixed(r.warmupSec, 3), "retried" -> r.retried.size,
+      "movers_vs_prev" -> movers.size)
+    // Full per-pass detail as a standalone artifact: a reader that keeps
+    // only a bounded tail of the stdout line truncates the query map (as
+    // in r11/r12), so the diagnosable evidence lives in a file instead.
+    val detail = Json.obj("sf" -> r.sfDir, "warmup_sec" -> Json.fixed(r.warmupSec, 3),
+      "pass_loadavg" -> passLoads, "final_loadavg" -> Json.fixed(r.finalLoad, 3),
+      "ext_cpu_threshold" -> Json.fixed(r.extCpuThreshold, 3), "retried" -> r.retried,
+      "movers_vs_prev" -> Json.obj(movers: _*), "errors" -> errors,
+      "best_pass_loadavg" -> byQuery(_._2), "best_pass_external_cpu" -> byQuery(_._3),
+      "pass_times" -> Json.obj(r.passTimes.map { case (k, ts) =>
+        k -> ts.map(t => Json.fixed(t._1, 3)) }: _*))
+    (Json.write(line), Json.write(detail) + "\n")
+  }
+
+  /** Per-query minimum pass time of a BENCH_DETAIL.json text. */
+  def previousTimes(detail: String): Map[String, Double] =
+    Json.read(detail).get("pass_times").properties.asScala.collect {
+      case e if e.getValue.size > 0 =>
+        e.getKey -> e.getValue.asScala.map(_.asDouble).min
+    }.toMap
+
   def main(args: Array[String]): Unit = {
+    val filter = args.headOption
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Contention discriminator: loadavg can't tell the bench's OWN
     // local[32] bursts from a neighbor burning the box (both push the
@@ -46,30 +109,19 @@ object Bench {
       "SPARK_GRAFT_BENCH_DETAIL", "/root/repo/BENCH_DETAIL.json")
 
     // Previous round's per-query minima, read BEFORE this run overwrites
-    // the file. The detail format is our own; the one regex below only
-    // matches `"<name>":[1.2,3.4]` pass_times entries (scalar fields and
-    // the nested pass_loadavg array shapes don't).
+    // the file.
     val prevTimes: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(detailPath)), "UTF-8")
-        val re = """"([A-Za-z0-9_]+)":\[([0-9.,]+)\]""".r
-        re.findAllMatchIn(txt).map { m =>
-          m.group(1) -> m.group(2).split(",").flatMap(_.toDoubleOption).min
-        }.toMap.filterNot { case (k, _) => k == "pass_loadavg" }
-      } catch { case _: Throwable => Map.empty }
+      try previousTimes(Files.readString(Paths.get(detailPath)))
+      catch { case _: Throwable => Map.empty }
 
     val spark = Tables.session("graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.select(filter)
 
-    def materialize(name: String): Option[String] =
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        None
-      } catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName)) }
+    def materialize(name: String): Unit =
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
 
     val osBean = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.asInstanceOf[com.sun.management.OperatingSystemMXBean]
@@ -85,7 +137,8 @@ object Bench {
     }
 
     val warmupT0 = System.nanoTime()
-    names.foreach(materialize) // warmup pass, unmeasured
+    // warmup pass, unmeasured; a failure shows up in the measured passes
+    names.foreach(n => try materialize(n) catch { case _: Throwable => () })
     val warmupSec = (System.nanoTime() - warmupT0) / 1e9
 
     // Per-query per-pass (wall sec, loadavg at start, external-CPU share
@@ -97,23 +150,17 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val passLoads = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
 
-    def measure(name: String, retry: Boolean = false): Unit = {
-      // Drop any cached blocks left by the warmup pass or a previous
-      // query, so each measured query pays its own full pipeline cost
-      // (a persisted intermediate materialized during warmup would
-      // otherwise turn the measured pass into a warm-cache read). The
-      // GC pass keeps one query's garbage from being collected inside
-      // the next query's timed window.
-      spark.catalog.clearCache()
-      System.gc()
-      val l = loadavg
-      externalCpu // reset the tick window to the query's own span
-      val t0 = System.nanoTime()
-      materialize(name) match {
-        case None =>
-          val t = (System.nanoTime() - t0) / 1e9
-          passTimes(name) = passTimes.getOrElse(name, Nil) :+ ((t, l, externalCpu))
-        case Some(err) =>
+    def measure(name: String, retry: Boolean = false): Unit =
+      SparkEntry.isolated(spark) {
+        val l = loadavg
+        externalCpu // reset the tick window to the query's own span
+        val t0 = System.nanoTime()
+        materialize(name)
+        ((System.nanoTime() - t0) / 1e9, l, externalCpu)
+      } match {
+        case Right(pass) =>
+          passTimes(name) = passTimes.getOrElse(name, Nil) :+ pass
+        case Left(e) =>
           // Pass kind decides (ADVICE r16): a transient failure during
           // the contention-retry third pass must not erase the two valid
           // standard-pass measurements — keep the best-of-N and stay
@@ -123,10 +170,9 @@ object Bench {
           // time with an empty errors map (the header contract).
           if (!retry || !passTimes.contains(name)) {
             if (!retry) { passTimes.remove(name): Unit }
-            errors(name) = err.take(200)
+            errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
           }
       }
-    }
 
     // Two measured passes, per-query minimum: single-pass numbers on a
     // shared box swing up to 3x from scheduling/GC interference, and the
@@ -144,8 +190,6 @@ object Bench {
     // retry). Constant external load inflates BOTH passes with a small
     // spread (the r15 signature), which is exactly what the external-CPU
     // trigger catches and the spread trigger can't.
-    def bestOf(ts: List[(Double, Double, Double)]): (Double, Double, Double) =
-      ts.minBy(_._1)
     val retried = names.filter { n =>
       passTimes.get(n).exists { ts =>
         val (best, _, ext) = bestOf(ts)
@@ -156,52 +200,12 @@ object Bench {
     }
     retried.foreach(measure(_, retry = true))
 
-    val times = passTimes.map { case (k, ts) => k -> bestOf(ts)._1 }
-    val bestLoads = passTimes.map { case (k, ts) => k -> bestOf(ts)._2 }
-    val bestExt = passTimes.map { case (k, ts) => k -> bestOf(ts)._3 }
-
-    // Movers vs the previous detail artifact (the bench_compare rule:
-    // >60% relative AND >0.3 s absolute delta on the per-query minima).
-    val movers = times.flatMap { case (k, v) =>
-      prevTimes.get(k).collect {
-        case p if (v - p).abs > 0.3 && p > 0 && (v - p).abs / p > 0.6 =>
-          k -> (p, v)
-      }
-    }
-
-    // Locale.ROOT: a comma-decimal default locale would emit invalid JSON.
-    def f3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
-    val qs = times.map { case (k, v) => s""""$k":${f3(v)}""" }
-      .mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s""""$k":${Serve.jstr(v)}""" }.mkString("{", ",", "}")
-    val total = times.values.sum
-    val load = loadavg
-    val loadsJson = passLoads
-      .map { case (a, b) => s"[${f3(a)},${f3(b)}]" }.mkString("[", ",", "]")
-
-    // Full per-pass detail as a standalone artifact: the driver keeps
-    // only a bounded tail of the stdout line (the r11/r12 query maps
-    // were truncated), so the diagnosable evidence lives in a file the
-    // judge can read from the repo instead.
-    val detail = {
-      val perQuery = passTimes.map { case (k, ts) =>
-        s""""$k":${ts.map(t => f3(t._1)).mkString("[", ",", "]")}"""
-      }.mkString("{", ",", "}")
-      val perQueryLoads = bestLoads.map { case (k, v) => s""""$k":${f3(v)}""" }
-        .mkString("{", ",", "}")
-      val perQueryExt = bestExt.map { case (k, v) => s""""$k":${f3(v)}""" }
-        .mkString("{", ",", "}")
-      val retriedJson = retried.map(n => s""""$n"""").mkString("[", ",", "]")
-      val moversJson = movers.map { case (k, (p, v)) =>
-        s""""$k":{"prev":${f3(p)},"now":${f3(v)}}"""
-      }.mkString("{", ",", "}")
-      s"""{"sf":"$sfDir","warmup_sec":${f3(warmupSec)},"pass_loadavg":$loadsJson,"final_loadavg":${f3(load)},"ext_cpu_threshold":${f3(extCpuThreshold)},"retried":$retriedJson,"movers_vs_prev":$moversJson,"errors":$es,"best_pass_loadavg":$perQueryLoads,"best_pass_external_cpu":$perQueryExt,"pass_times":$perQuery}"""
-    }
-    try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
-      (detail + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () } // diagnostics must never fail the bench
-
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"errors":$es,"sf":"$sfDir","loadavg":${f3(load)},"pass_loadavg":$loadsJson,"warmup_sec":${f3(warmupSec)},"retried":${retried.size},"movers_vs_prev":${movers.size}}""")
+    val (line, detail) = documents(Run(sfDir, warmupSec, passLoads.toSeq,
+      loadavg, extCpuThreshold, retried, passTimes.toSeq, errors.toSeq, prevTimes))
+    if (filter.isEmpty)
+      try Files.writeString(Paths.get(detailPath), detail): Unit
+      catch { case _: Throwable => () } // diagnostics must never fail the bench
+    println(line)
     spark.stop()
   }
 }

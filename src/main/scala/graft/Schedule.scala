@@ -152,6 +152,16 @@ object Schedule {
     StructField("tweet_id", StringType),
     StructField("lang", StringType)))
 
+  /** The news feeds (sibling lake directories, one news schema), unioned
+    * by the serving `news` view and by [[vocabIndexFlow]]. */
+  val NewsFeeds: Seq[String] = Seq("news_crawl", "news_tweets", "news_fanout")
+
+  /** Ingest outputs under a lake root, in `/tables` order; all compacted. */
+  val IngestOutputs: Seq[String] = Seq("cases", "france_cases", "virtests") ++ NewsFeeds
+
+  /** The [[vocabIndexFlow]] output directory under a lake root. */
+  val VocabOutput = "vocab"
+
   /** The reference's five flows over a lake root: three full-refresh
     * ingests (owid-style cases, France hospital, France virtests), the
     * news crawl (incremental AvailableNow), and — when a tweets landing
@@ -225,14 +235,13 @@ object Schedule {
     * until a news feed exists. */
   def vocabIndexFlow(spark: SparkSession, lakeDir: String): Flow =
     Flow("vocab_index", _ => {
-      val feeds = Seq("news_crawl", "news_tweets", "news_fanout")
-        .flatMap(n => LakeCommit.resolve(spark, s"$lakeDir/$n"))
+      val feeds = NewsFeeds.flatMap(n => LakeCommit.resolve(spark, s"$lakeDir/$n"))
         .map(spark.read.parquet(_))
       if (feeds.nonEmpty) {
         val news = feeds.reduce(_.unionByName(_))
         LakeCommit.commit(
           graft.queries.TextIndex.vocabOf(news, "title", "link"),
-          s"$lakeDir/vocab"): Unit
+          s"$lakeDir/$VocabOutput"): Unit
       }
     })
 
@@ -251,17 +260,15 @@ object Schedule {
       targetBytes: Long = graft.operators.Compaction.DefaultTargetBytes): Flow =
     Flow("compact", _ => {
       val C = graft.operators.Compaction
-      Seq("cases", "france_cases", "virtests", "news_crawl", "news_tweets",
-        "news_fanout")
-        .foreach { name =>
-          val path = s"$lakeDir/$name"
-          C.visibleFileCount(spark, path).foreach { n =>
-            if (n > maxFiles) {
-              val r = C.compactAny(spark, path, targetBytes)
-              println(s"[compact] $name: ${r.filesBefore} -> ${r.filesAfter} files")
-            }
+      IngestOutputs.foreach { name =>
+        val path = s"$lakeDir/$name"
+        C.visibleFileCount(spark, path).foreach { n =>
+          if (n > maxFiles) {
+            val r = C.compactAny(spark, path, targetBytes)
+            println(s"[compact] $name: ${r.filesBefore} -> ${r.filesAfter} files")
           }
         }
+      }
     })
 
   /** Fire every flow once, in registration order, isolating failures.

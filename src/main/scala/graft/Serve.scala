@@ -4,9 +4,10 @@ import java.net.{InetAddress, InetSocketAddress}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.KeyStore
 
+import scala.jdk.CollectionConverters._
+
 import javax.net.ssl.{KeyManagerFactory, SSLContext}
 
-import com.fasterxml.jackson.core.io.JsonStringEncoder
 import com.sun.net.httpserver.{HttpExchange, HttpServer, HttpsConfigurator, HttpsServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -43,6 +44,10 @@ import org.apache.spark.sql.graft.PlanShim
   *     of an embedding ([[graft.queries.VectorSearch.annSearch]]) — the
   *     interactive face of the similarity-search family
   *   - `GET /query/<name>`                 any catalog query by name
+  *
+  * Every JSON body is built by [[Json]] (result rows embed Spark's own
+  * `toJSON` text; a failure is `{"error":<message>}`), so text echoed
+  * from a request is escaped and decimals ignore the default locale.
   *
   * With `--lake=<dir>`, a [[Schedule]] lake's flow outputs (cases,
   * france_cases, virtests, news_crawl, news_tweets, and the unioned
@@ -113,10 +118,9 @@ object Serve {
   private def collectRows(df: DataFrame, limit: Int): Array[String] =
     df.limit(math.min(math.max(limit, 1), MaxLimit)).toJSON.collect()
 
-  private def renderRows(columns: Seq[String], rows: Array[String]): String = {
-    val cols = columns.map(jstr)
-    s"""{"columns":[${cols.mkString(",")}],"n":${rows.length},"rows":[${rows.mkString(",")}]}"""
-  }
+  private def renderRows(columns: Seq[String], rows: Array[String]): String =
+    Json.write(Json.obj("columns" -> columns, "n" -> rows.length,
+      "rows" -> rows.map(Json.Raw)))
 
   /** Function names rejected at parse time: every registered door into
     * `CallMethodViaReflection` (arbitrary static-method invocation — env
@@ -264,12 +268,11 @@ object Serve {
         case _: org.apache.spark.sql.AnalysisException => None
         case _: java.io.IOException => None
       }
-    val loaded = Seq("cases", "france_cases", "virtests", "news_crawl",
-      "news_tweets", "news_fanout", "vocab")
+    val loaded = (Schedule.IngestOutputs :+ Schedule.VocabOutput)
       .flatMap(n => load(n).map(n -> _))
     loaded.foreach { case (n, df) => df.createOrReplaceTempView(n) }
     val flows = loaded.map(_._1)
-    val newsFeeds = loaded.collect { case (n, df) if n.startsWith("news_") => df }
+    val newsFeeds = loaded.collect { case (n, df) if Schedule.NewsFeeds.contains(n) => df }
     if (newsFeeds.nonEmpty) {
       // union the ALREADY-validated snapshots — a re-read here would
       // reopen the mid-refresh window the per-view try just closed —
@@ -297,8 +300,7 @@ object Serve {
     * allowlisted at startup could never become queryable after its
     * first refresh tick. */
   private[graft] val LakeViewNames =
-    Seq("cases", "france_cases", "virtests", "news_crawl", "news_tweets",
-      "news_fanout", "news", "vocab")
+    Schedule.IngestOutputs :+ "news" :+ Schedule.VocabOutput
 
   /** The `/ui` static page: a dependency-free search client over
     * /search and /suggest (the SearchUI.js parity surface — search box,
@@ -469,9 +471,10 @@ object Serve {
           k -> java.net.URLDecoder.decode(v, UTF_8)
         }.toMap
 
-    def reply(ex: HttpExchange, code: Int, body: String): Unit = {
+    def reply(ex: HttpExchange, code: Int, body: String,
+        contentType: String = "application/json"): Unit = {
       val bytes = body.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
+      ex.getResponseHeaders.set("Content-Type", contentType)
       ex.sendResponseHeaders(code, bytes.length)
       ex.getResponseBody.write(bytes)
       ex.close()
@@ -525,13 +528,13 @@ object Serve {
         if (code >= 400) errors.incrementAndGet(): Unit
         ring.set((idx.getAndIncrement() % 512).toInt, ms)
       }
-      def json: String = {
+      def json: collection.Map[String, Any] = {
         val filled = math.min(idx.get, 512L).toInt
         val lat = (0 until filled).map(ring.get).sorted
         def pct(p: Int): Long =
           if (lat.isEmpty) 0L else lat(math.min(lat.size - 1, (lat.size * p) / 100))
-        s"""{"n":${n.get},"errors":${errors.get},"p50_ms":${pct(50)},""" +
-          s""""p95_ms":${pct(95)},"max_ms":${if (lat.isEmpty) 0L else lat.last}}"""
+        Json.obj("n" -> n.get, "errors" -> errors.get, "p50_ms" -> pct(50),
+          "p95_ms" -> pct(95), "max_ms" -> (if (lat.isEmpty) 0L else lat.last))
       }
     }
     val epStats = new java.util.concurrent.ConcurrentHashMap[String, EpStats]()
@@ -541,33 +544,25 @@ object Serve {
       epStats.computeIfAbsent(ep, _ => new EpStats)
     }
 
+    /** `{"error":message}`, the body of every failed request. */
+    def fail(code: Int, message: String): (Int, String) =
+      (code, Json.write(Json.obj("error" -> message)))
+
     def handle(ex: HttpExchange)(f: => (Int, String)): Unit = {
       val t0 = System.nanoTime()
-      def done(code: Int, body: String): Unit = {
-        reply(ex, code, body)
-        statsFor(ex.getRequestURI.getPath)
-          .record(code, (System.nanoTime() - t0) / 1000000L)
+      def done(r: (Int, String)): Unit = {
+        reply(ex, r._1, r._2)
+        statsFor(ex.getRequestURI.getPath).record(r._1, (System.nanoTime() - t0) / 1000000L)
       }
-      try {
-        if (!authorized(ex))
-          done(401, """{"error":"missing or invalid bearer token"}""")
-        else { val (code, body) = f; done(code, body) }
-      }
-      catch { case e: Exception =>
-        done(400, s"""{"error":${jstr(e.toString.take(500))}}""")
-      }
+      try done(if (authorized(ex)) f else fail(401, "missing or invalid bearer token"))
+      catch { case e: Exception => done(fail(400, e.toString.take(500))) }
     }
 
     server.createContext("/metrics", (ex: HttpExchange) => handle(ex) {
       val ups = (System.nanoTime() - startedAtNanos) / 1e9
-      val eps = epStats.entrySet().iterator()
-      val sb = new StringBuilder
-      while (eps.hasNext) {
-        val e = eps.next()
-        if (sb.nonEmpty) sb.append(","): Unit
-        sb.append(s"${jstr(e.getKey)}:${e.getValue.json}"): Unit
-      }
-      (200, f"""{"uptime_sec":$ups%.1f,"endpoints":{$sb}}""")
+      val eps = epStats.entrySet().asScala.toSeq.map(e => e.getKey -> e.getValue.json)
+      (200, Json.write(Json.obj("uptime_sec" -> Json.fixed(ups, 1),
+        "endpoints" -> Json.obj(eps: _*))))
     })
 
     // Flow-run history — the reference's Prefect-server-UI listing
@@ -578,22 +573,17 @@ object Serve {
     // are distinguishable to an operator.
     server.createContext("/flows", (ex: HttpExchange) => handle(ex) {
       flowHistory match {
-        case None => (404,
-          """{"error":"no cadence daemon on this server (start with --lake=<dir> --refresh-hours=<h>)"}""")
+        case None => fail(404,
+          "no cadence daemon on this server (start with --lake=<dir> --refresh-hours=<h>)")
         case Some(h) =>
           val flows = h.snapshot.map { case (name, rs) =>
-            val runs = rs.map { r =>
-              s"""{"tick":${r.tick},"start_epoch_ms":${r.startEpochMs}""" +
-                s""","duration_ms":${r.durationMs},"ok":${r.error.isEmpty}""" +
-                s""","error":${r.error.fold("null")(jstr)}""" +
-                s""","rows":${r.rows.fold("null")(_.toString)}}"""
-            }.mkString("[", ",", "]")
-            val lastErr = rs.reverseIterator.collectFirst {
-              case rr if rr.error.isDefined => rr.error.get }
-            s"""{"flow":${jstr(name)},"runs":$runs""" +
-              s""","last_error":${lastErr.fold("null")(jstr)}}"""
+            val runs = rs.map(r => Json.obj("tick" -> r.tick,
+              "start_epoch_ms" -> r.startEpochMs, "duration_ms" -> r.durationMs,
+              "ok" -> r.error.isEmpty, "error" -> r.error, "rows" -> r.rows))
+            Json.obj("flow" -> name, "runs" -> runs,
+              "last_error" -> rs.reverseIterator.flatMap(_.error).nextOption())
           }
-          (200, s"""{"keep":${h.keep},"flows":[${flows.mkString(",")}]}""")
+          (200, Json.write(Json.obj("keep" -> h.keep, "flows" -> flows)))
       }
     })
 
@@ -601,7 +591,7 @@ object Serve {
       // allowlisted lake views that have not landed yet are queryable
       // only in principle — report what a query can actually hit now
       val live = tables.filter(spark.catalog.tableExists)
-      (200, s"""{"tables":[${live.map(jstr).mkString(",")}]}""")
+      (200, Json.write(Json.obj("tables" -> live)))
     })
 
     // Per-request cancellation watchdog for /sql: the handler pool is
@@ -656,12 +646,12 @@ object Serve {
           }
           try (200, render(df, intParam(p, "limit", 100)))
           catch { case e: Exception if fired.get() && isCancellation(e) =>
-            (408, s"""{"error":"query exceeded ${timeoutSec}s and was cancelled"}""")
+            fail(408, s"query exceeded ${timeoutSec}s and was cancelled")
           } finally {
             cancel.cancel(false)
             spark.sparkContext.clearJobGroup()
           }
-        case None => (400, """{"error":"missing q parameter"}""")
+        case None => fail(400, "missing q parameter")
       }
     })
 
@@ -676,21 +666,11 @@ object Serve {
     // the dashboard half of the rendering layer (see [[ServeDash]]) —
     // same no-auth static-asset stance as /ui: the page carries no
     // data; its /query fetches pass through the normal handler
-    server.createContext("/dashboard", (ex: HttpExchange) => {
-      val bytes = ServeDash.Html.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
+    server.createContext("/dashboard", (ex: HttpExchange) =>
+      reply(ex, 200, ServeDash.Html, "text/html; charset=utf-8"))
 
-    server.createContext("/ui", (ex: HttpExchange) => {
-      val bytes = UiHtml.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
+    server.createContext("/ui", (ex: HttpExchange) =>
+      reply(ex, 200, UiHtml, "text/html; charset=utf-8"))
 
     server.createContext("/health", (ex: HttpExchange) => handle(ex) {
       // Liveness + readiness in one: the session answers a trivial
@@ -707,12 +687,10 @@ object Serve {
       // a load balancer must not evict it for a flow-level problem.
       val flowAlerts = flowHistory.map(_.alerts(System.currentTimeMillis()))
       val status = if (flowAlerts.exists(_.nonEmpty)) "alerting" else "ok"
-      val alertsJson = flowAlerts.fold("") { as =>
-        s""","flow_alerts":[${as.map(a =>
-            s"""{"flow":${jstr(a.flow)},"kind":${jstr(a.kind)},"detail":${jstr(a.detail)}}""")
-          .mkString(",")}]"""
-      }
-      (200, f"""{"status":${jstr(status)},"uptime_sec":$ups%.1f,"tables_live":$live,"spark":${jstr(spark.version)}$alertsJson}""")
+      val health = Json.obj("status" -> status, "uptime_sec" -> Json.fixed(ups, 1),
+        "tables_live" -> live, "spark" -> spark.version)
+      (200, Json.write(flowAlerts.fold(health)(as => health + ("flow_alerts" ->
+        as.map(a => Json.obj("flow" -> a.flow, "kind" -> a.kind, "detail" -> a.detail))))))
     })
 
     // ES match-query `fuzziness` parity for the documents search:
@@ -781,9 +759,9 @@ object Serve {
             rawTerms.size <= 8 && canExpand)
           fuzzyExpand(rawTerms, idx)
         else rawTerms
-      if (terms.isEmpty) (400, """{"error":"missing q parameter"}""")
+      if (terms.isEmpty) fail(400, "missing q parameter")
       else if (terms.size > MaxSearchTerms)
-        (400, s"""{"error":"q must have <= $MaxSearchTerms terms (got ${terms.size})"}""")
+        fail(400, s"q must have <= $MaxSearchTerms terms (got ${terms.size})")
       else {
         // Clamp BEFORE the query: render() caps the collect, but the
         // rank pre-limit is page*size — an absurd page/size would turn
@@ -795,19 +773,19 @@ object Serve {
         val page = clamp(intParam(p, "page", 1), MaxLimit)
         val size = clamp(intParam(p, "size", 10), MaxLimit)
         if (page.toLong * size > MaxLimit)
-          (400, s"""{"error":"page*size must be <= $MaxLimit (got ${page.toLong * size})"}""")
+          fail(400, s"page*size must be <= $MaxLimit (got ${page.toLong * size})")
         else p.get("index") match {
           // the reference UI's actual target: the crawled news store
           // (SearchUI.js:6 queries the news_* index pattern) — served
           // from the lake's deduped `news` view when one is registered
           case Some("news") =>
             if (!spark.catalog.tableExists("news"))
-              (400, """{"error":"no news lake registered (start with --lake)"}""")
+              fail(400, "no news lake registered (start with --lake)")
             else (200, render(
               graft.queries.TextAnalysis.newsSearchHits(
                 spark.table("news"), terms, page, size), size))
           case Some(other) =>
-            (400, s"""{"error":${jstr(s"unknown index ${other.take(40)} (use news, or omit for documents)")}}""")
+            fail(400, s"unknown index ${other.take(40)} (use news, or omit for documents)")
           case None =>
             val ranker = if (p.get("rank").contains("overlap")) "overlap" else "bm25"
             (200, render(
@@ -852,9 +830,9 @@ object Serve {
           if (rows.nonEmpty) (200, renderRows(nbrs.columns, rows))
           else if (Tables.load(spark, dir, "embeddings")
             .filter(col("vec_id") === id).isEmpty)
-            (404, s"""{"error":"no embedding with vec_id $id"}""")
+            fail(404, s"no embedding with vec_id $id")
           else (200, renderRows(nbrs.columns, rows))
-        case None => (400, """{"error":"missing or non-numeric id parameter"}""")
+        case None => fail(400, "missing or non-numeric id parameter")
       }
     })
 
@@ -875,8 +853,8 @@ object Serve {
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString(
               if (p.get("mode").contains("formatted")) "formatted" else "simple"))
-          (200, s"""{"plan":${jstr(plan.take(20000))}}""")
-        case None => (400, """{"error":"missing q parameter"}""")
+          (200, Json.write(Json.obj("plan" -> plan.take(20000))))
+        case None => fail(400, "missing q parameter")
       }
     })
 
@@ -888,9 +866,8 @@ object Serve {
       // nothing is spliced into SQL or LIKE patterns.
       val p = params(ex)
       p.get("q").map(_.trim.toLowerCase).filter(_.nonEmpty) match {
-        case None => (400, """{"error":"missing q parameter"}""")
-        case Some(q) if q.length > 64 =>
-          (400, """{"error":"q must be <= 64 chars"}""")
+        case None => fail(400, "missing q parameter")
+        case Some(q) if q.length > 64 => fail(400, "q must be <= 64 chars")
         case Some(q) =>
           val limit = clamp(intParam(p, "limit", 8), 100)
           // index=news serves from the MATERIALIZED vocab view (the
@@ -900,21 +877,19 @@ object Serve {
           val vocab: Either[(Int, String), DataFrame] = p.get("index") match {
             case Some("news") =>
               if (spark.catalog.tableExists("vocab")) Right(spark.table("vocab"))
-              else Left((400, """{"error":"no vocab index registered (run the vocab_index flow with --lake)"}"""))
+              else Left(fail(400, "no vocab index registered (run the vocab_index flow with --lake)"))
             case Some(other) =>
-              Left((400, s"""{"error":${jstr(s"unknown index ${other.take(40)} (use news, or omit for documents)")}}"""))
+              Left(fail(400, s"unknown index ${other.take(40)} (use news, or omit for documents)"))
             case None => Right(docsVocab) // memoized: one fold per server
           }
           vocab match {
             case Left(err) => err
             case Right(v) =>
-              val completions = render(
-                graft.queries.TextIndex.suggestFrom(v, q, limit), limit)
-              if (p.get("fuzzy").contains("1")) {
-                val corrections = render(
-                  graft.queries.TextIndex.fuzzyFrom(v, q), limit)
-                (200, s"""{"completions":$completions,"corrections":$corrections}""")
-              } else (200, s"""{"completions":$completions}""")
+              val completions = Json.obj("completions" -> Json.Raw(render(
+                graft.queries.TextIndex.suggestFrom(v, q, limit), limit)))
+              (200, Json.write(if (!p.get("fuzzy").contains("1")) completions
+                else completions + ("corrections" -> Json.Raw(render(
+                  graft.queries.TextIndex.fuzzyFrom(v, q), limit)))))
           }
       }
     })
@@ -936,12 +911,12 @@ object Serve {
           case None if SparkEntry.queries.contains(name) =>
             // silently ignoring the range would hand the dashboard an
             // UNSLICED panel labeled as sliced — refuse loudly
-            (400, s"""{"error":"query ${name.take(100)} is not time-sliceable; supported: ${timeSliced.keys.toSeq.sorted.mkString(", ")}"}""")
-          case None => (404, s"""{"error":"unknown query ${name.take(100)}"}""")
+            fail(400, s"query ${name.take(100)} is not time-sliceable; supported: ${timeSliced.keys.toSeq.sorted.mkString(", ")}")
+          case None => fail(404, s"unknown query ${name.take(100)}")
         }
       } else SparkEntry.queries.get(name) match {
         case Some(fn) => (200, render(fn(spark, dir), limit))
-        case None => (404, s"""{"error":"unknown query ${name.take(100)}"}""")
+        case None => fail(404, s"unknown query ${name.take(100)}")
       }
     })
 
@@ -977,11 +952,6 @@ object Serve {
       ((s, d, f, t) => graft.queries.EventOps.activeUsers7d(s, d, f, t)),
     "evt_growth_accounting" ->
       ((s, d, f, t) => graft.queries.Growth.growthAccounting(s, d, f, t)))
-
-  /** `s` as a JSON string literal, quoted and escaped by jackson-core;
-    * the one escaper behind every hand-assembled JSON body in graft. */
-  private[graft] def jstr(s: String): String =
-    "\"" + String.valueOf(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
 
   def main(args: Array[String]): Unit = {
     val bindAll = args.contains("--bind-all")

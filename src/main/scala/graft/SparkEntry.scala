@@ -56,6 +56,25 @@ object SparkEntry {
       graft.queries.Survival.queries ++
       graft.queries.Growth.queries
 
+  /** The catalog names a main runs, sorted. `filter` is a comma-separated
+    * list of name substrings: an entry runs when its name contains any of
+    * them. No filter (or one with no non-empty part) is the whole catalog. */
+  def select(filter: Option[String]): Seq[String] = {
+    val parts = filter.map(_.split(',').toSeq.filter(_.nonEmpty)).filter(_.nonEmpty)
+    queries.keys.toSeq.sorted.filter(n => parts.forall(_.exists(n.contains)))
+  }
+
+  /** Runs `body` for one catalog entry after dropping every cached block
+    * and running a GC, and returns its result or whatever it threw. The
+    * GC matters: `localCheckpoint` blocks are reaped only after their RDD
+    * references are collected, so a checkpoint-heavy entry (pagerank,
+    * dedup clusters) would otherwise carry every earlier entry's blocks. */
+  def isolated[A](spark: SparkSession)(body: => A): Either[Throwable, A] = {
+    spark.catalog.clearCache()
+    System.gc()
+    try Right(body) catch { case e: Throwable => Left(e) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] =

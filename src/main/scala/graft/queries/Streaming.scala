@@ -323,8 +323,9 @@ object Streaming {
     // watermark either way, and the trailing no-data batch flushes
     // every real day window.
     java.nio.file.Files.write(java.nio.file.Paths.get(in, "zz_sentinel.json"),
-      ("""{"title":"sentinel","desc":null,"date":"2100-01-01T00:00:00",""" +
-        """"link":"sentinel","img":null,"lang":"xx","source":null}""")
+      graft.Json.write(graft.Json.obj("title" -> "sentinel", "desc" -> None,
+        "date" -> "2100-01-01T00:00:00", "link" -> "sentinel", "img" -> None,
+        "lang" -> "xx", "source" -> None))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     runOnce()
 

@@ -53,13 +53,16 @@ object TextAnalysis {
     // `rank <= hi` into TakeOrderedAndProject(limit=hi) — per-partition
     // top-hi then ONE hi-row merge — so the single-partition window sees
     // at most hi rows, never the corpus (PlanInvariantSpec asserts the
-    // pre-limit node stays in the plan).
+    // pre-limit node stays in the plan). `score >= 1` is tested after
+    // the rank, as in [[bm25Rank]]: below the window it is pushed under
+    // the scoring projection and scores every document twice; overlap
+    // scores are integers ≥ 0, so zero scores rank after every positive
+    // one and positive ranks do not move.
     val w = Window.orderBy(col("score").desc, col("doc_id").asc)
     val (lo, hi) = ((page - 1) * pageSize + 1, page * pageSize)
     docs.select(col("doc_id"), greatest(sText, sSource).as("score"))
-      .filter(col("score") >= 1)
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") >= lo && col("rank") <= hi)
+      .filter(col("rank") >= lo && col("rank") <= hi && col("score") >= 1)
   }
 
   val searchTopkSql: String =

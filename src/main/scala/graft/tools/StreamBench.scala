@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{Bench, Fixtures, Tables}
+import graft.{Fixtures, Json, Tables}
 import graft.streaming.{NewsStream, Sessionize, SessEvent, StateStores}
 
 /** Streaming THROUGHPUT replay: drives the two RocksDB-backed pipelines
@@ -59,13 +59,13 @@ object StreamBench {
     println(f"[streambench] $name: total ${totalRows} rows / $totalWall%.2f s " +
       f"= ${totalRows / totalWall}%.0f rows/s amortized; warm-fire fit: " +
       f"fixed $fixed%.2f s/fire + $rateStr (cold fire 1: ${fires.head._2}%.2f s)")
-    val fireJson = fires.map { case (r, w) =>
-      f"""{"rows":$r,"wall_sec":$w%.3f}""" }.mkString("[", ",", "]")
-    val rateJson =
-      if (rate.isInfinite || rate.isNaN || rate < 0) "null" else f"${rate}%.0f"
-    println(f"""{"tool":"streambench","pipeline":"$name","fires":$fireJson,""" +
-      f""""amortized_rows_per_sec":${totalRows / totalWall}%.0f,""" +
-      f""""fixed_sec_per_fire":$fixed%.3f,"marginal_rows_per_sec":$rateJson}""")
+    println(Json.write(Json.obj("tool" -> "streambench", "pipeline" -> name,
+      "fires" -> fires.map { case (r, w) =>
+        Json.obj("rows" -> r, "wall_sec" -> Json.fixed(w, 3)) },
+      "amortized_rows_per_sec" -> Json.fixed(totalRows / totalWall, 0),
+      "fixed_sec_per_fire" -> Json.fixed(fixed, 3),
+      "marginal_rows_per_sec" ->
+        Option.when(!(rate.isInfinite || rate.isNaN || rate < 0))(Json.fixed(rate, 0)))))
   }
 
   /** News dedup ladder: synthesized landing JSON (the NewsStream schema),

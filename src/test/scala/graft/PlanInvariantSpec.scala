@@ -365,6 +365,25 @@ class PlanInvariantSpec extends SparkSpec {
     }
   }
 
+  test("overlap search scores each document once: one token_overlap, one source lambda") {
+    // A `score >= 1` filter below the rank window is pushed under the
+    // scoring projection, so token_overlap and the source-match
+    // size(filter(…)) lambda would each run twice per document.
+    Seq(
+      "txt_search_topk" -> SparkEntry.queries("txt_search_topk")(spark, sf0001),
+      "searchHits overlap" -> graft.queries.TextAnalysis.searchHits(
+        spark, sf0001, Seq("spark", "join"), page = 1, pageSize = 5, ranker = "overlap"))
+      .foreach { case (name, df) =>
+        val plan = df.queryExecution.executedPlan
+        val exprs = graft.plans.PlanWalk.nodes(plan)
+          .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+        val overlaps = exprs.count(_.isInstanceOf[graft.functions.TokenOverlap])
+        assert(overlaps === 1, s"$name plans $overlaps token_overlap calls:\n$plan")
+        val lambdas = exprs.count(_.isInstanceOf[ArrayFilter])
+        assert(lambdas === 1, s"$name plans $lambdas ArrayFilter lambdas:\n$plan")
+      }
+  }
+
   test("chunking stays a map-only pass: zero exchanges of any kind") {
     // llm_chunk_docs claims one narrow per-doc pass (tokenize → integer
     // geometry → explode → slice). Any Exchange in the plan means a

@@ -549,6 +549,29 @@ class ServeSpec extends SparkSpec {
     assert(missing === 404 && err.contains("unknown query"))
   }
 
+  test("/query error bodies stay valid JSON when the name needs escaping") {
+    // the path is URL-decoded, so the name arrives with a raw quote and
+    // backslash; both the plain and the time-sliced 404 must escape it
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    Seq("/query/a%22b%5Cc" -> "a\"b\\c", "/query/a%22b?from=2020-01-01" -> "a\"b")
+      .foreach { case (path, name) =>
+        val (code, body) = get(path)
+        assert(code === 404, body)
+        assert(mapper.readTree(body).get("error").asText === s"unknown query $name", body)
+      }
+  }
+
+  test("/metrics and /health stay valid JSON under a comma-decimal default locale") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try Seq("/metrics", "/health").foreach { path =>
+      val (code, body) = get(path)
+      assert(code === 200, body)
+      assert(mapper.readTree(body).get("uptime_sec").isNumber, body)
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("malformed SQL returns a JSON error, not a hung connection") {
     val (code, body) = get("/sql?q=" + java.net.URLEncoder.encode(
       "SELECT FROM WHERE", "UTF-8"))

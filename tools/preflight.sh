@@ -6,6 +6,15 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+echo "== preflight: no hand-built JSON in src/main"
+# Every JSON document is built by graft.Json; an interpolated template
+# or a string escaper is how unescaped text and locale-formatted
+# decimals got into response bodies before.
+if grep -rnE '"""\{"|jstr\(' src/main/scala; then
+  echo "preflight: build JSON with graft.Json, not a string template" >&2
+  exit 1
+fi
+
 echo "== preflight: sbt Test/compile"
 sbt -batch Test/compile
 
