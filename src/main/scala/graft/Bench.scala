@@ -19,8 +19,9 @@ import scala.jdk.CollectionConverters._
   *    fast time;
   *  - the shared [[Tables.session]] (UTC, AQE on, shuffle partitions =
   *    cores, local mode), the same one the plan tools use;
-  *  - each measured run goes through [[SparkEntry.isolated]] (cache
-  *    cleared, GC run, error captured), like every other catalog main.
+  *  - each measured run goes through [[SparkEntry.isolated]] (cached
+  *    blocks dropped, error captured), like every other catalog main,
+  *    and runs a GC before its timed window.
   *
   * Self-defense against contended measurement (r15 verdict item 2: ~19
   * queries inflated 1.3-1.8x by box-wide load, diagnosable only by
@@ -152,6 +153,7 @@ object Bench {
 
     def measure(name: String, retry: Boolean = false): Unit =
       SparkEntry.isolated(spark) {
+        System.gc() // no earlier garbage collected inside the timed window
         val l = loadavg
         externalCpu // reset the tick window to the query's own span
         val t0 = System.nanoTime()

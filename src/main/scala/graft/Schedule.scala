@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ingest.{CasesIngest, FranceIngest}
 import graft.streaming.{NewsShaping, NewsStream}
@@ -144,14 +143,6 @@ object Schedule {
     }
   }
 
-  /** Raw scraped-tweet landing schema (crawl_tweets.py:71-84 fields). */
-  val tweetRawSchema: StructType = StructType(Seq(
-    StructField("user", StringType),
-    StructField("content", StringType),
-    StructField("date", StringType),
-    StructField("tweet_id", StringType),
-    StructField("lang", StringType)))
-
   /** The news feeds (sibling lake directories, one news schema), unioned
     * by the serving `news` view and by [[vocabIndexFlow]]. */
   val NewsFeeds: Seq[String] = Seq("news_crawl", "news_tweets", "news_fanout")
@@ -190,7 +181,7 @@ object Schedule {
       Flow("tweets", _ =>
         NewsStream.upsertToLake(spark,
           NewsShaping.shapeTweet(
-            spark.read.schema(tweetRawSchema).json(landing)),
+            spark.read.schema(NewsStream.tweetRawSchema).json(landing)),
           s"$lakeDir/news_tweets"))
     }
     base ++ tweets

@@ -64,14 +64,15 @@ object SparkEntry {
     queries.keys.toSeq.sorted.filter(n => parts.forall(_.exists(n.contains)))
   }
 
-  /** Runs `body` for one catalog entry after dropping every cached block
-    * and running a GC, and returns its result or whatever it threw. The
-    * GC matters: `localCheckpoint` blocks are reaped only after their RDD
-    * references are collected, so a checkpoint-heavy entry (pagerank,
-    * dedup clusters) would otherwise carry every earlier entry's blocks. */
+  /** Runs `body` for one catalog entry after dropping every cached block,
+    * and returns its result or whatever it threw. Besides the cached
+    * Datasets, every persisted RDD is unpersisted: a checkpoint-heavy
+    * entry (pagerank, dedup clusters) leaves `localCheckpoint` blocks
+    * that only a collection of their RDDs would otherwise reap, and no
+    * entry reads a persisted RDD that an earlier entry made. */
   def isolated[A](spark: SparkSession)(body: => A): Either[Throwable, A] = {
     spark.catalog.clearCache()
-    System.gc()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     try Right(body) catch { case e: Throwable => Left(e) }
   }
 

@@ -259,7 +259,7 @@ object CorpusOps {
 
   // The overwrite-then-read-back sequence makes concurrent runs against
   // the SAME output path unsafe, so same-path invocations serialize
-  // (same convention as Streaming's newsLock, Streaming.scala:21-29)
+  // (as streaming run roots do, Fixtures.withRunRoot)
   // while different destinations proceed concurrently. STRIPED locks,
   // not a path→lock map: a long-lived Serve process with caller-chosen
   // destinations would grow an unbounded map one entry per distinct

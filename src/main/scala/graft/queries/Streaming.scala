@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{NewsStream, SessEvent, Sessionize}
+import graft.streaming.{NewsStream, SessEvent, Sessionize, StateStores}
 
 /** Batch correctness query over the streaming news pipeline's sink: the
   * whole EP2 chain (readStream JSON → watermark + (link,date) dedup →
@@ -18,82 +18,69 @@ object Streaming {
 
   private val landing = graft.Fixtures.newsLanding
 
-  // Per-query locks: these queries clean-then-reuse ONE memoized scratch
-  // root per JVM (Fixtures.reusedScratchDir) so a long-lived Serve
-  // process doesn't leak a sink+checkpoint directory per request; the
-  // clean step makes concurrent same-query runs unsafe, hence the lock.
-  private val newsLock, sessLock, attrLock = new Object
-
-  // ---- staged streaming inputs (the attrInputs convention, generalized)
+  // Every entry below is one streaming lifecycle
+  // (StateStores.runToParquet, or StateStores.run for the CDC apply)
+  // over two kinds of directory, both owned by graft.Fixtures:
+  //  - its STAGED input (Fixtures.stagedInput): a deterministic function
+  //    of the immutable source tables, written once per (kind, source)
+  //    per JVM and reused by later invocations;
+  //  - its RUN ROOT (Fixtures.withRunRoot): sink + checkpoint (+ lake),
+  //    emptied at every call under the prefix's lock, so every run is a
+  //    fresh, complete lifecycle over the full input and same-entry runs
+  //    serialize.
+  // The watermark-kicker sentinel is the one per-invocation mutation of
+  // a staged dir: it lands as a single FIXED-NAME file (2 FS ops),
+  // refreshed inside the run root's lock.
   //
-  // Every stream_* entry's file-source input is a DETERMINISTIC function
-  // of the immutable source tables, ASSUMED IMMUTABLE for the JVM's
-  // lifetime (ADVICE r18): the memo is keyed by directory path, so a
-  // fixture regenerated in place mid-JVM would silently serve the stale
-  // staged copy — regenerating test data requires a fresh JVM, which is
-  // how every harness (Bench, Verify, tests) already runs. Staged once
-  // per (query, dir) per JVM and reused by later invocations (Bench's
-  // warmup + measured passes, Serve requests) — re-deriving it per pass times a parquet
-  // write, not the streaming operator (r18 optimization; guide §1.4
-  // "time the computation"). The watermark-kicker sentinel is the one
-  // per-invocation mutation of a staged dir: it lands as a single
-  // FIXED-NAME file (2 FS ops), refreshed at each invocation's start.
-  // Sink + checkpoint stay per-run: every run remains a fresh, complete
-  // streaming lifecycle over the full input.
-  //
-  // Single-fire lifecycles (r19): the sentinel rides the SAME
-  // AvailableNow run as the data instead of a second fire. Watermarks
-  // only advance at batch boundaries, so a sentinel in the data batch
-  // changes nothing the stateful operators see: the batch processes
-  // under the pre-batch watermark exactly as before, the post-batch
-  // watermark lands past every real window/session/bucket, and the
-  // run's trailing no-data batch (the same mechanism the old fire 2
-  // relied on: stateful operators report needsAnotherBatch when the
+  // Single-fire lifecycles: the sentinel rides the SAME AvailableNow run
+  // as the data instead of a second fire. Watermarks only advance at
+  // batch boundaries, so a sentinel in the data batch changes nothing
+  // the stateful operators see: the batch processes under the pre-batch
+  // watermark exactly as before, the post-batch watermark lands past
+  // every real window/session/bucket, and the run's trailing no-data
+  // batch (stateful operators report needsAnotherBatch when the
   // watermark moved) flushes them. One lifecycle (source discovery,
   // state-store open, offset/commit WALs) instead of two, with
   // row-identical sinks (StreamingSpec + the oracle re-check both).
   // stream_left_join is NOT converted: stream-stream OUTER eviction
   // does not get a trailing no-data batch from a single AvailableNow
-  // run (found live in r17 — see its Scaladoc), so it keeps two fires
-  // over one checkpoint.
+  // run (see its Scaladoc), so it keeps two fires over one checkpoint.
 
   private val SentinelFile = "zz_sentinel.parquet"
 
   private def fsOf(spark: SparkSession) = org.apache.hadoop.fs.FileSystem
     .get(spark.sparkContext.hadoopConfiguration)
 
-  /** Copy the staged one-row sentinel's part-file into `inDir` under the
-    * fixed name — two FS ops instead of a per-invocation Spark write. */
+  /** Replace `inDir`'s sentinel with a copy of the staged one-row
+    * sentinel's part-file under the fixed name — two FS ops instead of a
+    * per-invocation Spark write. */
   private def injectSentinel(spark: SparkSession, sentinelDir: String,
       inDir: String): Unit = {
     val fs = fsOf(spark)
-    // headOption + require (ADVICE r18): the ConcurrentHashMap memo
-    // never re-stages a dir whose creation half-failed (e.g. a crash
-    // between the base write and the sentinel write), so a missing
-    // part-file must name the dir instead of surfacing as a bare
-    // NoSuchElementException.
+    val dst = new org.apache.hadoop.fs.Path(inDir, SentinelFile)
+    fs.delete(dst, false)
+    // headOption + require: the staged-input memo never re-stages a dir
+    // whose creation half-failed (e.g. a crash between the base write
+    // and the sentinel write), so a missing part-file must name the dir
+    // instead of surfacing as a bare NoSuchElementException.
     val src = fs.listStatus(new org.apache.hadoop.fs.Path(sentinelDir))
       .map(_.getPath).filter(_.getName.startsWith("part-"))
       .sortBy(_.getName).headOption
       .getOrElse(throw new IllegalStateException(
         s"staged sentinel dir $sentinelDir holds no part-file — " +
           "half-created staging memo entry; restart the JVM to re-stage"))
-    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-      new org.apache.hadoop.fs.Path(inDir, SentinelFile), false,
+    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false,
       spark.sparkContext.hadoopConfiguration): Unit
   }
 
-  private def clearSentinel(spark: SparkSession, inDir: String,
-      name: String = SentinelFile): Unit =
-    fsOf(spark).delete(new org.apache.hadoop.fs.Path(inDir, name), false): Unit
-
-  def newsDedup(spark: SparkSession, dir: String): DataFrame = newsLock.synchronized {
-    val scratch = graft.Fixtures.reusedScratchDir("news_rt")
-    NewsStream.freshRun(spark, landing, scratch) // deletes scratch first
-      .select(col("link"), col("title"), col("lang"),
-        col("source.crawler").as("crawler"),
-        date_format(col("date"), "yyyy-MM-dd HH:mm").as("event_time"))
-  }
+  def newsDedup(spark: SparkSession, dir: String): DataFrame =
+    graft.Fixtures.withRunRoot("news_rt") { root =>
+      NewsStream.runOnce(spark, landing, s"$root/sink", s"$root/ckpt")
+      spark.read.parquet(s"$root/sink")
+        .select(col("link"), col("title"), col("lang"),
+          col("source.crawler").as("crawler"),
+          date_format(col("date"), "yyyy-MM-dd HH:mm").as("event_time"))
+    }
 
   val newsDedupSql: String =
     s"""SELECT link, title, lang, crawler, event_time FROM (
@@ -114,13 +101,9 @@ object Streaming {
     * sentinel's own session stays open forever, so it never reaches the
     * sink and the result equals the BATCH sessionization of the table —
     * which is exactly what the DuckDB oracle computes. */
-  private val sessInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  def streamSessionize(spark: SparkSession, dir: String): DataFrame = sessLock.synchronized {
+  def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staged = sessInputs.computeIfAbsent(dir, _ => {
-      val d = graft.Fixtures.scratchDir("sess_in")
+    val staged = graft.Fixtures.stagedInput("sess_in", dir) { d =>
       val ev = graft.Tables.load(spark, dir, "events")
         .select(col("user_id"), col("ts"))
       // The watermark kicker below reserves user_id -1 as an in-band
@@ -132,34 +115,18 @@ object Streaming {
       ev.write.parquet(s"$d/in")
       Seq(SessEvent(-1L, java.sql.Timestamp.valueOf("2100-01-01 00:00:00"))).toDS()
         .coalesce(1).write.parquet(s"$d/sentinel")
-      d
-    })
+    }
     val in = s"$staged/in"
-    val scratch = graft.Fixtures.reusedScratchDir("sess_rt")
-    val sink = s"$scratch/sink"
-    val ckpt = s"$scratch/ckpt"
-    val fs = fsOf(spark)
-    clearSentinel(spark, in)
-    Seq(sink, ckpt).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-
-    def runOnce(): Unit =
-      graft.streaming.StateStores.streamingSession(spark) { s =>
-        val src = s.readStream.schema("user_id BIGINT, ts TIMESTAMP").parquet(in)
-        val q = Sessionize.sessions(src.as[SessEvent], "1 minute").writeStream
-          .format("parquet").option("path", sink)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+    graft.Fixtures.withRunRoot("sess_rt") { root =>
+      injectSentinel(spark, s"$staged/sentinel", in)
+      StateStores.runToParquet(spark, s"$root/sink", s"$root/ckpt") { s =>
+        Sessionize.sessions(
+          s.readStream.schema("user_id BIGINT, ts TIMESTAMP").parquet(in).as[SessEvent],
+          "1 minute")
       }
-
-    injectSentinel(spark, s"$staged/sentinel", in)
-    runOnce()
-
-    spark.read.parquet(sink).filter(col("user_id") =!= -1L)
-      .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
+      spark.read.parquet(s"$root/sink").filter(col("user_id") =!= -1L)
+        .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
+    }
   }
 
   val streamSessionizeSql: String =
@@ -183,17 +150,8 @@ object Streaming {
     * two-sided watermarks + range condition bound both join-state
     * buffers — the DuckDB oracle is the equivalent batch interval join,
     * so the streamed inner join must equal it row-for-row. */
-  /** Input splits for [[streamAttribution]], staged once per (source
-    * dir) per JVM — the inputs derive from immutable test data, so
-    * repeat invocations (Bench min-of-2, Serve) skip the two writes;
-    * sink + checkpoint stay per-run so every run is a fresh, complete
-    * streaming lifecycle. */
-  private val attrInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  def streamAttribution(spark: SparkSession, dir: String): DataFrame = attrLock.synchronized {
-    val in = attrInputs.computeIfAbsent(dir, _ => {
-      val d = graft.Fixtures.scratchDir("attr_in")
+  def streamAttribution(spark: SparkSession, dir: String): DataFrame = {
+    val in = graft.Fixtures.stagedInput("attr_in", dir) { d =>
       val ev = graft.Tables.load(spark, dir, "events")
       ev.filter(col("event_type") === "view")
         .select(col("user_id"), col("ts").as("imp_time"), col("event_id").as("imp_id"))
@@ -202,34 +160,23 @@ object Streaming {
         .select(col("user_id").as("click_user"), col("ts").as("click_time"),
           col("event_id").as("click_id"))
         .write.parquet(s"$d/clicks")
-      d
-    })
-    val scratch = graft.Fixtures.reusedScratchDir("attr_rt")
-    val sink = s"$scratch/sink"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    Seq(sink, s"$scratch/ckpt").foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    graft.streaming.StateStores.streamingSession(spark) { s =>
-      val imps = s.readStream
-        .schema("user_id BIGINT, imp_time TIMESTAMP, imp_id BIGINT")
-        .parquet(s"$in/imps")
-      val clicks = s.readStream
-        .schema("click_user BIGINT, click_time TIMESTAMP, click_id BIGINT")
-        .parquet(s"$in/clicks")
-      val q = graft.streaming.StreamJoin
-        .attribute(imps, clicks, impKey = "user_id", clickKey = "click_user")
-        .select(col("imp_id"), col("click_id"),
-          date_format(col("imp_time"), "yyyy-MM-dd HH:mm:ss").as("imp_t"),
-          date_format(col("click_time"), "yyyy-MM-dd HH:mm:ss").as("click_t"))
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", s"$scratch/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
-    spark.read.parquet(sink)
+    graft.Fixtures.withRunRoot("attr_rt") { root =>
+      StateStores.runToParquet(spark, s"$root/sink", s"$root/ckpt") { s =>
+        val imps = s.readStream
+          .schema("user_id BIGINT, imp_time TIMESTAMP, imp_id BIGINT")
+          .parquet(s"$in/imps")
+        val clicks = s.readStream
+          .schema("click_user BIGINT, click_time TIMESTAMP, click_id BIGINT")
+          .parquet(s"$in/clicks")
+        graft.streaming.StreamJoin
+          .attribute(imps, clicks, impKey = "user_id", clickKey = "click_user")
+          .select(col("imp_id"), col("click_id"),
+            date_format(col("imp_time"), "yyyy-MM-dd HH:mm:ss").as("imp_t"),
+            date_format(col("click_time"), "yyyy-MM-dd HH:mm:ss").as("click_t"))
+      }
+      spark.read.parquet(s"$root/sink")
+    }
   }
 
   val streamAttributionSql: String =
@@ -250,11 +197,11 @@ object Streaming {
     * batch-side over the sink: rank is not a streaming-safe operator,
     * and the sink's windowed counts are final by construction.
     *
-    * Lifecycle: landing files copy to a scratch source; run 1 processes
-    * them; a far-future sentinel doc then kicks the watermark past
-    * every real window (the [[streamSessionize]] pattern) so run 2
-    * flushes them — the sentinel's own window never finalizes and so
-    * never reaches the sink. State stays bounded at any scale: dedup
+    * Lifecycle: landing files copy to a staged source; a far-future
+    * sentinel doc rides the same run and kicks the watermark past every
+    * real window (the [[streamSessionize]] pattern), so the run's
+    * trailing no-data batch flushes them — the sentinel's own window
+    * never finalizes and so never reaches the sink. State stays bounded at any scale: dedup
     * keys and open windows BOTH evict as the watermark passes (T3's
     * argument, across two stateful operators).
     *
@@ -270,73 +217,48 @@ object Streaming {
     * included). StreamingSpec("landing fixture: duplicate (link, date)
     * rows carry identical payloads") asserts it, so a fixture edit
     * fails there, not as a nondeterministic hash flake. */
-  private val trendInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  def streamTrending(spark: SparkSession, dir: String): DataFrame = trendLock.synchronized {
-    // Landing copy staged once per JVM (the staged-input convention —
-    // the copy exists so the sentinel write below never touches the
-    // shared fixture dir); the sentinel json is the only per-invocation
-    // file, cleared at start so fire 1 sees exactly the landing files.
-    val in = trendInputs.computeIfAbsent(landing, _ => {
-      val d = graft.Fixtures.scratchDir("trend_in")
-      val dst = s"$d/in"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
-      // Files.list holds the directory handle until closed — a long-lived
-      // Serve process would leak one per invocation without the finally.
+  def streamTrending(spark: SparkSession, dir: String): DataFrame = {
+    // The landing copy exists so the sentinel write below never touches
+    // the shared fixture dir.
+    val in = graft.Fixtures.stagedInput("trend_in", landing) { d =>
+      val dst = java.nio.file.Paths.get(d, "in")
+      java.nio.file.Files.createDirectories(dst)
+      // Files.list holds the directory handle until closed
       val listing = java.nio.file.Files.list(java.nio.file.Paths.get(landing))
       try listing.forEach { f =>
-        java.nio.file.Files.copy(f,
-          java.nio.file.Paths.get(dst, f.getFileName.toString)): Unit
+        java.nio.file.Files.copy(f, dst.resolve(f.getFileName.toString)): Unit
       } finally listing.close()
-      dst
-    })
-    val scratch = graft.Fixtures.reusedScratchDir("trend_rt")
-    val sink = s"$scratch/sink"
-    val ckpt = s"$scratch/ckpt"
-    val fs = fsOf(spark)
-    clearSentinel(spark, in, "zz_sentinel.json")
-    Seq(sink, ckpt).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-
-    def runOnce(): Unit = graft.streaming.StateStores.streamingSession(spark) { s =>
-      val counts = s.readStream.schema(NewsStream.newsSchema).json(in)
-        .filter(col("title").isNotNull) // F4, as in NewsStream
-        .withWatermark("date", "1 hour")
-        .dropDuplicates("link", "date")
-        .select(col("date"), explode(split(lower(col("title")), " ")).as("term"))
-        .groupBy(window(col("date"), "1 day"), col("term"))
-        .agg(count(lit(1)).as("n"))
-        .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-          col("term"), col("n"))
-      val q = counts.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    } + "/in"
+    graft.Fixtures.withRunRoot("trend_rt") { root =>
+      // watermark kicker — a doc far enough out that every real window
+      // ends before the new watermark; its own window stays open
+      // forever. It rides the single AvailableNow batch (the file-comment
+      // single-fire argument): dedup and counting run under the pre-batch
+      // watermark either way, and the trailing no-data batch flushes
+      // every real day window.
+      java.nio.file.Files.write(java.nio.file.Paths.get(in, "zz_sentinel.json"),
+        graft.Json.write(graft.Json.obj("title" -> "sentinel", "desc" -> None,
+          "date" -> "2100-01-01T00:00:00", "link" -> "sentinel", "img" -> None,
+          "lang" -> "xx", "source" -> None))
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      StateStores.runToParquet(spark, s"$root/sink", s"$root/ckpt") { s =>
+        s.readStream.schema(NewsStream.newsSchema).json(in)
+          .filter(col("title").isNotNull) // F4, as in NewsStream
+          .withWatermark("date", "1 hour")
+          .dropDuplicates("link", "date")
+          .select(col("date"), explode(split(lower(col("title")), " ")).as("term"))
+          .groupBy(window(col("date"), "1 day"), col("term"))
+          .agg(count(lit(1)).as("n"))
+          .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
+            col("term"), col("n"))
+      }
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("day")).orderBy(col("n").desc, col("term").asc)
+      spark.read.parquet(s"$root/sink")
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= 3)
     }
-    // watermark kicker — a doc far enough out that every real window
-    // ends before the new watermark; its own window stays open forever.
-    // It rides the single AvailableNow batch (the file-comment
-    // single-fire argument): dedup and counting run under the pre-batch
-    // watermark either way, and the trailing no-data batch flushes
-    // every real day window.
-    java.nio.file.Files.write(java.nio.file.Paths.get(in, "zz_sentinel.json"),
-      graft.Json.write(graft.Json.obj("title" -> "sentinel", "desc" -> None,
-        "date" -> "2100-01-01T00:00:00", "link" -> "sentinel", "img" -> None,
-        "lang" -> "xx", "source" -> None))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    runOnce()
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("day")).orderBy(col("n").desc, col("term").asc)
-    spark.read.parquet(sink)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
   }
-
-  private val trendLock = new Object
 
   val streamTrendingSql: String =
     s"""WITH docs AS (
@@ -352,8 +274,6 @@ object Streaming {
        |        row_number() OVER (PARTITION BY day ORDER BY n DESC, term ASC) AS rank
        |      FROM c)
        |SELECT day, term, n, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 3""".stripMargin
-
-  private val cdcLock = new Object
 
   /** Streaming CDC apply: the change feed from [[Ingestion.cdcDiff]]'s
     * synthetic deltas streams through a file source and lands on the
@@ -374,68 +294,57 @@ object Streaming {
     * 100 TB: the merge's carry-forward leg is the same keyed left-anti
     * the news upsert uses — partition-prunable by the batch's keys —
     * and the feed batch is the only new data read per tick. */
-  private val cdcInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  /** The staged change-feed dir for `dir`, once [[streamCdcApply]] has
-    * run (tests re-fire the same stream over the same checkpoint). */
-  private[graft] def cdcFeedDir(dir: String): Option[String] =
-    Option(cdcInputs.get(dir)).map(d => s"$d/in")
-
-  def streamCdcApply(spark: SparkSession, dir: String): DataFrame = cdcLock.synchronized {
-    import org.apache.spark.sql.streaming.Trigger
-    // Staged once per dir (the staged-input convention): the landed
-    // change feed AND a pristine base lake — both deterministic
-    // functions of the source tables. The merge MUTATES its lake, so
-    // each run works on a cheap FS copy of the pristine commit instead
-    // of re-running the base-snapshot write job per invocation.
-    val staged = cdcInputs.computeIfAbsent(dir, _ => {
-      val d = graft.Fixtures.scratchDir("cdc_in")
+  def streamCdcApply(spark: SparkSession, dir: String): DataFrame = {
+    // Staged once per dir: the landed change feed AND a pristine base
+    // lake — both deterministic functions of the source tables. The
+    // merge MUTATES its lake, so each run works on a cheap FS copy of
+    // the pristine commit instead of re-running the base-snapshot write
+    // job per invocation.
+    val staged = graft.Fixtures.stagedInput("cdc_in", dir) { d =>
       // Base snapshot: the "previous" load (keys ≡ 3 mod 10 absent).
       val o = graft.Tables.load(spark, dir, "orders")
         .select(col("o_orderkey"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
       graft.LakeCommit.commit(o.filter(col("o_orderkey") % 10 =!= 3), s"$d/lake0")
       Ingestion.cdcDiff(spark, dir).coalesce(1).write.mode("overwrite").json(s"$d/in")
-      d
-    })
-    val in = s"$staged/in"
-    val scratch = graft.Fixtures.reusedScratchDir("cdc_rt")
-    val lake = s"$scratch/lake"
-    val ckpt = s"$scratch/ckpt"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    org.apache.hadoop.fs.FileUtil.copy(fs,
-      new org.apache.hadoop.fs.Path(s"$staged/lake0"), fs,
-      new org.apache.hadoop.fs.Path(lake), false,
-      spark.sparkContext.hadoopConfiguration)
-    val stream = spark.readStream
-      .schema(Ingestion.cdcDiff(spark, dir).schema).json(in)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.PathLocks.lockFor(lake).synchronized {
-          val cur = graft.LakeCommit.read(spark, lake)
-          val b = batch.cache()
-          val upserts = b.filter(col("status") =!= "removed")
-            .select(col("o_orderkey"),
-              col("cur_price").cast("decimal(18,2)").as("price"))
-          val next = cur
-            .join(b.select(col("o_orderkey")), Seq("o_orderkey"), "left_anti")
-            .unionByName(upserts)
-          graft.LakeCommit.commit(next, lake)
-          b.unpersist(); ()
-        }
-      }
-      .start()
-    q.awaitTermination()
-    graft.LakeCommit.read(spark, lake)
-      .groupBy((col("o_orderkey") % 10).as("key_class"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("price")).cast("double").as("total"))
+    }
+    graft.Fixtures.withRunRoot("cdc_rt") { root =>
+      val lake = s"$root/lake"
+      val fs = fsOf(spark)
+      org.apache.hadoop.fs.FileUtil.copy(fs,
+        new org.apache.hadoop.fs.Path(s"$staged/lake0"), fs,
+        new org.apache.hadoop.fs.Path(lake), false,
+        spark.sparkContext.hadoopConfiguration)
+      // no state, so no streaming session: the merge runs on `spark`
+      val stream = spark.readStream
+        .schema(Ingestion.cdcDiff(spark, dir).schema).json(s"$staged/in")
+      StateStores.run(stream.writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          graft.PathLocks.lockFor(lake).synchronized {
+            val cur = graft.LakeCommit.read(spark, lake)
+            val b = batch.cache()
+            val upserts = b.filter(col("status") =!= "removed")
+              .select(col("o_orderkey"),
+                col("cur_price").cast("decimal(18,2)").as("price"))
+            val next = cur
+              .join(b.select(col("o_orderkey")), Seq("o_orderkey"), "left_anti")
+              .unionByName(upserts)
+            graft.LakeCommit.commit(next, lake)
+            b.unpersist(); ()
+          }
+        }, s"$root/ckpt")
+      graft.LakeCommit.read(spark, lake)
+        .groupBy((col("o_orderkey") % 10).as("key_class"))
+        .agg(
+          count(lit(1)).as("n"),
+          sum(col("price")).cast("double").as("total"))
+    }
   }
+
+  /** The staged change-feed dir for `dir`, once [[streamCdcApply]] has
+    * run (tests re-fire the same stream over the same checkpoint). */
+  private[graft] def cdcFeedDir(dir: String): Option[String] =
+    graft.Fixtures.stagedInputIfPresent("cdc_in", dir).map(d => s"$d/in")
 
   val streamCdcApplySql: String =
     """WITH cur AS (SELECT o_orderkey,
@@ -462,13 +371,8 @@ object Streaming {
     * batch and the no-data finalization batch evicts deterministically.
     * The DuckDB oracle is the equivalent batch LEFT JOIN, so withheld
     * or duplicated outer rows hash-fail. */
-  private val ljLock = new Object
-  private val ljInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  def streamLeftJoin(spark: SparkSession, dir: String): DataFrame = ljLock.synchronized {
-    val in = ljInputs.computeIfAbsent(dir, _ => {
-      val d = graft.Fixtures.scratchDir("slj_in")
+  def streamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
+    val in = graft.Fixtures.stagedInput("slj_in", dir) { d =>
       val ev = graft.Tables.load(spark, dir, "events")
       val sentinelTs = new java.sql.Timestamp(
         ev.agg(max(col("ts"))).collect()(0).getTimestamp(0).getTime +
@@ -483,41 +387,29 @@ object Streaming {
           col("event_id").as("click_id"))
         .unionByName(Seq((-1L, sentinelTs, -1L)).toDF("click_user", "click_time", "click_id"))
         .coalesce(1).write.parquet(s"$d/clicks")
-      d
-    })
-    val scratch = graft.Fixtures.reusedScratchDir("slj_rt")
-    val sink = s"$scratch/sink"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    Seq(sink, s"$scratch/ckpt").foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    graft.streaming.StateStores.streamingSession(spark) { s =>
-      def fire(): Unit = {
-        val imps = s.readStream
-          .schema("user_id BIGINT, imp_time TIMESTAMP, imp_id BIGINT")
-          .parquet(s"$in/imps")
-        val clicks = s.readStream
-          .schema("click_user BIGINT, click_time TIMESTAMP, click_id BIGINT")
-          .parquet(s"$in/clicks")
-        // NO sentinel filter inside the streaming query: a
-        // deterministic predicate on the imp side gets PUSHED BELOW the
-        // EventTimeWatermark node, silently dropping the heartbeat row
-        // before the watermark operator sees it (found live: the
-        // watermark stayed at real-max − 1h and withheld the final
-        // hour's outer rows). The sentinel pair instead joins with
-        // itself, lands in the sink, and is filtered on read-back.
-        val q = graft.streaming.StreamJoin
-          .attributeOuter(imps, clicks, impKey = "user_id", clickKey = "click_user")
-          .select(col("imp_id"), col("click_id"),
-            date_format(col("imp_time"), "yyyy-MM-dd HH:mm:ss").as("imp_t"),
-            (col("click_id").isNotNull).as("converted"))
-          .writeStream.format("parquet")
-          .option("path", sink)
-          .option("checkpointLocation", s"$scratch/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+    }
+    graft.Fixtures.withRunRoot("slj_rt") { root =>
+      def fire(): Unit =
+        StateStores.runToParquet(spark, s"$root/sink", s"$root/ckpt") { s =>
+          val imps = s.readStream
+            .schema("user_id BIGINT, imp_time TIMESTAMP, imp_id BIGINT")
+            .parquet(s"$in/imps")
+          val clicks = s.readStream
+            .schema("click_user BIGINT, click_time TIMESTAMP, click_id BIGINT")
+            .parquet(s"$in/clicks")
+          // NO sentinel filter inside the streaming query: a
+          // deterministic predicate on the imp side gets PUSHED BELOW the
+          // EventTimeWatermark node, silently dropping the heartbeat row
+          // before the watermark operator sees it (found live: the
+          // watermark stayed at real-max − 1h and withheld the final
+          // hour's outer rows). The sentinel pair instead joins with
+          // itself, lands in the sink, and is filtered on read-back.
+          graft.streaming.StreamJoin
+            .attributeOuter(imps, clicks, impKey = "user_id", clickKey = "click_user")
+            .select(col("imp_id"), col("click_id"),
+              date_format(col("imp_time"), "yyyy-MM-dd HH:mm:ss").as("imp_t"),
+              (col("click_id").isNotNull).as("converted"))
+        }
       // two fires over ONE checkpoint — the cadence-tick shape: fire 1
       // ingests everything (watermark advances past the sentinel only
       // in its LAST batch, after eviction already ran for that batch);
@@ -527,8 +419,8 @@ object Streaming {
       // silently withholds the final hour's outer rows — the exact
       // bounded-replay trap the Scaladoc above documents.
       fire(); fire()
+      spark.read.parquet(s"$root/sink").filter(col("imp_id") >= 0)
     }
-    spark.read.parquet(sink).filter(col("imp_id") >= 0)
   }
 
   val streamLeftJoinSql: String =
@@ -563,10 +455,7 @@ object Streaming {
     * literally TRUE — an estimator drift OR an unbounded-state
     * regression turns the row red. LEFT join from the exact side: a
     * withheld emission nulls the verdicts and hash-fails. */
-  private val hlluInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  def streamApproxUsers(spark: SparkSession, dir: String): DataFrame = hlluLock.synchronized {
+  def streamApproxUsers(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ApproxUsers
     val ev = graft.Tables.load(spark, dir, "events")
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
@@ -575,8 +464,7 @@ object Streaming {
         ((unix_timestamp(date_trunc("week", col("ts"))) + lit(7L * 24 * 3600))
           * 1000L).as("week_end_ms"),
         col("user_id"), col("ts"))
-    val staged = hlluInputs.computeIfAbsent(dir, _ => {
-      val d = graft.Fixtures.scratchDir("hllu_in")
+    val staged = graft.Fixtures.stagedInput("hllu_in", dir) { d =>
       // The watermark kicker below reserves this event_type as an in-band
       // sentinel (filtered from results) — refuse loudly if the corpus
       // ever carries it. One pushdown-friendly probe, not a scan.
@@ -588,44 +476,29 @@ object Streaming {
         java.sql.Timestamp.valueOf("2100-01-01 00:00:00")))
         .toDF("event_type", "week", "week_end_ms", "user_id", "ts")
         .coalesce(1).write.parquet(s"$d/sentinel")
-      d
-    })
-    val in = s"$staged/in"
-    val scratch = graft.Fixtures.reusedScratchDir("hllu_rt")
-    val sink = s"$scratch/sink"
-    val ckpt = s"$scratch/ckpt"
-    val fs = fsOf(spark)
-    clearSentinel(spark, in)
-    Seq(sink, ckpt).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-
-    def runOnce(): Unit = graft.streaming.StateStores.streamingSession(spark) { s =>
-      import s.implicits._
-      val src = s.readStream
-        .schema("event_type STRING, week STRING, week_end_ms BIGINT, user_id BIGINT, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in)
-      val q = ApproxUsers.approxUsers(src.as[graft.streaming.TypedEvent], "90 days")
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
-    // The sentinel is the 5th file of the single run: it carries the
-    // NEWEST mtime (copied now; the base files were staged earlier in
-    // the JVM), and the file source orders a capped trigger's files by
-    // modification time, so under maxFilesPerTrigger=1 it is batch 5 —
-    // after every real batch — and the trailing no-data batch then
-    // closes all real buckets. A withheld or early-closed bucket nulls
-    // the within_band/state_bounded verdicts via the exact-side left
-    // join below, so the oracle hash-fails any ordering regression.
-    injectSentinel(spark, s"$staged/sentinel", in)
-    runOnce()
-
-    val streamed = spark.read.parquet(sink)
-      .filter(col("event_type") =!= "zz_sentinel")
+    val in = s"$staged/in"
+    val streamed = graft.Fixtures.withRunRoot("hllu_rt") { root =>
+      // The sentinel is the 5th file of the single run: it carries the
+      // NEWEST mtime (copied now; the base files were staged earlier in
+      // the JVM), and the file source orders a capped trigger's files by
+      // modification time, so under maxFilesPerTrigger=1 it is batch 5 —
+      // after every real batch — and the trailing no-data batch then
+      // closes all real buckets. A withheld or early-closed bucket nulls
+      // the within_band/state_bounded verdicts via the exact-side left
+      // join below, so the oracle hash-fails any ordering regression.
+      injectSentinel(spark, s"$staged/sentinel", in)
+      StateStores.runToParquet(spark, s"$root/sink", s"$root/ckpt") { s =>
+        import s.implicits._
+        val src = s.readStream
+          .schema("event_type STRING, week STRING, week_end_ms BIGINT, user_id BIGINT, ts TIMESTAMP")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(in)
+        ApproxUsers.approxUsers(src.as[graft.streaming.TypedEvent], "90 days")
+      }
+      spark.read.parquet(s"$root/sink")
+        .filter(col("event_type") =!= "zz_sentinel")
+    }
     val exact = ev.groupBy(col("event_type"), col("week"))
       .agg(countDistinct(col("user_id")).as("exact_users"))
     exact.join(streamed, Seq("event_type", "week"), "left")
@@ -634,8 +507,6 @@ object Streaming {
           <= col("exact_users").cast("double") * ApproxUsers.Band).as("within_band"),
         (col("sketch_bytes") <= ApproxUsers.MaxSketchBytes).as("state_bounded"))
   }
-
-  private val hlluLock = new Object
 
   val streamApproxUsersSql: String =
     """SELECT event_type, strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
@@ -653,13 +524,9 @@ object Streaming {
     * The DuckDB oracle is the equivalent batch join+rollup, so a
     * dropped batch, a stale dim probe, or an unfinalized window all
     * hash-fail. */
-  private val enrichInputs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  def streamEnrich(spark: SparkSession, dir: String): DataFrame = enrichLock.synchronized {
-    import spark.implicits._
-    val staged = enrichInputs.computeIfAbsent(dir, _ => {
-      val d = graft.Fixtures.scratchDir("enrich_in")
+  def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
+    val staged = graft.Fixtures.stagedInput("enrich_in", dir) { d =>
+      import spark.implicits._
       val ev = graft.Tables.load(spark, dir, "events")
         .filter(col("ts").isNotNull && col("user_id").isNotNull)
         .select(col("user_id"), col("ts"), col("event_type"))
@@ -669,39 +536,23 @@ object Streaming {
       Seq((-1L, java.sql.Timestamp.valueOf("2100-01-01 00:00:00"), "zz"))
         .toDF("user_id", "ts", "event_type")
         .coalesce(1).write.parquet(s"$d/sentinel")
-      d
-    })
-    val in = s"$staged/in"
-    val scratch = graft.Fixtures.reusedScratchDir("enrich_rt")
-    val sink = s"$scratch/sink"
-    val ckpt = s"$scratch/ckpt"
-    val fs = fsOf(spark)
-    clearSentinel(spark, in)
-    Seq(sink, ckpt).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-
-    def runOnce(): Unit = graft.streaming.StateStores.streamingSession(spark) { s =>
-      val dim = graft.Tables.load(s, dir, "customer")
-        .join(graft.Tables.load(s, dir, "nation"),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("n_name"))
-      val src = s.readStream
-        .schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
-        .parquet(in)
-      val q = graft.streaming.Enrich.dailyByNation(src, dim)
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
-    injectSentinel(spark, s"$staged/sentinel", in)
-    runOnce()
-    spark.read.parquet(sink)
+    val in = s"$staged/in"
+    graft.Fixtures.withRunRoot("enrich_rt") { root =>
+      injectSentinel(spark, s"$staged/sentinel", in)
+      StateStores.runToParquet(spark, s"$root/sink", s"$root/ckpt") { s =>
+        val dim = graft.Tables.load(s, dir, "customer")
+          .join(graft.Tables.load(s, dir, "nation"),
+            col("c_nationkey") === col("n_nationkey"))
+          .select(col("c_custkey"), col("n_name"))
+        val src = s.readStream
+          .schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
+          .parquet(in)
+        graft.streaming.Enrich.dailyByNation(src, dim)
+      }
+      spark.read.parquet(s"$root/sink")
+    }
   }
-
-  private val enrichLock = new Object
 
   val streamEnrichSql: String =
     """SELECT strftime(date_trunc('day', e.ts), '%Y-%m-%d') AS day,

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** The EP2 streaming news pipeline (SURVEY.md §3): crawler-written JSON
@@ -22,6 +21,10 @@ import org.apache.spark.sql.types._
   * the checkpoint), each micro-batch is a normal Catalyst plan, and the
   * sink commit log makes re-fires exactly-once — re-running after a crash
   * neither loses nor duplicates docs.
+  *
+  * Both flows ([[runOnce]], [[runOnceFanout]]) fire through the one
+  * streaming lifecycle, [[StateStores.runToParquet]], which also reports
+  * the rows they land to a recorded cadence tick.
   */
 object NewsStream {
 
@@ -56,7 +59,8 @@ object NewsStream {
     StructField("tag", StringType)))
 
   /** Raw tweet landing record (crawl_tweets.py:71-84 fields + injected
-    * `lang`). */
+    * `lang`), as the tweet scrape and [[graft.ingest.CrawlFanout]] land
+    * it. [[NewsShaping.shapeTweet]] does not read `link`. */
   val tweetRawSchema: StructType = StructType(Seq(
     StructField("user", StringType),
     StructField("content", StringType),
@@ -73,56 +77,32 @@ object NewsStream {
     * deduped store, with the shaping moved crawler-side → Spark-side. */
   def runOnceFanout(spark: SparkSession, newsLanding: String,
       tweetsLanding: String, sinkDir: String, checkpointDir: String): Unit =
-    StateStores.streamingSession(spark) { s =>
+    StateStores.runToParquet(spark, sinkDir, checkpointDir) { s =>
       val news = NewsShaping.shapeGoogleNews(
         s.readStream.schema(googleNewsRawSchema).json(newsLanding))
       val tweets = NewsShaping.shapeTweet(
         s.readStream.schema(tweetRawSchema).json(tweetsLanding))
-      val deduped = news.unionByName(tweets)
-        .filter(col("title").isNotNull) // F4
-        .withWatermark("date", "7 days") // T3
-        .dropDuplicates("link", "date")
-      val q = deduped.writeStream
-        .format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      reportSinkRows(q)
+      dedup(news.unionByName(tweets))
     }
 
-  /** Rows-landed for the cadence run history (/flows): the sum of sink
-    * output rows across this run's micro-batches, from the progress the
-    * query already tracks (no extra job). No-op outside a recorded tick. */
-  private def reportSinkRows(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (graft.Schedule.FlowRuns.active)
-      graft.Schedule.FlowRuns.add(
-        q.recentProgress.toSeq.map(p => math.max(0L, p.sink.numOutputRows)).sum)
-
-  /** Run the landing → sink pipeline to completion (AvailableNow). The
-    * whole lifecycle builds on a conf-isolated streaming session
-    * (RocksDB state, state-sized shuffle width) so the streaming confs
-    * never leak into — or race with — concurrent work on `spark`. */
+  /** Run the landing → sink pipeline to completion (AvailableNow) through
+    * the one streaming lifecycle ([[StateStores.runToParquet]]): the
+    * query builds on a conf-isolated streaming session (RocksDB state,
+    * state-sized shuffle width), so the streaming confs never leak into —
+    * or race with — concurrent work on `spark`; inside a recorded cadence
+    * tick the run reports the rows it landed. */
   def runOnce(spark: SparkSession, landingDir: String, sinkDir: String,
       checkpointDir: String): Unit =
-    StateStores.streamingSession(spark) { s =>
-      val in = s.readStream
-        .schema(newsSchema)
-        .json(landingDir)
-      val deduped = in
-        .filter(col("title").isNotNull) // F4: skip empty crawl results
-        .withWatermark("date", "7 days") // T3
-        .dropDuplicates("link", "date")
-      val q = deduped.writeStream
-        .format("parquet")
-        .option("path", sinkDir)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      reportSinkRows(q)
-    }
+    StateStores.runToParquet(spark, sinkDir, checkpointDir)(deduped(_, landingDir))
+
+  /** The landing dir's documents as a deduped stream built on `s`. */
+  def deduped(s: SparkSession, landingDir: String): DataFrame =
+    dedup(s.readStream.schema(newsSchema).json(landingDir))
+
+  private def dedup(docs: DataFrame): DataFrame =
+    docs.filter(col("title").isNotNull) // F4: skip empty crawl results
+      .withWatermark("date", "7 days") // T3
+      .dropDuplicates("link", "date")
 
   /** T2 as an INCREMENTAL upsert (foreachBatch merge-by-key) instead of
     * the reference's full delete-and-reload: rows from `batch` replace
@@ -154,15 +134,4 @@ object NewsStream {
       }
       graft.LakeCommit.commit(merged, lakePath): Unit
     }
-
-  /** Fresh end-to-end run into a scratch sink; returns the sink as a
-    * batch DataFrame (used by the correctness query and tests). */
-  def freshRun(spark: SparkSession, landingDir: String, scratch: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val sink = s"$scratch/sink"
-    val ckpt = s"$scratch/ckpt"
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    runOnce(spark, landingDir, sink, ckpt)
-    spark.read.parquet(sink)
-  }
 }

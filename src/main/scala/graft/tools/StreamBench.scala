@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Fixtures, Json, Tables}
@@ -25,6 +25,11 @@ import graft.streaming.{NewsStream, Sessionize, SessEvent, StateStores}
   *     one day per fire) so dedup state genuinely grows; sessionize
   *     batches are TIME-ordered slices of the real events table, the
   *     replay order a file-source cadence would deliver.
+  * Every ladder is the same loop ([[ladder]]): stage a fire's input
+  * under the ladder's run root ([[graft.Fixtures.withRunRoot]]), then
+  * time one run of the streaming lifecycle the catalog entries use
+  * ([[graft.streaming.StateStores.runToParquet]]) over the root's sink
+  * and checkpoint.
   *
   * Usage: `SPARK_GRAFT_SF_DIR=… runMain graft.tools.StreamBench
   * [news|sess|all]` — prints one human line per fire and one JSON
@@ -68,16 +73,42 @@ object StreamBench {
         Option.when(!(rate.isInfinite || rate.isNaN || rate < 0))(Json.fixed(rate, 0)))))
   }
 
+  /** One ladder: per step, `stage(root, i)` lands fire i's input under
+    * the run root and returns its row count, then one lifecycle over the
+    * root's persistent sink + checkpoint is timed and printed. */
+  private def ladder(spark: SparkSession, name: String, steps: Int)(
+      stage: (String, Int) => Long)(
+      build: (SparkSession, String) => Dataset[_]): Seq[(Long, Double)] =
+    Fixtures.withRunRoot(s"streambench_$name") { root =>
+      (0 until steps).map { i =>
+        val n = stage(root, i)
+        val t0 = System.nanoTime()
+        StateStores.runToParquet(spark, s"$root/sink", s"$root/ckpt")(build(_, root))
+        val wall = (System.nanoTime() - t0) / 1e9
+        println(f"[streambench] $name fire ${i + 1}: $n rows, $wall%.3f s " +
+          f"(${n / wall}%.0f rows/s, loadavg $load%.2f)")
+        (n, wall)
+      }
+    }
+
+  /** Time-ordered slices of `ev` at the cumulative `fractions` of its
+    * `eu` (event-time micros) column → doubling-ish slices, the replay
+    * order a file-source cadence would deliver. */
+  private def timeSlices(ev: DataFrame, fractions: Seq[Double]): Seq[DataFrame] = {
+    val bounds = ev.stat.approxQuantile("eu", fractions.toArray, 0.001)
+    val his = bounds.indices.map(i =>
+      if (i == bounds.length - 1) Long.MaxValue else bounds(i).toLong)
+    (Long.MinValue +: his).zip(his).map { case (lo, hi) =>
+      ev.where(col("eu") > lo && col("eu") <= hi)
+    }
+  }
+
   /** News dedup ladder: synthesized landing JSON (the NewsStream schema),
     * unique links, dates advancing one day per fire. */
   def newsLadder(spark: SparkSession, sizes: Seq[Long]): Seq[(Long, Double)] = {
-    val root = Fixtures.reusedScratchDir("streambench_news")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    val in = s"$root/in"; val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    var offset = 0L
-    sizes.zipWithIndex.map { case (n, i) =>
+    val offsets = sizes.scanLeft(0L)(_ + _)
+    ladder(spark, "news", sizes.size) { (root, i) =>
+      val (offset, n) = (offsets(i), sizes(i))
       // stage fire i's landing files: event time inside day i (so the
       // 7-day watermark holds a growing multi-day state window)
       val day0 = 1614556800L // 2021-03-01 UTC
@@ -95,54 +126,28 @@ object StreamBench {
             concat(lit("https://news.example/"), col("id")).as("url"),
             struct(lit(null).cast("string").as("id")).as("tweet")).as("source"))
         .repartition(4)
-        .write.mode("append").json(in)
-      offset += n
-      val t0 = System.nanoTime()
-      NewsStream.runOnce(spark, in, sink, ckpt)
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[streambench] news fire ${i + 1}: $n rows, $wall%.3f s " +
-        f"(${n / wall}%.0f rows/s, loadavg $load%.2f)")
-      (n, wall)
-    }
+        .write.mode("append").json(s"$root/in")
+      n
+    }((s, root) => NewsStream.deduped(s, s"$root/in"))
   }
 
   /** Sessionize ladder: time-ordered slices of the real events table fed
     * through the file source, one fire per slice. */
   def sessLadder(spark: SparkSession, sfDir: String,
       fractions: Seq[Double]): Seq[(Long, Double)] = {
-    import spark.implicits._
-    val root = Fixtures.reusedScratchDir("streambench_sess")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    val in = s"$root/in"; val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
     val ev = Tables.load(spark, sfDir, "events")
       .select(col("user_id"), col("ts")).where(col("user_id") =!= -1L)
       .withColumn("eu", unix_micros(col("ts")))
-    // time boundaries at the cumulative fractions → doubling-ish slices
-    val bounds = ev.stat.approxQuantile("eu", fractions.toArray, 0.001)
-    var loEu = Long.MinValue
-    bounds.zipWithIndex.map { case (hi, i) =>
-      val hiEu = if (i == bounds.length - 1) Long.MaxValue else hi.toLong
-      val slice = ev.where(col("eu") > loEu && col("eu") <= hiEu)
-        .select(col("user_id"), col("ts"))
+    val slices = timeSlices(ev, fractions)
+    ladder(spark, "sess", slices.size) { (root, i) =>
+      val slice = slices(i).select(col("user_id"), col("ts"))
       val n = slice.count()
-      slice.write.mode("append").parquet(in)
-      loEu = hiEu
-      val t0 = System.nanoTime()
-      StateStores.streamingSession(spark) { s =>
-        val src = s.readStream.schema("user_id BIGINT, ts TIMESTAMP").parquet(in)
-        val q = Sessionize.sessions(src.as[SessEvent], "1 minute").writeStream
-          .format("parquet").option("path", sink)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[streambench] sess fire ${i + 1}: $n rows, $wall%.3f s " +
-        f"(${n / wall}%.0f rows/s, loadavg $load%.2f)")
-      (n, wall)
+      slice.write.mode("append").parquet(s"$root/in")
+      n
+    } { (s, root) =>
+      import s.implicits._
+      val src = s.readStream.schema("user_id BIGINT, ts TIMESTAMP").parquet(s"$root/in")
+      Sessionize.sessions(src.as[SessEvent], "1 minute")
     }
   }
 
@@ -155,45 +160,26 @@ object StreamBench {
     * the inner join and measure pure probe throughput. */
   def enrichLadder(spark: SparkSession, sfDir: String,
       fractions: Seq[Double]): Seq[(Long, Double)] = {
-    val root = Fixtures.reusedScratchDir("streambench_enrich")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    val in = s"$root/in"; val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
     val ev = Tables.load(spark, sfDir, "events")
       .filter(col("ts").isNotNull && col("user_id").isNotNull &&
         col("user_id") =!= -1L)
       .select(col("user_id"), col("ts"), col("event_type"))
       .withColumn("eu", unix_micros(col("ts")))
-    val bounds = ev.stat.approxQuantile("eu", fractions.toArray, 0.001)
-    var loEu = Long.MinValue
-    bounds.zipWithIndex.map { case (hi, i) =>
-      val hiEu = if (i == bounds.length - 1) Long.MaxValue else hi.toLong
-      val slice = ev.where(col("eu") > loEu && col("eu") <= hiEu)
-        .select(col("user_id"), col("ts"), col("event_type"))
+    val slices = timeSlices(ev, fractions)
+    ladder(spark, "enrich", slices.size) { (root, i) =>
+      val slice = slices(i).select(col("user_id"), col("ts"), col("event_type"))
       val n = slice.count()
-      slice.write.mode("append").parquet(in)
-      loEu = hiEu
-      val t0 = System.nanoTime()
-      StateStores.streamingSession(spark) { s =>
-        val dim = Tables.load(s, sfDir, "customer")
-          .join(Tables.load(s, sfDir, "nation"),
-            col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_custkey"), col("n_name"))
-        val src = s.readStream
-          .schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
-          .parquet(in)
-        val q = graft.streaming.Enrich.dailyByNation(src, dim)
-          .writeStream.format("parquet").option("path", sink)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[streambench] enrich fire ${i + 1}: $n rows, $wall%.3f s " +
-        f"(${n / wall}%.0f rows/s, loadavg $load%.2f)")
-      (n, wall)
+      slice.write.mode("append").parquet(s"$root/in")
+      n
+    } { (s, root) =>
+      val dim = Tables.load(s, sfDir, "customer")
+        .join(Tables.load(s, sfDir, "nation"),
+          col("c_nationkey") === col("n_nationkey"))
+        .select(col("c_custkey"), col("n_name"))
+      val src = s.readStream
+        .schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
+        .parquet(s"$root/in")
+      graft.streaming.Enrich.dailyByNation(src, dim)
     }
   }
 
@@ -208,53 +194,34 @@ object StreamBench {
     * 997 users → the same join keys recur at ~1000× the average). */
   def ljoinLadder(spark: SparkSession, sfDir: String,
       fractions: Seq[Double]): Seq[(Long, Double)] = {
-    val root = Fixtures.reusedScratchDir("streambench_ljoin")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    val inI = s"$root/imps"; val inC = s"$root/clicks"
-    val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
     val ev = Tables.load(spark, sfDir, "events")
       .filter(col("ts").isNotNull && col("user_id").isNotNull &&
         col("user_id") =!= -1L)
       .withColumn("eu", unix_micros(col("ts")))
-    val bounds = ev.stat.approxQuantile("eu", fractions.toArray, 0.001)
-    var loEu = Long.MinValue
-    bounds.zipWithIndex.map { case (hi, i) =>
-      val hiEu = if (i == bounds.length - 1) Long.MaxValue else hi.toLong
-      val slice = ev.where(col("eu") > loEu && col("eu") <= hiEu)
-      val imps = slice.filter(col("event_type") === "view")
+    val slices = timeSlices(ev, fractions)
+    ladder(spark, "ljoin", slices.size) { (root, i) =>
+      val slice = slices(i)
+      val n = slice.count()
+      slice.filter(col("event_type") === "view")
         .select(col("user_id"), col("ts").as("imp_time"),
           col("event_id").as("imp_id"))
-      val clicks = slice.filter(col("event_type") === "click")
+        .write.mode("append").parquet(s"$root/imps")
+      slice.filter(col("event_type") === "click")
         .select(col("user_id").as("click_user"), col("ts").as("click_time"),
           col("event_id").as("click_id"))
-      val n = slice.count()
-      imps.write.mode("append").parquet(inI)
-      clicks.write.mode("append").parquet(inC)
-      loEu = hiEu
-      val t0 = System.nanoTime()
-      StateStores.streamingSession(spark) { s =>
-        val si = s.readStream
-          .schema("user_id BIGINT, imp_time TIMESTAMP, imp_id BIGINT")
-          .parquet(inI)
-        val sc = s.readStream
-          .schema("click_user BIGINT, click_time TIMESTAMP, click_id BIGINT")
-          .parquet(inC)
-        val q = graft.streaming.StreamJoin
-          .attributeOuter(si, sc, impKey = "user_id", clickKey = "click_user")
-          .select(col("imp_id"), col("click_id"),
-            (col("click_id").isNotNull).as("converted"))
-          .writeStream.format("parquet").option("path", sink)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[streambench] ljoin fire ${i + 1}: $n rows, $wall%.3f s " +
-        f"(${n / wall}%.0f rows/s, loadavg $load%.2f)")
-      (n, wall)
+        .write.mode("append").parquet(s"$root/clicks")
+      n
+    } { (s, root) =>
+      val si = s.readStream
+        .schema("user_id BIGINT, imp_time TIMESTAMP, imp_id BIGINT")
+        .parquet(s"$root/imps")
+      val sc = s.readStream
+        .schema("click_user BIGINT, click_time TIMESTAMP, click_id BIGINT")
+        .parquet(s"$root/clicks")
+      graft.streaming.StreamJoin
+        .attributeOuter(si, sc, impKey = "user_id", clickKey = "click_user")
+        .select(col("imp_id"), col("click_id"),
+          (col("click_id").isNotNull).as("converted"))
     }
   }
 
@@ -270,13 +237,10 @@ object StreamBench {
   def hlluLadder(spark: SparkSession, sizes: Seq[Long],
       hotPool: Boolean = false): Seq[(Long, Double)] = {
     import graft.streaming.{ApproxUsers, TypedEvent}
-    val root = Fixtures.reusedScratchDir("streambench_hllu")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    val in = s"$root/in"; val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
     val day0 = 1704067200L // 2024-01-01 UTC, a Monday
-    var offset = 0L
-    sizes.zipWithIndex.map { case (n, i) =>
+    val offsets = sizes.scanLeft(0L)(_ + _)
+    ladder(spark, "hllu", sizes.size) { (root, i) =>
+      val (offset, n) = (offsets(i), sizes(i))
       val weekStart = day0 + i * 7L * 86400L
       spark.range(offset, offset + n).select(
           concat(lit("t"), pmod(col("id"), lit(5L))).as("event_type"),
@@ -290,26 +254,14 @@ object StreamBench {
           timestamp_seconds(lit(weekStart) +
             pmod(col("id"), lit(7L * 86400L - 3600L))).as("ts"))
         .repartition(4)
-        .write.mode("append").parquet(in)
-      offset += n
-      val t0 = System.nanoTime()
-      StateStores.streamingSession(spark) { s =>
-        import s.implicits._
-        val src = s.readStream
-          .schema("event_type STRING, week STRING, week_end_ms BIGINT, user_id BIGINT, ts TIMESTAMP")
-          .parquet(in)
-        val q = ApproxUsers.approxUsers(src.as[TypedEvent], "1 minute")
-          .writeStream.format("parquet").option("path", sink)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[streambench] hllu fire ${i + 1}: $n rows, $wall%.3f s " +
-        f"(${n / wall}%.0f rows/s, loadavg $load%.2f)")
-      (n, wall)
+        .write.mode("append").parquet(s"$root/in")
+      n
+    } { (s, root) =>
+      import s.implicits._
+      val src = s.readStream
+        .schema("event_type STRING, week STRING, week_end_ms BIGINT, user_id BIGINT, ts TIMESTAMP")
+        .parquet(s"$root/in")
+      ApproxUsers.approxUsers(src.as[TypedEvent], "1 minute")
     }
   }
 

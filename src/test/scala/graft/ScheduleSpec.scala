@@ -137,6 +137,20 @@ class ScheduleSpec extends SparkSpec {
     assert(hist.snapshot.toMap.apply("lander").map(_.rows) === Seq(Some(2L), Some(3L)))
   }
 
+  test("news_crawl records the rows its stream landed") {
+    val lake = Fixtures.scratchDir("sched_news_rows") + "/lake"
+    val hist = new Schedule.FlowHistory()
+    val flows = Schedule.defaultFlows(spark, lake).filter(_.name == "news_crawl")
+    Schedule.runTick(flows, 0, Some(hist))
+    Schedule.runTick(flows, 1, Some(hist))
+    val runs = hist.snapshot.toMap.apply("news_crawl")
+    assert(runs.map(_.error) === Seq(None, None))
+    // tick 0 lands the fixture landing's 6 deduped docs; tick 1 re-fires
+    // over the same checkpoint with no new files and lands none
+    assert(runs.map(_.rows) === Seq(Some(6L), Some(0L)))
+    assert(spark.read.parquet(s"$lake/news_crawl").count() === 6L)
+  }
+
   test("alerts: consecutive failures page at the threshold, one success resets; staleness needs the interval") {
     def rec(hist: Schedule.FlowHistory, flow: String, tick: Long,
         startMs: Long, err: Option[String]): Unit =

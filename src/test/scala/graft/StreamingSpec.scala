@@ -324,14 +324,45 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-source pipeline is idempotent across re-fires") {
-    val scratch = s"${System.getProperty("java.io.tmpdir")}/graft_test_news"
+    val scratch = Fixtures.scratchDir("news_refire")
     val landing = graft.Fixtures.newsLanding
-    val first = NewsStream.freshRun(spark, landing, scratch).count()
+    NewsStream.runOnce(spark, landing, s"$scratch/sink", s"$scratch/ckpt")
+    val first = spark.read.parquet(s"$scratch/sink").count()
     // Re-fire with the SAME checkpoint: no new input => no new rows.
     NewsStream.runOnce(spark, landing, s"$scratch/sink", s"$scratch/ckpt")
     val second = spark.read.parquet(s"$scratch/sink").count()
     assert(first === 6L)
     assert(second === first)
+  }
+
+  test("concurrent stream_sessionize calls wait on the run root's lock and agree") {
+    def rows(): Seq[String] = graft.queries.Streaming.streamSessionize(spark, sf0001)
+      .collect().map(_.toString).toSeq.sorted
+    val single = rows()
+    val lock = Fixtures.runLock("sess_rt")
+    val other = new java.util.concurrent.FutureTask[Seq[String]](() => rows())
+    val t = new Thread(other, "sessionize-concurrent")
+    // This thread holds the prefix lock while the other call starts: that
+    // call must block on exactly this lock (not run beside it), and this
+    // thread's own call and read-back run before the other empties the
+    // run root.
+    val mine = lock.synchronized {
+      t.start()
+      def waitsOnLock: Boolean = {
+        val info = java.lang.management.ManagementFactory.getThreadMXBean
+          .getThreadInfo(t.getId)
+        info != null && info.getLockInfo != null &&
+          info.getLockInfo.getIdentityHashCode == System.identityHashCode(lock)
+      }
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!waitsOnLock && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(waitsOnLock, "the concurrent call did not wait on the sess_rt run lock")
+      rows()
+    }
+    val theirs = other.get(300, java.util.concurrent.TimeUnit.SECONDS)
+    assert(single.nonEmpty)
+    assert(mine === single)
+    assert(theirs === single)
   }
 
   test("stream-stream interval join matches within the hour, across batches") {

@@ -15,6 +15,16 @@ if grep -rnE '"""\{"|jstr\(' src/main/scala; then
   exit 1
 fi
 
+echo "== preflight: one streaming lifecycle in src/main"
+# Every AvailableNow run goes through graft.streaming.StateStores.run, so
+# a change to how a lifecycle runs (trigger, await, rows landed) is made
+# in one place.
+if grep -rnE 'AvailableNow\(\)|awaitTermination' src/main/scala \
+    | grep -v '^src/main/scala/graft/streaming/StateStores\.scala:'; then
+  echo "preflight: run streams through StateStores.run / runToParquet" >&2
+  exit 1
+fi
+
 echo "== preflight: sbt Test/compile"
 sbt -batch Test/compile
 
