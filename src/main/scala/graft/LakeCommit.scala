@@ -63,7 +63,9 @@ private[graft] object PathLocks {
   *
   * A lake without a `_commits` dir is read as a plain flat directory
   * (legacy layout / a streaming sink owning its own `_spark_metadata`
-  * log), so [[resolve]]/[[read]] are safe on every lake shape.
+  * log), so [[resolve]]/[[current]] are safe on every lake shape.
+  * [[current]] is the one current-version read (None for an absent
+  * lake); [[read]] is its throwing form.
   */
 object LakeCommit {
 
@@ -204,13 +206,16 @@ object LakeCommit {
     spark.read.parquet(data.toString)
   }
 
-  /** Read the current version of `path` as a DataFrame pinned to that
-    * version's immutable directory — later commits and their GC (within
-    * the grace window) cannot change or break this plan. */
+  /** The current version of `path` as a DataFrame pinned to that
+    * version's immutable directory ([[resolve]]), or None for an absent
+    * lake — later commits and their GC (within the grace window) cannot
+    * change or break this plan. Every current-version read goes through
+    * here, so how a lake version is read is decided in one place. */
+  def current(spark: SparkSession, path: String): Option[DataFrame] =
+    resolve(spark, path).map(spark.read.parquet(_))
+
+  /** [[current]], throwing for an absent lake. */
   def read(spark: SparkSession, path: String): DataFrame =
-    resolve(spark, path) match {
-      case Some(dir) => spark.read.parquet(dir)
-      case None => throw new java.io.FileNotFoundException(
-        s"no committed version and no flat data at lake path $path")
-    }
+    current(spark, path).getOrElse(throw new java.io.FileNotFoundException(
+      s"no committed version and no flat data at lake path $path"))
 }

@@ -226,8 +226,7 @@ object Schedule {
     * until a news feed exists. */
   def vocabIndexFlow(spark: SparkSession, lakeDir: String): Flow =
     Flow("vocab_index", _ => {
-      val feeds = NewsFeeds.flatMap(n => LakeCommit.resolve(spark, s"$lakeDir/$n"))
-        .map(spark.read.parquet(_))
+      val feeds = NewsFeeds.flatMap(n => LakeCommit.current(spark, s"$lakeDir/$n"))
       if (feeds.nonEmpty) {
         val news = feeds.reduce(_.unionByName(_))
         LakeCommit.commit(

@@ -249,7 +249,7 @@ object Serve {
     * it after every refresh tick to pick up newly-created flows.
     *
     * Consistency: each view binds the flow's CURRENT committed version
-    * directory ([[LakeCommit.resolve]] — immutable once written), so a
+    * directory ([[LakeCommit.current]] — immutable once written), so a
     * query planned before a refresh tick keeps reading its pinned
     * snapshot to completion while the re-registration swings new
     * queries to the new version; the previous version survives one
@@ -263,7 +263,7 @@ object Serve {
     // and let the next tick's re-registration pick it up, never fail
     // the whole registration (or the server boot) over one flow.
     def load(name: String): Option[DataFrame] =
-      try LakeCommit.resolve(spark, s"$lakeDir/$name").map(spark.read.parquet(_))
+      try LakeCommit.current(spark, s"$lakeDir/$name")
       catch {
         case _: org.apache.spark.sql.AnalysisException => None
         case _: java.io.IOException => None
@@ -905,18 +905,16 @@ object Serve {
       val from = p.get("from").map(java.time.LocalDate.parse)
       val to = p.get("to").map(java.time.LocalDate.parse)
       val limit = intParam(p, "limit", 100)
-      if (from.isDefined || to.isDefined) {
-        timeSliced.get(name) match {
-          case Some(fn) => (200, render(fn(spark, dir, from, to), limit))
-          case None if SparkEntry.queries.contains(name) =>
-            // silently ignoring the range would hand the dashboard an
-            // UNSLICED panel labeled as sliced — refuse loudly
-            fail(400, s"query ${name.take(100)} is not time-sliceable; supported: ${timeSliced.keys.toSeq.sorted.mkString(", ")}")
-          case None => fail(404, s"unknown query ${name.take(100)}")
-        }
-      } else SparkEntry.queries.get(name) match {
-        case Some(fn) => (200, render(fn(spark, dir), limit))
+      SparkEntry.catalog.get(name) match {
         case None => fail(404, s"unknown query ${name.take(100)}")
+        case Some(e) if from.isEmpty && to.isEmpty =>
+          (200, render(e.build(spark, dir), limit))
+        case Some(e) => e.sliced match {
+          case Some(fn) => (200, render(fn(spark, dir, from, to), limit))
+          // silently ignoring the range would hand the dashboard an
+          // UNSLICED panel labeled as sliced — refuse loudly
+          case None => fail(400, s"query ${name.take(100)} is not time-sliceable; supported: ${sliceable.mkString(", ")}")
+        }
       }
     })
 
@@ -939,19 +937,10 @@ object Serve {
     server
   }
 
-  /** Catalog entries accepting a server-side `[from, to]` day slice —
-    * the time-parameterized forms filter their raw time column BELOW the
-    * aggregate (scan pushdown, asserted in EsAggsSpec/EventOpsSpec), so
-    * a dashboard range never pays a full-extent scan. */
-  private val timeSliced: Map[String,
-      (SparkSession, String, Option[java.time.LocalDate],
-        Option[java.time.LocalDate]) => DataFrame] = Map(
-    "rel_histogram_dense" ->
-      ((s, d, f, t) => graft.queries.EsAggs.histogramDense(s, d, f, t)),
-    "evt_active_users" ->
-      ((s, d, f, t) => graft.queries.EventOps.activeUsers7d(s, d, f, t)),
-    "evt_growth_accounting" ->
-      ((s, d, f, t) => graft.queries.Growth.growthAccounting(s, d, f, t)))
+  /** Names of the catalog entries accepting a server-side `[from, to]`
+    * day slice, sorted. */
+  private lazy val sliceable: Seq[String] =
+    SparkEntry.catalog.values.filter(_.sliced.isDefined).map(_.name).toSeq.sorted
 
   def main(args: Array[String]): Unit = {
     val bindAll = args.contains("--bind-all")

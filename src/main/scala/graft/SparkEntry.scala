@@ -2,12 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.queries._
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` is the full operator catalog (one entry per implemented
-  * operator from SURVEY.md §2 plus the training-data-pipeline extensions);
-  * `oracleSql` carries the DuckDB-equivalent SQL the driver hash-compares
-  * against at sf0.01.
+  * `catalog` is the full operator catalog: one [[graft.queries.Entry]]
+  * row per implemented operator, carrying its builder, the
+  * DuckDB-equivalent SQL `tools/check.py` hash-compares against at sf0.01 and,
+  * for a time-sliceable entry, its ranged form. `queries` and `oracleSql`
+  * are its builder and oracle views by name.
   *
   * Every query expects a session from [[Tables.session]]. A session built
   * elsewhere must set `spark.sql.extensions=graft.functions.GraftExtensions`:
@@ -22,39 +25,23 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("rel_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2 (plus the
-    * training-data-pipeline extensions). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.LlmDedup.queries ++
-      graft.queries.VectorSearch.queries ++
-      graft.queries.TextAnalysis.queries ++
-      graft.queries.Ingestion.queries ++
-      graft.queries.Geo.queries ++
-      graft.queries.Streaming.queries ++
-      graft.queries.IngestionFrance.queries ++
-      graft.queries.Multimodal.queries ++
-      graft.queries.EventOps.queries ++
-      graft.queries.Functions.queries ++
-      graft.queries.Curation.queries ++
-      graft.queries.CorpusOps.queries ++
-      graft.queries.Bucketed.queries ++
-      graft.queries.Pii.queries ++
-      graft.queries.TextClean.queries ++
-      graft.queries.EsAggs.queries ++
-      graft.queries.TextIndex.queries ++
-      graft.queries.TrainingMix.queries ++
-      graft.queries.HybridSearch.queries ++
-      graft.queries.Graph.queries ++
-      graft.queries.UrlDedup.queries ++
-      graft.queries.AudienceOverlap.queries ++
-      graft.queries.Sketches.queries ++
-      graft.queries.DataContract.queries ++
-      graft.queries.AssocRules.queries ++
-      graft.queries.Experiments.queries ++
-      graft.queries.TrendOps.queries ++
-      graft.queries.Survival.queries ++
-      graft.queries.Growth.queries
+  /** Every catalog entry by name, one row each from the 30 catalog
+    * modules (SURVEY.md §2 plus the training-data-pipeline extensions).
+    * Building it throws if two modules name the same entry. */
+  val catalog: Map[String, Entry] = Entry.catalog(Seq(
+    Relational.entries, LlmDedup.entries, VectorSearch.entries,
+    TextAnalysis.entries, Ingestion.entries, Geo.entries, Streaming.entries,
+    IngestionFrance.entries, Multimodal.entries, EventOps.entries,
+    Functions.entries, Curation.entries, CorpusOps.entries, Bucketed.entries,
+    Pii.entries, TextClean.entries, EsAggs.entries, TextIndex.entries,
+    TrainingMix.entries, HybridSearch.entries, Graph.entries,
+    UrlDedup.entries, AudienceOverlap.entries, Sketches.entries,
+    DataContract.entries, AssocRules.entries, Experiments.entries,
+    TrendOps.entries, Survival.entries, Growth.entries).flatten)
+
+  /** Each entry's builder by name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map { case (n, e) => n -> e.build }
 
   /** The catalog names a main runs, sorted. `filter` is a comma-separated
     * list of name substrings: an entry runs when its name contains any of
@@ -76,37 +63,7 @@ object SparkEntry {
     try Right(body) catch { case e: Throwable => Left(e) }
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracles ++
-      graft.queries.LlmDedup.oracles ++
-      graft.queries.VectorSearch.oracles ++
-      graft.queries.TextAnalysis.oracles ++
-      graft.queries.Ingestion.oracles ++
-      graft.queries.Geo.oracles ++
-      graft.queries.Streaming.oracles ++
-      graft.queries.IngestionFrance.oracles ++
-      graft.queries.Multimodal.oracles ++
-      graft.queries.EventOps.oracles ++
-      graft.queries.Functions.oracles ++
-      graft.queries.Curation.oracles ++
-      graft.queries.CorpusOps.oracles ++
-      graft.queries.Bucketed.oracles ++
-      graft.queries.Pii.oracles ++
-      graft.queries.TextClean.oracles ++
-      graft.queries.EsAggs.oracles ++
-      graft.queries.TextIndex.oracles ++
-      graft.queries.TrainingMix.oracles ++
-      graft.queries.HybridSearch.oracles ++
-      graft.queries.Graph.oracles ++
-      graft.queries.UrlDedup.oracles ++
-      graft.queries.AudienceOverlap.oracles ++
-      graft.queries.Sketches.oracles ++
-      graft.queries.DataContract.oracles ++
-      graft.queries.AssocRules.oracles ++
-      graft.queries.Experiments.oracles ++
-      graft.queries.TrendOps.oracles ++
-      graft.queries.Survival.oracles ++
-      graft.queries.Growth.oracles
+  /** For each entry, equivalent ANSI SQL runnable by DuckDB on the same
+    * parquet tables; every entry carries one. */
+  val oracleSql: Map[String, String] = catalog.map { case (n, e) => n -> e.oracle }
 }

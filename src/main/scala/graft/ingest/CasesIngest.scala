@@ -66,10 +66,12 @@ object CasesIngest {
   /** S4: sniff the delimiter from the first 10 kB (driver-side, like the
     * reference's clevercsv sniff window) — Spark's CSV reader then gets an
     * explicit dialect. */
-  def sniffDelimiter(path: String): String = {
-    val line = headBytes(path).takeWhile(_ != '\n')
-    Seq(",", ";", "\t", "|").maxBy(d => line.count(_ == d.head))
-  }
+  def sniffDelimiter(path: String): String =
+    delimiterOf(headBytes(path).takeWhile(_ != '\n'))
+
+  /** The candidate delimiter occurring most often in a header line. */
+  private def delimiterOf(header: String): String =
+    Seq(",", ";", "\t", "|").maxBy(d => header.count(_ == d.head))
 
   private[ingest] def nullifEmpty(c: Column): Column =
     when(trim(c) === "", lit(null)).otherwise(trim(c))
@@ -105,11 +107,9 @@ object CasesIngest {
   def rejectMalformed(spark: SparkSession, paths: Seq[String]): (Seq[String], Seq[String]) = {
     val required = Seq(dateSyn, locSyn, valSyn)
     paths.partition { p =>
-      val head = headBytes(p)
-      val sep = Seq(",", ";", "\t", "|")
-        .maxBy(d => head.takeWhile(_ != '\n').count(_ == d.head))
-      val header = head.takeWhile(_ != '\n')
-      val cols = header.split(java.util.regex.Pattern.quote(sep)).map(_.trim).toSet
+      val header = headBytes(p).takeWhile(_ != '\n')
+      val cols = header.split(java.util.regex.Pattern.quote(delimiterOf(header)))
+        .map(_.trim).toSet
       required.forall(_.exists(cols.contains))
     }
   }

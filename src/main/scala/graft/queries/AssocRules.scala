@@ -165,9 +165,6 @@ object AssocRules {
        |JOIN sup sb ON sb.p = top.pb
        |CROSS JOIN n""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rel_assoc_rules" -> (assocRules _))
-
-  val oracles: Map[String, String] = Map(
-    "rel_assoc_rules" -> assocRulesSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("rel_assoc_rules", assocRules, assocRulesSql))
 }

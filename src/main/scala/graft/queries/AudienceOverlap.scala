@@ -148,9 +148,6 @@ object AudienceOverlap {
        |LEFT JOIN ex ON ex.ta = un.ta AND ex.tb = un.tb""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_audience_overlap" -> (audienceOverlap _))
-
-  val oracles: Map[String, String] = Map(
-    "evt_audience_overlap" -> audienceOverlapSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("evt_audience_overlap", audienceOverlap, audienceOverlapSql))
 }

@@ -89,9 +89,6 @@ object Bucketed {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rel_bucketed_join" -> (bucketedJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "rel_bucketed_join" -> bucketedJoinSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("rel_bucketed_join", bucketedJoin, bucketedJoinSql))
 }

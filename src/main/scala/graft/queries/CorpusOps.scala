@@ -521,23 +521,13 @@ object CorpusOps {
        |  p50_chars, p95_chars, mean_ttr
        |FROM card, tot""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_corpus_card" -> (corpusCard _),
-    "llm_export_sorted" -> (exportSorted _),
-    "llm_decontaminate" -> (decontaminate _),
-    "txt_repetition" -> (repetition _),
-    "llm_domain_mixture" -> (domainMixture _),
-    "llm_pack_bins" -> (packBins _),
-    "llm_export_jsonl" -> (exportJsonl _),
-    "llm_export_sized" -> (exportJsonlSized _))
-
-  val oracles: Map[String, String] = Map(
-    "llm_corpus_card" -> corpusCardSql,
-    "llm_export_sorted" -> exportSortedSql,
-    "llm_decontaminate" -> decontaminateSql,
-    "txt_repetition" -> repetitionSql,
-    "llm_domain_mixture" -> domainMixtureSql,
-    "llm_pack_bins" -> packBinsSql,
-    "llm_export_jsonl" -> exportJsonlSql,
-    "llm_export_sized" -> exportJsonlSizedSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("llm_corpus_card", corpusCard, corpusCardSql),
+    Entry("llm_export_sorted", exportSorted, exportSortedSql),
+    Entry("llm_decontaminate", decontaminate, decontaminateSql),
+    Entry("txt_repetition", repetition, repetitionSql),
+    Entry("llm_domain_mixture", domainMixture, domainMixtureSql),
+    Entry("llm_pack_bins", packBins, packBinsSql),
+    Entry("llm_export_jsonl", exportJsonl, exportJsonlSql),
+    Entry("llm_export_sized", exportJsonlSized, exportJsonlSizedSql))
 }

@@ -492,27 +492,15 @@ object Curation {
        |        FROM documents))
        |WHERE bucket < weight_bp""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_stratified_sample" -> (stratifiedSample _),
-    "llm_corpus_filter" -> (corpusFilter _),
-    "llm_train_split" -> (trainSplit _),
-    "llm_curation_pipeline" -> (curationPipeline _),
-    "llm_chunk_docs" -> (chunkDocs _),
-    "llm_chunk_docs_bpe" -> (chunkDocsBpe _),
-    "llm_domain_cap" -> (domainCap _),
-    "llm_token_budget" -> (tokenBudget _),
-    "llm_token_budget_bpe" -> (tokenBudgetBpe _),
-    "llm_weighted_sample" -> (weightedSample _))
-
-  val oracles: Map[String, String] = Map(
-    "llm_stratified_sample" -> stratifiedSampleSql,
-    "llm_corpus_filter" -> corpusFilterSql,
-    "llm_train_split" -> trainSplitSql,
-    "llm_curation_pipeline" -> curationPipelineSql,
-    "llm_chunk_docs" -> chunkDocsSql,
-    "llm_chunk_docs_bpe" -> chunkDocsBpeSql,
-    "llm_domain_cap" -> domainCapSql,
-    "llm_token_budget" -> tokenBudgetSql,
-    "llm_token_budget_bpe" -> tokenBudgetBpeSql,
-    "llm_weighted_sample" -> weightedSampleSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("llm_stratified_sample", stratifiedSample, stratifiedSampleSql),
+    Entry("llm_corpus_filter", corpusFilter, corpusFilterSql),
+    Entry("llm_train_split", trainSplit, trainSplitSql),
+    Entry("llm_curation_pipeline", curationPipeline, curationPipelineSql),
+    Entry("llm_chunk_docs", chunkDocs, chunkDocsSql),
+    Entry("llm_chunk_docs_bpe", chunkDocsBpe, chunkDocsBpeSql),
+    Entry("llm_domain_cap", domainCap, domainCapSql),
+    Entry("llm_token_budget", tokenBudget, tokenBudgetSql),
+    Entry("llm_token_budget_bpe", tokenBudgetBpe, tokenBudgetBpeSql),
+    Entry("llm_weighted_sample", weightedSample, weightedSampleSql))
 }

@@ -94,9 +94,6 @@ object DataContract {
       |  ('orderdate_in_range', orderdate_in_range),
       |  ('ri_custkey', ri_custkey)) AS u(check_name, metric)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ing_data_contract" -> (dataContract _))
-
-  val oracles: Map[String, String] = Map(
-    "ing_data_contract" -> dataContractSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("ing_data_contract", dataContract, dataContractSql))
 }

@@ -88,20 +88,18 @@ object EsAggs {
     * at 100 TB the spine is O(statuses x months), i.e. constant, and
     * both joins below it broadcast. Status 'P' exists for only ~1 of
     * the 7 order years, so the fill is exercised (non-vacuous) at
-    * every SF. */
-  def histogramDense(spark: SparkSession, dir: String): DataFrame =
-    histogramDense(spark, dir, None, None)
-
-  /** [[histogramDense]] over a server-chosen `[from, to]` day slice —
-    * the Kibana "last 7 days" range applied ENGINE-side: the bounds
-    * land on the raw `o_orderdate` scan column BEFORE the aggregate, so
-    * they reach the parquet reader as PushedFilters (row groups outside
-    * the range are never decoded; on a date-partitioned 100 TB lake this
-    * is partition pruning). The month spine recomputes from the SLICED
+    * every SF.
+    *
+    * A server-chosen `[from, to]` day slice is the Kibana "last 7
+    * days" range applied ENGINE-side: the bounds land on the raw
+    * `o_orderdate` scan column BEFORE the aggregate, so they reach the
+    * parquet reader as PushedFilters (row groups outside the range are
+    * never decoded; on a date-partitioned 100 TB lake this is partition
+    * pruning). The month spine recomputes from the SLICED
     * extent, so the dense fill stays within the requested window. */
   def histogramDense(spark: SparkSession, dir: String,
-      from: Option[java.time.LocalDate],
-      to: Option[java.time.LocalDate]): DataFrame = {
+      from: Option[java.time.LocalDate] = None,
+      to: Option[java.time.LocalDate] = None): DataFrame = {
     val base = Tables.load(spark, dir, "orders")
     val sliced = Seq(
       from.map(d => col("o_orderdate") >= lit(java.sql.Date.valueOf(d))),
@@ -245,17 +243,10 @@ object EsAggs {
       |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price
       |FROM orders GROUP BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rel_histogram_numeric" -> (histogramNumeric _),
-    "geo_centroid" -> (geoCentroid _),
-    "rel_histogram_dense" -> (histogramDense _),
-    "rel_composite_after" -> (compositeAfter _),
-    "evt_percentile_ranks" -> (percentileRanks _))
-
-  val oracles: Map[String, String] = Map(
-    "rel_histogram_numeric" -> histogramNumericSql,
-    "geo_centroid" -> geoCentroidSql,
-    "rel_histogram_dense" -> histogramDenseSql,
-    "rel_composite_after" -> compositeAfterSql,
-    "evt_percentile_ranks" -> percentileRanksSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("rel_histogram_numeric", histogramNumeric, histogramNumericSql),
+    Entry("geo_centroid", geoCentroid, geoCentroidSql),
+    Entry.sliced("rel_histogram_dense", histogramDense, histogramDenseSql),
+    Entry("rel_composite_after", compositeAfter, compositeAfterSql),
+    Entry("evt_percentile_ranks", percentileRanks, percentileRanksSql))
 }

@@ -298,19 +298,17 @@ object EventOps {
     * against a separately-scanned day dim — one pass over events total.
     * Day exported as a yyyy-MM-dd string (the rel_date_histogram
     * convention). The DuckDB oracle runs the naive BETWEEN join,
-    * proving the exploded plan equivalent. */
-  def activeUsers7d(spark: SparkSession, dir: String): DataFrame =
-    activeUsers7d(spark, dir, None, None)
-
-  /** [[activeUsers7d]] over a server-chosen `[from, to]` day slice
-    * (inclusive): the bounds land on the raw `ts` scan column before
-    * anything else, so they reach the parquet reader as PushedFilters.
+    * proving the exploded plan equivalent.
+    *
+    * A server-chosen `[from, to]` day slice (inclusive) lands on the
+    * raw `ts` scan column before anything else, so its bounds reach the
+    * parquet reader as PushedFilters.
     * Window semantics are slice-relative (the Kibana range behavior): a
     * day near `from` counts only users active within the slice, not
     * activity before it. */
   def activeUsers7d(spark: SparkSession, dir: String,
-      from: Option[java.time.LocalDate],
-      to: Option[java.time.LocalDate]): DataFrame = {
+      from: Option[java.time.LocalDate] = None,
+      to: Option[java.time.LocalDate] = None): DataFrame = {
     val base = Tables.load(spark, dir, "events")
     val ev = Seq(
       from.map(d => col("ts") >=
@@ -753,37 +751,20 @@ object EventOps {
        |FROM hw""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_holt_trend" -> (holtTrend _),
-    "evt_ewma" -> (ewmaSmooth _),
-    "evt_cell_suppression" -> (cellSuppression _),
-    "evt_cohort_ltv" -> (cohortLtv _),
-    "evt_transitions" -> (transitions _),
-    "evt_hopping_window" -> (hoppingWindow _),
-    "evt_anomaly_zscore" -> (anomalyZscore _),
-    "evt_asof_join" -> (asofJoin _),
-    "evt_asof_custom" -> (asofCustom _),
-    "evt_sessionize" -> (sessionize _),
-    "evt_percentiles" -> (percentiles _),
-    "evt_approx_percentiles" -> (approxPercentiles _),
-    "evt_funnel" -> (funnel _),
-    "evt_retention" -> (retention _),
-    "evt_active_users" -> (activeUsers7d _))
-
-  val oracles: Map[String, String] = Map(
-    "evt_holt_trend" -> holtTrendSql,
-    "evt_ewma" -> ewmaSmoothSql,
-    "evt_cell_suppression" -> cellSuppressionSql,
-    "evt_approx_percentiles" -> approxPercentilesSql,
-    "evt_cohort_ltv" -> cohortLtvSql,
-    "evt_transitions" -> transitionsSql,
-    "evt_hopping_window" -> hoppingWindowSql,
-    "evt_anomaly_zscore" -> anomalyZscoreSql,
-    "evt_asof_join" -> asofJoinSql,
-    "evt_asof_custom" -> asofCustomSql,
-    "evt_sessionize" -> sessionizeSql,
-    "evt_percentiles" -> percentilesSql,
-    "evt_funnel" -> funnelSql,
-    "evt_retention" -> retentionSql,
-    "evt_active_users" -> activeUsers7dSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("evt_holt_trend", holtTrend, holtTrendSql),
+    Entry("evt_ewma", ewmaSmooth, ewmaSmoothSql),
+    Entry("evt_cell_suppression", cellSuppression, cellSuppressionSql),
+    Entry("evt_cohort_ltv", cohortLtv, cohortLtvSql),
+    Entry("evt_transitions", transitions, transitionsSql),
+    Entry("evt_hopping_window", hoppingWindow, hoppingWindowSql),
+    Entry("evt_anomaly_zscore", anomalyZscore, anomalyZscoreSql),
+    Entry("evt_asof_join", asofJoin, asofJoinSql),
+    Entry("evt_asof_custom", asofCustom, asofCustomSql),
+    Entry("evt_sessionize", sessionize, sessionizeSql),
+    Entry("evt_percentiles", percentiles, percentilesSql),
+    Entry("evt_approx_percentiles", approxPercentiles, approxPercentilesSql),
+    Entry("evt_funnel", funnel, funnelSql),
+    Entry("evt_retention", retention, retentionSql),
+    Entry.sliced("evt_active_users", activeUsers7d, activeUsers7dSql))
 }

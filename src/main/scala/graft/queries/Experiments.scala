@@ -237,11 +237,7 @@ object Experiments {
        |  ($Micro * n_visits) // tot.tot AS share_micro
        |FROM top CROSS JOIN tot""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_ab_test" -> (abTest _),
-    "evt_path_topk" -> (pathTopk _))
-
-  val oracles: Map[String, String] = Map(
-    "evt_ab_test" -> abTestSql,
-    "evt_path_topk" -> pathTopkSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("evt_ab_test", abTest, abTestSql),
+    Entry("evt_path_topk", pathTopk, pathTopkSql))
 }

@@ -209,23 +209,13 @@ object Functions {
       |    AS BIGINT) AS nulls_first_rank
       |FROM b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fn_json" -> (jsonFuncs _),
-    "fn_pivot" -> (pivotEvents _),
-    "fn_array_agg" -> (arrayAgg _),
-    "fn_window_ranks" -> (windowRanks _),
-    "fn_datetime" -> (datetimeFuncs _),
-    "fn_strings" -> (stringFuncs _),
-    "fn_map_funcs" -> (mapFuncs _),
-    "fn_nulls" -> (nullFuncs _))
-
-  val oracles: Map[String, String] = Map(
-    "fn_json" -> jsonFuncsSql,
-    "fn_pivot" -> pivotEventsSql,
-    "fn_array_agg" -> arrayAggSql,
-    "fn_window_ranks" -> windowRanksSql,
-    "fn_datetime" -> datetimeFuncsSql,
-    "fn_strings" -> stringFuncsSql,
-    "fn_map_funcs" -> mapFuncsSql,
-    "fn_nulls" -> nullFuncsSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("fn_json", jsonFuncs, jsonFuncsSql),
+    Entry("fn_pivot", pivotEvents, pivotEventsSql),
+    Entry("fn_array_agg", arrayAgg, arrayAggSql),
+    Entry("fn_window_ranks", windowRanks, windowRanksSql),
+    Entry("fn_datetime", datetimeFuncs, datetimeFuncsSql),
+    Entry("fn_strings", stringFuncs, stringFuncsSql),
+    Entry("fn_map_funcs", mapFuncs, mapFuncsSql),
+    Entry("fn_nulls", nullFuncs, nullFuncsSql))
 }

@@ -352,17 +352,10 @@ object Geo {
        |  round(dist, 3) AS dist_km
        |FROM r WHERE rn <= $KnnK""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "geo_cell_agg" -> (geoCellAgg _),
-    "geo_radius_join" -> (geoRadiusJoin _),
-    "geo_polygon_filter" -> (geoPolygonFilter _),
-    "geo_dbscan_grid" -> (geoDbscanGrid _),
-    "geo_knn_join" -> (geoKnnJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "geo_cell_agg" -> geoCellAggSql,
-    "geo_radius_join" -> geoRadiusJoinSql,
-    "geo_polygon_filter" -> geoPolygonFilterSql,
-    "geo_dbscan_grid" -> geoDbscanGridSql,
-    "geo_knn_join" -> geoKnnJoinSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("geo_cell_agg", geoCellAgg, geoCellAggSql),
+    Entry("geo_radius_join", geoRadiusJoin, geoRadiusJoinSql),
+    Entry("geo_polygon_filter", geoPolygonFilter, geoPolygonFilterSql),
+    Entry("geo_dbscan_grid", geoDbscanGrid, geoDbscanGridSql),
+    Entry("geo_knn_join", geoKnnJoin, geoKnnJoinSql))
 }

@@ -458,13 +458,8 @@ object Graph {
        |  COALESCE(pn.tri, 0) * $SampleScale AS est_triangles
        |FROM d LEFT JOIN pn ON pn.n = d.n""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rel_pagerank" -> (pagerank _),
-    "rel_triangle_count" -> (triangles _),
-    "rel_triangle_sample" -> (trianglesSampled _))
-
-  val oracles: Map[String, String] = Map(
-    "rel_pagerank" -> pagerankSql,
-    "rel_triangle_count" -> trianglesSql,
-    "rel_triangle_sample" -> trianglesSampledSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("rel_pagerank", pagerank, pagerankSql),
+    Entry("rel_triangle_count", triangles, trianglesSql),
+    Entry("rel_triangle_sample", trianglesSampled, trianglesSampledSql))
 }

@@ -60,18 +60,15 @@ import graft.Tables
   */
 object Growth {
 
-  def growthAccounting(spark: SparkSession, dir: String): DataFrame =
-    growthAccounting(spark, dir, None, None)
-
-  /** [[growthAccounting]] over a server-chosen `[from, to]` day slice
-    * (the dashboard range): the bounds land on the raw `ts` scan
+  /** Growth accounting, optionally over a server-chosen `[from, to]` day
+    * slice (the dashboard range): the bounds land on the raw `ts` scan
     * column BEFORE anything else, so they reach the parquet reader as
     * PushedFilters. Semantics are slice-relative (the activeUsers7d
     * convention): "new" = first activity WITHIN the slice, churn at
     * the slice-local corpus edge. */
   def growthAccounting(spark: SparkSession, dir: String,
-      from: Option[java.time.LocalDate],
-      to: Option[java.time.LocalDate]): DataFrame = {
+      from: Option[java.time.LocalDate] = None,
+      to: Option[java.time.LocalDate] = None): DataFrame = {
     // Cache ONLY the unsliced/batch form: on the Serve time-slice path
     // every distinct ?from=&to= pair is a distinct logical plan, so a
     // persist there pins a new corpus-sized CacheManager entry per
@@ -259,11 +256,7 @@ object Growth {
       |JOIN qm ON qm.mon = me.mon
       |GROUP BY 1, 2, 3""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_growth_accounting" -> (growthAccounting _),
-    "evt_rfm" -> (rfm _))
-
-  val oracles: Map[String, String] = Map(
-    "evt_growth_accounting" -> growthAccountingSql,
-    "evt_rfm" -> rfmSql)
+  val entries: Seq[Entry] = Seq(
+    Entry.sliced("evt_growth_accounting", growthAccounting, growthAccountingSql),
+    Entry("evt_rfm", rfm, rfmSql))
 }

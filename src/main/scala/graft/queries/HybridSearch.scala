@@ -81,9 +81,6 @@ object HybridSearch {
        |SELECT doc_id, lex_rank, vec_rank, rrf_score, CAST(rank AS BIGINT) AS rank
        |FROM r WHERE rank <= 10""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "txt_hybrid_rrf" -> (hybridRrf _))
-
-  val oracles: Map[String, String] = Map(
-    "txt_hybrid_rrf" -> hybridRrfSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("txt_hybrid_rrf", hybridRrf, hybridRrfSql))
 }

@@ -622,33 +622,18 @@ object Ingestion {
       |  COUNT(*) FILTER (ts >= cutoff AND user_id % 100 = 13) AS n_purged_user
       |FROM events CROSS JOIN c GROUP BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ing_retention_purge" -> (retentionPurge _),
-    "ing_ivm_agg" -> (ivmAgg _),
-    "ing_lake_timetravel" -> (lakeTimetravel _),
-    "ing_schema_evolution" -> (schemaEvolution _),
-    "ing_cdc_diff" -> (cdcDiff _),
-    "ing_lake_zorder" -> (lakeZorder _),
-    "ing_cases_norm" -> (casesNorm _),
-    "ing_cases_by_country" -> (casesByCountry _),
-    "ing_lake_roundtrip" -> (lakeRoundtrip _),
-    "ing_lake_pruned" -> (lakePruned _),
-    "ing_compaction" -> (compactionRoundtrip _),
-    "ing_geo_extend" -> (geoExtendIngest _),
-    "ing_scd2_merge" -> (scd2Merge _))
-
-  val oracles: Map[String, String] = Map(
-    "ing_retention_purge" -> retentionPurgeSql,
-    "ing_ivm_agg" -> ivmAggSql,
-    "ing_lake_timetravel" -> lakeTimetravelSql,
-    "ing_schema_evolution" -> schemaEvolutionSql,
-    "ing_cdc_diff" -> cdcDiffSql,
-    "ing_lake_zorder" -> lakeZorderSql,
-    "ing_cases_norm" -> casesNormSql,
-    "ing_cases_by_country" -> casesByCountrySql,
-    "ing_lake_roundtrip" -> lakeRoundtripSql,
-    "ing_lake_pruned" -> lakePrunedSql,
-    "ing_compaction" -> compactionSql,
-    "ing_geo_extend" -> geoExtendSql,
-    "ing_scd2_merge" -> scd2MergeSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("ing_retention_purge", retentionPurge, retentionPurgeSql),
+    Entry("ing_ivm_agg", ivmAgg, ivmAggSql),
+    Entry("ing_lake_timetravel", lakeTimetravel, lakeTimetravelSql),
+    Entry("ing_schema_evolution", schemaEvolution, schemaEvolutionSql),
+    Entry("ing_cdc_diff", cdcDiff, cdcDiffSql),
+    Entry("ing_lake_zorder", lakeZorder, lakeZorderSql),
+    Entry("ing_cases_norm", casesNorm, casesNormSql),
+    Entry("ing_cases_by_country", casesByCountry, casesByCountrySql),
+    Entry("ing_lake_roundtrip", lakeRoundtrip, lakeRoundtripSql),
+    Entry("ing_lake_pruned", lakePruned, lakePrunedSql),
+    Entry("ing_compaction", compactionRoundtrip, compactionSql),
+    Entry("ing_geo_extend", geoExtendIngest, geoExtendSql),
+    Entry("ing_scd2_merge", scd2Merge, scd2MergeSql))
 }

@@ -81,11 +81,7 @@ object IngestionFrance {
        |  FROM read_csv('${FranceIngest.VirtestsPath}', delim=';', header=true, all_varchar=true))
        |WHERE d IS NOT NULL""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ing_france_depts" -> (franceDepts _),
-    "ing_virtests" -> (virtests _))
-
-  val oracles: Map[String, String] = Map(
-    "ing_france_depts" -> franceDeptsSql,
-    "ing_virtests" -> virtestsSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("ing_france_depts", franceDepts, franceDeptsSql),
+    Entry("ing_virtests", virtests, virtestsSql))
 }

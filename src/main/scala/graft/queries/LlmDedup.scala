@@ -1211,27 +1211,15 @@ object LlmDedup {
        |WHERE $ham <= $SimHamMax""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_simhash_neardup" -> (simhashNearDup _),
-    "llm_para_dedup" -> (paragraphDedup _),
-    "llm_exact_dedup" -> (exactDedup _),
-    "llm_minhash_neardup" -> (minhashNearDup _),
-    "llm_simhash" -> (simhash _),
-    "llm_shingle_jaccard" -> (shingleJaccard _),
-    "llm_dedup_clusters" -> (dedupClusters _),
-    "llm_incremental_dedup" -> (incrementalDedup _),
-    "llm_substr_dup" -> (substrDupCoverage _),
-    "llm_bloom_dedup" -> (bloomDedup _))
-
-  val oracles: Map[String, String] = Map(
-    "llm_simhash_neardup" -> simhashNearDupSql,
-    "llm_para_dedup" -> paragraphDedupSql,
-    "llm_exact_dedup" -> exactDedupSql,
-    "llm_minhash_neardup" -> minhashNearDupSql,
-    "llm_simhash" -> simhashSql,
-    "llm_shingle_jaccard" -> shingleJaccardSql,
-    "llm_dedup_clusters" -> dedupClustersSql,
-    "llm_incremental_dedup" -> incrementalDedupSql,
-    "llm_substr_dup" -> substrDupCoverageSql,
-    "llm_bloom_dedup" -> bloomDedupSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("llm_simhash_neardup", simhashNearDup, simhashNearDupSql),
+    Entry("llm_para_dedup", paragraphDedup, paragraphDedupSql),
+    Entry("llm_exact_dedup", exactDedup, exactDedupSql),
+    Entry("llm_minhash_neardup", minhashNearDup, minhashNearDupSql),
+    Entry("llm_simhash", simhash, simhashSql),
+    Entry("llm_shingle_jaccard", shingleJaccard, shingleJaccardSql),
+    Entry("llm_dedup_clusters", dedupClusters, dedupClustersSql),
+    Entry("llm_incremental_dedup", incrementalDedup, incrementalDedupSql),
+    Entry("llm_substr_dup", substrDupCoverage, substrDupCoverageSql),
+    Entry("llm_bloom_dedup", bloomDedup, bloomDedupSql))
 }

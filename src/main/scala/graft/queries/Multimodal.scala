@@ -303,17 +303,10 @@ object Multimodal {
        |WHERE $ham BETWEEN 1 AND ${LlmDedup.SimHamMax}""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_phash" -> (phashCensus _),
-    "mm_phash_dedup" -> (phashDedup _),
-    "mm_media_features" -> (mediaFeatures _),
-    "mm_media_resize" -> (mediaResize _),
-    "mm_frame_sample" -> (frameSampleAgg _))
-
-  val oracles: Map[String, String] = Map(
-    "mm_phash" -> phashCensusSql,
-    "mm_phash_dedup" -> phashDedupSql,
-    "mm_media_features" -> mediaFeaturesSql,
-    "mm_media_resize" -> mediaResizeSql,
-    "mm_frame_sample" -> frameSampleSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("mm_phash", phashCensus, phashCensusSql),
+    Entry("mm_phash_dedup", phashDedup, phashDedupSql),
+    Entry("mm_media_features", mediaFeatures, mediaFeaturesSql),
+    Entry("mm_media_resize", mediaResize, mediaResizeSql),
+    Entry("mm_frame_sample", frameSampleAgg, frameSampleSql))
 }

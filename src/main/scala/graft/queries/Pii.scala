@@ -135,9 +135,6 @@ object Pii {
       |  CAST(SUM(len(redacted)) AS BIGINT) AS sum_len_after
       |FROM s GROUP BY pii_class""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_pii_scrub" -> (piiScrub _))
-
-  val oracles: Map[String, String] = Map(
-    "llm_pii_scrub" -> piiScrubSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("llm_pii_scrub", piiScrub, piiScrubSql))
 }

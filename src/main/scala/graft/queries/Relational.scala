@@ -950,71 +950,37 @@ object Relational {
       |WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
       |GROUP BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rel_bloom_join" -> (bloomJoin _),
-    "rel_skew_profile" -> ((s: SparkSession, d: String) => skewProfile(s, d)),
-    "rel_fuzzy_join" -> (fuzzyJoin _),
-    "rel_table_profile" -> (tableProfile _),
-    "rel_salted_join" -> (saltedJoinAgg _),
-    "rel_range_join" -> (rangeJoin _),
-    "rel_pricing_summary" -> (pricingSummary _),
-    "rel_filter_scan" -> (filterScan _),
-    "rel_revenue_agg" -> (revenueAgg _),
-    "rel_dim_join_agg" -> (dimJoinAgg _),
-    "rel_factfact_join" -> (factFactJoin _),
-    "rel_semi_join" -> (semiJoin _),
-    "rel_anti_join" -> (antiJoin _),
-    "rel_topk_orders" -> (topkOrders _),
-    "rel_last_per_group" -> (lastOrderPerCustomer _),
-    "rel_running_sum" -> (runningSum _),
-    "rel_range_window" -> (rangeWindow _),
-    "rel_daily_delta" -> (dailyDelta _),
-    "rel_date_histogram" -> (dateHistogram _),
-    "rel_rollup" -> (rollupHierarchy _),
-    "rel_cube" -> (cubeDims _),
-    "rel_grouping_sets" -> (groupingSetsAgg _),
-    "rel_except" -> (exceptNations _),
-    "rel_setops_combo" -> (setOpsCombo _),
-    "rel_setops_bag" -> (setOpsBag _),
-    "rel_outer_join" -> (outerJoin _),
-    "rel_distinct_counts" -> (distinctCounts _),
-    "rel_approx_distinct" -> (approxDistinct _),
-    "rel_shipping_priority" -> (shippingPriority _),
-    "rel_above_avg" -> (aboveAvg _),
-    "rel_grid_cells" -> (gridCells _),
-    "rel_regex_extract" -> (regexExtract _))
-
-  val oracles: Map[String, String] = Map(
-    "rel_bloom_join" -> bloomJoinSql,
-    "rel_fuzzy_join" -> fuzzyJoinSql,
-    "rel_salted_join" -> saltedJoinAggSql,
-    "rel_range_join" -> rangeJoinSql,
-    "rel_pricing_summary" -> pricingSummarySql,
-    "rel_filter_scan" -> filterScanSql,
-    "rel_revenue_agg" -> revenueAggSql,
-    "rel_dim_join_agg" -> dimJoinAggSql,
-    "rel_factfact_join" -> factFactJoinSql,
-    "rel_semi_join" -> semiJoinSql,
-    "rel_anti_join" -> antiJoinSql,
-    "rel_topk_orders" -> topkOrdersSql,
-    "rel_last_per_group" -> lastOrderPerCustomerSql,
-    "rel_running_sum" -> runningSumSql,
-    "rel_range_window" -> rangeWindowSql,
-    "rel_daily_delta" -> dailyDeltaSql,
-    "rel_date_histogram" -> dateHistogramSql,
-    "rel_rollup" -> rollupHierarchySql,
-    "rel_cube" -> cubeDimsSql,
-    "rel_grouping_sets" -> groupingSetsSql,
-    "rel_shipping_priority" -> shippingPrioritySql,
-    "rel_above_avg" -> aboveAvgSql,
-    "rel_except" -> exceptNationsSql,
-    "rel_setops_combo" -> setOpsComboSql,
-    "rel_setops_bag" -> setOpsBagSql,
-    "rel_outer_join" -> outerJoinSql,
-    "rel_distinct_counts" -> distinctCountsSql,
-    "rel_approx_distinct" -> approxDistinctSql,
-    "rel_grid_cells" -> gridCellsSql,
-    "rel_regex_extract" -> regexExtractSql,
-    "rel_table_profile" -> tableProfileSql,
-    "rel_skew_profile" -> skewProfileSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("rel_bloom_join", bloomJoin, bloomJoinSql),
+    Entry("rel_skew_profile", skewProfile(_, _), skewProfileSql),
+    Entry("rel_fuzzy_join", fuzzyJoin, fuzzyJoinSql),
+    Entry("rel_table_profile", tableProfile, tableProfileSql),
+    Entry("rel_salted_join", saltedJoinAgg, saltedJoinAggSql),
+    Entry("rel_range_join", rangeJoin, rangeJoinSql),
+    Entry("rel_pricing_summary", pricingSummary, pricingSummarySql),
+    Entry("rel_filter_scan", filterScan, filterScanSql),
+    Entry("rel_revenue_agg", revenueAgg, revenueAggSql),
+    Entry("rel_dim_join_agg", dimJoinAgg, dimJoinAggSql),
+    Entry("rel_factfact_join", factFactJoin, factFactJoinSql),
+    Entry("rel_semi_join", semiJoin, semiJoinSql),
+    Entry("rel_anti_join", antiJoin, antiJoinSql),
+    Entry("rel_topk_orders", topkOrders, topkOrdersSql),
+    Entry("rel_last_per_group", lastOrderPerCustomer, lastOrderPerCustomerSql),
+    Entry("rel_running_sum", runningSum, runningSumSql),
+    Entry("rel_range_window", rangeWindow, rangeWindowSql),
+    Entry("rel_daily_delta", dailyDelta, dailyDeltaSql),
+    Entry("rel_date_histogram", dateHistogram, dateHistogramSql),
+    Entry("rel_rollup", rollupHierarchy, rollupHierarchySql),
+    Entry("rel_cube", cubeDims, cubeDimsSql),
+    Entry("rel_grouping_sets", groupingSetsAgg, groupingSetsSql),
+    Entry("rel_except", exceptNations, exceptNationsSql),
+    Entry("rel_setops_combo", setOpsCombo, setOpsComboSql),
+    Entry("rel_setops_bag", setOpsBag, setOpsBagSql),
+    Entry("rel_outer_join", outerJoin, outerJoinSql),
+    Entry("rel_distinct_counts", distinctCounts, distinctCountsSql),
+    Entry("rel_approx_distinct", approxDistinct, approxDistinctSql),
+    Entry("rel_shipping_priority", shippingPriority, shippingPrioritySql),
+    Entry("rel_above_avg", aboveAvg, aboveAvgSql),
+    Entry("rel_grid_cells", gridCells, gridCellsSql),
+    Entry("rel_regex_extract", regexExtract, regexExtractSql))
 }

@@ -288,13 +288,8 @@ object Sketches {
        |  TRUE AS p50_in_band, TRUE AS p95_in_band
        |FROM ex JOIN est ON est.event_type = ex.event_type AND est.week = ex.week""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rel_sketch_rollup" -> (sketchRollup _),
-    "evt_cms_freq" -> (cmsFreq _),
-    "evt_quantile_rollup" -> (quantileRollup _))
-
-  val oracles: Map[String, String] = Map(
-    "rel_sketch_rollup" -> sketchRollupSql,
-    "evt_cms_freq" -> cmsFreqSql,
-    "evt_quantile_rollup" -> quantileRollupSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("rel_sketch_rollup", sketchRollup, sketchRollupSql),
+    Entry("evt_cms_freq", cmsFreq, cmsFreqSql),
+    Entry("evt_quantile_rollup", quantileRollup, quantileRollupSql))
 }

@@ -563,23 +563,13 @@ object Streaming {
       |WHERE e.ts IS NOT NULL AND e.user_id IS NOT NULL
       |GROUP BY 1, 2, 3""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_enrich" -> (streamEnrich _),
-    "stream_approx_users" -> (streamApproxUsers _),
-    "stream_left_join" -> (streamLeftJoin _),
-    "stream_cdc_apply" -> (streamCdcApply _),
-    "stream_news_dedup" -> (newsDedup _),
-    "stream_sessionize" -> (streamSessionize _),
-    "stream_attribution" -> (streamAttribution _),
-    "stream_trending" -> (streamTrending _))
-
-  val oracles: Map[String, String] = Map(
-    "stream_enrich" -> streamEnrichSql,
-    "stream_approx_users" -> streamApproxUsersSql,
-    "stream_left_join" -> streamLeftJoinSql,
-    "stream_cdc_apply" -> streamCdcApplySql,
-    "stream_news_dedup" -> newsDedupSql,
-    "stream_sessionize" -> streamSessionizeSql,
-    "stream_attribution" -> streamAttributionSql,
-    "stream_trending" -> streamTrendingSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("stream_enrich", streamEnrich, streamEnrichSql),
+    Entry("stream_approx_users", streamApproxUsers, streamApproxUsersSql),
+    Entry("stream_left_join", streamLeftJoin, streamLeftJoinSql),
+    Entry("stream_cdc_apply", streamCdcApply, streamCdcApplySql),
+    Entry("stream_news_dedup", newsDedup, newsDedupSql),
+    Entry("stream_sessionize", streamSessionize, streamSessionizeSql),
+    Entry("stream_attribution", streamAttribution, streamAttributionSql),
+    Entry("stream_trending", streamTrending, streamTrendingSql))
 }

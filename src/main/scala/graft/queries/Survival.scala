@@ -212,11 +212,7 @@ object Survival {
        |    AS share_micro
        |FROM cls CROSS JOIN tot GROUP BY cls, tot.tot""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_survival" -> (kaplanMeier _),
-    "rel_abc_analysis" -> (abcAnalysis _))
-
-  val oracles: Map[String, String] = Map(
-    "evt_survival" -> kaplanMeierSql,
-    "rel_abc_analysis" -> abcAnalysisSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("evt_survival", kaplanMeier, kaplanMeierSql),
+    Entry("rel_abc_analysis", abcAnalysis, abcAnalysisSql))
 }

@@ -1180,45 +1180,24 @@ object TextAnalysis {
        |  CASE tercile WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
        |FROM nt""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_ccnet_buckets" -> (ccnetBuckets _),
-    "txt_char_entropy" -> (charEntropy _),
-    "txt_search_topk" -> (searchTopk _),
-    "txt_search_bm25" -> (searchBm25 _),
-    "txt_search_bm25_fields" -> (searchBm25Fields _),
-    "txt_search_hits" -> (searchHitsTopk _),
-    "txt_unigram_lm" -> (unigramLm _),
-    "llm_perplexity_filter" -> (perplexityFilter _),
-    "txt_keyword_topk" -> (keywordTopk _),
-    "txt_heavy_hitters" -> (heavyHitters _),
-    "txt_lang_id" -> (langId _),
-    "txt_quality" -> (quality _),
-    "txt_gopher_rules" -> (gopherRules _),
-    "txt_token_stats" -> (tokenStats _),
-    "txt_bpe_stats" -> (bpeTokenStats _),
-    "txt_bpe_fertility" -> (bpeFertility _),
-    "txt_vocab_topk" -> (vocabTopk _),
-    "txt_fingerprint" -> (fingerprint _),
-    "txt_scrub" -> (scrub _))
-
-  val oracles: Map[String, String] = Map(
-    "llm_ccnet_buckets" -> ccnetBucketsSql,
-    "txt_char_entropy" -> charEntropySql,
-    "txt_search_topk" -> searchTopkSql,
-    "txt_search_bm25" -> searchBm25Sql,
-    "txt_search_bm25_fields" -> searchBm25FieldsSql,
-    "txt_search_hits" -> searchHitsTopkSql,
-    "txt_unigram_lm" -> unigramLmSql,
-    "llm_perplexity_filter" -> perplexityFilterSql,
-    "txt_keyword_topk" -> keywordTopkSql,
-    "txt_heavy_hitters" -> heavyHittersSql,
-    "txt_lang_id" -> langIdSql,
-    "txt_quality" -> qualitySql,
-    "txt_gopher_rules" -> gopherRulesSql,
-    "txt_token_stats" -> tokenStatsSql,
-    "txt_bpe_stats" -> bpeStatsSql,
-    "txt_bpe_fertility" -> bpeFertilitySql,
-    "txt_vocab_topk" -> vocabTopkSql,
-    "txt_fingerprint" -> fingerprintSql,
-    "txt_scrub" -> scrubSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("llm_ccnet_buckets", ccnetBuckets, ccnetBucketsSql),
+    Entry("txt_char_entropy", charEntropy, charEntropySql),
+    Entry("txt_search_topk", searchTopk, searchTopkSql),
+    Entry("txt_search_bm25", searchBm25, searchBm25Sql),
+    Entry("txt_search_bm25_fields", searchBm25Fields, searchBm25FieldsSql),
+    Entry("txt_search_hits", searchHitsTopk, searchHitsTopkSql),
+    Entry("txt_unigram_lm", unigramLm, unigramLmSql),
+    Entry("llm_perplexity_filter", perplexityFilter, perplexityFilterSql),
+    Entry("txt_keyword_topk", keywordTopk, keywordTopkSql),
+    Entry("txt_heavy_hitters", heavyHitters, heavyHittersSql),
+    Entry("txt_lang_id", langId, langIdSql),
+    Entry("txt_quality", quality, qualitySql),
+    Entry("txt_gopher_rules", gopherRules, gopherRulesSql),
+    Entry("txt_token_stats", tokenStats, tokenStatsSql),
+    Entry("txt_bpe_stats", bpeTokenStats, bpeStatsSql),
+    Entry("txt_bpe_fertility", bpeFertility, bpeFertilitySql),
+    Entry("txt_vocab_topk", vocabTopk, vocabTopkSql),
+    Entry("txt_fingerprint", fingerprint, fingerprintSql),
+    Entry("txt_scrub", scrub, scrubSql))
 }

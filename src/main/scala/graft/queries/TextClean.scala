@@ -270,13 +270,8 @@ object TextClean {
        |FROM k GROUP BY doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_html_strip" -> (htmlStrip _),
-    "llm_clean_pipeline" -> (cleanPipeline _),
-    "llm_line_scrub" -> (lineScrub _))
-
-  val oracles: Map[String, String] = Map(
-    "llm_html_strip" -> htmlStripSql,
-    "llm_clean_pipeline" -> cleanPipelineSql,
-    "llm_line_scrub" -> lineScrubSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("llm_html_strip", htmlStrip, htmlStripSql),
+    Entry("llm_clean_pipeline", cleanPipeline, cleanPipelineSql),
+    Entry("llm_line_scrub", lineScrub, lineScrubSql))
 }

@@ -337,19 +337,11 @@ object TextIndex {
        |SELECT w, COUNT(*) AS df FROM dt WHERE w LIKE 's%'
        |GROUP BY 1 ORDER BY df DESC, w ASC LIMIT 8""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "txt_phrase_search" -> (phraseSearch _),
-    "txt_significant_terms" -> (significantTerms _),
-    "txt_collocations" -> (collocations _),
-    "txt_fuzzy_search" -> (fuzzySearch _),
-    "txt_more_like_this" -> (moreLikeThis _),
-    "txt_autocomplete" -> (autocomplete _))
-
-  val oracles: Map[String, String] = Map(
-    "txt_phrase_search" -> phraseSearchSql,
-    "txt_significant_terms" -> significantTermsSql,
-    "txt_collocations" -> collocationsSql,
-    "txt_fuzzy_search" -> fuzzySearchSql,
-    "txt_more_like_this" -> moreLikeThisSql,
-    "txt_autocomplete" -> autocompleteSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("txt_phrase_search", phraseSearch, phraseSearchSql),
+    Entry("txt_significant_terms", significantTerms, significantTermsSql),
+    Entry("txt_collocations", collocations, collocationsSql),
+    Entry("txt_fuzzy_search", fuzzySearch, fuzzySearchSql),
+    Entry("txt_more_like_this", moreLikeThis, moreLikeThisSql),
+    Entry("txt_autocomplete", autocomplete, autocompleteSql))
 }

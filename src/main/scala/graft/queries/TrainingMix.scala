@@ -274,13 +274,8 @@ object TrainingMix {
        |  log_odds > 0.0 AS quality_pass
        |FROM w""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_dsir_weights" -> (dsirWeights _),
-    "llm_curriculum" -> (curriculumBands _),
-    "llm_nb_quality" -> (nbQuality _))
-
-  val oracles: Map[String, String] = Map(
-    "llm_dsir_weights" -> dsirWeightsSql,
-    "llm_curriculum" -> curriculumBandsSql,
-    "llm_nb_quality" -> nbQualitySql)
+  val entries: Seq[Entry] = Seq(
+    Entry("llm_dsir_weights", dsirWeights, dsirWeightsSql),
+    Entry("llm_curriculum", curriculumBands, curriculumBandsSql),
+    Entry("llm_nb_quality", nbQuality, nbQualitySql))
 }

@@ -279,15 +279,9 @@ object TrendOps {
        |  CAST(intercept_micro + slope_micro * (dd - 1 + h) AS BIGINT) AS forecast_micro
        |FROM ic CROSS JOIN (SELECT unnest(generate_series(1, 7)) AS h) hs""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_cusum" -> (cusum _),
-    "evt_seasonality" -> (seasonality _),
-    "evt_anomaly_mad" -> (anomalyMad _),
-    "evt_forecast_linreg" -> (forecastLinreg _))
-
-  val oracles: Map[String, String] = Map(
-    "evt_cusum" -> cusumSql,
-    "evt_seasonality" -> seasonalitySql,
-    "evt_anomaly_mad" -> anomalyMadSql,
-    "evt_forecast_linreg" -> forecastLinregSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("evt_cusum", cusum, cusumSql),
+    Entry("evt_seasonality", seasonality, seasonalitySql),
+    Entry("evt_anomaly_mad", anomalyMad, anomalyMadSql),
+    Entry("evt_forecast_linreg", forecastLinreg, forecastLinregSql))
 }

@@ -134,9 +134,6 @@ object UrlDedup {
        |FROM c GROUP BY 1""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_url_dedup" -> (urlDedup _))
-
-  val oracles: Map[String, String] = Map(
-    "llm_url_dedup" -> urlDedupSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("llm_url_dedup", urlDedup, urlDedupSql))
 }

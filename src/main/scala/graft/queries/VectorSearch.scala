@@ -908,32 +908,18 @@ object VectorSearch {
        |FROM pv GROUP BY label""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_embed_outliers" -> (embedOutliers _),
-    "llm_hard_negatives" -> ((s: SparkSession, d: String) => hardNegatives(s, d)),
-    "llm_centroid_classify" -> (centroidClassify _),
-    "llm_embed_ann_pq" -> ((s: SparkSession, d: String) => pqTopk(s, d)),
-    "llm_embed_topk" -> (bruteTopk _),
-    "llm_embed_ann_lsh" -> ((s: SparkSession, d: String) => lshBucketTopk(s, d)),
-    "llm_embed_ann_ivf" -> ((s: SparkSession, d: String) => ivfTopk(s, d)),
-    "llm_embed_ann_ivfpq" -> ((s: SparkSession, d: String) => ivfPqTopk(s, d)),
-    "llm_embed_quantize" -> (embedQuantize _),
-    "llm_embed_neardup" -> (embedNearDup _),
-    "llm_semdedup" -> (semDedup _),
-    "llm_semdedup_kmeans" -> ((s: SparkSession, d: String) => semDedupKmeans(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "llm_embed_outliers" -> embedOutliersSql,
-    "llm_hard_negatives" -> hardNegativesSql,
-    "llm_centroid_classify" -> centroidClassifySql,
-    "llm_embed_ann_pq" -> pqTopkSql,
-    "llm_embed_topk" -> bruteTopkSql,
-    "llm_embed_ann_lsh" -> lshBucketTopkSql,
-    "llm_embed_ann_ivf" -> ivfTopkSql,
-    "llm_embed_ann_ivfpq" -> ivfPqTopkSql,
-    "llm_embed_quantize" -> embedQuantizeSql,
-    "llm_embed_neardup" -> embedNearDupSql,
-    "llm_semdedup" -> semDedupSql,
-    "llm_semdedup_kmeans" -> semDedupKmeansSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("llm_embed_outliers", embedOutliers, embedOutliersSql),
+    Entry("llm_hard_negatives", hardNegatives(_, _), hardNegativesSql),
+    Entry("llm_centroid_classify", centroidClassify, centroidClassifySql),
+    Entry("llm_embed_ann_pq", pqTopk(_, _), pqTopkSql),
+    Entry("llm_embed_topk", bruteTopk, bruteTopkSql),
+    Entry("llm_embed_ann_lsh", lshBucketTopk(_, _), lshBucketTopkSql),
+    Entry("llm_embed_ann_ivf", ivfTopk(_, _), ivfTopkSql),
+    Entry("llm_embed_ann_ivfpq", ivfPqTopk(_, _), ivfPqTopkSql),
+    Entry("llm_embed_quantize", embedQuantize, embedQuantizeSql),
+    Entry("llm_embed_neardup", embedNearDup, embedNearDupSql),
+    Entry("llm_semdedup", semDedup, semDedupSql),
+    Entry("llm_semdedup_kmeans", semDedupKmeans(_, _), semDedupKmeansSql))
 
 }

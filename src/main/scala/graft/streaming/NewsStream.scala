@@ -121,9 +121,8 @@ object NewsStream {
     // concurrent upsert of the same lake (intrinsic locks are
     // reentrant, so commit's own lock on the same stripe is fine)
     graft.PathLocks.lockFor(lakePath).synchronized {
-      val merged = graft.LakeCommit.resolve(spark, lakePath) match {
-        case Some(current) =>
-          val existing = spark.read.parquet(current)
+      val merged = graft.LakeCommit.current(spark, lakePath) match {
+        case Some(existing) =>
           // restore the lake's column order: the USING join hoists the key
           // column first, so without the select the FIRST upsert would
           // silently rewrite the lake with a reordered schema

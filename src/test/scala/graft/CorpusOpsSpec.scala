@@ -240,7 +240,6 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("token budget: bucketed plan equals the naive global-sort keep set") {
-    import graft.queries.Curation
     // 12 docs with mixed repetition; the reference below re-derives the
     // keep set by the NAIVE definition (global (ttr desc, doc_id) sort,
     // running sum, cut at floor(total/4)) in plain Scala — the bucketed
@@ -265,7 +264,7 @@ class CorpusOpsSpec extends SparkSpec {
       .drop(1).takeWhile(_._4 <= budget)
       .map { case (id, ttr, n, cum) => id -> ((ttr, n, cum)) }.toMap
 
-    val got = Curation.queries("llm_token_budget")(spark, dir).collect()
+    val got = SparkEntry.queries("llm_token_budget")(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("ttr"), r.getAs[Long]("ws_toks"),
           r.getAs[Long]("cum_toks")))).toMap
@@ -274,9 +273,8 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("weighted sample: append-stable, keeps all-distinct docs, tracks the weight") {
-    import graft.queries.Curation
     def sample(dir: String): Map[Long, (Long, Long)] =
-      Curation.queries("llm_weighted_sample")(spark, dir).collect()
+      SparkEntry.queries("llm_weighted_sample")(spark, dir).collect()
         .map(r => r.getAs[Long]("doc_id") ->
           ((r.getAs[Long]("weight_bp"), r.getAs[Long]("bucket")))).toMap
     // 300 docs at ~50% weight ("a b a b" -> ttr 5000), plus 20 docs of
@@ -295,12 +293,11 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("domain cap keeps at most 20 per source, highest token count first") {
-    import graft.queries.Curation
     // source "big": 30 docs, doc i has i tokens -> the cap keeps the 20
     // longest (11..30); source "small": 3 docs, all kept
     val big = (1L to 30L).map(i => (i, (1L to i).map(j => s"w$j").mkString(" "), "big"))
     val small = (101L to 103L).map(i => (i, "three word doc", "small"))
-    val out = Curation.queries("llm_domain_cap")(spark, docsDir(big ++ small))
+    val out = SparkEntry.queries("llm_domain_cap")(spark, docsDir(big ++ small))
       .collect().map(r => (r.getAs[String]("source"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("ws_toks"), r.getAs[Long]("rank")))
     val bigKept = out.filter(_._1 == "big")

@@ -291,7 +291,7 @@ class DedupSpec extends SparkSpec {
       14L -> "totally unique words here now", // batch: 1 gram, unseen
       21L -> "too short", //        batch: <5 tokens -> 0 grams
       28L -> "a b c d e a b c d e")) // batch: dup grams count once
-    val rows = LlmDedup.queries("llm_bloom_dedup")(spark, dir).collect()
+    val rows = SparkEntry.queries("llm_bloom_dedup")(spark, dir).collect()
       .map(r => r.getAs[Long]("batch_id") ->
         ((r.getAs[Long]("n_grams"), r.getAs[Long]("n_seen"),
           r.getAs[Double]("seen_frac")))).toMap

@@ -25,6 +25,15 @@ if grep -rnE 'AvailableNow\(\)|awaitTermination' src/main/scala \
   exit 1
 fi
 
+echo "== preflight: one catalog registry in src/main"
+# Every catalog entry is one graft.queries.Entry row (name, builder,
+# oracle, optional sliced form); parallel per-module name maps are how
+# an entry got named twice and a later module could shadow an earlier.
+if grep -rnE 'val (queries|oracles): Map' src/main/scala/graft/queries; then
+  echo "preflight: list catalog entries as Entry rows in \`entries\`" >&2
+  exit 1
+fi
+
 echo "== preflight: sbt Test/compile"
 sbt -batch Test/compile
 
