@@ -1,9 +1,13 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
 
-/** Locations of the repo's test fixtures and per-invocation scratch
-  * space for queries that stage streaming runs on local disk.
+/** Locations of the repo's test fixtures, and the one owner of the
+  * scratch space catalog entries write on local disk: staged inputs
+  * ([[stagedInput]], written once per JVM) and run directories
+  * ([[withRunRoot]], one fresh generation per run, valid through the
+  * next run on the same prefix). No entry picks a path of its own.
   */
 object Fixtures {
 
@@ -27,19 +31,16 @@ object Fixtures {
     p.toString
   }
 
-  private def rm(f: java.io.File): Unit = {
+  private def rm(f: File): Unit = {
     Option(f.listFiles).foreach(_.foreach(rm))
     f.delete(): Unit
   }
 
-  private val reused = new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  /** A scratch root memoized per prefix for the JVM's lifetime (ONE
-    * directory, ONE shutdown hook), so a long-lived Serve process does
-    * not grow disk and the shutdown-hook list with request count.
-    * Callers that clean-then-reuse it go through [[withRunRoot]]. */
-  def reusedScratchDir(prefix: String): String =
-    reused.computeIfAbsent(prefix, _ => scratchDir(prefix))
+  /** The run root of each [[withRunRoot]] prefix, memoized for the
+    * JVM's lifetime (ONE directory, ONE shutdown hook), so a long-lived
+    * Serve process does not grow disk and the shutdown-hook list with
+    * request count. */
+  private val runRoots = new java.util.concurrent.ConcurrentHashMap[String, String]
 
   private val runLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]
 
@@ -47,17 +48,39 @@ object Fixtures {
   private[graft] def runLock(prefix: String): Object =
     runLocks.computeIfAbsent(prefix, _ => new Object)
 
-  /** Run `body` on the [[reusedScratchDir]] of `prefix`, emptied first,
-    * holding that prefix's lock throughout: the run directory of a
-    * streaming lifecycle (sink, checkpoint, lake), fresh on every call.
+  /** The run generations under `root`, oldest first. */
+  private def generations(root: File): Seq[Long] =
+    Option(root.listFiles).toSeq.flatten.map(_.getName)
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted
+
+  /** Run `body` on a fresh generation directory under the run root of
+    * `prefix`, holding that prefix's lock throughout: the run directory
+    * of a catalog entry that writes scratch data (a streaming
+    * lifecycle's sink and checkpoint, a scratch lake, an export).
     * Same-prefix runs serialize; different prefixes run concurrently.
-    * A result that reads the root lazily is valid until the next run on
-    * the same prefix empties it. */
+    *
+    * Generations are numbered 1, 2, … per prefix, and a run deletes
+    * only those older than the previous run's: the same one-version
+    * grace window [[LakeCommit]] keeps for readers across a refresh. A
+    * result that reads its run directory lazily therefore stays valid
+    * through the NEXT run on the same prefix; the run after that
+    * deletes it. */
   def withRunRoot[T](prefix: String)(body: String => T): T =
     runLock(prefix).synchronized {
-      val root = reusedScratchDir(prefix)
-      Option(new java.io.File(root).listFiles).foreach(_.foreach(rm))
-      body(root)
+      val root = new File(runRoots.computeIfAbsent(prefix, _ => scratchDir(prefix)))
+      val gens = generations(root)
+      gens.dropRight(1).foreach(g => rm(new File(root, g.toString)))
+      val run = new File(root, (gens.lastOption.getOrElse(0L) + 1L).toString)
+      run.mkdir(): Unit
+      body(run.getPath)
+    }
+
+  /** The directory of the latest [[withRunRoot]] run on `prefix`. */
+  private[graft] def latestRun(prefix: String): String =
+    runLock(prefix).synchronized {
+      val root = Option(runRoots.get(prefix)).map(new File(_))
+      root.flatMap(r => generations(r).lastOption.map(g => new File(r, g.toString).getPath))
+        .getOrElse(throw new IllegalStateException(s"no $prefix run in this JVM"))
     }
 
   private final class Staged(kind: String, stage: String => Unit) {

@@ -285,15 +285,6 @@ object Serve {
     } else flows
   }
 
-  /** Start the server (port 0 = ephemeral; read the bound port off the
-    * return). Binds loopback only unless `bindAll` — exposing a SQL
-    * endpoint beyond localhost is an explicit operator decision, and one
-    * that REQUIRES a shared secret (`token`): every request must then
-    * carry `Authorization: Bearer <token>` or get a 401 (the parity nod
-    * to the reference fronting ES with basic auth, SearchUI.js:7 /
-    * create-certs.yml — loopback-only instances stay credential-free
-    * like a local dev ES). Split from [[main]] so tests can drive a
-    * live instance. */
   /** The candidate [[registerLake]] view names, allowlisted up front
     * when a lake is configured: a flow that has not landed yet merely
     * resolves to "table not found" (clean 400), while a name NOT
@@ -439,6 +430,15 @@ object Serve {
     ctx
   }
 
+  /** Start the server (port 0 = ephemeral; read the bound port off the
+    * return). Binds loopback only unless `bindAll` — exposing a SQL
+    * endpoint beyond localhost is an explicit operator decision, and one
+    * that REQUIRES a shared secret (`token`): every request must then
+    * carry `Authorization: Bearer <token>` or get a 401 (the parity nod
+    * to the reference fronting ES with basic auth, SearchUI.js:7 /
+    * create-certs.yml — loopback-only instances stay credential-free
+    * like a local dev ES). Split from [[main]] so tests can drive a
+    * live instance. */
   def start(spark: SparkSession, dir: String, port: Int,
       bindAll: Boolean = false, token: Option[String] = None,
       lakeDir: Option[String] = None, tls: Option[Tls] = None,
@@ -655,6 +655,12 @@ object Serve {
       }
     })
 
+    // the dashboard half of the rendering layer (see [[ServeDash]]) —
+    // same no-auth static-asset stance as /ui: the page carries no
+    // data; its /query fetches pass through the normal handler
+    server.createContext("/dashboard", (ex: HttpExchange) =>
+      reply(ex, 200, ServeDash.Html, "text/html; charset=utf-8"))
+
     // The rendering layer (reference: the React results UI,
     // news_app/app/app/src/SearchUI.js:35-106 — search-on-change box,
     // 8 hits/page, title+date+desc+img cards, query highlighting,
@@ -663,12 +669,6 @@ object Serve {
     // uses. The asset itself carries zero data, so it is served without
     // auth; a token-protected instance takes the secret in the page's
     // token field, which rides as the Bearer header on every API fetch.
-    // the dashboard half of the rendering layer (see [[ServeDash]]) —
-    // same no-auth static-asset stance as /ui: the page carries no
-    // data; its /query fetches pass through the normal handler
-    server.createContext("/dashboard", (ex: HttpExchange) =>
-      reply(ex, 200, ServeDash.Html, "text/html; charset=utf-8"))
-
     server.createContext("/ui", (ex: HttpExchange) =>
       reply(ex, 200, UiHtml, "text/html; charset=utf-8"))
 

@@ -257,42 +257,36 @@ object CorpusOps {
     * `maxRecordsPerFile` — the shard key and layout are what matter. */
   private val ExportShards = 8
 
-  // The overwrite-then-read-back sequence makes concurrent runs against
-  // the SAME output path unsafe, so same-path invocations serialize
-  // (as streaming run roots do, Fixtures.withRunRoot)
-  // while different destinations proceed concurrently. STRIPED locks,
-  // not a path→lock map: a long-lived Serve process with caller-chosen
-  // destinations would grow an unbounded map one entry per distinct
-  // path; a fixed stripe array is O(1) memory forever, and a stripe
-  // collision between two different paths merely serializes them —
-  // safe, just momentarily slower. Plain local paths are normalized
-  // first so two spellings of the same destination (trailing slash,
-  // `..`, relative vs absolute) take the same stripe; scheme URIs
-  // (hdfs://, s3a://) are detected UP FRONT and pass through with only
-  // the trailing slash stripped — on Unix `Paths.get("hdfs://h/p")`
-  // does not throw, it silently parses as a relative filesystem path
-  // and gets CWD-prefixed, so the exception branch alone never caught
-  // them (ADVICE r12).
-  private val ExportLockStripes = 64
-  private val exportLocks = Array.fill(ExportLockStripes)(new Object)
-  private val SchemePrefix = "^[A-Za-z][A-Za-z0-9+.-]*://".r
-  private def lockFor(out: String): Object = {
-    val norm =
-      if (SchemePrefix.findPrefixOf(out).isDefined) out.stripSuffix("/")
-      else
-        try java.nio.file.Paths.get(out).toAbsolutePath.normalize.toString
-        catch { // unparseable as a path: verbatim (stripes only serialize)
-          case _: java.nio.file.InvalidPathException =>
-            out.stripSuffix("/")
-        }
-    exportLocks(math.floorMod(norm.hashCode, ExportLockStripes))
-  }
+  /** Order-independent content signature of the exported text: the sum
+    * of 32-bit md5 prefixes. */
+  private val textSig: Column =
+    sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long")).as("text_sig")
 
-  /** The catalog entry's default export location (exposed for
-    * CorpusOpsSpec's layout assertions; one stable directory per JVM,
-    * never a shared fixed path two JVMs could clobber). */
-  private[graft] def exportDir: String =
-    graft.Fixtures.reusedScratchDir("jsonl_export")
+  /** The JSONL exports' roundtrip fold: per-shard counts, char totals
+    * and [[textSig]]. */
+  private val exportFold: Seq[Column] =
+    Seq(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"), textSig)
+
+  /** Write `sharded` (which carries a `shard` column) as a gzip-JSONL
+    * tree, one directory per shard, into a fresh run directory of
+    * `prefix`, and return the tree read back and folded per shard by
+    * `fold`. Same-prefix exports serialize on the run root's lock. The
+    * fold is pinned as DRIVER-held rows before the lock releases, not
+    * localCheckpoint: the result is one row per shard (bounded, small at
+    * any scale), and executor-memory blocks would not survive executor
+    * churn on a real cluster (dynamic allocation, preemption). */
+  private def exportRoundtrip(spark: SparkSession, prefix: String,
+      sharded: DataFrame, fold: Seq[Column] = exportFold): DataFrame =
+    graft.Fixtures.withRunRoot(prefix) { out =>
+      sharded.write.mode("overwrite").partitionBy("shard")
+        .option("compression", "gzip").json(out)
+      val folded = spark.read.json(out)
+        .groupBy(col("shard").cast("long").as("shard"))
+        .agg(fold.head, fold.tail: _*)
+      val rows = folded.collect() // bounded: one row per shard
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), folded.schema)
+    }
 
   /** Sharded gzip-JSONL export — the delivery last-mile of a training
     * corpus (the lake stores parquet; trainers consume JSONL shards).
@@ -309,35 +303,8 @@ object CorpusOps {
     * partitioned write); the verification fold is one shuffle keyed on
     * the shard id. */
   def exportJsonl(spark: SparkSession, dir: String): DataFrame =
-    exportJsonlTo(spark, dir, exportDir)
-
-  /** [[exportJsonl]] with a caller-chosen destination — the production
-    * form (shards land next to the lake, not in scratch). Callers
-    * exporting different datasets to different paths run concurrently;
-    * only same-path invocations serialize. */
-  def exportJsonlTo(spark: SparkSession, dir: String, out: String): DataFrame =
-    lockFor(out).synchronized {
-      Tables.load(spark, dir, "documents")
-        .withColumn("shard", pmod(col("doc_id"), lit(ExportShards.toLong)))
-        .write.mode("overwrite").partitionBy("shard")
-        .option("compression", "gzip").json(out)
-      // The fold must finish before the lock releases (a lazy frame read
-      // after the next overwrite would fold the NEXT invocation's
-      // shards). Pin it as DRIVER-held rows, not localCheckpoint: the
-      // result is one row per shard (bounded, small at any scale), and
-      // executor-memory blocks would not survive executor churn on a
-      // real cluster (dynamic allocation, preemption).
-      val folded = spark.read.json(out)
-        .groupBy(col("shard").cast("long").as("shard"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-            .as("text_sig"))
-      val rows = folded.collect() // bounded: ExportShards rows
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), folded.schema)
-    }
+    exportRoundtrip(spark, "jsonl_export", Tables.load(spark, dir, "documents")
+      .withColumn("shard", pmod(col("doc_id"), lit(ExportShards.toLong))))
 
   /** Target uncompressed chars per export shard for the sized planner
     * (chars proxy JSONL bytes; loaders want ~even shards of a target
@@ -358,27 +325,12 @@ object CorpusOps {
     * from the same sum, so the PLAN (not just the content) is under
     * the hash gate. */
   def exportJsonlSized(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.Fixtures.reusedScratchDir("jsonl_export_sized")
     val docs = Tables.load(spark, dir, "documents")
     val total = docs.agg(sum(col("n_chars")).cast("long")).head.getLong(0)
     val shards = math.min(ExportMaxShards.toLong,
       math.max(1L, (total + ExportTargetChars - 1) / ExportTargetChars))
-    lockFor(out).synchronized {
-      docs
-        .withColumn("shard", pmod(col("doc_id"), lit(shards)))
-        .write.mode("overwrite").partitionBy("shard")
-        .option("compression", "gzip").json(out)
-      val folded = spark.read.json(out)
-        .groupBy(col("shard").cast("long").as("shard"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-            .as("text_sig"))
-      val rows = folded.collect() // bounded: <= ExportMaxShards rows
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), folded.schema)
-    }
+    exportRoundtrip(spark, "jsonl_export_sized",
+      docs.withColumn("shard", pmod(col("doc_id"), lit(shards))))
   }
 
   val exportJsonlSizedSql: String =
@@ -418,31 +370,17 @@ object CorpusOps {
     * DETERMINISM here is what makes the export hash-verifiable. The
     * roundtrip fold proves the written runs, not the plan. */
   def exportSorted(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.Fixtures.reusedScratchDir("jsonl_export_sorted")
     val docs = Tables.load(spark, dir, "documents")
     val b = docs.agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-    lockFor(out).synchronized {
-      docs.crossJoin(broadcast(b))
-        .withColumn("shard",
-          least(lit(SortShards - 1L),
-            expr(s"((doc_id - mn) * $SortShards) div (mx - mn + 1)")))
-        .repartition(col("shard"))
-        .sortWithinPartitions(col("shard"), col("doc_id"))
-        .drop("mn", "mx")
-        .write.mode("overwrite").partitionBy("shard")
-        .option("compression", "gzip").json(out)
-      val folded = spark.read.json(out)
-        .groupBy(col("shard").cast("long").as("shard"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          min(col("doc_id")).as("min_id"),
-          max(col("doc_id")).as("max_id"),
-          sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-            .as("text_sig"))
-      val rows = folded.collect() // bounded: SortShards rows
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), folded.schema)
-    }
+    exportRoundtrip(spark, "jsonl_export_sorted", docs.crossJoin(broadcast(b))
+      .withColumn("shard",
+        least(lit(SortShards - 1L),
+          expr(s"((doc_id - mn) * $SortShards) div (mx - mn + 1)")))
+      .repartition(col("shard"))
+      .sortWithinPartitions(col("shard"), col("doc_id"))
+      .drop("mn", "mx"),
+      Seq(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"),
+        max(col("doc_id")).as("max_id"), textSig))
   }
 
   val exportSortedSql: String =

@@ -122,16 +122,16 @@ object Ingestion {
     * Parquet lake (the versioned marker-file commit), read the committed
     * version back, aggregate per partition — the reference's
     * index-pattern stats (A6) over our partition layout. */
-  def lakeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val lake = s"${System.getProperty("java.io.tmpdir")}/graft_lake_rt"
-    CasesIngest.writeLake(CasesIngest.canonicalCases(spark), lake)
-    graft.LakeCommit.read(spark, lake)
-      .groupBy(col("source_index"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(coalesce(col("confirmed"), lit(0L)) + coalesce(col("vaccinated"), lit(0L)))
-          .as("total_value"))
-  }
+  def lakeRoundtrip(spark: SparkSession, dir: String): DataFrame =
+    graft.Fixtures.withRunRoot("lake_rt") { lake =>
+      CasesIngest.writeLake(CasesIngest.canonicalCases(spark), lake)
+      graft.LakeCommit.read(spark, lake)
+        .groupBy(col("source_index"))
+        .agg(
+          count(lit(1)).as("n_rows"),
+          sum(coalesce(col("confirmed"), lit(0L)) + coalesce(col("vaccinated"), lit(0L)))
+            .as("total_value"))
+    }
 
   val lakeRoundtripSql: String =
     s"""WITH $canonCte
@@ -144,14 +144,14 @@ object Ingestion {
     * SearchUI.js:6): the `source_index = 'vaccination'` predicate prunes
     * whole partition directories before any file is opened
     * (PruneFileSourcePartitions; asserted in IngestGoldenSpec). */
-  def lakePruned(spark: SparkSession, dir: String): DataFrame = {
-    val lake = s"${System.getProperty("java.io.tmpdir")}/graft_lake_rt"
-    CasesIngest.writeLake(CasesIngest.canonicalCases(spark), lake)
-    graft.LakeCommit.read(spark, lake)
-      .filter(col("source_index") === "vaccination")
-      .groupBy(col("iso_code2"))
-      .agg(sum(col("vaccinated")).as("sum_vaccinated"))
-  }
+  def lakePruned(spark: SparkSession, dir: String): DataFrame =
+    graft.Fixtures.withRunRoot("lake_pruned") { lake =>
+      CasesIngest.writeLake(CasesIngest.canonicalCases(spark), lake)
+      graft.LakeCommit.read(spark, lake)
+        .filter(col("source_index") === "vaccination")
+        .groupBy(col("iso_code2"))
+        .agg(sum(col("vaccinated")).as("sum_vaccinated"))
+    }
 
   val lakePrunedSql: String =
     s"""WITH $canonCte
@@ -291,21 +291,22 @@ object Ingestion {
     * source table directly, so any row the rewrite loses or doubles
     * hash-mismatches. The ≥10x file-count drop itself is asserted in
     * CompactionSpec (not SQL-expressible). */
-  def compactionRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val lake = s"${System.getProperty("java.io.tmpdir")}/graft_compact_rt"
-    val orders = graft.Tables.load(spark, dir, "orders")
-    graft.LakeCommit.commit(orders.repartition(64), lake)
-    val report = graft.operators.Compaction.compactLake(spark, lake)
-    spark.read.parquet(report.dataDir)
-      .groupBy(col("o_orderpriority"))
-      .agg(
-        count(lit(1)).as("n_orders"),
-        // DECIMAL fence per the catalog convention (Relational.scala:16):
-        // a raw DOUBLE sum drifts with partition fold order (64 files here)
-        // and hash-mismatches DuckDB; exact decimal agg, then one cast.
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-          .as("sum_price"))
-  }
+  def compactionRoundtrip(spark: SparkSession, dir: String): DataFrame =
+    graft.Fixtures.withRunRoot("compact_rt") { lake =>
+      val orders = graft.Tables.load(spark, dir, "orders")
+      graft.LakeCommit.commit(orders.repartition(64), lake)
+      val report = graft.operators.Compaction.compactLake(spark, lake)
+      spark.read.parquet(report.dataDir)
+        .groupBy(col("o_orderpriority"))
+        .agg(
+          count(lit(1)).as("n_orders"),
+          // DECIMAL fence per the catalog convention (Relational.scala:16):
+          // a raw DOUBLE sum drifts with partition fold order (64 files
+          // here) and hash-mismatches DuckDB; exact decimal agg, then one
+          // cast.
+          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
+            .as("sum_price"))
+    }
 
   val compactionSql: String =
     """SELECT o_orderpriority, COUNT(*) AS n_orders,
@@ -429,12 +430,6 @@ object Ingestion {
       |  CAST(cur_price AS DOUBLE) AS cur_price
       |FROM d WHERE status IS NOT NULL""".stripMargin
 
-  private def deleteDir(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true): Unit
-  }
-
   /** Time travel over the versioned lake (K2's commit protocol,
     * [[graft.LakeCommit]]): commit two snapshots of orders — v1 the
     * 'F' slice, v2 everything else — then read BOTH v1 (via
@@ -446,13 +441,9 @@ object Ingestion {
     * time travel is pure METADATA — resolving a version is one marker
     * lookup; the data dirs are immutable, so a pinned old-version scan
     * plans exactly like any parquet scan. */
-  def lakeTimetravel(spark: SparkSession, dir: String): DataFrame = {
-    val lake = s"${System.getProperty("java.io.tmpdir")}/graft_lake_tt"
-    // delete-then-commit is not atomic: serialize concurrent runs of
-    // this query (Serve exposes it at /query/) on the lake's own lock
-    // stripe — LakeCommit.commit takes the same lock reentrantly.
-    graft.PathLocks.lockFor(lake).synchronized {
-      deleteDir(spark, lake) // deterministic version numbering per run
+  def lakeTimetravel(spark: SparkSession, dir: String): DataFrame =
+    // a fresh run directory per call: deterministic version numbering
+    graft.Fixtures.withRunRoot("lake_tt") { lake =>
       val o = graft.Tables.load(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       graft.LakeCommit.commit(o.filter(col("o_orderstatus") === "F"), lake, keepVersions = 3)
@@ -466,7 +457,6 @@ object Ingestion {
           count(lit(1)).as("n"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("rev"))
     }
-  }
 
   val lakeTimetravelSql: String =
     """SELECT CAST(1 AS BIGINT) AS version, COUNT(*) AS n,
@@ -487,12 +477,8 @@ object Ingestion {
     * footer-metadata union (per-file schemas reconciled at planning);
     * no data is rewritten and the scan stays columnar — the absent
     * column materializes as nulls per batch. */
-  def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_lake_evo"
-    // serialize concurrent runs (Serve /query/) across the two-vintage
-    // write sequence — an interleaved delete would tear the table
-    graft.PathLocks.lockFor(base).synchronized {
-      deleteDir(spark, base)
+  def schemaEvolution(spark: SparkSession, dir: String): DataFrame =
+    graft.Fixtures.withRunRoot("lake_evo") { base =>
       val c = graft.Tables.load(spark, dir, "customer")
       c.filter(col("c_custkey") % 2 === 0)
         .select(col("c_custkey"), col("c_acctbal"))
@@ -506,7 +492,6 @@ object Ingestion {
           count(lit(1)).as("n"),
           sum(col("c_acctbal").cast("decimal(18,2)")).cast("double").as("bal"))
     }
-  }
 
   val schemaEvolutionSql: String =
     """WITH merged AS (
@@ -586,11 +571,8 @@ object Ingestion {
     * user-within-window), so the three columns partition the source.
     * At 100 TB a date-partitioned lake turns the age purge into
     * partition drops; the user purge is the rewrite path shown here. */
-  def retentionPurge(spark: SparkSession, dir: String): DataFrame = {
-    val lake = s"${System.getProperty("java.io.tmpdir")}/graft_lake_purge"
-    // serialize concurrent runs (Serve /query/) across delete + commit
-    graft.PathLocks.lockFor(lake).synchronized {
-      deleteDir(spark, lake)
+  def retentionPurge(spark: SparkSession, dir: String): DataFrame =
+    graft.Fixtures.withRunRoot("lake_purge") { lake =>
       val ev = graft.Tables.load(spark, dir, "events")
       val cut = ev.agg(expr("max(ts) - INTERVAL 7 DAYS").as("cutoff"))
       val evC = ev.crossJoin(broadcast(cut))
@@ -612,7 +594,6 @@ object Ingestion {
           coalesce(col("n_purged_age"), lit(0L)).as("n_purged_age"),
           coalesce(col("n_purged_user"), lit(0L)).as("n_purged_user"))
     }
-  }
 
   val retentionPurgeSql: String =
     """WITH c AS (SELECT max(ts) - INTERVAL 7 DAY AS cutoff FROM events)

@@ -24,10 +24,12 @@ object Streaming {
   //  - its STAGED input (Fixtures.stagedInput): a deterministic function
   //    of the immutable source tables, written once per (kind, source)
   //    per JVM and reused by later invocations;
-  //  - its RUN ROOT (Fixtures.withRunRoot): sink + checkpoint (+ lake),
-  //    emptied at every call under the prefix's lock, so every run is a
-  //    fresh, complete lifecycle over the full input and same-entry runs
-  //    serialize.
+  //  - its RUN ROOT (Fixtures.withRunRoot): sink + checkpoint (+ lake)
+  //    in a fresh generation directory per call, under the prefix's
+  //    lock, so every run is a fresh, complete lifecycle over the full
+  //    input and same-entry runs serialize. A run deletes only the
+  //    generations older than the previous one, so the lazy read-back an
+  //    entry returns stays valid through the next run of the same entry.
   // The watermark-kicker sentinel is the one per-invocation mutation of
   // a staged dir: it lands as a single FIXED-NAME file (2 FS ops),
   // refreshed inside the run root's lock.

@@ -81,7 +81,7 @@ class CorpusOpsSpec extends SparkSpec {
     assert(rows.map(_.getAs[Long]("n_docs")).sum === docs.count())
     assert(rows.length === 8 && rows.map(_.getAs[Long]("shard")).toSet === (0L to 7L).toSet)
     // The export really is a sharded gzip-JSONL tree on disk.
-    val out = new java.io.File(CorpusOps.exportDir)
+    val out = new java.io.File(Fixtures.latestRun("jsonl_export"))
     val shardDirs = out.listFiles().filter(_.getName.startsWith("shard="))
     assert(shardDirs.length === 8)
     assert(shardDirs.forall(_.listFiles().exists(_.getName.endsWith(".json.gz"))))
@@ -106,48 +106,6 @@ class CorpusOpsSpec extends SparkSpec {
       CorpusOps.exportJsonl(spark, sf0001).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     })
-    Await.result(Future.sequence(runs), 300.seconds)
-      .foreach(got => assert(got === expect))
-  }
-
-  test("JSONL export: two datasets export concurrently to two paths") {
-    // Different destinations take different locks: neither dataset's
-    // overwrite can clobber the other's read-back, and nothing forces
-    // them to serialize. Interleave 2 runs per (dataset, path) pair.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def fold(dir: String, out: String): Set[(Long, Long, Long, Long)] =
-      CorpusOps.exportJsonlTo(spark, dir, out).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val dirB = docsDir((1L to 30L).map(i => (i, s"body text of document $i", "s")))
-    val outA = java.nio.file.Files.createTempDirectory("graft_export_a").toString
-    val outB = java.nio.file.Files.createTempDirectory("graft_export_b").toString
-    val expectA = fold(sf0001, outA)
-    val expectB = fold(dirB, outB)
-    assert(expectA !== expectB) // distinguishable datasets, or the test proves nothing
-    val runs = (1 to 2).flatMap(_ => Seq(
-      Future(("a", fold(sf0001, outA))), Future(("b", fold(dirB, outB)))))
-    Await.result(Future.sequence(runs), 300.seconds).foreach {
-      case ("a", got) => assert(got === expectA)
-      case (_, got) => assert(got === expectB)
-    }
-  }
-
-  test("JSONL export: two spellings of the same path serialize (normalized locks)") {
-    // trailing slash and a dotted segment both denote the same
-    // destination — with raw-string lock keys they'd take DIFFERENT
-    // locks and the overwrite/read-back sequences could interleave.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val base = java.nio.file.Files.createTempDirectory("graft_export_n").toString
-    val spellings = Seq(s"$base/out", s"$base/out/", s"$base/./out", s"$base/x/../out")
-    def fold(out: String): Set[(Long, Long, Long, Long)] =
-      CorpusOps.exportJsonlTo(spark, sf0001, out).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val expect = fold(spellings.head)
-    val runs = (1 to 2).flatMap(_ => spellings.map(s => Future(fold(s))))
     Await.result(Future.sequence(runs), 300.seconds)
       .foreach(got => assert(got === expect))
   }
@@ -327,7 +285,7 @@ class CorpusOpsSpec extends SparkSpec {
     // The written run itself is sorted: read shard 0's json lines in
     // file order and check the doc_id sequence ascends per file.
     val dir = new java.io.File(
-      s"${graft.Fixtures.reusedScratchDir("jsonl_export_sorted")}/shard=0")
+      s"${graft.Fixtures.latestRun("jsonl_export_sorted")}/shard=0")
     val files = dir.listFiles().filter(_.getName.endsWith(".gz"))
     assert(files.nonEmpty, s"no shard-0 run files in $dir")
     files.foreach { f =>

@@ -201,7 +201,7 @@ class LakeCommitSpec extends SparkSpec {
     assert(out.map(_.getAs[Long]("n_purged_age")).sum > 0, "age purge vacuous")
     // keepVersions=1: exactly one retained version — purged data has no
     // readable prior snapshot left behind.
-    val lake = s"${System.getProperty("java.io.tmpdir")}/graft_lake_purge"
+    val lake = Fixtures.latestRun("lake_purge")
     assert(LakeCommit.committedVersions(spark, lake).size == 1)
     // And the retained version truly contains no banned/expired rows.
     val back = LakeCommit.read(spark, lake)

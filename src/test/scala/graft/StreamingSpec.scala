@@ -301,7 +301,7 @@ class StreamingSpec extends SparkSpec {
     // doc — without the dedup its tokens would count 2 and dominate the
     // top-3; with it every 03-02 term appears exactly once
     assert(rows.filter(_._1 == "2021-03-02").forall(_._3 == 1L))
-    // clean-rerun stability (the reusedScratchDir + lock contract)
+    // clean-rerun stability (the run root + lock contract)
     assert(collect() === rows)
   }
 
@@ -344,8 +344,8 @@ class StreamingSpec extends SparkSpec {
     val t = new Thread(other, "sessionize-concurrent")
     // This thread holds the prefix lock while the other call starts: that
     // call must block on exactly this lock (not run beside it), and this
-    // thread's own call and read-back run before the other empties the
-    // run root.
+    // thread's own call and read-back run before the other starts its
+    // run.
     val mine = lock.synchronized {
       t.start()
       def waitsOnLock: Boolean = {
@@ -445,8 +445,8 @@ class StreamingSpec extends SparkSpec {
     // Verb semantics: class 7 fully deleted, class 3 inserted, others kept.
     assert(!out.contains(7L), "removed keys survived the delete verb")
     assert(out.contains(3L), "added keys never landed")
-    val lake = s"${graft.Fixtures.reusedScratchDir("cdc_rt")}/lake"
-    val ckpt = s"${graft.Fixtures.reusedScratchDir("cdc_rt")}/ckpt"
+    val lake = s"${graft.Fixtures.latestRun("cdc_rt")}/lake"
+    val ckpt = s"${graft.Fixtures.latestRun("cdc_rt")}/ckpt"
     // The feed is staged once per dir (r18 staged-input memo), no longer
     // under the per-run scratch root.
     val in = graft.queries.Streaming.cdcFeedDir(sf0001)

@@ -34,6 +34,21 @@ if grep -rnE 'val (queries|oracles): Map' src/main/scala/graft/queries; then
   exit 1
 fi
 
+echo "== preflight: one owner of catalog scratch space"
+# Catalog entries take their scratch directories from graft.Fixtures
+# (withRunRoot / stagedInput); a fixed tmpdir path is shared by every
+# JVM on the box, and a private lock-stripe array is a second copy of
+# PathLocks.
+if grep -rn 'java\.io\.tmpdir' src/main/scala/graft/queries; then
+  echo "preflight: take catalog scratch space from Fixtures.withRunRoot / stagedInput" >&2
+  exit 1
+fi
+if grep -rnE 'Array\.fill\(.*\)\(new Object\)' src/main/scala \
+    | grep -v '^src/main/scala/graft/LakeCommit\.scala:'; then
+  echo "preflight: lock paths through PathLocks (graft/LakeCommit.scala)" >&2
+  exit 1
+fi
+
 echo "== preflight: sbt Test/compile"
 sbt -batch Test/compile
 
