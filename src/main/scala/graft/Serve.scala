@@ -61,10 +61,24 @@ import org.apache.spark.sql.graft.PlanShim
   * `collect()` (default 100, cap 10k), so a fat-fingered `SELECT *` over
   * 100 TB returns a page, not the lake. The SparkSession itself is
   * thread-safe; queries from concurrent requests just become concurrent
-  * Spark jobs (FAIR scheduling would be the one-line next step at real
-  * multi-user load) — and catalog operators that need a temporary conf
-  * run on conf-isolated session clones ([[Sessions.confIsolated]]), so
-  * concurrent requests cannot race each other's configuration.
+  * Spark jobs (FIFO-scheduled) — and catalog operators that need a
+  * temporary conf run on conf-isolated session clones
+  * ([[Sessions.confIsolated]]), so concurrent requests cannot race each
+  * other's configuration.
+  *
+  * One request lifecycle (the reference's per-search ES `timeout` and
+  * cancellable task): every authenticated request runs its Spark jobs
+  * under its own job group, with a deadline from the `timeout`
+  * parameter (seconds; default 60, clamped to 1..600, the same for every
+  * endpoint). Past the deadline a watchdog cancels the group's running
+  * and future jobs, and the request answers a shaped 408 — the handler
+  * pool is bounded (8 threads), so eight unbounded slow requests would
+  * block every endpoint. Two waits are not jobs of the request's group
+  * and are not cut short; the 408 lands when they end:
+  *   - a wait on a [[Fixtures.withRunRoot]] prefix lock;
+  *   - a `stream_*` entry's micro-batches, which run on the stream's own
+  *     thread under the stream's own job group.
+  * `/dashboard` and `/ui` are static pages with no data and no lifecycle.
   *
   * Exposure: Spark SQL is NOT a sandbox — an unrestricted statement can
   * read any host file (``SELECT * FROM parquet.`/any/path` ``), write
@@ -91,6 +105,12 @@ object Serve {
     * field to the statistics fold, so an unbounded term list would hold
     * a handler thread for as long as the client likes. */
   private val MaxSearchTerms = 32
+
+  /** Numbers the request job groups of every server in this JVM: the
+    * scheduler remembers a group cancelled with its future jobs, so a
+    * group id reused by a later request (or a second server) would have
+    * that request's jobs cancelled on submission. */
+  private val requestSeq = new java.util.concurrent.atomic.AtomicLong()
 
   private def clamp(v: Int, hi: Int): Int = math.min(math.max(v, 1), hi)
 
@@ -121,6 +141,23 @@ object Serve {
   private def renderRows(columns: Seq[String], rows: Array[String]): String =
     Json.write(Json.obj("columns" -> columns, "n" -> rows.length,
       "rows" -> rows.map(Json.Raw)))
+
+  /** True when `t` is how a cancelled Spark job surfaces. The shape is
+    * version-dependent: a SparkException mentioning "cancelled", or
+    * (with `interruptOnCancel`) an InterruptedException anywhere in the
+    * cause chain. Matched structurally, not on the message alone, so
+    * every shape maps to the shaped 408. */
+  private def isCancellation(t: Throwable): Boolean = {
+    def causedByInterrupt: Boolean =
+      Iterator.iterate(t)(_.getCause).take(16).takeWhile(_ != null)
+        .exists(_.isInstanceOf[InterruptedException])
+    t match {
+      case e: org.apache.spark.SparkException =>
+        (e.getMessage != null && e.getMessage.toLowerCase.contains("cancel")) ||
+          causedByInterrupt
+      case _ => causedByInterrupt
+    }
+  }
 
   /** Function names rejected at parse time: every registered door into
     * `CallMethodViaReflection` (arbitrary static-method invocation — env
@@ -548,17 +585,51 @@ object Serve {
     def fail(code: Int, message: String): (Int, String) =
       (code, Json.write(Json.obj("error" -> message)))
 
-    def handle(ex: HttpExchange)(f: => (Int, String)): Unit = {
+    val watchdog = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
+      r => { val t = new Thread(r, "serve-watchdog"); t.setDaemon(true); t })
+
+    /** The one request lifecycle (see the [[Serve]] Scaladoc): auth, the
+      * request's own job group, the deadline watchdog, the shaped 408,
+      * and the per-endpoint stats. `f` gets the decoded parameters. */
+    def handle(ex: HttpExchange)(f: Map[String, String] => (Int, String)): Unit = {
       val t0 = System.nanoTime()
+      val path = ex.getRequestURI.getPath
       def done(r: (Int, String)): Unit = {
         reply(ex, r._1, r._2)
-        statsFor(ex.getRequestURI.getPath).record(r._1, (System.nanoTime() - t0) / 1000000L)
+        statsFor(path).record(r._1, (System.nanoTime() - t0) / 1000000L)
       }
-      try done(if (authorized(ex)) f else fail(401, "missing or invalid bearer token"))
+      def deadlined(p: Map[String, String]): (Int, String) = {
+        val timeoutSec = clamp(intParam(p, "timeout", 60), 600)
+        val sc = spark.sparkContext
+        val group = s"serve-${requestSeq.incrementAndGet()}"
+        // thread-local: concurrent requests cancel only their own jobs
+        sc.setJobGroup(group, s"$path $group", interruptOnCancel = true)
+        // the 408 below is claimed ONLY when this flag proves the
+        // watchdog actually fired — a cancellation-shaped failure from
+        // any other source must surface as the error it is
+        val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+        val watch = watchdog.schedule(new Runnable {
+          def run(): Unit = {
+            fired.set(true)
+            // "and future jobs": a job the request starts after the
+            // deadline (its next step, or after a lock wait) fails at once
+            sc.cancelJobGroupAndFutureJobs(group, s"$path exceeded ${timeoutSec}s")
+          }
+        }, timeoutSec.toLong, java.util.concurrent.TimeUnit.SECONDS)
+        try f(p)
+        catch { case e: Exception if fired.get() && isCancellation(e) =>
+          fail(408, s"query exceeded ${timeoutSec}s and was cancelled")
+        } finally {
+          watch.cancel(false)
+          sc.clearJobGroup()
+        }
+      }
+      try done(if (authorized(ex)) deadlined(params(ex))
+        else fail(401, "missing or invalid bearer token"))
       catch { case e: Exception => done(fail(400, e.toString.take(500))) }
     }
 
-    server.createContext("/metrics", (ex: HttpExchange) => handle(ex) {
+    server.createContext("/metrics", (ex: HttpExchange) => handle(ex) { _ =>
       val ups = (System.nanoTime() - startedAtNanos) / 1e9
       val eps = epStats.entrySet().asScala.toSeq.map(e => e.getKey -> e.getValue.json)
       (200, Json.write(Json.obj("uptime_sec" -> Json.fixed(ups, 1),
@@ -571,7 +642,7 @@ object Serve {
     // ok/error, and rows landed. 404 (not an empty 200) without a
     // cadence daemon, so "no daemon" and "daemon hasn't ticked yet"
     // are distinguishable to an operator.
-    server.createContext("/flows", (ex: HttpExchange) => handle(ex) {
+    server.createContext("/flows", (ex: HttpExchange) => handle(ex) { _ =>
       flowHistory match {
         case None => fail(404,
           "no cadence daemon on this server (start with --lake=<dir> --refresh-hours=<h>)")
@@ -587,70 +658,26 @@ object Serve {
       }
     })
 
-    server.createContext("/tables", (ex: HttpExchange) => handle(ex) {
+    server.createContext("/tables", (ex: HttpExchange) => handle(ex) { _ =>
       // allowlisted lake views that have not landed yet are queryable
       // only in principle — report what a query can actually hit now
       val live = tables.filter(spark.catalog.tableExists)
       (200, Json.write(Json.obj("tables" -> live)))
     })
 
-    // Per-request cancellation watchdog for /sql: the handler pool is
-    // BOUNDED (8 threads), so without a timeout one runaway query per
-    // thread would wedge the whole server — auth rejections included.
-    // setJobGroup is thread-local, so concurrent requests cancel only
-    // their own jobs; the watchdog fires cancelJobGroup after the
-    // (clamped) timeout and the collect surfaces as a shaped 408.
-    val watchdog = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
-      r => { val t = new Thread(r, "serve-sql-watchdog"); t.setDaemon(true); t })
-    val sqlSeq = new java.util.concurrent.atomic.AtomicLong()
+    /** `/sql` and `/explain`'s one guarded parse: [[guardSql]], then
+      * [[guardAnalyzed]] (analysis executes nothing). */
+    val allowed = tables.toSet
+    def guardedQuery(sql: String): DataFrame = {
+      guardSql(spark, sql, allowed)
+      val df = spark.sql(sql)
+      guardAnalyzed(PlanShim.analyzed(df))
+      df
+    }
 
-    server.createContext("/sql", (ex: HttpExchange) => handle(ex) {
-      val p = params(ex)
+    server.createContext("/sql", (ex: HttpExchange) => handle(ex) { p =>
       p.get("q") match {
-        case Some(sql) =>
-          guardSql(spark, sql, tables.toSet)
-          val df = spark.sql(sql)
-          guardAnalyzed(PlanShim.analyzed(df))
-          val timeoutSec = clamp(intParam(p, "timeout", 60), 600)
-          val group = s"serve-sql-${sqlSeq.incrementAndGet()}"
-          spark.sparkContext.setJobGroup(group, s"/sql $group",
-            interruptOnCancel = true)
-          // the 408 below is claimed ONLY when this flag proves the
-          // watchdog actually fired — a cancellation-shaped failure
-          // from any other source must surface as the error it is
-          val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-          val cancel = watchdog.schedule(new Runnable {
-            def run(): Unit = {
-              fired.set(true)
-              spark.sparkContext.cancelJobGroup(group)
-            }
-          }, timeoutSec.toLong, java.util.concurrent.TimeUnit.SECONDS)
-          // Cancellation surfaces in version-dependent shapes: a
-          // SparkException mentioning "cancelled", or (with
-          // interruptOnCancel=true) an InterruptedException wrapped
-          // anywhere in the cause chain. Match structurally, not on
-          // the message alone, so every shape maps to the shaped 408.
-          def causedByInterrupt(t: Throwable): Boolean = {
-            var c = t; var seen = 0
-            while (c != null && seen < 16) {
-              if (c.isInstanceOf[InterruptedException]) return true
-              seen += 1; c = c.getCause
-            }
-            false
-          }
-          def isCancellation(t: Throwable): Boolean = t match {
-            case e: org.apache.spark.SparkException =>
-              (e.getMessage != null && e.getMessage.toLowerCase.contains("cancel")) ||
-                causedByInterrupt(e)
-            case e => causedByInterrupt(e)
-          }
-          try (200, render(df, intParam(p, "limit", 100)))
-          catch { case e: Exception if fired.get() && isCancellation(e) =>
-            fail(408, s"query exceeded ${timeoutSec}s and was cancelled")
-          } finally {
-            cancel.cancel(false)
-            spark.sparkContext.clearJobGroup()
-          }
+        case Some(sql) => (200, render(guardedQuery(sql), intParam(p, "limit", 100)))
         case None => fail(400, "missing q parameter")
       }
     })
@@ -672,7 +699,7 @@ object Serve {
     server.createContext("/ui", (ex: HttpExchange) =>
       reply(ex, 200, UiHtml, "text/html; charset=utf-8"))
 
-    server.createContext("/health", (ex: HttpExchange) => handle(ex) {
+    server.createContext("/health", (ex: HttpExchange) => handle(ex) { _ =>
       // Liveness + readiness in one: the session answers a trivial
       // catalog call and the registered view count rides along, so a
       // load balancer can distinguish "process up" from "lake views
@@ -693,21 +720,6 @@ object Serve {
         as.map(a => Json.obj("flow" -> a.flow, "kind" -> a.kind, "detail" -> a.detail))))))
     })
 
-    // ES match-query `fuzziness` parity for the documents search:
-    // terms ABSENT from the corpus vocabulary are replaced by their
-    // best distance-1 correction (max df, then lexicographic — a
-    // deterministic pick), so a typo still ranks the documents the
-    // user meant. On-vocabulary terms are never rewritten (exact
-    // matches must win), and an uncorrectable term passes through to
-    // rank as itself (zero hits, same as unexpanded).
-    // The vocabulary the index being searched actually tokenizes —
-    // correcting a news query against the documents vocabulary would
-    // "fix" typos toward the wrong corpus. index=news serves ONLY from
-    // the materialized vocab view (the vocab_index flow): the previous
-    // on-the-fly fold over news titles was an O(corpus)-per-request
-    // latency trap on a large lake (VERDICT r16) — when the view is
-    // absent, /search skips expansion gracefully (canExpand below) and
-    // /suggest answers a shaped 400 pointing at the flow.
     // The documents vocabulary memoizes as ONE lazily-persisted fold per
     // server (the table under `dir` is immutable for the server's
     // lifetime), so repeat keystrokes hit cached partitions, not a
@@ -717,13 +729,50 @@ object Serve {
       graft.queries.TextIndex.vocabOf(
         Tables.load(spark, dir, "documents"), "text", "doc_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def vocabFor(index: Option[String]): DataFrame = index match {
-      case Some("news") => spark.table("vocab") // guarded by canExpand
-      case _ => docsVocab
-    }
 
-    def fuzzyExpand(terms: Seq[String], index: Option[String]): Seq[String] = {
-      val vocab = vocabFor(index)
+    /** One resolved `index=` value, for /search and /suggest alike:
+      * `hits` ranks the corpus (terms, page, size, ranker), and `vocab`
+      * is the vocabulary that index actually tokenizes — correcting a
+      * news query against the documents vocabulary would "fix" typos
+      * toward the wrong corpus. Each is the shaped 400 while its lake
+      * view has not landed, and each is resolved only when read. */
+    final class SearchIndex(
+        hitsOf: => Either[(Int, String), (Seq[String], Int, Int, String) => DataFrame],
+        vocabOf: => Either[(Int, String), DataFrame]) {
+      lazy val hits = hitsOf
+      lazy val vocab = vocabOf
+    }
+    def lakeView(name: String, missing: String): Either[(Int, String), DataFrame] =
+      if (spark.catalog.tableExists(name)) Right(spark.table(name))
+      else Left(fail(400, missing))
+    def searchIndex(p: Map[String, String]): Either[(Int, String), SearchIndex] =
+      p.get("index") match {
+        case None => Right(new SearchIndex(
+          Right(graft.queries.TextAnalysis.searchHits(spark, dir, _, _, _, _)),
+          Right(docsVocab)))
+        // the reference UI's actual target: the crawled news store
+        // (SearchUI.js:6 queries the news_* index pattern), served from
+        // the lake's deduped `news` view. Its vocabulary is ONLY the
+        // materialized vocab view (the vocab_index flow's (w, df) fold
+        // over news titles): the previous on-the-fly fold was an
+        // O(corpus)-per-request latency trap on a large lake (VERDICT r16)
+        case Some("news") => Right(new SearchIndex(
+          lakeView("news", "no news lake registered (start with --lake)").map(news =>
+            (terms, page, size, _) =>
+              graft.queries.TextAnalysis.newsSearchHits(news, terms, page, size)),
+          lakeView("vocab", "no vocab index registered (run the vocab_index flow with --lake)")))
+        case Some(other) =>
+          Left(fail(400, s"unknown index ${other.take(40)} (use news, or omit for documents)"))
+      }
+
+    // ES match-query `fuzziness` parity for the documents search:
+    // terms ABSENT from the corpus vocabulary are replaced by their
+    // best distance-1 correction (max df, then lexicographic — a
+    // deterministic pick), so a typo still ranks the documents the
+    // user meant. On-vocabulary terms are never rewritten (exact
+    // matches must win), and an uncorrectable term passes through to
+    // rank as itself (zero hits, same as unexpanded).
+    def fuzzyExpand(terms: Seq[String], vocab: DataFrame): Seq[String] = {
       // Two Spark jobs total regardless of term count: one vocabulary
       // membership probe, one multi-query deletion join for the
       // off-vocabulary remainder.
@@ -743,22 +792,18 @@ object Serve {
       }
     }
 
-    server.createContext("/search", (ex: HttpExchange) => handle(ex) {
-      val p = params(ex)
+    server.createContext("/search", (ex: HttpExchange) => handle(ex) { p =>
       val rawTerms = p.getOrElse("q", "").trim.split("\\s+").toSeq.filter(_.nonEmpty)
-      val idx = p.get("index")
-      // expansion is skipped (not failed) when the news vocab view
-      // hasn't materialized — the index dispatch below answers its own
-      // shaped 400 for a missing lake, and an unexpanded search is the
-      // graceful degradation for a missing INDEX (never an O(corpus)
-      // on-the-fly fold per request)
-      val canExpand = idx.isEmpty ||
-        (idx.contains("news") && spark.catalog.tableExists("vocab"))
-      val terms =
-        if (p.get("fuzzy").contains("1") && rawTerms.nonEmpty &&
-            rawTerms.size <= 8 && canExpand)
-          fuzzyExpand(rawTerms, idx)
-        else rawTerms
+      val index = searchIndex(p)
+      // expansion is skipped (not failed) when the index's vocabulary
+      // is missing — the dispatch below answers its own shaped 400 for
+      // a missing corpus, and an unexpanded search is the graceful
+      // degradation for a missing vocab view
+      val vocab =
+        if (p.get("fuzzy").contains("1") && rawTerms.nonEmpty && rawTerms.size <= 8)
+          index.flatMap(_.vocab).toOption
+        else None
+      val terms = vocab.fold(rawTerms)(fuzzyExpand(rawTerms, _))
       if (terms.isEmpty) fail(400, "missing q parameter")
       else if (terms.size > MaxSearchTerms)
         fail(400, s"q must have <= $MaxSearchTerms terms (got ${terms.size})")
@@ -774,29 +819,16 @@ object Serve {
         val size = clamp(intParam(p, "size", 10), MaxLimit)
         if (page.toLong * size > MaxLimit)
           fail(400, s"page*size must be <= $MaxLimit (got ${page.toLong * size})")
-        else p.get("index") match {
-          // the reference UI's actual target: the crawled news store
-          // (SearchUI.js:6 queries the news_* index pattern) — served
-          // from the lake's deduped `news` view when one is registered
-          case Some("news") =>
-            if (!spark.catalog.tableExists("news"))
-              fail(400, "no news lake registered (start with --lake)")
-            else (200, render(
-              graft.queries.TextAnalysis.newsSearchHits(
-                spark.table("news"), terms, page, size), size))
-          case Some(other) =>
-            fail(400, s"unknown index ${other.take(40)} (use news, or omit for documents)")
-          case None =>
+        else index.flatMap(_.hits) match {
+          case Left(err) => err
+          case Right(hits) =>
             val ranker = if (p.get("rank").contains("overlap")) "overlap" else "bm25"
-            (200, render(
-              graft.queries.TextAnalysis.searchHits(spark, dir, terms, page, size, ranker),
-              size))
+            (200, render(hits(terms, page, size, ranker), size))
         }
       }
     })
 
-    server.createContext("/ann", (ex: HttpExchange) => handle(ex) {
-      val p = params(ex)
+    server.createContext("/ann", (ex: HttpExchange) => handle(ex) { p =>
       // id parses with toLongOption and k through intParam, so a
       // malformed value gets a shaped 400, never a raw
       // NumberFormatException string; a well-formed id that is absent
@@ -836,7 +868,7 @@ object Serve {
       }
     })
 
-    server.createContext("/explain", (ex: HttpExchange) => handle(ex) {
+    server.createContext("/explain", (ex: HttpExchange) => handle(ex) { p =>
       // Plan introspection for the /sql surface (the ES `_explain` /
       // `_validate` analog): the SAME parse-time and post-analysis
       // guards as /sql run first, so this cannot become a side door
@@ -844,13 +876,9 @@ object Serve {
       // ships back as text WITHOUT executing anything. Operators use
       // it to see pushed filters, join strategies, and exchanges
       // before paying for a query.
-      val p = params(ex)
       p.get("q") match {
         case Some(sql) =>
-          guardSql(spark, sql, tables.toSet)
-          val df = spark.sql(sql)
-          guardAnalyzed(PlanShim.analyzed(df))
-          val plan = df.queryExecution.explainString(
+          val plan = guardedQuery(sql).queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString(
               if (p.get("mode").contains("formatted")) "formatted" else "simple"))
           (200, Json.write(Json.obj("plan" -> plan.take(20000))))
@@ -858,31 +886,18 @@ object Serve {
       }
     })
 
-    server.createContext("/suggest", (ex: HttpExchange) => handle(ex) {
+    server.createContext("/suggest", (ex: HttpExchange) => handle(ex) { p =>
       // The search box's two assistive shapes (the reference UI's
       // Searchkit input, SearchUI.js:6-33): prefix completion over the
       // corpus vocabulary, plus optional fuzziness for off-vocabulary
       // input. Both take user text only as literal Column values —
       // nothing is spliced into SQL or LIKE patterns.
-      val p = params(ex)
       p.get("q").map(_.trim.toLowerCase).filter(_.nonEmpty) match {
         case None => fail(400, "missing q parameter")
         case Some(q) if q.length > 64 => fail(400, "q must be <= 64 chars")
         case Some(q) =>
           val limit = clamp(intParam(p, "limit", 8), 100)
-          // index=news serves from the MATERIALIZED vocab view (the
-          // vocab_index flow's (w, df) fold over crawled news titles) —
-          // O(vocab) per request instead of a corpus re-scan; absent
-          // index falls back to the on-the-fly documents vocabulary.
-          val vocab: Either[(Int, String), DataFrame] = p.get("index") match {
-            case Some("news") =>
-              if (spark.catalog.tableExists("vocab")) Right(spark.table("vocab"))
-              else Left(fail(400, "no vocab index registered (run the vocab_index flow with --lake)"))
-            case Some(other) =>
-              Left(fail(400, s"unknown index ${other.take(40)} (use news, or omit for documents)"))
-            case None => Right(docsVocab) // memoized: one fold per server
-          }
-          vocab match {
+          searchIndex(p).flatMap(_.vocab) match {
             case Left(err) => err
             case Right(v) =>
               val completions = Json.obj("completions" -> Json.Raw(render(
@@ -894,9 +909,8 @@ object Serve {
       }
     })
 
-    server.createContext("/query/", (ex: HttpExchange) => handle(ex) {
+    server.createContext("/query/", (ex: HttpExchange) => handle(ex) { p =>
       val name = ex.getRequestURI.getPath.stripPrefix("/query/")
-      val p = params(ex)
       // ?from=yyyy-MM-dd&to=yyyy-MM-dd — the Kibana time-range slice,
       // applied ENGINE-side for the entries that declare a time column:
       // the bounds hit the raw scan column below the aggregate (pushed

@@ -18,48 +18,18 @@ import java.time.Duration
   */
 object HttpFetch {
 
-  /** Download `url` to `stagingDir/<name>`; `retries` attempts with
-    * exponential backoff starting at `backoffMs`. Returns the staged
-    * file path. */
-  def fetchToStaging(url: String, stagingDir: String, name: String,
-      retries: Int = 3, backoffMs: Long = 500): Path = {
-    val client = HttpClient.newBuilder()
-      .connectTimeout(Duration.ofSeconds(10))
-      .followRedirects(HttpClient.Redirect.NORMAL)
-      .build()
-    val req = HttpRequest.newBuilder(URI.create(url))
-      .timeout(Duration.ofSeconds(60)).GET().build()
-    Files.createDirectories(Paths.get(stagingDir))
-    val target = Paths.get(stagingDir, name)
-
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt < retries) {
-      try {
-        val resp = client.send(req, HttpResponse.BodyHandlers.ofByteArray())
-        if (resp.statusCode() >= 200 && resp.statusCode() < 300) {
-          Files.write(target, resp.body())
-          return target
-        }
-        lastErr = new RuntimeException(s"HTTP ${resp.statusCode()} for $url")
-      } catch { case e: Exception => lastErr = e }
-      attempt += 1
-      if (attempt < retries) Thread.sleep(backoffMs * (1L << (attempt - 1)))
-    }
-    throw new RuntimeException(s"fetch failed after $retries attempts: $url", lastErr)
-  }
-
   /** Cache validators from a prior response, replayed as
     * `If-None-Match` / `If-Modified-Since` on the next poll. */
   final case class Validators(etag: Option[String] = None,
       lastModified: Option[String] = None)
 
-  /** Conditional [[fetchToStaging]]: sends the validators; a 304 (feed
-    * unchanged since last poll) returns None WITHOUT staging anything —
-    * the polite-crawler path that keeps a 24 h cadence from re-downloading
-    * an unchanged feed forever. A 2xx stages the payload and returns it
-    * with the RESPONSE's validators for the next cycle. 304 counts as
-    * success (no retry). */
+  /** Download `url` to `stagingDir/<name>`; `retries` attempts with
+    * exponential backoff starting at `backoffMs`. Sends the validators;
+    * a 304 (feed unchanged since last poll) returns None WITHOUT staging
+    * anything — the polite-crawler path that keeps a 24 h cadence from
+    * re-downloading an unchanged feed forever. A 2xx stages the payload
+    * and returns it with the RESPONSE's validators for the next cycle.
+    * 304 counts as success (no retry). */
   def fetchConditional(url: String, stagingDir: String, name: String,
       retries: Int = 3, backoffMs: Long = 500,
       validators: Validators = Validators()): Option[(Path, Validators)] = {

@@ -29,7 +29,7 @@ import graft.{LakeCommit, PathLocks, Sessions}
   *    the stream is stopped; the checkpointed writer then resumes
   *    appending batch `latest+1` as if nothing happened. Old data files
   *    stay on disk as the grace window for already-planned readers
-  *    until [[gcUnreferenced]] reaps them.
+  *    until the next compaction (or [[gcUnreferenced]]) reaps them.
   *
   * Sizing: the input is re-read with
   * `spark.sql.files.maxPartitionBytes = targetBytes` on a conf-isolated
@@ -72,8 +72,9 @@ object Compaction {
     * ~`targetBytes` files. Contract: the writing stream is STOPPED
     * (Schedule runs flows sequentially, so between AvailableNow ticks
     * is the natural slot); it resumes from its checkpoint afterwards.
-    * Physical deletion of the replaced files is deferred to
-    * [[gcUnreferenced]]. */
+    * The files it replaces stay on disk for one compaction cycle, the
+    * reader grace [[graft.LakeCommit]]'s `keepVersions = 2` gives: the
+    * next compaction of the sink deletes them first. */
   def compactSink(spark: SparkSession, sinkDir: String,
       targetBytes: Long = DefaultTargetBytes): Report =
     PathLocks.lockFor(sinkDir).synchronized {
@@ -82,6 +83,7 @@ object Compaction {
       SinkLogShim.recover(spark, sinkDir): Unit // finish any crashed rewrite first
       val fs = fsFor(spark, sinkDir)
       val before = SinkLogShim.listedFiles(spark, sinkDir)
+      reapUnlisted(fs, sinkDir, before, cutoffMs = Long.MaxValue): Unit
       val bytesBefore = before.map(p => fs.getFileStatus(new Path(p)).getLen).sum
       // stage the compacted files in a dotted dir INSIDE the sink (same
       // filesystem, so the move below is a metadata op), invisible to
@@ -154,17 +156,22 @@ object Compaction {
   def gcUnreferenced(spark: SparkSession, sinkDir: String, graceMs: Long = 0L): Long =
     PathLocks.lockFor(sinkDir).synchronized {
       SinkLogShim.recover(spark, sinkDir): Unit // never GC against a torn listing
-      val fs = fsFor(spark, sinkDir)
-      val referenced = SinkLogShim.listedFiles(spark, sinkDir)
-        .map(p => new Path(p).toUri.getPath).toSet
-      val cutoff = System.currentTimeMillis() - graceMs
-      val candidates = fs.listStatus(new Path(sinkDir)).toSeq.filter { st =>
-        st.isFile && !hidden(st.getPath.getName) &&
-          !referenced(st.getPath.toUri.getPath) && st.getModificationTime < cutoff
-      }
-      candidates.foreach(st => fs.delete(st.getPath, false))
-      candidates.size.toLong
+      reapUnlisted(fsFor(spark, sinkDir), sinkDir, SinkLogShim.listedFiles(spark, sinkDir),
+        System.currentTimeMillis() - graceMs)
     }
+
+  /** Delete the sink-root data files missing from `listed` and last
+    * modified before `cutoffMs`; returns the number deleted. */
+  private def reapUnlisted(fs: FileSystem, sinkDir: String, listed: Seq[String],
+      cutoffMs: Long): Long = {
+    val referenced = listed.map(p => new Path(p).toUri.getPath).toSet
+    val candidates = fs.listStatus(new Path(sinkDir)).toSeq.filter { st =>
+      st.isFile && !hidden(st.getPath.getName) &&
+        !referenced(st.getPath.toUri.getPath) && st.getModificationTime < cutoffMs
+    }
+    candidates.foreach(st => fs.delete(st.getPath, false))
+    candidates.size.toLong
+  }
 
   private def hidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")

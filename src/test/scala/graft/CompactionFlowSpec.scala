@@ -1,8 +1,13 @@
 package graft
 
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.Compaction
+import graft.streaming.StateStores
 
 /** The cadence loop's housekeeping flow: lakes over the file-count
   * threshold compact (content-identical), lakes under it are left
@@ -60,5 +65,39 @@ class CompactionFlowSpec extends SparkSpec {
     assert(rows.groupBy("source_index").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap ===
       Map("src0" -> 100L, "src1" -> 100L, "src2" -> 100L))
+  }
+
+  test("repeated compactions of a news sink keep its files on disk bounded") {
+    val lakeDir = Fixtures.scratchDir("compact_flow_news")
+    val sink = s"$lakeDir/news_crawl"
+    val landing = s"$lakeDir/_landing"
+    Files.createDirectories(Paths.get(landing))
+    // one AvailableNow batch per file landed: the crawl sink's shape
+    def land(tick: Int): Unit = {
+      Files.write(Paths.get(landing, s"t$tick.json"), (1 to 5)
+        .map(i => s"""{"tick":$tick,"i":$i}""").mkString("\n").getBytes(UTF_8))
+      StateStores.runToParquet(spark, sink, s"$lakeDir/_ckpt")(
+        _.readStream.schema("tick INT, i INT").json(landing))
+    }
+    def onDisk: Int = new File(sink).listFiles()
+      .count(f => f.isFile && f.getName.endsWith(".parquet"))
+    def rows: Seq[(Int, Int)] =
+      spark.read.parquet(sink).as[(Int, Int)].collect().toSeq.sorted
+
+    (1 to 4).foreach(land)
+    val counts = (5 to 11).map { t =>
+      land(t)
+      val report = Schedule.runTick(
+        Seq(Schedule.compactionFlow(spark, lakeDir, maxFiles = 2)), t.toLong)
+      assert(report.outcomes.forall(_._2.isEmpty), report.outcomes.toString)
+      // every landed row, once: compaction changed the files, not the rows
+      assert(rows === (for (k <- 1 to t; i <- 1 to 5) yield (k, i)))
+      onDisk
+    }
+    // each tick compacts (over 2 visible files after a landing); its
+    // inputs stay one cycle for planned readers, then the next
+    // compaction deletes them, so the count levels off instead of
+    // growing by every compaction's inputs
+    assert(counts.drop(2).forall(_ <= counts(1)), s"files on disk per tick: $counts")
   }
 }

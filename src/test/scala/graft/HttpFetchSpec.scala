@@ -35,8 +35,8 @@ class HttpFetchSpec extends SparkSpec {
   test("retries through transient 503s and stages the file") {
     withServer(failures = 2) { url =>
       val staging = Files.createTempDirectory("graft_http").toString
-      val path = HttpFetch.fetchToStaging(url, staging, "owid.csv",
-        retries = 3, backoffMs = 10)
+      val path = HttpFetch.fetchConditional(url, staging, "owid.csv",
+        retries = 3, backoffMs = 10).get._1
       assert(Files.size(path) > 0)
       // distributed part: Spark reads the staged file like any CSV source
       val df = spark.read.option("header", "true").csv(path.toString)
@@ -49,7 +49,7 @@ class HttpFetchSpec extends SparkSpec {
     withServer(failures = 99) { url =>
       val staging = Files.createTempDirectory("graft_http").toString
       val e = intercept[RuntimeException] {
-        HttpFetch.fetchToStaging(url, staging, "owid.csv", retries = 2, backoffMs = 1)
+        HttpFetch.fetchConditional(url, staging, "owid.csv", retries = 2, backoffMs = 1)
       }
       assert(e.getMessage.contains("after 2 attempts"))
     }

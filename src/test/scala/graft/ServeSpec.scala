@@ -1,7 +1,14 @@
 package graft
 
 import java.net.{HttpURLConnection, URI}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.io.Source
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{JobResult, JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Live-instance test of the [[Serve]] HTTP layer (EP3 equivalent): an
   * ephemeral-port server over sf0.001, driven with real HTTP requests.
@@ -202,6 +209,90 @@ class ServeSpec extends SparkSpec {
     val ok = get("/sql?q=" + java.net.URLEncoder.encode(
       "SELECT COUNT(*) AS n FROM region", "UTF-8"))
     assert(ok._1 === 200 && ok._2.contains("\"n\":"), ok._2.take(200))
+  }
+
+  /** Requests `path` while a blocking job holds every core, so the
+    * request's jobs queue behind it. Returns the response, the status of
+    * a /tables request sent while the request waited, and the result
+    * (None: no end seen) of each job a listener saw start under a
+    * per-request job group. */
+  private def underBlocker(path: String): ((Int, String), Int, Seq[Option[JobResult]]) = {
+    val sc = spark.sparkContext
+    val groupJobs = new ConcurrentHashMap[Int, String]()
+    val ends = new ConcurrentHashMap[Int, JobResult]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("serve-")).foreach(groupJobs.put(e.jobId, _))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.jobResult)
+    }
+    val cores = sc.defaultParallelism
+    val blocker = new Thread(() => {
+      sc.setJobGroup("spec-blocker", "sleeping tasks on every core", interruptOnCancel = true)
+      try sc.parallelize(1 to cores, cores).foreach(_ => Thread.sleep(30000))
+      catch { case _: Exception => () } // cancelled below
+    })
+    sc.addSparkListener(listener)
+    blocker.start()
+    try {
+      def running: Int = sc.statusTracker.getActiveStageIds
+        .flatMap(sc.statusTracker.getStageInfo(_)).map(_.numActiveTasks).sum
+      val until = System.nanoTime() + 30000000000L
+      while (running < cores && System.nanoTime() < until) Thread.sleep(20)
+      assert(running === cores, "the blocker never held every core")
+      val request = Future(get(path))(ExecutionContext.global)
+      Thread.sleep(200)
+      val tables = get("/tables")._1
+      assert(!request.isCompleted, "the request did not wait behind the blocker")
+      val response = Await.result(request, 90.seconds)
+      val settle = System.nanoTime() + 10000000000L
+      while (groupJobs.keySet.asScala.exists(!ends.containsKey(_)) &&
+          System.nanoTime() < settle) Thread.sleep(20)
+      (response, tables, groupJobs.keySet.asScala.toSeq.map(j => Option(ends.get(j))))
+    } finally {
+      sc.cancelJobGroup("spec-blocker")
+      blocker.join(30000)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  for ((endpoint, path) <- Seq(
+      "/query" -> "/query/rel_pricing_summary",
+      "/search" -> "/search?q=spark+join&size=5")) {
+    test(s"$endpoint past its timeout answers 408, cancels its jobs, and leaves the server serving") {
+      assert(get(path)._1 === 200) // warm: planning and codegen stay under the deadline
+      val sep = if (path.contains("?")) "&" else "?"
+      val ((code, body), tables, results) = underBlocker(s"$path${sep}timeout=1")
+      assert(code === 408, s"expected 408, got $code: ${body.take(300)}")
+      assert(body.contains("exceeded 1s and was cancelled"), body.take(200))
+      assert(tables === 200, "/tables did not answer while the request waited")
+      assert(results.nonEmpty, "no job of the request's group was seen")
+      assert(results.forall(r => r.isDefined && !r.contains(JobSucceeded)), results.toString)
+    }
+  }
+
+  test("two servers never share a request job group") {
+    // a group cancelled with its future jobs stays cancelled, so a
+    // reused group id would fail the reusing request's jobs on submission
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val servers = Seq.fill(2)(Serve.start(spark, sf0001, port = 0))
+    try {
+      val q = java.net.URLEncoder.encode("SELECT COUNT(*) AS n FROM region", "UTF-8")
+      servers.foreach(srv => assert(getFrom(srv, s"/sql?q=$q")._1 === 200))
+      val until = System.nanoTime() + 10000000000L
+      while (groups.asScala.toSet.size < 2 && System.nanoTime() < until) Thread.sleep(20)
+      val seen = groups.asScala.toSeq.distinct
+      assert(seen.size === 2 && seen.forall(_.startsWith("serve-")), seen)
+    } finally {
+      servers.foreach(_.stop(0))
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("/explain returns the plan without executing, behind the /sql guards") {

@@ -1,0 +1,90 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source rules over `src/main/scala`: each concern below has one owner,
+  * and a pattern that belongs to it must not appear anywhere else. A
+  * second copy is how each of these once drifted from the first. */
+class SourceRulesSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  /** (path under `src/main/scala`, 1-based line number, line) for every
+    * line of every Scala source. */
+  private lazy val lines: Seq[(String, Int, String)] = {
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+      .flatMap { f =>
+        val rel = root.relativize(f).toString
+        Files.readAllLines(f).asScala.toSeq.zipWithIndex.map { case (l, i) => (rel, i + 1, l) }
+      }
+    finally walk.close()
+  }
+
+  /** The lines under `under` matching `pattern` that `allowed` does not
+    * excuse, as `path:line: text`. */
+  private def offending(pattern: String, under: String = "")(
+      allowed: (String, Int) => Boolean = (_, _) => false): Seq[String] = {
+    val re = pattern.r
+    lines.collect {
+      case (f, n, l) if f.startsWith(under) && re.findFirstIn(l).isDefined && !allowed(f, n) =>
+        s"src/main/scala/$f:$n: ${l.trim}"
+    }
+  }
+
+  private def rule(name: String, fix: String)(hits: => Seq[String]): Unit =
+    test(name) {
+      assert(lines.nonEmpty, s"no Scala sources under $root")
+      if (hits.nonEmpty) fail(s"$fix:\n${hits.mkString("\n")}")
+    }
+
+  // An interpolated template or a string escaper is how unescaped text
+  // and locale-formatted decimals got into response bodies before.
+  rule("one JSON writer: no hand-built JSON", "build JSON with graft.Json") {
+    offending("\"\"\"\\{\"|jstr\\(")()
+  }
+
+  // A change to how a lifecycle runs (trigger, await, rows landed) is
+  // made in one place.
+  rule("one streaming lifecycle: AvailableNow runs only in StateStores",
+      "run streams through StateStores.run / runToParquet") {
+    offending("AvailableNow\\(\\)|awaitTermination")((f, _) =>
+      f == "graft/streaming/StateStores.scala")
+  }
+
+  // Parallel per-module name maps are how an entry got named twice and
+  // a later module could shadow an earlier.
+  rule("one catalog registry: no per-module name maps",
+      "list catalog entries as Entry rows in `entries`") {
+    offending("val (queries|oracles): Map", "graft/queries")()
+  }
+
+  // A fixed tmpdir path is shared by every JVM on the box.
+  rule("one owner of catalog scratch space: no tmpdir under queries",
+      "take catalog scratch space from Fixtures.withRunRoot / stagedInput") {
+    offending("java\\.io\\.tmpdir", "graft/queries")()
+  }
+
+  // A private lock-stripe array is a second copy of PathLocks.
+  rule("one lock stripe array: PathLocks", "lock paths through PathLocks (graft/LakeCommit.scala)") {
+    offending("Array\\.fill\\(.*\\)\\(new Object\\)")((f, _) => f == "graft/LakeCommit.scala")
+  }
+
+  // A job group set anywhere else is a second request lifecycle, with
+  // its own deadline rules, that Serve's watchdog does not know about.
+  rule("one request lifecycle: job groups only in Serve.handle",
+      "run request work inside Serve.handle, which owns the job group and its cancellation") {
+    val serve = lines.filter(_._1 == "graft/Serve.scala")
+    val handle = serve.find(_._3.contains("def handle(")).map { case (_, start, text) =>
+      val close = text.takeWhile(_ == ' ') + "}"
+      start to serve.find { case (_, n, l) => n > start && l == close }.fold(start)(_._2)
+    }
+    assert(handle.isDefined, "no `def handle(` in graft/Serve.scala")
+    offending("(set|clear|cancel)JobGroup")((f, n) =>
+      f == "graft/Serve.scala" && handle.exists(_.contains(n)))
+  }
+}
