@@ -39,7 +39,12 @@ import org.apache.spark.sql.graft.PlanShim
   *     `_source` doc the reference's UI renders per hit
   *     (SearchUI.js:71-99), so a results page is ONE request. At most
   *     32 terms: a longer `q` is a shaped 400, as a `/suggest` prefix
-  *     over 64 chars is
+  *     over 64 chars is. The documents corpus (token arrays and term
+  *     dictionary, [[graft.queries.TextAnalysis.SearchCorpus]]) is built
+  *     once per server and cached, so a request is one dictionary lookup
+  *     and one ranking pass over cached rows; a stray `clearCache` only
+  *     makes the next request rebuild it. `/suggest` completes from the
+  *     same dictionary's `text` vocabulary
   *   - `GET /ann?id=<vec_id>&k=N`          exact cosine top-k neighbors
   *     of an embedding ([[graft.queries.VectorSearch.annSearch]]) — the
   *     interactive face of the similarity-search family
@@ -101,9 +106,10 @@ object Serve {
 
   private val MaxLimit = 10000
 
-  /** Most `/search` query terms: every term adds one df aggregate per
-    * field to the statistics fold, so an unbounded term list would hold
-    * a handler thread for as long as the client likes. */
+  /** Most `/search` query terms: every term adds one dictionary lookup
+    * and one df literal per field, and is counted in every document's
+    * tokens, so an unbounded term list would hold a handler thread for
+    * as long as the client likes. */
   private val MaxSearchTerms = 32
 
   /** Numbers the request job groups of every server in this JVM: the
@@ -720,15 +726,20 @@ object Serve {
         as.map(a => Json.obj("flow" -> a.flow, "kind" -> a.kind, "detail" -> a.detail))))))
     })
 
-    // The documents vocabulary memoizes as ONE lazily-persisted fold per
-    // server (the table under `dir` is immutable for the server's
-    // lifetime), so repeat keystrokes hit cached partitions, not a
-    // corpus re-scan; if an unrelated clearCache drops it, the next
-    // request re-folds correctly, just slower.
-    lazy val docsVocab: DataFrame =
-      graft.queries.TextIndex.vocabOf(
-        Tables.load(spark, dir, "documents"), "text", "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // The documents search corpus, built once per server and persisted
+    // (the table under `dir` is immutable for the server's lifetime). A
+    // corpus a stray clearCache dropped, or whose build a request's
+    // deadline cut short, is built by the next request. The one place
+    // this file loads `documents` (SourceRulesSpec).
+    val corpusLock = new Object
+    var corpusMemo: Option[graft.queries.TextAnalysis.SearchCorpus] = None
+    def docsCorpus: graft.queries.TextAnalysis.SearchCorpus = corpusLock.synchronized {
+      corpusMemo.filter(_.cached).getOrElse {
+        val built = graft.queries.TextAnalysis.documentsCorpus(spark, dir, cache = true)
+        corpusMemo = Some(built)
+        built
+      }
+    }
 
     /** One resolved `index=` value, for /search and /suggest alike:
       * `hits` ranks the corpus (terms, page, size, ranker), and `vocab`
@@ -748,8 +759,8 @@ object Serve {
     def searchIndex(p: Map[String, String]): Either[(Int, String), SearchIndex] =
       p.get("index") match {
         case None => Right(new SearchIndex(
-          Right(graft.queries.TextAnalysis.searchHits(spark, dir, _, _, _, _)),
-          Right(docsVocab)))
+          Right(graft.queries.TextAnalysis.searchHits(docsCorpus, _, _, _, _)),
+          Right(docsCorpus.vocab("text"))))
         // the reference UI's actual target: the crawled news store
         // (SearchUI.js:6 queries the news_* index pattern), served from
         // the lake's deduped `news` view. Its vocabulary is ONLY the

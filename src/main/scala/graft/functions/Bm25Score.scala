@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{array, array_contains, count, lit, size, struct, sum}
 import org.apache.spark.sql.graft.PlanShim
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -64,10 +63,11 @@ object Bm25ScoreUtil {
 }
 
 /** Native BM25 score of one search field: `left` is the field's token
-  * array, `right` its one-row corpus statistics ([[Bm25Score.stats]]:
-  * n, avgdl, and one df per query term), and the query terms are a
-  * constructor field, so the score of a field is ONE kernel call per
-  * document however many terms the query has.
+  * array, `right` its corpus statistics (n, avgdl, and one df per query
+  * term: the literal struct that
+  * [[graft.queries.TextAnalysis.SearchCorpus.stats]] builds), and the
+  * query terms are a constructor field, so the score of a field is ONE
+  * kernel call per document however many terms the query has.
   *
   * It replaced a composed form that scored every (field, term) pair
   * through `size(filter(tokens, w -> w = term))`: an interpreted
@@ -129,16 +129,6 @@ object Bm25Score {
   /** BM25 shape parameters (the textbook defaults). */
   val K1 = 1.2
   val B = 0.75
-
-  /** One field's corpus statistics as ONE aggregate struct column:
-    * n = document count, avgdl = mean token count, and per query term
-    * the number of documents holding it. Integer sums only, so the fold
-    * is order-exact. */
-  def stats(tokens: Column, terms: Seq[String]): Column = struct(
-    count(lit(1)).cast("double").as("n"),
-    (sum(size(tokens).cast("long")).cast("double") / count(lit(1))).as("avgdl"),
-    array(terms.map(t =>
-      sum(array_contains(tokens, t).cast("long")).cast("double")): _*).as("df"))
 
   /** The field's score column over its token array and its [[stats]]. */
   def score(tokens: Column, stats: Column, terms: Seq[String]): Column =

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 import graft.functions.{Bm25Score, Bpe}
@@ -42,27 +43,42 @@ object TextAnalysis {
   /** The parameterized form behind [[searchTopk]] (and the `/search`
     * endpoint of [[graft.Serve]]): arbitrary query terms, 1-based page. */
   def search(spark: SparkSession, dir: String, terms: Seq[String],
-      page: Int, pageSize: Int): DataFrame = {
+      page: Int, pageSize: Int): DataFrame =
+    overlapRank(Tables.load(spark, dir, "documents"), terms, page, pageSize, Nil)
+
+  /** [[search]]'s ranking over any frame with `doc_id`, `text` and
+    * `source`, carrying the `carry` columns through the top-k. */
+  private def overlapRank(docs: DataFrame, terms: Seq[String],
+      page: Int, pageSize: Int, carry: Seq[String]): DataFrame = {
     require(terms.nonEmpty && page >= 1 && pageSize >= 1,
       s"search needs >=1 term, page>=1, pageSize>=1 (got $terms, $page, $pageSize)")
-    val docs = Tables.load(spark, dir, "documents")
     val qtoks = array(terms.map(lit): _*)
     val sText = call_function("token_overlap", col("text"), lit(terms.mkString(" ")))
     val sSource = size(filter(qtoks, q => q === col("source"))).cast("long")
-    // Global ranking window, bounded at any scale: Spark 4.x rewrites
-    // `rank <= hi` into TakeOrderedAndProject(limit=hi) — per-partition
-    // top-hi then ONE hi-row merge — so the single-partition window sees
-    // at most hi rows, never the corpus (PlanInvariantSpec asserts the
-    // pre-limit node stays in the plan). `score >= 1` is tested after
-    // the rank, as in [[bm25Rank]]: below the window it is pushed under
-    // the scoring projection and scores every document twice; overlap
-    // scores are integers ≥ 0, so zero scores rank after every positive
-    // one and positive ranks do not move.
-    val w = Window.orderBy(col("score").desc, col("doc_id").asc)
+    // overlap scores are integers ≥ 0, so zero scores rank after every
+    // positive one and positive ranks do not move (see [[pageOf]])
+    pageOf(docs.select(
+      col("doc_id") +: greatest(sText, sSource).as("score") +: carry.map(col): _*),
+      "doc_id", page, pageSize, col("score") >= 1)
+  }
+
+  /** Ranks `scored` by (score desc, `key` asc) and keeps page `page` of
+    * the rows that pass `hit`. The global ranking window is bounded at
+    * any scale: Spark 4.x rewrites `rank <= hi` into a pre-limit
+    * (WindowGroupLimit, or TakeOrderedAndProject) — per-partition top-hi
+    * then ONE hi-row merge — so the single-partition window sees at most
+    * hi rows, never the corpus (PlanInvariantSpec asserts the pre-limit
+    * node stays in the plan). `hit` is tested after the rank, not before
+    * it: below the window a filter is pushed under the scoring
+    * projection, which scores every document twice; every ranker here
+    * scores ≥ 0 and its `hit` keeps only positive scores, which rank
+    * ahead of every zero, so the kept ranks are the same either way. */
+  private def pageOf(scored: DataFrame, key: String, page: Int, pageSize: Int,
+      hit: Column): DataFrame = {
+    val w = Window.orderBy(col("score").desc, col(key).asc)
     val (lo, hi) = ((page - 1) * pageSize + 1, page * pageSize)
-    docs.select(col("doc_id"), greatest(sText, sSource).as("score"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") >= lo && col("rank") <= hi && col("score") >= 1)
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") >= lo && col("rank") <= hi && hit)
   }
 
   val searchTopkSql: String =
@@ -94,18 +110,19 @@ object TextAnalysis {
     * idf(t) = ln(1 + (N−df+0.5)/(df+0.5)) — BM25 with the standard
     * k1=1.2, b=0.75.
     *
-    * Scale shape: [[bm25Rank]] over the single `text` field — one
-    * stats fold to a one-row broadcast, one native
-    * [[graft.functions.Bm25Score]] call per document, and the
-    * WindowGroupLimit top-k. Cross-engine determinism: every input to
+    * Scale shape: [[bm25Rank]] over a one-field uncached
+    * [[SearchCorpus]] — building the entry folds n, Σdl and the terms'
+    * df in one job, then one native [[graft.functions.Bm25Score]] call
+    * per document over literal statistics, and the WindowGroupLimit
+    * top-k.
+    * Cross-engine determinism: every input to
     * the float math is exact (counts, lengths, shared literals) and the
     * expression order is mirrored in the oracle, with the one
     * transcendental (`ln`) fenced by round(…, 6) on both sides. */
-  def searchBm25(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-      .withColumn("t", Text.tokens(col("text"))) // materialize once (see LlmDedup)
-    bm25Rank(docs, Seq("text" -> col("t")), "doc_id", Bm25Terms, page = 1, pageSize = 10)
-  }
+  def searchBm25(spark: SparkSession, dir: String): DataFrame =
+    bm25Search(corpusOf(Tables.load(spark, dir, "documents"), "doc_id",
+      Seq("text" -> Text.tokens(col("text"))), Nil, cache = false),
+      Bm25Terms, page = 1, pageSize = 10)
 
   val searchBm25Sql: String = {
     val statCols = Bm25Terms.zipWithIndex.map { case (term, i) =>
@@ -153,110 +170,206 @@ object TextAnalysis {
     * this closes the field-less multi_match gap on top of it
     * (VERDICT r12 item 3 — r12's form scored 2 fields).
     *
-    * Scale shape: [[bm25Rank]] over the five fields — pass 1 folds
-    * every field's statistics into the SAME one-row broadcast
-    * (5 × (2 + T) numbers for T terms, constant size at any corpus),
-    * pass 2 makes five native [[graft.functions.Bm25Score]] calls per
-    * document (one per field, whatever T) and takes `greatest`, and the
-    * top-k is the WindowGroupLimit pre-limit rank (per-partition top-k,
-    * one k-row merge). Cross-engine
+    * Scale shape: [[bm25Rank]] over the five fields of an uncached
+    * [[documentsCorpus]] — building the entry folds n, each field's Σdl
+    * and the terms' df in one job (constant size at any corpus), then five
+    * native [[graft.functions.Bm25Score]] calls per
+    * document (one per field, whatever T) over literal statistics and
+    * `greatest`, and the top-k is the WindowGroupLimit pre-limit rank
+    * (per-partition top-k, one k-row merge). Cross-engine
     * determinism: same contract as [[searchBm25]] — exact inputs,
     * mirrored expression order, one round(…,6) fence at the end. */
   def searchBm25Fields(spark: SparkSession, dir: String): DataFrame =
     bm25Search(spark, dir, Bm25Terms, page = 1, pageSize = 10)
 
-  /** The all-field token-array set shared by [[bm25Search]]'s stats and
-    * scoring passes (single definition so they cannot diverge): each
-    * entry is (field name, token-array column over the pre-materialized
-    * projections). */
-  private def bm25Fields: Seq[(String, Column)] = Seq(
-    "text" -> col("t"),
-    "title" -> col("ttl"),
-    "lang" -> array(col("lang")),
-    "source" -> col("src_t"),
-    "n_chars" -> array(col("n_chars").cast("string")))
-
-  /** The parameterized form behind [[searchBm25Fields]] and the `/search`
-    * endpoint of [[graft.Serve]]: arbitrary query terms, 1-based page —
-    * the relevance-ranked replacement for the unweighted [[search]]. */
+  /** The parameterized form behind [[searchBm25Fields]]: arbitrary query
+    * terms, 1-based page — the relevance-ranked replacement for the
+    * unweighted [[search]], and the ranking of [[graft.Serve]]'s
+    * `/search` ([[searchHits]]). */
   def bm25Search(spark: SparkSession, dir: String, terms: Seq[String],
-      page: Int, pageSize: Int): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-      .withColumn("t", Text.tokens(col("text"))) // materialize once (see LlmDedup)
-      .withColumn("ttl", slice(col("t"), 1, Bm25TitleLen))
-      .withColumn("src_t", Text.tokens(col("source")))
-    bm25Rank(docs, bm25Fields, "doc_id", terms, page, pageSize)
+      page: Int, pageSize: Int): DataFrame =
+    bm25Search(documentsCorpus(spark, dir, cache = false), terms, page, pageSize)
+
+  /** [[bm25Search]] over a built corpus: (key, score, rank). */
+  def bm25Search(corpus: SearchCorpus, terms: Seq[String],
+      page: Int, pageSize: Int): DataFrame =
+    bm25Rank(corpus, terms, page, pageSize, Nil).select(corpus.key, "score", "rank")
+
+  // ------------------------------------------------------- search corpus
+
+  /** What BM25 ranks, tokenized once ([[corpusOf]] builds it): `rows`
+    * holds the key `key`, each field's token array (column `tok_<field>`)
+    * and the payload columns, and `dict` is the `(field, w, df)` term
+    * dictionary: df is the number of documents whose field holds `w`.
+    *
+    * A cached corpus persists `rows` (spread over the default
+    * parallelism) and `dict` MEMORY_AND_DISK, and folds n and each
+    * field's Σdl (total tokens) when it is built, keeping them as plain
+    * numbers; a query then only looks its own terms up in `dict` — the
+    * ES shape, where the term dictionary is written at index time. An
+    * uncached corpus (the catalog's per-call form, which memoizes
+    * nothing across runs) folds n, Σdl and the query's df in one job
+    * instead: on an uncached corpus a dictionary lookup would explode
+    * and shuffle every token of every document per query. Either way a
+    * query's statistics cost ONE small job ([[stats]]). */
+  final class SearchCorpus private[TextAnalysis] (projected: DataFrame, val key: String,
+      val fields: Seq[String], cache: Boolean) {
+
+    val rows: DataFrame =
+      if (!cache) projected
+      else projected.repartition(projected.sparkSession.sparkContext.defaultParallelism)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+
+    /** Field `f`'s token-array column in `rows`. */
+    def tokens(f: String): Column = col(s"tok_$f")
+
+    val dict: DataFrame = {
+      // one (field, distinct token) row per document and field
+      val d = rows
+        .select(explode(array(fields.map(f =>
+          struct(lit(f).as("field"), array_distinct(tokens(f)).as("ws"))): _*)).as("fw"))
+        .select(col("fw.field").as("field"), explode(col("fw.ws")).as("w"))
+        .groupBy(col("field"), col("w")).agg(count(lit(1)).as("df"))
+      if (cache) d.persist(StorageLevel.MEMORY_AND_DISK) else d
+    }
+
+    /** ONE job over `rows`: n, each field's Σdl (None when no document
+      * has the field), and the number of documents whose field holds
+      * each of `terms`. */
+    private def fold(terms: Seq[String]): (Long, Seq[Option[Long]], Map[(String, String), Long]) = {
+      val keys = for (f <- fields; t <- terms) yield (f, t)
+      val r = rows.agg(count(lit(1)), fields.map(f => sum(size(tokens(f)).cast("long"))) ++
+        keys.map { case (f, t) => count(when(array_contains(tokens(f), t), true)) }: _*).head()
+      val k = fields.size
+      (r.getLong(0), (1 to k).map(i => Option.when(!r.isNullAt(i))(r.getLong(i))),
+        keys.zipWithIndex.map { case (ft, i) => ft -> r.getLong(1 + k + i) }.toMap)
+    }
+
+    /** A cached corpus's n and Σdl, folded as it is built — which
+      * materializes `rows` — with `dict` materialized beside them. */
+    private val sizes: Option[(Long, Seq[Option[Long]])] = Option.when(cache) {
+      val (n, sumDl, _) = fold(Nil)
+      dict.count(): Unit
+      (n, sumDl)
+    }
+
+    /** Each field's BM25 statistics for `terms`, in [[fields]] order, as
+      * the literal `struct(n, avgdl, df[])` [[graft.functions.Bm25Score]]
+      * takes: one df per term, repeats included. A term no document
+      * holds has df 0, not null: a null df nulls the field's score for
+      * every document. avgdl is Σdl / n, the division the folded form in
+      * the plan made (null when no document has the field). */
+    def stats(terms: Seq[String]): Seq[Column] = {
+      val (n, sumDl, df) = sizes match {
+        case Some((n, sumDl)) => (n, sumDl,
+          dict.filter(col("w").isin(terms.distinct: _*)).collect()
+            .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
+        case None => fold(terms.distinct)
+      }
+      fields.zip(sumDl).map { case (f, dl) =>
+        struct(lit(n.toDouble).as("n"),
+          dl.fold(lit(null).cast("double"))(s => lit(s.toDouble / n.toDouble)).as("avgdl"),
+          array(terms.map(t => lit(df.getOrElse((f, t), 0L).toDouble)): _*).as("df"))
+      }
+    }
+
+    /** Field `f`'s slice of `dict`: its `(w, df)` vocabulary. */
+    def vocab(f: String): DataFrame =
+      dict.filter(col("field") === f).select(col("w"), col("df"))
+
+    /** True while a cached corpus's `rows` and `dict` both sit in the
+      * cache: one that a `clearCache` dropped must be built again. */
+    def cached: Boolean =
+      rows.storageLevel != StorageLevel.NONE && dict.storageLevel != StorageLevel.NONE
   }
 
-  /** The best_fields BM25 core behind [[bm25Search]], [[searchBm25]]
-    * and — with a different field set — the crawled-news search
-    * ([[newsSearchHits]]): two-pass ranking over ANY prepared corpus.
-    * `prepared` carries the token columns `fields` reference plus
-    * `keyCol`, a unique ascending tiebreaker.
+  /** A [[SearchCorpus]] over `docs`: `fields` are (name, token-array
+    * column) pairs and `payload` the columns carried beside them. */
+  private def corpusOf(docs: DataFrame, key: String, fields: Seq[(String, Column)],
+      payload: Seq[Column], cache: Boolean): SearchCorpus =
+    new SearchCorpus(docs.select(
+      (col(key) +: fields.map { case (f, c) => c.as(s"tok_$f") }) ++ payload: _*),
+      key, fields.map(_._1), cache)
+
+  /** The `documents` corpus: [[searchBm25Fields]]'s five fields and
+    * the payload [[searchHits]] renders (text, lang, source, n_chars).
+    * [[graft.Serve]] builds one cached corpus per server; the catalog
+    * builds an uncached one per call. */
+  def documentsCorpus(spark: SparkSession, dir: String, cache: Boolean): SearchCorpus = {
+    val docs = Tables.load(spark, dir, "documents")
+      .withColumn("t", Text.tokens(col("text"))) // materialize once (see LlmDedup)
+    corpusOf(docs, "doc_id", Seq(
+      "text" -> col("t"),
+      "title" -> slice(col("t"), 1, Bm25TitleLen),
+      "lang" -> array(col("lang")),
+      "source" -> Text.tokens(col("source")),
+      "n_chars" -> array(col("n_chars").cast("string"))),
+      Seq(col("text"), col("lang"), col("source"), col("n_chars")), cache)
+  }
+
+  /** The best_fields BM25 core behind [[bm25Search]], [[searchBm25]],
+    * [[searchHits]] and — over a different field set — the crawled-news
+    * search ([[newsSearchHits]]): ranks `corpus.rows` by the max over
+    * fields, with the `carry` columns riding along (key, score, carry,
+    * rank). `corpus.key` is the unique ascending tiebreaker.
     *
-    * Scale shape: pass 1 folds every field's statistics
-    * ([[graft.functions.Bm25Score.stats]]: shared N, per-field Σdl,
-    * per-(field, term) df — integer sums, constant size at any corpus)
-    * into ONE broadcast row. Pass 2 is narrow: one native
+    * Pass structure: [[SearchCorpus.stats]] gets the terms' statistics
+    * in one small job (a term-dictionary lookup on a cached corpus, a
+    * fold on an uncached one) and hands every field's statistics to the
+    * plan as literals, so the plan has no statistics fold and no join.
+    * The ranking is then ONE narrow pass: one native
     * [[graft.functions.Bm25Score]] call per (document, field) — O(fields)
     * expression nodes whatever the term count — then `greatest` across
-    * fields, so each document is scored exactly once. The top-k is the
-    * WindowGroupLimit pre-limit rank (per-partition top-k, one k-row
-    * merge). `score > 0` is tested after the rank, not before it: a
-    * filter below the window is pushed below the scoring projection,
-    * which scores every document twice (filter, then projection); and
-    * since BM25 scores are ≥ 0, zero scores rank after every positive
-    * one, so positive ranks are the same either way. */
-  private[queries] def bm25Rank(prepared: DataFrame,
-      fields: Seq[(String, Column)], keyCol: String,
-      terms: Seq[String], page: Int, pageSize: Int): DataFrame = {
+    * fields, so each document is scored exactly once, and the payload
+    * rides through the bounded top-k ([[pageOf]]: per-partition top-k,
+    * one k-row merge) instead of being joined back. */
+  private[queries] def bm25Rank(corpus: SearchCorpus, terms: Seq[String],
+      page: Int, pageSize: Int, carry: Seq[String]): DataFrame = {
     require(terms.nonEmpty && page >= 1 && pageSize >= 1,
       s"bm25 rank needs >=1 term, page>=1, pageSize>=1 (got $terms, $page, $pageSize)")
-    val stats = prepared.select(struct(fields.map { case (f, tc) =>
-      Bm25Score.stats(tc, terms).as(f) }: _*).as("st"))
-    val fieldScores = fields.map { case (f, tc) =>
-      Bm25Score.score(tc, col("st").getField(f), terms) }
+    val fieldScores = corpus.fields.zip(corpus.stats(terms)).map { case (f, st) =>
+      Bm25Score.score(corpus.tokens(f), st, terms) }
     val best = if (fieldScores.size == 1) fieldScores.head else greatest(fieldScores: _*)
-    val w = Window.orderBy(col("score").desc, col(keyCol).asc)
-    val (lo, hi) = ((page - 1) * pageSize + 1, page * pageSize)
-    prepared.join(broadcast(stats))
-      .select(col(keyCol), round(best, 6).as("score"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") >= lo && col("rank") <= hi && col("score") > 0)
+    pageOf(corpus.rows.select(
+      col(corpus.key) +: round(best, 6).as("score") +: carry.map(col): _*),
+      corpus.key, page, pageSize, col("score") > 0)
   }
 
   /** EP3 over the CRAWLED news store — the corpus the reference's
     * search UI actually queries (SearchUI.js:6 reads the `news_*`
     * index pattern; fields title/desc/lang/site). Ranked page + the
     * per-hit payload the UI renders (title, desc snippet, link, date,
-    * crawler provenance) in one frame: same broadcast-back join shape
-    * as [[searchHits]], same [[bm25Rank]] core as the analytics
-    * search — only the field set differs. */
+    * crawler provenance) in one frame: the same [[bm25Rank]] core as
+    * the analytics search over a per-call [[newsCorpus]], with the
+    * payload carried through the rank — only the field set differs. */
   def newsSearchHits(news: DataFrame, terms: Seq[String],
-      page: Int, pageSize: Int): DataFrame = {
-    // the store dedups on (link, date), so one link can carry several
-    // crawl snapshots — a search hit is one LINK, newest snapshot wins
-    // (otherwise the rank window ties on the key and the payload join
-    // fans one ranked row back out into duplicates)
+      page: Int, pageSize: Int): DataFrame =
+    bm25Rank(newsCorpus(news), terms, page, pageSize,
+        Seq("title", "desc", "date", "lang", "crawler"))
+      .select(col("rank"), col("score"), col("title"),
+        substring(coalesce(col("desc"), lit("")), 1, SnippetChars).as("snippet"),
+        col("link"), date_format(col("date"), "yyyy-MM-dd").as("date"),
+        col("lang"), col("crawler"))
+      .orderBy(col("rank").asc)
+
+  /** The uncached news corpus: the newest snapshot of each link, its
+    * title, desc, lang and site fields, and the [[newsSearchHits]]
+    * payload. The store dedups on (link, date), so one link can carry
+    * several crawl snapshots — a search hit is one LINK, newest snapshot
+    * wins (otherwise the rank window ties on the key). */
+  def newsCorpus(news: DataFrame): SearchCorpus = {
     val latestW = Window.partitionBy(col("link"))
       .orderBy(col("date").desc_nulls_last)
     val latest = news
       .withColumn("_rn", row_number().over(latestW))
       .filter(col("_rn") === 1).drop("_rn")
-    val prepared = latest
-      .withColumn("ttl_t", Text.tokens(col("title")))
-      .withColumn("desc_t", Text.tokens(coalesce(col("desc"), lit(""))))
-      .withColumn("site_t", Text.tokens(coalesce(col("source.website"), lit(""))))
-    val fields = Seq(
-      "title" -> col("ttl_t"), "desc" -> col("desc_t"),
-      "lang" -> array(col("lang")), "site" -> col("site_t"))
-    val ranked = bm25Rank(prepared, fields, "link", terms, page, pageSize)
-    latest.join(broadcast(ranked), "link")
-      .select(col("rank"), col("score"), col("title"),
-        substring(coalesce(col("desc"), lit("")), 1, SnippetChars).as("snippet"),
-        col("link"), date_format(col("date"), "yyyy-MM-dd").as("date"),
-        col("lang"), col("source.crawler").as("crawler"))
-      .orderBy(col("rank").asc)
+    corpusOf(latest, "link", Seq(
+      "title" -> Text.tokens(col("title")),
+      "desc" -> Text.tokens(coalesce(col("desc"), lit(""))),
+      "lang" -> array(col("lang")),
+      "site" -> Text.tokens(coalesce(col("source.website"), lit("")))),
+      Seq(col("title"), col("desc"), col("date"), col("lang"),
+        col("source.crawler").as("crawler")), cache = false)
   }
 
   /** Snippet length for [[searchHits]] — the bounded preview a results
@@ -267,7 +380,7 @@ object TextAnalysis {
     * [[searchHits]] highlight window. */
   private val HighlightLead = 60
 
-  /** Ranked hits joined back to their source documents — the `_source`
+  /** Ranked hits with their source documents — the `_source`
     * payload half of the reference's search endpoint: ES returns the full
     * stored doc with every hit and the UI renders it directly (title,
     * desc, img, link, date — news_app/app/app/src/SearchUI.js:71-99).
@@ -276,18 +389,28 @@ object TextAnalysis {
     * wrapper closes that gap over the `documents` table: a synthesized
     * title (the leading [[Bm25TitleLen]] tokens — the same field the
     * best_fields ranker scores), a bounded [[SnippetChars]]-char snippet,
-    * and the doc metadata (lang, source, n_chars).
-    *
-    * Scale shape: the ranked side is ≤ page·pageSize rows by
-    * construction, so it BROADCASTS into the payload join — one extra
-    * narrow pass over `documents`, no new shuffle; the alternative
-    * (carrying text through the ranking window) would drag the full
-    * document payload through the top-k sort. */
+    * and the doc metadata (lang, source, n_chars). This form builds a
+    * [[documentsCorpus]] per call. */
   def searchHits(spark: SparkSession, dir: String, terms: Seq[String],
-      page: Int, pageSize: Int, ranker: String = "bm25"): DataFrame = {
+      page: Int, pageSize: Int, ranker: String = "bm25"): DataFrame =
+    searchHits(documentsCorpus(spark, dir, cache = false), terms, page, pageSize, ranker)
+
+  /** [[searchHits]] over a built [[documentsCorpus]].
+    *
+    * Pass structure: the `bm25` ranker gets its statistics in one small
+    * job (on the server's cached corpus, a term-dictionary lookup), then
+    * ONE ranking pass over `corpus.rows` scores every document and
+    * carries the payload — text, metadata and the text and title token
+    * arrays — through the bounded top-k, so only the ≤ page·pageSize
+    * kept rows compute their title, snippet and highlight, and no second
+    * read of `documents` joins the payload back. The `overlap` ranker
+    * scores the same rows, with no statistics job. */
+  def searchHits(corpus: SearchCorpus, terms: Seq[String],
+      page: Int, pageSize: Int, ranker: String): DataFrame = {
+    val carry = Seq("tok_text", "tok_title", "text", "lang", "source", "n_chars")
     val ranked = ranker match {
-      case "overlap" => search(spark, dir, terms, page, pageSize)
-      case _ => bm25Search(spark, dir, terms, page, pageSize)
+      case "overlap" => overlapRank(corpus.rows, terms, page, pageSize, carry)
+      case _ => bm25Rank(corpus, terms, page, pageSize, carry)
     }
     // Highlight metadata — the reference UI highlights the matched query
     // terms inside every hit (react-highlight-words over title/desc,
@@ -305,17 +428,16 @@ object TextAnalysis {
     // Per-term scalar columns, no lambdas: concat_ws and least skip the
     // nulls that stand for "absent".
     val matched = terms.map(tm =>
-      when(array_contains(Text.tokens(col("text")), tm), lit(tm)))
+      when(array_contains(corpus.tokens("text"), tm), lit(tm)))
     val positions = terms.map { tm =>
       val p = instr(lower(col("text")), tm)
       when(p > 0, p)
     }
     val firstPos = if (positions.size == 1) positions.head else least(positions: _*)
     val hlStart = greatest(lit(1), coalesce(firstPos, lit(1)) - HighlightLead)
-    Tables.load(spark, dir, "documents")
-      .join(broadcast(ranked), "doc_id")
+    ranked
       .select(col("doc_id"), col("score"), col("rank"),
-        concat_ws(" ", slice(Text.tokens(col("text")), 1, Bm25TitleLen)).as("title"),
+        concat_ws(" ", corpus.tokens("title")).as("title"),
         substring(col("text"), 1, SnippetChars).as("snippet"),
         concat_ws(",", matched: _*).as("matched_terms"),
         col("text").substr(hlStart, lit(SnippetChars)).as("highlight"),

@@ -35,30 +35,29 @@ class Bm25ScoreSpec extends SparkSpec {
 
   /** One document's reference values: each field's composed score over
     * independently folded flat stats, each field's kernel score over
-    * the production stats, and the composed document score rounded as
-    * the ranker rounds it. */
+    * the production stats (a corpus's literal stats), and the
+    * composed document score rounded as the ranker rounds it. */
   private case class Ref[K](key: K, composed: Seq[Option[Double]],
       kernel: Seq[Option[Double]], score: Option[Double])
 
   /** [[Ref]] for every row of `prepared`, in ONE pass: the flat stats
-    * (the pre-kernel layout) and the production stats fold into the
-    * same broadcast row. */
+    * (the pre-kernel layout) fold into a broadcast row, and `stats` are
+    * the production per-field stats, in `fields` order. */
   private def refRows[K](prepared: DataFrame, fields: Seq[(String, Column)],
-      key: String, terms: Seq[String]): Seq[Ref[K]] = {
+      key: String, terms: Seq[String], stats: Seq[Column]): Seq[Ref[K]] = {
     val flat = count(lit(1)).cast("double").as("n") +: fields.flatMap { case (f, tc) =>
       (sum(size(tc).cast("long")).cast("double") / count(lit(1))).as(s"avgdl_$f") +:
         terms.indices.map(i =>
           sum(array_contains(tc, terms(i)).cast("long")).cast("double").as(s"df_${f}_$i"))
     }
-    val prod = fields.map { case (f, tc) => Bm25Score.stats(tc, terms).as(s"prod_$f") }
     def st(name: String) = col("st").getField(name)
     val comp = fields.map { case (f, tc) =>
       composed(tc, st("n"), st(s"avgdl_$f"), terms.indices.map(i => st(s"df_${f}_$i")), terms)
     }
-    val kern = fields.map { case (f, tc) => Bm25Score.score(tc, st(s"prod_$f"), terms) }
+    val kern = fields.zip(stats).map { case ((_, tc), s) => Bm25Score.score(tc, s, terms) }
     val best = if (comp.size == 1) comp.head else greatest(comp: _*)
     val nf = fields.size
-    prepared.join(broadcast(prepared.select(struct(flat ++ prod: _*).as("st"))))
+    prepared.join(broadcast(prepared.select(struct(flat: _*).as("st"))))
       .select(col(key) +: round(best, 6) +: (comp ++ kern): _*)
       .collect().toSeq.map { r =>
         def d(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
@@ -183,42 +182,49 @@ class Bm25ScoreSpec extends SparkSpec {
     }
   }
 
-  /** Per draw: the production page equals the reference page, and
-    * every (row, field) kernel score equals the composed one (null
-    * matching null). Returns the kernel's non-null and null counts and
-    * whether the page ran whole-stage codegen. */
-  private def checkDraw[K: Ordering](interpreted: Boolean, label: String,
-      got: DataFrame, prepared: DataFrame, fields: Seq[(String, Column)],
-      key: String, terms: Seq[String], page: Int, pageSize: Int): (Int, Int, Boolean) = {
-    val ranked = got.select(key, "score", "rank")
-    val rows = ranked.collect()
-      .map(r => (r.getAs[K](0), r.getDouble(1), r.getLong(2))).toSet
-    val ref = refRows[K](prepared, fields, key, terms)
-    assert(rows === refPage(ref, page, pageSize), s"$label $terms page $page size $pageSize")
+  /** Per draw: every production page in `got` equals the reference
+    * page, and every (row, field) kernel score over `corpus`'s stats
+    * equals the composed one (null matching null). Returns the kernel's
+    * non-null and null counts and, per page, whether it ran whole-stage
+    * codegen. */
+  private def checkDraw[K: Ordering](label: String, got: Seq[DataFrame],
+      corpus: TextAnalysis.SearchCorpus, prepared: DataFrame, fields: Seq[(String, Column)],
+      key: String, terms: Seq[String], page: Int, pageSize: Int): (Int, Int, Seq[Boolean]) = {
+    val ref = refRows[K](prepared, fields, key, terms, corpus.stats(terms))
+    val codegen = got.map { g =>
+      val ranked = g.select(key, "score", "rank")
+      val rows = ranked.collect()
+        .map(r => (r.getAs[K](0), r.getDouble(1), r.getLong(2))).toSet
+      assert(rows === refPage(ref, page, pageSize), s"$label $terms page $page size $pageSize")
+      PlanWalk.nodes(ranked.queryExecution.executedPlan)
+        .exists(_.isInstanceOf[WholeStageCodegenExec])
+    }
     val bad = ref.filter(r => r.kernel != r.composed)
     assert(bad.isEmpty, s"$label $terms: ${bad.size} rows differ, e.g. ${bad.headOption}")
     val kernel = ref.flatMap(_.kernel)
-    (kernel.count(_.isDefined), kernel.count(_.isEmpty), PlanWalk.nodes(
-      ranked.queryExecution.executedPlan).exists(_.isInstanceOf[WholeStageCodegenExec]))
+    (kernel.count(_.isDefined), kernel.count(_.isEmpty), codegen)
   }
 
   private def checkDraws(interpreted: Boolean): Unit = onPath(interpreted) {
-    val counts = docDraws.map { case (terms, page, size) =>
-      checkDraw[Long](interpreted, "documents",
-        TextAnalysis.bm25Search(spark, docsDir, terms, page, size),
-        docsPrepared, docFields, "doc_id", terms, page, size)
-    }
+    // the per-call corpus (read from parquet) and the cached one Serve
+    // builds once must both rank as the reference does
+    val cached = TextAnalysis.documentsCorpus(spark, docsDir, cache = true)
+    val counts = try docDraws.map { case (terms, page, size) =>
+      checkDraw[Long]("documents", Seq(
+          TextAnalysis.bm25Search(spark, docsDir, terms, page, size),
+          TextAnalysis.bm25Search(cached, terms, page, size)),
+        cached, docsPrepared, docFields, "doc_id", terms, page, size)
+    } finally { cached.rows.unpersist(); cached.dict.unpersist() }
     // the null-text row scores null on text and title in every draw
     assert(counts.map(_._1).sum > 0 && counts.forall(_._2 >= 2))
-    val newsCodegen = newsDraws.map { case (terms, page, size) =>
-      checkDraw[String](interpreted, "news",
-        TextAnalysis.newsSearchHits(news, terms, page, size),
-        newsPrepared, newsFields, "link", terms, page, size)._3
+    val newsCodegen = newsDraws.flatMap { case (terms, page, size) =>
+      checkDraw[String]("news", Seq(TextAnalysis.newsSearchHits(news, terms, page, size)),
+        TextAnalysis.newsCorpus(news), newsPrepared, newsFields, "link", terms, page, size)._3
     }
     // the conf really selects the path (an empty news page may plan to
     // a bare LocalTableScan, which has no codegen either way)
-    if (interpreted) assert(!(counts.map(_._3) ++ newsCodegen).exists(identity))
-    else assert(counts.forall(_._3) && newsCodegen.exists(identity))
+    if (interpreted) assert(!(counts.flatMap(_._3) ++ newsCodegen).exists(identity))
+    else assert(counts.forall(_._3.forall(identity)) && newsCodegen.exists(identity))
   }
 
   test("draws cover duplicate, absent and field-value terms and the null-text row") {

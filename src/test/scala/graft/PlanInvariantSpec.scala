@@ -57,7 +57,13 @@ class PlanInvariantSpec extends SparkSpec {
       // dup-gram set's distinct now rides the (a,b) repartition its
       // groupBy reuses, so the gram stream shuffles once, not twice
       "llm_substr_dup" -> 2, "llm_clean_pipeline" -> 3,
-      "rel_table_profile" -> 3, "txt_search_hits" -> 2,
+      "rel_table_profile" -> 3,
+      // 0 since the search corpus (was 2): the BM25 statistics are
+      // computed while the entry is built and enter the plan as
+      // literals, and the payload rides through the top-k instead of a
+      // join; the one-file sf0.001 table is one partition, so the top-k
+      // merges in place
+      "txt_search_hits" -> 0,
       "txt_repetition" -> 2, "llm_export_jsonl" -> 0,
       "llm_export_sorted" -> 0, "llm_export_sized" -> 0,
       "llm_centroid_classify" -> 4, "rel_approx_distinct" -> 2,
@@ -113,10 +119,11 @@ class PlanInvariantSpec extends SparkSpec {
       // persisted block index (the simhash_neardup shape); live exchange
       // = the pair distinct
       "mm_phash_dedup" -> 1,
-      // both legs are bounded top-k (BM25 stat fold + rank limit = 2;
-      // dense brute pass + rank limit = 1); fusion joins two ≤10-row
-      // sides + the final ≤20-row rank window
-      "txt_hybrid_rrf" -> 4,
+      // both legs are bounded top-k; fusion joins two ≤10-row sides +
+      // the final ≤20-row rank window. 3 since the search corpus (was
+      // 4): the BM25 leg's statistics fold is gone, its stats are
+      // literals computed while the entry is built
+      "txt_hybrid_rrf" -> 3,
       // synthesis + canonicalization are map-only string expressions;
       // 2 = the two-phase hash-keyed group collapse (count_distinct)
       "llm_url_dedup" -> 2,
@@ -296,9 +303,11 @@ class PlanInvariantSpec extends SparkSpec {
     // plan change ever loses both, the query silently becomes a
     // full-corpus single-partition sort — fail here instead.
     // txt_search_bm25's `rank <= 10` filter rides the same rewrite over
-    // its un-partitioned scoring window — pin both search queries.
+    // its un-partitioned scoring window — pin every search query,
+    // txt_search_hits too: its payload rides through that top-k.
     Seq("txt_search_topk" -> 16, "txt_search_bm25" -> 10,
-        "txt_search_bm25_fields" -> 10, "txt_vocab_topk" -> 100).foreach {
+        "txt_search_bm25_fields" -> 10, "txt_search_hits" -> 10,
+        "txt_vocab_topk" -> 100).foreach {
       case (name, k) =>
         val df = SparkEntry.queries(name)(spark, sf0001)
         val plan = df.queryExecution.executedPlan
@@ -311,29 +320,28 @@ class PlanInvariantSpec extends SparkSpec {
     }
   }
 
-  test("searchHits joins the payload via broadcast, never shuffling documents") {
-    // The /search payload join must stay (documents ⋈ broadcast(top-k)):
-    // the ranked side is ≤ page·size rows by construction. If the
-    // broadcast is ever lost, the full documents table shuffles per
-    // search request — fail here instead.
+  test("searchHits carries the payload through the top-k, never shuffling documents") {
+    // The /search payload rides through the bounded ranking (≤ page·size
+    // rows leave it), so the plan joins nothing: documents are read
+    // once, and the BM25 statistics arrive as literals. If the payload
+    // were joined back unbroadcast, the full documents table would
+    // shuffle per search request — fail here instead.
     val df = graft.queries.TextAnalysis.searchHits(
       spark, sf0001, Seq("spark", "join"), page = 1, pageSize = 5)
     val plan = df.queryExecution.executedPlan
-    val bcastJoins = deepCollect(plan) {
-      case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => b
+    val joins = deepCollect(plan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     }
-    assert(bcastJoins.nonEmpty, s"payload join not broadcast:\n$plan")
-    // The only exchanges allowed are bounded ones: the SinglePartition
-    // fold of the one-row BM25 stats, and the range sort of the ≤ k
-    // result rows. A HASH-partition exchange means a corpus-sized
-    // shuffle crept in.
-    val hashShuffles = deepCollect(plan) {
+    assert(joins.isEmpty, s"searchHits joins:\n$plan")
+    // The only exchange allowed is the bounded one: the SinglePartition
+    // merge of the per-partition top-k. A HASH-partition exchange means
+    // a corpus-sized shuffle crept in.
+    val unbounded = deepCollect(plan) {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-          if e.outputPartitioning
-            .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning] => e
+          if e.outputPartitioning != org.apache.spark.sql.catalyst.plans.physical.SinglePartition => e
     }
-    assert(hashShuffles.isEmpty,
-      s"searchHits hash-shuffles (payload must ride the broadcast):\n$plan")
+    assert(unbounded.isEmpty,
+      s"searchHits shuffles more than the top-k merge (the payload must ride the rank):\n$plan")
   }
 
   test("BM25 searches score each document once: one native kernel per field, no ArrayFilter") {

@@ -9,6 +9,9 @@ import scala.io.Source
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{JobResult, JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Live-instance test of the [[Serve]] HTTP layer (EP3 equivalent): an
   * ephemeral-port server over sf0.001, driven with real HTTP requests.
@@ -211,12 +214,13 @@ class ServeSpec extends SparkSpec {
     assert(ok._1 === 200 && ok._2.contains("\"n\":"), ok._2.take(200))
   }
 
-  /** Requests `path` while a blocking job holds every core, so the
-    * request's jobs queue behind it. Returns the response, the status of
+  /** Requests `path` from `srv` while a blocking job holds every core, so
+    * the request's jobs queue behind it. Returns the response, the status of
     * a /tables request sent while the request waited, and the result
     * (None: no end seen) of each job a listener saw start under a
     * per-request job group. */
-  private def underBlocker(path: String): ((Int, String), Int, Seq[Option[JobResult]]) = {
+  private def underBlocker(path: String, srv: com.sun.net.httpserver.HttpServer = server)
+      : ((Int, String), Int, Seq[Option[JobResult]]) = {
     val sc = spark.sparkContext
     val groupJobs = new ConcurrentHashMap[Int, String]()
     val ends = new ConcurrentHashMap[Int, JobResult]()
@@ -240,9 +244,9 @@ class ServeSpec extends SparkSpec {
       val until = System.nanoTime() + 30000000000L
       while (running < cores && System.nanoTime() < until) Thread.sleep(20)
       assert(running === cores, "the blocker never held every core")
-      val request = Future(get(path))(ExecutionContext.global)
+      val request = Future(getFrom(srv, path))(ExecutionContext.global)
       Thread.sleep(200)
-      val tables = get("/tables")._1
+      val tables = getFrom(srv, "/tables")._1
       assert(!request.isCompleted, "the request did not wait behind the blocker")
       val response = Await.result(request, 90.seconds)
       val settle = System.nanoTime() + 10000000000L
@@ -591,6 +595,119 @@ class ServeSpec extends SparkSpec {
     val overlap = expected(graft.queries.TextAnalysis
       .search(spark, sf0001, Seq("spark", "join"), page = 1, pageSize = 5))
     assert(ranking(body2) === overlap && overlap.nonEmpty)
+  }
+
+  test("corpus-backed /search bodies equal a per-call searchHits, byte for byte") {
+    // the server ranks its cached corpus; searchHits(spark, dir, …)
+    // builds an uncached one from the parquet table per call
+    val doc = Tables.load(spark, sf0001, "documents").orderBy("doc_id").head()
+    val cap = (1 to 31).map(i => s"t$i") :+ "spark"
+    val shapes: Seq[(Seq[String], Int, Int)] =
+      // the search page's keystrokes: a word, then a prefix of another
+      Seq("spark wi", "merge tab", "column vec", "stream val", "small jo", "filter gro")
+        .map(q => (q.split(" ").toSeq, 1, 8)) ++ Seq(
+      (Seq("spark", "join"), 2, 5),
+      (Seq("join", "join"), 1, 10),
+      // a term that only the lang, the source or the n_chars field holds
+      (Seq(doc.getAs[String]("lang")), 1, 10),
+      (Seq(doc.getAs[String]("source")), 1, 10),
+      (Seq(doc.getAs[Long]("n_chars").toString), 1, 10),
+      (Seq("zzabsent"), 1, 10),
+      (Seq("spark", "zzabsent"), 1, 10),
+      (cap, 1, 10))
+    shapes.foreach { case (terms, page, size) =>
+      val (code, body) = get(s"/search?q=${terms.mkString("+")}&page=$page&size=$size")
+      assert(code === 200, body.take(300))
+      val want = Serve.render(
+        graft.queries.TextAnalysis.searchHits(spark, sf0001, terms, page, size), size)
+      assert(body === want, s"$terms page $page size $size")
+    }
+    // every term matches somewhere except the absent one, which matches
+    // nothing — and, with df 0 rather than a null stat, leaves the
+    // present term's ranking intact
+    assert(get("/search?q=zzabsent")._2.contains("\"n\":0"))
+    assert(get("/search?q=spark+zzabsent&size=3")._2.contains("\"n\":3"))
+    Seq(doc.getAs[String]("lang"), doc.getAs[String]("source"),
+        doc.getAs[Long]("n_chars").toString).foreach { t =>
+      assert(!get(s"/search?q=$t&size=3")._2.contains("\"n\":0"), t)
+    }
+  }
+
+  /** Runs one warm documents `/search` and returns the number of Spark
+    * jobs it ran and the executed plans of its queries. */
+  private def warmSearch(path: String): (Int, Seq[SparkPlan]) = {
+    assert(get(path)._1 === 200) // warm: the corpus is built and cached
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    val queries = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(queries)
+    try {
+      assert(get(path)._1 === 200)
+      // listener events arrive in order: once this marker job is seen,
+      // every job and query of the request has been too
+      sc.setJobGroup("spec-marker", "listener barrier")
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+      val until = System.nanoTime() + 10000000000L
+      while (!jobs.contains("spec-marker") && System.nanoTime() < until) Thread.sleep(20)
+      assert(jobs.contains("spec-marker"), "the listener never saw the marker job")
+      (jobs.asScala.count(_.startsWith("serve-")), plans.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.listenerManager.unregister(queries)
+    }
+  }
+
+  test("a warm documents /search runs at most 2 Spark jobs") {
+    // one dictionary lookup, one ranking pass over the cached corpus
+    // (it was 4 over parquet: a statistics fold, the scoring scan and
+    // two payload-join jobs)
+    val (jobs, _) = warmSearch("/search?q=spark+jo&size=8")
+    info(s"$jobs jobs")
+    assert(jobs >= 1 && jobs <= 2, s"a warm /search ran $jobs jobs")
+  }
+
+  test("a warm documents /search plan ranks the cached corpus, not parquet") {
+    val (_, plans) = warmSearch("/search?q=merge+tab&size=8")
+    val ranked = plans.map(graft.plans.PlanWalk.nodes(_)).filter(_.exists(
+      _.expressions.exists(_.exists(_.isInstanceOf[graft.functions.Bm25Score]))))
+    assert(ranked.size === 1, s"${ranked.size} ranking plans in one request")
+    val nodes = ranked.head
+    val exprs = nodes.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), nodes.head.toString)
+    assert(!nodes.exists(_.isInstanceOf[FileSourceScanExec]),
+      s"a warm /search reads parquet:\n${nodes.head}")
+    assert(!exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.RegExpReplace]),
+      s"a warm /search tokenizes again:\n${nodes.head}")
+    assert(exprs.count(_.isInstanceOf[graft.functions.Bm25Score]) === 5, nodes.head.toString)
+  }
+
+  test("a /search cut off during the first corpus build leaves the next one correct") {
+    val srv = Serve.start(spark, sf0001, port = 0)
+    try {
+      // drop every cached corpus, so this server's first request builds
+      // from parquet (a warm one would find its rows already cached)
+      spark.catalog.clearCache()
+      val path = "/search?q=spark+join&size=5"
+      val ((code, body), _, results) = underBlocker(s"$path&timeout=1", srv)
+      assert(code === 408, s"expected 408, got $code: ${body.take(300)}")
+      assert(results.nonEmpty && results.forall(r => r.isDefined && !r.contains(JobSucceeded)),
+        results.toString)
+      val (ok, hits) = getFrom(srv, path)
+      assert(ok === 200)
+      assert(hits === Serve.render(graft.queries.TextAnalysis.searchHits(
+        spark, sf0001, Seq("spark", "join"), 1, 5), 5))
+      assert(getFrom(srv, "/suggest?q=s&limit=5") === get("/suggest?q=s&limit=5"))
+    } finally srv.stop(0)
   }
 
   test("/ann serves exact top-k neighbors matching annSearch; bad id 400s") {

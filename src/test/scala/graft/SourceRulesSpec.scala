@@ -36,6 +36,17 @@ class SourceRulesSpec extends AnyFunSuite {
     }
   }
 
+  /** The line numbers of the block opened by the first line of `file`
+    * containing `opening`, through the closing brace at that line's
+    * indent. */
+  private def block(file: String, opening: String): Option[Range] = {
+    val src = lines.filter(_._1 == file)
+    src.find(_._3.contains(opening)).map { case (_, start, text) =>
+      val close = text.takeWhile(_ == ' ') + "}"
+      start to src.find { case (_, n, l) => n > start && l == close }.fold(start)(_._2)
+    }
+  }
+
   private def rule(name: String, fix: String)(hits: => Seq[String]): Unit =
     test(name) {
       assert(lines.nonEmpty, s"no Scala sources under $root")
@@ -78,13 +89,24 @@ class SourceRulesSpec extends AnyFunSuite {
   // its own deadline rules, that Serve's watchdog does not know about.
   rule("one request lifecycle: job groups only in Serve.handle",
       "run request work inside Serve.handle, which owns the job group and its cancellation") {
-    val serve = lines.filter(_._1 == "graft/Serve.scala")
-    val handle = serve.find(_._3.contains("def handle(")).map { case (_, start, text) =>
-      val close = text.takeWhile(_ == ' ') + "}"
-      start to serve.find { case (_, n, l) => n > start && l == close }.fold(start)(_._2)
-    }
+    val handle = block("graft/Serve.scala", "def handle(")
     assert(handle.isDefined, "no `def handle(` in graft/Serve.scala")
     offending("(set|clear|cancel)JobGroup")((f, n) =>
       f == "graft/Serve.scala" && handle.exists(_.contains(n)))
+  }
+
+  // A second documents load in Serve is a handler re-reading and
+  // re-tokenizing the whole corpus on every request.
+  rule("one documents corpus: Serve loads documents only in its corpus memo",
+      "read documents through Serve's docsCorpus, which builds the corpus once per server") {
+    val loads = "\"documents\"|documents\\.parquet|documentsCorpus\\(|" +
+      "(TextAnalysis|TextIndex)\\.\\w+\\(spark, dir"
+    val memo = block("graft/Serve.scala", "def docsCorpus")
+    assert(memo.isDefined, "no `def docsCorpus` in graft/Serve.scala")
+    val inMemo = lines.filter { case (f, n, _) =>
+      f == "graft/Serve.scala" && memo.exists(_.contains(n)) }
+    assert(inMemo.count(l => loads.r.findFirstIn(l._3).isDefined) === 1,
+      "docsCorpus must load documents exactly once")
+    offending(loads, "graft/Serve.scala")((_, n) => memo.exists(_.contains(n)))
   }
 }
