@@ -41,10 +41,12 @@ import org.apache.spark.sql.graft.PlanShim
   *     32 terms: a longer `q` is a shaped 400, as a `/suggest` prefix
   *     over 64 chars is. The documents corpus (token arrays and term
   *     dictionary, [[graft.queries.TextAnalysis.SearchCorpus]]) is built
-  *     once per server and cached, so a request is one dictionary lookup
-  *     and one ranking pass over cached rows; a stray `clearCache` only
-  *     makes the next request rebuild it. `/suggest` completes from the
-  *     same dictionary's `text` vocabulary
+  *     once per server: the rows are cached and the term dictionary is
+  *     held on the driver, so a request looks its statistics up with no
+  *     Spark job and runs one ranking pass over cached rows; a stray
+  *     `clearCache` only makes the next request rebuild it. `/suggest`
+  *     completes from the same dictionary's `text` vocabulary on the
+  *     driver, with no Spark job
   *   - `GET /ann?id=<vec_id>&k=N`          exact cosine top-k neighbors
   *     of an embedding ([[graft.queries.VectorSearch.annSearch]]) — the
   *     interactive face of the similarity-search family
@@ -147,6 +149,12 @@ object Serve {
   private def renderRows(columns: Seq[String], rows: Array[String]): String =
     Json.write(Json.obj("columns" -> columns, "n" -> rows.length,
       "rows" -> rows.map(Json.Raw)))
+
+  /** `render(TextIndex.suggestFrom(v.toDF(spark), prefix, limit), limit)`,
+    * byte for byte, from the driver vocabulary: no Spark job. */
+  def renderSuggest(v: graft.queries.TextIndex.Vocabulary, prefix: String, limit: Int): String =
+    renderRows(Seq("w", "df"), v.suggest(prefix, math.min(limit, MaxLimit))
+      .map { case (w, df) => Json.write(Json.obj("w" -> w, "df" -> df)) }.toArray)
 
   /** True when `t` is how a cancelled Spark job surfaces. The shape is
     * version-dependent: a SparkException mentioning "cancelled", or
@@ -746,12 +754,17 @@ object Serve {
       * is the vocabulary that index actually tokenizes — correcting a
       * news query against the documents vocabulary would "fix" typos
       * toward the wrong corpus. Each is the shaped 400 while its lake
-      * view has not landed, and each is resolved only when read. */
+      * view has not landed, and each is resolved only when read.
+      * `terms` is the same vocabulary held on the driver, where the
+      * index keeps one (documents): completion and membership then run
+      * no Spark job. */
     final class SearchIndex(
         hitsOf: => Either[(Int, String), (Seq[String], Int, Int, String) => DataFrame],
-        vocabOf: => Either[(Int, String), DataFrame]) {
+        vocabOf: => Either[(Int, String), DataFrame],
+        termsOf: => Option[graft.queries.TextIndex.Vocabulary]) {
       lazy val hits = hitsOf
       lazy val vocab = vocabOf
+      lazy val terms = termsOf
     }
     def lakeView(name: String, missing: String): Either[(Int, String), DataFrame] =
       if (spark.catalog.tableExists(name)) Right(spark.table(name))
@@ -760,7 +773,7 @@ object Serve {
       p.get("index") match {
         case None => Right(new SearchIndex(
           Right(graft.queries.TextAnalysis.searchHits(docsCorpus, _, _, _, _)),
-          Right(docsCorpus.vocab("text"))))
+          Right(docsCorpus.vocab("text")), Some(docsCorpus.vocabulary("text"))))
         // the reference UI's actual target: the crawled news store
         // (SearchUI.js:6 queries the news_* index pattern), served from
         // the lake's deduped `news` view. Its vocabulary is ONLY the
@@ -771,7 +784,8 @@ object Serve {
           lakeView("news", "no news lake registered (start with --lake)").map(news =>
             (terms, page, size, _) =>
               graft.queries.TextAnalysis.newsSearchHits(news, terms, page, size)),
-          lakeView("vocab", "no vocab index registered (run the vocab_index flow with --lake)")))
+          lakeView("vocab", "no vocab index registered (run the vocab_index flow with --lake)"),
+          None))
         case Some(other) =>
           Left(fail(400, s"unknown index ${other.take(40)} (use news, or omit for documents)"))
       }
@@ -783,12 +797,16 @@ object Serve {
     // user meant. On-vocabulary terms are never rewritten (exact
     // matches must win), and an uncorrectable term passes through to
     // rank as itself (zero hits, same as unexpanded).
-    def fuzzyExpand(terms: Seq[String], vocab: DataFrame): Seq[String] = {
-      // Two Spark jobs total regardless of term count: one vocabulary
-      // membership probe, one multi-query deletion join for the
+    def fuzzyExpand(terms: Seq[String], index: SearchIndex, vocab: DataFrame): Seq[String] = {
+      // At most two Spark jobs regardless of term count: one vocabulary
+      // membership probe (none where the index keeps its vocabulary on
+      // the driver), one multi-query deletion join for the
       // off-vocabulary remainder.
-      val present = vocab.filter(col("w").isin(terms.distinct: _*))
-        .select(col("w")).collect().map(_.getString(0)).toSet
+      val present = index.terms match {
+        case Some(v) => terms.filter(v.contains).toSet
+        case None => vocab.filter(col("w").isin(terms.distinct: _*))
+          .select(col("w")).collect().map(_.getString(0)).toSet
+      }
       val missing = terms.distinct.filterNot(present)
       if (missing.isEmpty) terms
       else {
@@ -810,11 +828,11 @@ object Serve {
       // is missing — the dispatch below answers its own shaped 400 for
       // a missing corpus, and an unexpanded search is the graceful
       // degradation for a missing vocab view
-      val vocab =
+      val terms =
         if (p.get("fuzzy").contains("1") && rawTerms.nonEmpty && rawTerms.size <= 8)
-          index.flatMap(_.vocab).toOption
-        else None
-      val terms = vocab.fold(rawTerms)(fuzzyExpand(rawTerms, _))
+          index.toOption.flatMap(ix => ix.vocab.toOption.map(fuzzyExpand(rawTerms, ix, _)))
+            .getOrElse(rawTerms)
+        else rawTerms
       if (terms.isEmpty) fail(400, "missing q parameter")
       else if (terms.size > MaxSearchTerms)
         fail(400, s"q must have <= $MaxSearchTerms terms (got ${terms.size})")
@@ -900,23 +918,27 @@ object Serve {
     server.createContext("/suggest", (ex: HttpExchange) => handle(ex) { p =>
       // The search box's two assistive shapes (the reference UI's
       // Searchkit input, SearchUI.js:6-33): prefix completion over the
-      // corpus vocabulary, plus optional fuzziness for off-vocabulary
-      // input. Both take user text only as literal Column values —
-      // nothing is spliced into SQL or LIKE patterns.
+      // corpus vocabulary (a driver lookup where the index keeps its
+      // vocabulary on the driver), plus optional fuzziness for
+      // off-vocabulary input. Both take user text only as literal
+      // values — nothing is spliced into SQL or LIKE patterns.
       p.get("q").map(_.trim.toLowerCase).filter(_.nonEmpty) match {
         case None => fail(400, "missing q parameter")
         case Some(q) if q.length > 64 => fail(400, "q must be <= 64 chars")
         case Some(q) =>
           val limit = clamp(intParam(p, "limit", 8), 100)
-          searchIndex(p).flatMap(_.vocab) match {
-            case Left(err) => err
-            case Right(v) =>
-              val completions = Json.obj("completions" -> Json.Raw(render(
-                graft.queries.TextIndex.suggestFrom(v, q, limit), limit)))
-              (200, Json.write(if (!p.get("fuzzy").contains("1")) completions
-                else completions + ("corrections" -> Json.Raw(render(
-                  graft.queries.TextIndex.fuzzyFrom(v, q), limit)))))
-          }
+          (for {
+            ix <- searchIndex(p)
+            completions <- ix.terms match {
+              case Some(v) => Right(renderSuggest(v, q, limit))
+              case None => ix.vocab.map(v =>
+                render(graft.queries.TextIndex.suggestFrom(v, q, limit), limit))
+            }
+            body = Json.obj("completions" -> Json.Raw(completions))
+            full <- if (!p.get("fuzzy").contains("1")) Right(body)
+              else ix.vocab.map(v => body + ("corrections" -> Json.Raw(render(
+                graft.queries.TextIndex.fuzzyFrom(v, q), limit))))
+          } yield (200, Json.write(full))).merge
       }
     })
 

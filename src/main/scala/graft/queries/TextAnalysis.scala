@@ -199,19 +199,21 @@ object TextAnalysis {
 
   /** What BM25 ranks, tokenized once ([[corpusOf]] builds it): `rows`
     * holds the key `key`, each field's token array (column `tok_<field>`)
-    * and the payload columns, and `dict` is the `(field, w, df)` term
-    * dictionary: df is the number of documents whose field holds `w`.
+    * and the payload columns, and the `(field, w, df)` term dictionary
+    * counts, per field, the documents whose field holds `w`.
     *
     * A cached corpus persists `rows` (spread over the default
-    * parallelism) and `dict` MEMORY_AND_DISK, and folds n and each
-    * field's Σdl (total tokens) when it is built, keeping them as plain
-    * numbers; a query then only looks its own terms up in `dict` — the
-    * ES shape, where the term dictionary is written at index time. An
-    * uncached corpus (the catalog's per-call form, which memoizes
-    * nothing across runs) folds n, Σdl and the query's df in one job
-    * instead: on an uncached corpus a dictionary lookup would explode
-    * and shuffle every token of every document per query. Either way a
-    * query's statistics cost ONE small job ([[stats]]). */
+    * parallelism) MEMORY_AND_DISK and, as it is built, folds n and each
+    * field's Σdl (total tokens) and collects the dictionary to the
+    * driver: one [[TextIndex.Vocabulary]] per field, one entry per
+    * (field, distinct term) — 609 entries over the sf0.1 `documents`
+    * table, 523 of them `n_chars` values; the dictionary an ES node
+    * keeps in memory beside its postings. A query's statistics are then a driver lookup
+    * with no Spark job, and [[vocabulary]] completes a prefix without
+    * one either. An uncached corpus (the catalog's per-call form, which
+    * memoizes nothing across runs) folds n, Σdl and the query's df in
+    * ONE job instead: on an uncached corpus a dictionary lookup would
+    * explode and shuffle every token of every document per query. */
   final class SearchCorpus private[TextAnalysis] (projected: DataFrame, val key: String,
       val fields: Seq[String], cache: Boolean) {
 
@@ -223,15 +225,12 @@ object TextAnalysis {
     /** Field `f`'s token-array column in `rows`. */
     def tokens(f: String): Column = col(s"tok_$f")
 
-    val dict: DataFrame = {
+    private def dict: DataFrame = rows
       // one (field, distinct token) row per document and field
-      val d = rows
-        .select(explode(array(fields.map(f =>
-          struct(lit(f).as("field"), array_distinct(tokens(f)).as("ws"))): _*)).as("fw"))
-        .select(col("fw.field").as("field"), explode(col("fw.ws")).as("w"))
-        .groupBy(col("field"), col("w")).agg(count(lit(1)).as("df"))
-      if (cache) d.persist(StorageLevel.MEMORY_AND_DISK) else d
-    }
+      .select(explode(array(fields.map(f =>
+        struct(lit(f).as("field"), array_distinct(tokens(f)).as("ws"))): _*)).as("fw"))
+      .select(col("fw.field").as("field"), explode(col("fw.ws")).as("w"))
+      .groupBy(col("field"), col("w")).agg(count(lit(1)).as("df"))
 
     /** ONE job over `rows`: n, each field's Σdl (None when no document
       * has the field), and the number of documents whose field holds
@@ -245,13 +244,15 @@ object TextAnalysis {
         keys.zipWithIndex.map { case (ft, i) => ft -> r.getLong(1 + k + i) }.toMap)
     }
 
-    /** A cached corpus's n and Σdl, folded as it is built — which
-      * materializes `rows` — with `dict` materialized beside them. */
-    private val sizes: Option[(Long, Seq[Option[Long]])] = Option.when(cache) {
-      val (n, sumDl, _) = fold(Nil)
-      dict.count(): Unit
-      (n, sumDl)
-    }
+    /** A cached corpus's n, Σdl and per-field dictionary, built with it:
+      * the fold materializes `rows`, then the dictionary is collected
+      * from the cached rows. */
+    private val local: Option[(Long, Seq[Option[Long]], Map[String, TextIndex.Vocabulary])] =
+      Option.when(cache) {
+        val (n, sumDl, _) = fold(Nil)
+        val byField = dict.collect().toSeq.groupMap(_.getString(0))(r => r.getString(1) -> r.getLong(2))
+        (n, sumDl, fields.map(f => f -> new TextIndex.Vocabulary(byField.getOrElse(f, Nil))).toMap)
+      }
 
     /** Each field's BM25 statistics for `terms`, in [[fields]] order, as
       * the literal `struct(n, avgdl, df[])` [[graft.functions.Bm25Score]]
@@ -260,10 +261,9 @@ object TextAnalysis {
       * every document. avgdl is Σdl / n, the division the folded form in
       * the plan made (null when no document has the field). */
     def stats(terms: Seq[String]): Seq[Column] = {
-      val (n, sumDl, df) = sizes match {
-        case Some((n, sumDl)) => (n, sumDl,
-          dict.filter(col("w").isin(terms.distinct: _*)).collect()
-            .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
+      val (n, sumDl, df) = local match {
+        case Some((n, sumDl, vocab)) => (n, sumDl,
+          (for (f <- fields; t <- terms.distinct; d <- vocab(f).df(t)) yield (f, t) -> d).toMap)
         case None => fold(terms.distinct)
       }
       fields.zip(sumDl).map { case (f, dl) =>
@@ -273,14 +273,21 @@ object TextAnalysis {
       }
     }
 
-    /** Field `f`'s slice of `dict`: its `(w, df)` vocabulary. */
-    def vocab(f: String): DataFrame =
-      dict.filter(col("field") === f).select(col("w"), col("df"))
+    /** Field `f`'s driver vocabulary; a cached corpus only. */
+    def vocabulary(f: String): TextIndex.Vocabulary = local match {
+      case Some((_, _, vocab)) => vocab(f)
+      case None => throw new IllegalStateException("an uncached corpus keeps no driver vocabulary")
+    }
 
-    /** True while a cached corpus's `rows` and `dict` both sit in the
-      * cache: one that a `clearCache` dropped must be built again. */
-    def cached: Boolean =
-      rows.storageLevel != StorageLevel.NONE && dict.storageLevel != StorageLevel.NONE
+    /** Field `f`'s `(w, df)` vocabulary as a frame: on a cached corpus a
+      * local relation of [[vocabulary]]. */
+    def vocab(f: String): DataFrame =
+      if (cache) vocabulary(f).toDF(rows.sparkSession)
+      else dict.filter(col("field") === f).select(col("w"), col("df"))
+
+    /** True while a cached corpus's `rows` sit in the cache: one that a
+      * `clearCache` dropped must be built again. */
+    def cached: Boolean = rows.storageLevel != StorageLevel.NONE
   }
 
   /** A [[SearchCorpus]] over `docs`: `fields` are (name, token-array
@@ -314,8 +321,8 @@ object TextAnalysis {
     * rank). `corpus.key` is the unique ascending tiebreaker.
     *
     * Pass structure: [[SearchCorpus.stats]] gets the terms' statistics
-    * in one small job (a term-dictionary lookup on a cached corpus, a
-    * fold on an uncached one) and hands every field's statistics to the
+    * (a driver dictionary lookup on a cached corpus, one small fold job
+    * on an uncached one) and hands every field's statistics to the
     * plan as literals, so the plan has no statistics fold and no join.
     * The ranking is then ONE narrow pass: one native
     * [[graft.functions.Bm25Score]] call per (document, field) — O(fields)
@@ -398,7 +405,7 @@ object TextAnalysis {
   /** [[searchHits]] over a built [[documentsCorpus]].
     *
     * Pass structure: the `bm25` ranker gets its statistics in one small
-    * job (on the server's cached corpus, a term-dictionary lookup), then
+    * job (none on the server's cached corpus: a driver lookup), then
     * ONE ranking pass over `corpus.rows` scores every document and
     * carries the payload — text, metadata and the text and title token
     * arrays — through the bounded top-k, so only the ≤ page·pageSize

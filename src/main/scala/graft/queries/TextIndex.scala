@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 
@@ -328,6 +329,53 @@ object TextIndex {
       .filter(col("w").startsWith(prefix))
       .orderBy(col("df").desc, col("w").asc)
       .limit(limit)
+
+  /** A `(w, df)` vocabulary held on the driver — one entry per distinct
+    * term, the in-memory term dictionary an ES node keeps per index.
+    * Terms are sorted in Spark's string order (UTF-8 bytes, as
+    * [[UTF8String]] compares them; `String.compareTo` orders UTF-16 code
+    * units, which puts a supplementary character below U+E000), so the
+    * terms with a given prefix are one contiguous run. [[df]] and
+    * [[suggest]] answer with no Spark job. */
+  final class Vocabulary(entries: Seq[(String, Long)]) {
+    private val sorted: Array[(UTF8String, Long)] = entries
+      .map { case (w, df) => (UTF8String.fromString(w), df) }.toArray
+      .sortWith((a, b) => a._1.compareTo(b._1) < 0)
+
+    /** The index of the first term >= `u`. */
+    private def lowerBound(u: UTF8String): Int = {
+      var (lo, hi) = (0, sorted.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (sorted(mid)._1.compareTo(u) < 0) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
+    /** The number of documents holding `w`, if any does. */
+    def df(w: String): Option[Long] = {
+      val u = UTF8String.fromString(w)
+      val i = lowerBound(u)
+      Option.when(i < sorted.length && sorted(i)._1 == u)(sorted(i)._2)
+    }
+
+    def contains(w: String): Boolean = df(w).isDefined
+
+    /** [[suggestFrom]]'s rows over this vocabulary, in its order: the
+      * run of terms starting with `prefix`, stably sorted by df desc so
+      * ties stay in `w` order. */
+    def suggest(prefix: String, limit: Int): Seq[(String, Long)] = {
+      val p = UTF8String.fromString(prefix)
+      sorted.iterator.drop(lowerBound(p)).takeWhile(_._1.startsWith(p)).toSeq
+        .sortBy(-_._2).take(limit).map { case (w, df) => (w.toString, df) }
+    }
+
+    /** This vocabulary as a `(w, df)` local relation. */
+    def toDF(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      sorted.toSeq.map { case (w, df) => (w.toString, df) }.toDF("w", "df")
+    }
+  }
 
   val autocompleteSql: String =
     s"""WITH n AS (SELECT doc_id,

@@ -214,7 +214,7 @@ class Bm25ScoreSpec extends SparkSpec {
           TextAnalysis.bm25Search(spark, docsDir, terms, page, size),
           TextAnalysis.bm25Search(cached, terms, page, size)),
         cached, docsPrepared, docFields, "doc_id", terms, page, size)
-    } finally { cached.rows.unpersist(); cached.dict.unpersist() }
+    } finally cached.rows.unpersist()
     // the null-text row scores null on text and title in every draw
     assert(counts.map(_._1).sum > 0 && counts.forall(_._2 >= 2))
     val newsCodegen = newsDraws.flatMap { case (terms, page, size) =>

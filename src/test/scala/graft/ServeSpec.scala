@@ -633,9 +633,9 @@ class ServeSpec extends SparkSpec {
     }
   }
 
-  /** Runs one warm documents `/search` and returns the number of Spark
+  /** Runs one warm request for `path` and returns the number of Spark
     * jobs it ran and the executed plans of its queries. */
-  private def warmSearch(path: String): (Int, Seq[SparkPlan]) = {
+  private def warm(path: String): (Int, Seq[SparkPlan]) = {
     assert(get(path)._1 === 200) // warm: the corpus is built and cached
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -667,17 +667,21 @@ class ServeSpec extends SparkSpec {
     }
   }
 
-  test("a warm documents /search runs at most 2 Spark jobs") {
-    // one dictionary lookup, one ranking pass over the cached corpus
-    // (it was 4 over parquet: a statistics fold, the scoring scan and
-    // two payload-join jobs)
-    val (jobs, _) = warmSearch("/search?q=spark+jo&size=8")
-    info(s"$jobs jobs")
-    assert(jobs >= 1 && jobs <= 2, s"a warm /search ran $jobs jobs")
+  test("a warm documents /search runs exactly 1 Spark job") {
+    // the ranking pass over the cached corpus; the statistics are a
+    // driver dictionary lookup
+    val (jobs, _) = warm("/search?q=spark+jo&size=8")
+    assert(jobs === 1, s"a warm /search ran $jobs jobs")
+  }
+
+  test("a warm documents /suggest runs 0 Spark jobs") {
+    // completion is a prefix lookup in the driver dictionary
+    val (jobs, _) = warm("/suggest?q=s&limit=8")
+    assert(jobs === 0, s"a warm /suggest ran $jobs jobs")
   }
 
   test("a warm documents /search plan ranks the cached corpus, not parquet") {
-    val (_, plans) = warmSearch("/search?q=merge+tab&size=8")
+    val (_, plans) = warm("/search?q=merge+tab&size=8")
     val ranked = plans.map(graft.plans.PlanWalk.nodes(_)).filter(_.exists(
       _.expressions.exists(_.exists(_.isInstanceOf[graft.functions.Bm25Score]))))
     assert(ranked.size === 1, s"${ranked.size} ranking plans in one request")

@@ -144,16 +144,21 @@ class TextVectorSpec extends SparkSpec {
   test("the documents corpus dictionary's text slice is the vocabOf fold") {
     // /suggest and /search?fuzzy=1 read this slice as their (w, df)
     // vocabulary: with doc_id unique, counting each document's distinct
-    // tokens per term is vocabOf's grouped (doc_id, w) distinct
+    // tokens per term is vocabOf's grouped (doc_id, w) distinct. The
+    // per-call corpus folds it in Spark; the cached one Serve builds
+    // serves it from its driver dictionary.
     val docs = Tables.load(spark, sf0001, "documents")
     assert(docs.select("doc_id").distinct().count() === docs.count())
     val fold = graft.queries.TextIndex.vocabOf(docs, "text", "doc_id")
-    val slice = TextAnalysis.documentsCorpus(spark, sf0001, cache = false).vocab("text")
     def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
       df.collect().map(r => r.getAs[String]("w") -> r.getAs[Long]("df")).toSet
-    assert(rows(fold).nonEmpty && rows(slice) === rows(fold))
     def columns(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
-    assert(columns(slice) === columns(fold))
+    val cached = TextAnalysis.documentsCorpus(spark, sf0001, cache = true)
+    try Seq(TextAnalysis.documentsCorpus(spark, sf0001, cache = false), cached).foreach { c =>
+      val slice = c.vocab("text")
+      assert(rows(fold).nonEmpty && rows(slice) === rows(fold))
+      assert(columns(slice) === columns(fold))
+    } finally cached.rows.unpersist()
   }
 
   test("bm25Search pagination: two size-5 pages equal one size-10 page") {
