@@ -16,6 +16,8 @@ import org.apache.spark.sql.catalyst.expressions.{CallMethodViaReflection, PlanE
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoDir, InsertIntoStatement, LogicalPlan, ScriptTransformation, UnresolvedWith}
 import org.apache.spark.sql.graft.PlanShim
 
+import graft.queries.TextIndex.Vocabulary
+
 /** Thin interactive serving layer — the Spark-side stand-in for the
   * reference's Kibana dashboards + React search app (news_app/app/app/
   * src/SearchUI.js:6-33 issues ES best-fields queries with pagination;
@@ -44,9 +46,10 @@ import org.apache.spark.sql.graft.PlanShim
   *     once per server: the rows are cached and the term dictionary is
   *     held on the driver, so a request looks its statistics up with no
   *     Spark job and runs one ranking pass over cached rows; a stray
-  *     `clearCache` only makes the next request rebuild it. `/suggest`
-  *     completes from the same dictionary's `text` vocabulary on the
-  *     driver, with no Spark job
+  *     `clearCache` only makes the next request rebuild it
+  *   - `GET /suggest?q=<prefix>` completes from a term dictionary held
+  *     on the driver, with no Spark job: the documents `text` vocabulary,
+  *     or for `index=news` the lake's `vocab` view, collected per version
   *   - `GET /ann?id=<vec_id>&k=N`          exact cosine top-k neighbors
   *     of an embedding ([[graft.queries.VectorSearch.annSearch]]) — the
   *     interactive face of the similarity-search family
@@ -150,9 +153,9 @@ object Serve {
     Json.write(Json.obj("columns" -> columns, "n" -> rows.length,
       "rows" -> rows.map(Json.Raw)))
 
-  /** `render(TextIndex.suggestFrom(v.toDF(spark), prefix, limit), limit)`,
-    * byte for byte, from the driver vocabulary: no Spark job. */
-  def renderSuggest(v: graft.queries.TextIndex.Vocabulary, prefix: String, limit: Int): String =
+  /** The `/suggest` completions of `prefix` from a driver vocabulary, no
+    * Spark job: byte for byte [[render]] of the catalog's completion. */
+  def renderSuggest(v: Vocabulary, prefix: String, limit: Int): String =
     renderRows(Seq("w", "df"), v.suggest(prefix, math.min(limit, MaxLimit))
       .map { case (w, df) => Json.write(Json.obj("w" -> w, "df" -> df)) }.toArray)
 
@@ -453,7 +456,7 @@ object Serve {
       |    const sr = await fetch("/suggest?" + sp, {headers: headers()});
       |    if (sr.ok && mine === seq) {
       |      const sj = await sr.json();
-      |      const opts = (sj.rows || []).map(x => x.term).filter(Boolean).slice(0, 5);
+      |      const opts = ((sj.completions || {}).rows || []).map(x => x.w).filter(Boolean).slice(0, 5);
       |      if (opts.length) $("sug").textContent = "suggestions: " + opts.join(", ");
       |    }
       |  } catch (e) { if (mine === seq) $("meta").textContent = String(e); }
@@ -507,6 +510,10 @@ object Serve {
     val addr =
       if (bindAll) new InetSocketAddress(port)
       else new InetSocketAddress(InetAddress.getLoopbackAddress, port)
+    // Nagle's algorithm holds each body `reply` writes after the flushed
+    // headers for the client's delayed ACK (~40 ms); the JDK reads this
+    // once, in ServerConfig's static initializer, before the first server.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = tls match {
       case Some(t) =>
         val s = HttpsServer.create(addr, 0)
@@ -567,7 +574,9 @@ object Serve {
     // and a fixed 512-sample latency ring per endpoint, all lock-free
     // atomics, so the serving hot path pays two increments and a slot
     // write. The reference gets its serving observability from Kibana
-    // monitoring; here it's a JSON endpoint on the server itself.
+    // monitoring; here it's a JSON endpoint on the server itself. Each
+    // request counts, under its code, before its reply is written: the
+    // body write is outside its latency, and a failed write still counts.
     val startedAtNanos = System.nanoTime()
     final class EpStats {
       val n = new java.util.concurrent.atomic.AtomicLong
@@ -608,10 +617,6 @@ object Serve {
     def handle(ex: HttpExchange)(f: Map[String, String] => (Int, String)): Unit = {
       val t0 = System.nanoTime()
       val path = ex.getRequestURI.getPath
-      def done(r: (Int, String)): Unit = {
-        reply(ex, r._1, r._2)
-        statsFor(path).record(r._1, (System.nanoTime() - t0) / 1000000L)
-      }
       def deadlined(p: Map[String, String]): (Int, String) = {
         val timeoutSec = clamp(intParam(p, "timeout", 60), 600)
         val sc = spark.sparkContext
@@ -638,9 +643,11 @@ object Serve {
           sc.clearJobGroup()
         }
       }
-      try done(if (authorized(ex)) deadlined(params(ex))
-        else fail(401, "missing or invalid bearer token"))
-      catch { case e: Exception => done(fail(400, e.toString.take(500))) }
+      val (code, body) =
+        try if (authorized(ex)) deadlined(params(ex)) else fail(401, "missing or invalid bearer token")
+        catch { case e: Exception => fail(400, e.toString.take(500)) }
+      statsFor(path).record(code, (System.nanoTime() - t0) / 1000000L)
+      reply(ex, code, body)
     }
 
     server.createContext("/metrics", (ex: HttpExchange) => handle(ex) { _ =>
@@ -749,22 +756,37 @@ object Serve {
       }
     }
 
+    // The news index's vocabulary, collected once per version of the
+    // `vocab` view, keyed on the files it reads (a listing, no Spark
+    // job). It grows with the crawl's distinct title terms (29 on the
+    // benchmark's lake). Measured at 29 and at 200,000 terms: a warm news
+    // /suggest takes 5-12 ms, where a Spark job per request took 57-162;
+    // at 200,000 the collect costs ~2 s once and the server ~180 MB RSS.
+    val newsVocabLock = new Object
+    var newsVocabMemo: Option[(Seq[String], Vocabulary)] = None
+    def newsVocabulary(view: DataFrame): Vocabulary = newsVocabLock.synchronized {
+      val files = view.inputFiles.toSeq.sorted
+      if (!newsVocabMemo.exists(_._1 == files)) newsVocabMemo = Some(files -> new Vocabulary(
+        view.collect().toSeq.map(r => r.getAs[String]("w") -> r.getAs[Long]("df"))))
+      newsVocabMemo.get._2
+    }
+
     /** One resolved `index=` value, for /search and /suggest alike:
-      * `hits` ranks the corpus (terms, page, size, ranker), and `vocab`
-      * is the vocabulary that index actually tokenizes — correcting a
-      * news query against the documents vocabulary would "fix" typos
-      * toward the wrong corpus. Each is the shaped 400 while its lake
-      * view has not landed, and each is resolved only when read.
-      * `terms` is the same vocabulary held on the driver, where the
-      * index keeps one (documents): completion and membership then run
-      * no Spark job. */
+      * `hits` ranks the corpus (terms, page, size, ranker), and
+      * `vocabulary` is the driver-held dictionary of the terms that
+      * index actually tokenizes — correcting a news query against the
+      * documents vocabulary would "fix" typos toward the wrong corpus.
+      * Each is the shaped 400 while its lake view has not landed, and
+      * each is resolved only when read; `corrections` runs the catalog's
+      * SymSpell join over a `(w, df)` frame of the same terms. */
     final class SearchIndex(
         hitsOf: => Either[(Int, String), (Seq[String], Int, Int, String) => DataFrame],
-        vocabOf: => Either[(Int, String), DataFrame],
-        termsOf: => Option[graft.queries.TextIndex.Vocabulary]) {
+        vocabularyOf: => Either[(Int, String), Vocabulary],
+        wordsOf: => DataFrame) {
       lazy val hits = hitsOf
-      lazy val vocab = vocabOf
-      lazy val terms = termsOf
+      lazy val vocabulary = vocabularyOf
+      def corrections(queries: Seq[String]): DataFrame =
+        graft.queries.TextIndex.fuzzyFromAll(wordsOf, queries)
     }
     def lakeView(name: String, missing: String): Either[(Int, String), DataFrame] =
       if (spark.catalog.tableExists(name)) Right(spark.table(name))
@@ -773,7 +795,7 @@ object Serve {
       p.get("index") match {
         case None => Right(new SearchIndex(
           Right(graft.queries.TextAnalysis.searchHits(docsCorpus, _, _, _, _)),
-          Right(docsCorpus.vocab("text")), Some(docsCorpus.vocabulary("text"))))
+          Right(docsCorpus.vocabulary("text")), docsCorpus.vocabulary("text").toDF(spark)))
         // the reference UI's actual target: the crawled news store
         // (SearchUI.js:6 queries the news_* index pattern), served from
         // the lake's deduped `news` view. Its vocabulary is ONLY the
@@ -784,8 +806,11 @@ object Serve {
           lakeView("news", "no news lake registered (start with --lake)").map(news =>
             (terms, page, size, _) =>
               graft.queries.TextAnalysis.newsSearchHits(news, terms, page, size)),
-          lakeView("vocab", "no vocab index registered (run the vocab_index flow with --lake)"),
-          None))
+          lakeView("vocab", "no vocab index registered (run the vocab_index flow with --lake)")
+            .map(newsVocabulary),
+          // the view, not a local relation of the collected terms: one
+          // of 200,000 rebuilt per request doubled the server's RSS
+          spark.table("vocab")))
         case Some(other) =>
           Left(fail(400, s"unknown index ${other.take(40)} (use news, or omit for documents)"))
       }
@@ -797,21 +822,14 @@ object Serve {
     // user meant. On-vocabulary terms are never rewritten (exact
     // matches must win), and an uncorrectable term passes through to
     // rank as itself (zero hits, same as unexpanded).
-    def fuzzyExpand(terms: Seq[String], index: SearchIndex, vocab: DataFrame): Seq[String] = {
-      // At most two Spark jobs regardless of term count: one vocabulary
-      // membership probe (none where the index keeps its vocabulary on
-      // the driver), one multi-query deletion join for the
-      // off-vocabulary remainder.
-      val present = index.terms match {
-        case Some(v) => terms.filter(v.contains).toSet
-        case None => vocab.filter(col("w").isin(terms.distinct: _*))
-          .select(col("w")).collect().map(_.getString(0)).toSet
-      }
+    def fuzzyExpand(terms: Seq[String], index: SearchIndex, vocabulary: Vocabulary): Seq[String] = {
+      // Membership is a driver lookup; the off-vocabulary remainder is
+      // ONE multi-query deletion join, whatever the term count.
+      val present = terms.filter(vocabulary.contains).toSet
       val missing = terms.distinct.filterNot(present)
       if (missing.isEmpty) terms
       else {
-        val best = graft.queries.TextIndex.fuzzyFromAll(vocab, missing)
-          .collect()
+        val best = index.corrections(missing).collect()
           .groupBy(_.getAs[String]("q"))
           .map { case (q, rows) =>
             q -> rows.minBy(r => (r.getAs[Long]("dist"),
@@ -830,7 +848,7 @@ object Serve {
       // degradation for a missing vocab view
       val terms =
         if (p.get("fuzzy").contains("1") && rawTerms.nonEmpty && rawTerms.size <= 8)
-          index.toOption.flatMap(ix => ix.vocab.toOption.map(fuzzyExpand(rawTerms, ix, _)))
+          index.toOption.flatMap(ix => ix.vocabulary.toOption.map(fuzzyExpand(rawTerms, ix, _)))
             .getOrElse(rawTerms)
         else rawTerms
       if (terms.isEmpty) fail(400, "missing q parameter")
@@ -917,9 +935,8 @@ object Serve {
 
     server.createContext("/suggest", (ex: HttpExchange) => handle(ex) { p =>
       // The search box's two assistive shapes (the reference UI's
-      // Searchkit input, SearchUI.js:6-33): prefix completion over the
-      // corpus vocabulary (a driver lookup where the index keeps its
-      // vocabulary on the driver), plus optional fuzziness for
+      // Searchkit input, SearchUI.js:6-33): prefix completion, a lookup
+      // in the index's driver vocabulary, plus optional fuzziness for
       // off-vocabulary input. Both take user text only as literal
       // values — nothing is spliced into SQL or LIKE patterns.
       p.get("q").map(_.trim.toLowerCase).filter(_.nonEmpty) match {
@@ -927,18 +944,11 @@ object Serve {
         case Some(q) if q.length > 64 => fail(400, "q must be <= 64 chars")
         case Some(q) =>
           val limit = clamp(intParam(p, "limit", 8), 100)
-          (for {
-            ix <- searchIndex(p)
-            completions <- ix.terms match {
-              case Some(v) => Right(renderSuggest(v, q, limit))
-              case None => ix.vocab.map(v =>
-                render(graft.queries.TextIndex.suggestFrom(v, q, limit), limit))
-            }
-            body = Json.obj("completions" -> Json.Raw(completions))
-            full <- if (!p.get("fuzzy").contains("1")) Right(body)
-              else ix.vocab.map(v => body + ("corrections" -> Json.Raw(render(
-                graft.queries.TextIndex.fuzzyFrom(v, q), limit))))
-          } yield (200, Json.write(full))).merge
+          searchIndex(p).flatMap(ix => ix.vocabulary.map { v =>
+            val body = Json.obj("completions" -> Json.Raw(renderSuggest(v, q, limit)))
+            (200, Json.write(if (!p.get("fuzzy").contains("1")) body
+              else body + ("corrections" -> Json.Raw(render(ix.corrections(Seq(q)).drop("q"), limit)))))
+          }).merge
       }
     })
 
@@ -990,23 +1000,22 @@ object Serve {
     SparkEntry.catalog.values.filter(_.sliced.isDefined).map(_.name).toSeq.sorted
 
   def main(args: Array[String]): Unit = {
+    /** The value of `--name=<value>`, if given and non-empty. */
+    def flag(name: String): Option[String] = args.collectFirst {
+      case a if a.startsWith(s"--$name=") => a.stripPrefix(s"--$name=")
+    }.filter(_.nonEmpty)
     val bindAll = args.contains("--bind-all")
     // --token=<secret> beats GRAFT_SERVE_TOKEN; either satisfies the
     // --bind-all requirement (and a loopback instance MAY set one too).
-    val token = args.collectFirst { case a if a.startsWith("--token=") =>
-      a.stripPrefix("--token=") }
-      .orElse(sys.env.get("GRAFT_SERVE_TOKEN"))
-      .filter(_.nonEmpty)
+    val token = flag("token").orElse(sys.env.get("GRAFT_SERVE_TOKEN")).filter(_.nonEmpty)
     // --lake=<dir> registers a Schedule lake's flow outputs as views;
     // --refresh-hours=<h> additionally runs the cadence loop in-process
     // (a daemon thread), re-firing the five flows and re-registering the
     // views after every tick — the full reference system shape (flows +
     // store + UI serving concurrently) in one JVM.
-    val lake = args.collectFirst { case a if a.startsWith("--lake=") =>
-      a.stripPrefix("--lake=") }.filter(_.nonEmpty)
-    val refreshHours = args.collectFirst {
-      case a if a.startsWith("--refresh-hours=") =>
-        a.stripPrefix("--refresh-hours=").toDouble }
+    val lake = flag("lake")
+    val refreshHours = flag("refresh-hours").map(h => h.toDoubleOption.getOrElse(
+      throw new IllegalArgumentException(s"--refresh-hours must be a number (got $h)")))
     require(refreshHours.isEmpty || lake.isDefined,
       "--refresh-hours needs --lake=<dir> to refresh into")
     // validate HERE, not inside the daemon thread where Schedule.loop's
@@ -1018,8 +1027,7 @@ object Serve {
     // password rides in GRAFT_TLS_PASSWORD (env, not argv — argv is
     // world-readable in /proc). --insecure-http is the explicit
     // reverse-proxy-only override for a plaintext --bind-all.
-    val tls = args.collectFirst { case a if a.startsWith("--tls-keystore=") =>
-      a.stripPrefix("--tls-keystore=") }.filter(_.nonEmpty).map { path =>
+    val tls = flag("tls-keystore").map { path =>
       Tls(path, sys.env.getOrElse("GRAFT_TLS_PASSWORD",
         throw new IllegalArgumentException(
           "--tls-keystore needs GRAFT_TLS_PASSWORD in the environment")).toCharArray)
@@ -1041,9 +1049,6 @@ object Serve {
     // fan-out (GoogleNews lang×tag grid / synthesized tweet query) to
     // the refresh cadence, landing through the shaped fan-out stream
     // into the lake's news_fanout view
-    def flag(name: String): Option[String] = args.collectFirst {
-      case a if a.startsWith(s"--$name=") => a.stripPrefix(s"--$name=")
-    }.filter(_.nonEmpty)
     val newsEndpoint = flag("news-endpoint")
     val tweetsEndpoint = flag("tweets-endpoint")
     // endpoints without the refresh daemon would register flows that

@@ -279,12 +279,6 @@ object TextAnalysis {
       case None => throw new IllegalStateException("an uncached corpus keeps no driver vocabulary")
     }
 
-    /** Field `f`'s `(w, df)` vocabulary as a frame: on a cached corpus a
-      * local relation of [[vocabulary]]. */
-    def vocab(f: String): DataFrame =
-      if (cache) vocabulary(f).toDF(rows.sparkSession)
-      else dict.filter(col("field") === f).select(col("w"), col("df"))
-
     /** True while a cached corpus's `rows` sit in the cache: one that a
       * `clearCache` dropped must be built again. */
     def cached: Boolean = rows.storageLevel != StorageLevel.NONE

@@ -9,6 +9,7 @@ import scala.io.Source
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{JobResult, JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -196,6 +197,36 @@ class ServeSpec extends SparkSpec {
     assert(body.contains("\"spark\":"))
   }
 
+  test("keep-alive responses are not held back for the client's delayed ACK") {
+    // build.sbt passes the property to this JVM as well, so this case
+    // checks the socket behaviour only; SourceRulesSpec pins the line
+    // in Serve.start that sets it for a plain `java` launch.
+    val port = server.getAddress.getPort
+    assert(System.getProperty("sun.net.httpserver.nodelay") === "true")
+    // one raw keep-alive connection, so every request reuses its socket
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      val out = sock.getOutputStream
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      def line(): String =
+        Iterator.continually(in.read()).takeWhile(_ != '\n').map(_.toChar).mkString.stripSuffix("\r")
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        out.write("GET /health HTTP/1.1\r\nHost: localhost\r\n\r\n".getBytes("UTF-8"))
+        out.flush()
+        val status = line()
+        val length = Iterator.continually(line()).takeWhile(_.nonEmpty)
+          .collect { case h if h.toLowerCase.startsWith("content-length:") => h.drop(15).trim.toInt }
+          .toSeq.head
+        val body = new String(in.readNBytes(length), "UTF-8")
+        assert(status.contains(" 200 ") && body.contains("\"status\""), s"$status $body")
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      // with Nagle's algorithm on, each body waits ~40 ms for the ACK
+      assert(ms(ms.size / 2) < 20.0, s"per-request ms: ${ms.map(m => f"$m%.1f").mkString(" ")}")
+    } finally sock.close()
+  }
+
   test("/sql watchdog cancels a runaway query as a shaped 408; the session survives") {
     // A 3-way cross join (~3.4e9 combinations at sf0.001) cannot finish
     // inside the 1 s budget; the watchdog must cancel THIS request's
@@ -363,6 +394,15 @@ class ServeSpec extends SparkSpec {
     assert(body.contains("<mark>") || body.contains("createElement(\"mark\")"))
     // untrusted indexed text must never hit innerHTML
     assert(!body.contains("innerHTML"))
+    // the suggestion keys the page reads are keys a live /suggest body
+    // carries: completions, then its rows, then each row's term
+    val reads = """\(\(sj\.(\w+) \|\| \{\}\)\.(\w+) \|\| \[\]\)\.map\(x => x\.(\w+)\)""".r
+    val keys = reads.findFirstMatchIn(body).map(_.subgroups)
+    assert(keys.isDefined, "the page reads /suggest in no recognized shape")
+    val Seq(completions, rows, term) = keys.get
+    val (sc, sb) = get("/suggest?q=s&limit=5")
+    val row = Json.read(sb).path(completions).path(rows).path(0)
+    assert(sc === 200 && row.path(term).isTextual, s"$completions.$rows[0].$term not in $sb")
     // the asset itself is served even on a token-protected instance
     // (it carries no data; the API calls it makes still need the token)
     val tok = Serve.start(spark, sf0001, port = 0, token = Some("uisecret"))
@@ -483,6 +523,18 @@ class ServeSpec extends SparkSpec {
       val (noTok, _) = getFrom(srv, "/tables")
       assert(noTok === 401)
     } finally srv.stop(0)
+  }
+
+  test("Serve.main rejects a non-numeric --refresh-hours with a shaped message") {
+    // the flags are checked before main builds a session or binds a port
+    val e = intercept[IllegalArgumentException] {
+      Serve.main(Array("--lake=/nonexistent", "--refresh-hours=daily"))
+    }
+    assert(e.getMessage.contains("--refresh-hours must be a number (got daily)"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      Serve.main(Array("--lake=/nonexistent", "--refresh-hours=-1"))
+    }
+    assert(e2.getMessage.contains("--refresh-hours must be positive"), e2.getMessage)
   }
 
   test("a lake-backed instance serves flow outputs and picks up refresh ticks") {
@@ -635,8 +687,9 @@ class ServeSpec extends SparkSpec {
 
   /** Runs one warm request for `path` and returns the number of Spark
     * jobs it ran and the executed plans of its queries. */
-  private def warm(path: String): (Int, Seq[SparkPlan]) = {
-    assert(get(path)._1 === 200) // warm: the corpus is built and cached
+  private def warm(path: String, srv: com.sun.net.httpserver.HttpServer = server)
+      : (Int, Seq[SparkPlan]) = {
+    assert(getFrom(srv, path)._1 === 200) // warm: the corpus is built and cached
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
@@ -652,7 +705,7 @@ class ServeSpec extends SparkSpec {
     sc.addSparkListener(listener)
     spark.listenerManager.register(queries)
     try {
-      assert(get(path)._1 === 200)
+      assert(getFrom(srv, path)._1 === 200)
       // listener events arrive in order: once this marker job is seen,
       // every job and query of the request has been too
       sc.setJobGroup("spec-marker", "listener barrier")
@@ -678,6 +731,31 @@ class ServeSpec extends SparkSpec {
     // completion is a prefix lookup in the driver dictionary
     val (jobs, _) = warm("/suggest?q=s&limit=8")
     assert(jobs === 0, s"a warm /suggest ran $jobs jobs")
+  }
+
+  test("a warm news /suggest runs 0 Spark jobs") {
+    // the vocab view is collected once per version it reads
+    ServeSpec.withNewsServer(spark, sf0001, "serve_news_warm") { (srv, _, _) =>
+      val (jobs, _) = warm("/suggest?index=news&q=va&limit=8", srv)
+      assert(jobs === 0, s"a warm news /suggest ran $jobs jobs")
+    }
+  }
+
+  test("after a new news term lands, another vocab_index tick and registerLake, " +
+      "the next news /suggest completes that term") {
+    ServeSpec.withNewsServer(spark, sf0001, "serve_news_term") { (srv, lake, landing) =>
+      val (c1, b1) = getFrom(srv, "/suggest?index=news&q=zym")
+      assert(c1 === 200 && b1.contains("\"n\":0"), b1) // collected, no match yet
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(landing, "news_c.json"),
+        """{"title":"Zymurgy fair reopens","desc":"","date":"2021-03-04T10:00:00",""" +
+          """"link":"https://news.example/c1","img":"","lang":"en","source":{"crawler":"googlenews",""" +
+          """"website":"news.example","author":"dan","url":"https://news.example","tweet":null}}""" + "\n")
+      ServeSpec.indexNews(spark, lake, landing, 1)
+      Serve.registerLake(spark, lake)
+      val (c2, b2) = getFrom(srv, "/suggest?index=news&q=zym")
+      assert(c2 === 200 && b2.contains("\"w\":\"zymurgy\""), b2)
+      assert(getFrom(srv, "/search?index=news&q=zymurgy")._2.contains("news.example/c1"))
+    }
   }
 
   test("a warm documents /search plan ranks the cached corpus, not parquet") {
@@ -951,4 +1029,36 @@ class ServeSpec extends SparkSpec {
     val out = Serve.render(df, 10)
     assert(out.contains("\"a\\\\b\\\"c\\nd\""))
   }
+}
+
+object ServeSpec {
+
+  /** Runs `f` on a server over a scratch lake whose news crawl reads a
+    * scratch copy of the landing fixture, after one [[indexNews]] tick
+    * (server, lake root, landing dir); then stops the server and drops
+    * the lake views it registered on the shared session, which another
+    * spec's lake test reads. */
+  def withNewsServer[T](spark: SparkSession, dir: String, prefix: String)(
+      f: (com.sun.net.httpserver.HttpServer, String, String) => T): T = {
+    import java.nio.file.{Files, Paths}
+    val lake = Fixtures.scratchDir(prefix)
+    val landing = Fixtures.scratchDir(s"${prefix}_landing")
+    val files = Files.list(Paths.get(Fixtures.newsLanding))
+    try files.forEach(f => Files.copy(f, Paths.get(landing, f.getFileName.toString)))
+    finally files.close()
+    indexNews(spark, lake, landing, 0)
+    val srv = Serve.start(spark, dir, port = 0, lakeDir = Some(lake))
+    try f(srv, lake, landing)
+    finally {
+      srv.stop(0)
+      Serve.LakeViewNames.foreach(spark.catalog.dropTempView)
+    }
+  }
+
+  /** One tick of the news crawl over `landing`, then of vocab_index. */
+  def indexNews(spark: SparkSession, lake: String, landing: String, tick: Long): Unit =
+    Schedule.runTick(
+      Schedule.defaultFlows(spark, lake, newsLanding = landing).filter(_.name == "news_crawl") :+
+        Schedule.vocabIndexFlow(spark, lake), tick)
+      .outcomes.foreach { case (n, err) => require(err.isEmpty, s"flow $n failed: $err") }
 }

@@ -109,4 +109,27 @@ class SourceRulesSpec extends AnyFunSuite {
       "docsCorpus must load documents exactly once")
     offending(loads, "graft/Serve.scala")((_, n) => memo.exists(_.contains(n)))
   }
+
+  // A Spark-frame vocabulary beside the driver one is a second
+  // completion and membership path, whose order and escaping can drift.
+  rule("one search vocabulary: Serve reads terms only from the driver dictionary",
+      "read an index's terms through SearchIndex.vocabulary, a TextIndex.Vocabulary") {
+    offending("suggestFrom\\(|\\.vocab\\(", "graft/Serve.scala")()
+  }
+
+  // The benchmark and a deployment launch Serve with a plain `java`, so
+  // the JDK's nodelay property must come from Serve.start itself, ahead
+  // of the server it configures (the JDK reads it once); without it
+  // every keep-alive body waits for the client's delayed ACK.
+  rule("keep-alive replies unbuffered: Serve.start sets nodelay before creating its server",
+      "call System.setProperty(\"sun.net.httpserver.nodelay\", \"true\") in Serve.start " +
+        "before HttpServer.create / HttpsServer.create") {
+    val start = block("graft/Serve.scala", "def start(")
+    assert(start.isDefined, "no `def start(` in graft/Serve.scala")
+    val set = lines.collectFirst { case ("graft/Serve.scala", n, l) if start.exists(_.contains(n)) &&
+        l.contains("System.setProperty(\"sun.net.httpserver.nodelay\", \"true\")") => n }
+    assert(set.isDefined, "Serve.start does not set sun.net.httpserver.nodelay")
+    offending("Https?Server\\.create\\(")((f, n) =>
+      f == "graft/Serve.scala" && start.exists(_.contains(n)) && set.exists(_ < n))
+  }
 }

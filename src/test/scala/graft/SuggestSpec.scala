@@ -11,7 +11,8 @@ import graft.queries.{TextAnalysis, TextIndex}
   * [[TextIndex.Vocabulary]] equal the Spark form
   * `render(TextIndex.suggestFrom(vocab, prefix, limit), limit)` over the
   * same vocabulary, byte for byte: the same rows, the same tie order and
-  * the same JSON escaping. */
+  * the same JSON escaping, for the documents corpus, the news lake's
+  * `vocab` view and a synthetic vocabulary. */
 class SuggestSpec extends SparkSpec {
 
   private def check(frame: DataFrame, v: TextIndex.Vocabulary, prefix: String,
@@ -24,7 +25,7 @@ class SuggestSpec extends SparkSpec {
 
   test("the documents corpus's driver completions equal suggestFrom over its dictionary") {
     val rng = new Random(13)
-    val frame = TextAnalysis.documentsCorpus(spark, sf0001, cache = false).vocab("text")
+    val frame = TextIndex.vocabOf(Tables.load(spark, sf0001, "documents"), "text", "doc_id")
     val corpus = TextAnalysis.documentsCorpus(spark, sf0001, cache = true)
     try {
       val v = corpus.vocabulary("text")
@@ -36,6 +37,31 @@ class SuggestSpec extends SparkSpec {
       val whole = word
       assert(check(frame, v, whole, 100).contains(s"\"w\":\"$whole\""), "a whole word")
     } finally corpus.rows.unpersist()
+  }
+
+  test("a news /suggest answers suggestFrom over the lake's vocab view") {
+    val rng = new Random(17)
+    ServeSpec.withNewsServer(spark, sf0001, "suggest_news") { (srv, lake, _) =>
+      val view = LakeCommit.read(spark, s"$lake/${Schedule.VocabOutput}")
+      val port = srv.getAddress.getPort
+      def served(prefix: String, limit: Int): String = {
+        val q = java.net.URLEncoder.encode(prefix, "UTF-8")
+        val in = new java.net.URI(s"http://127.0.0.1:$port/suggest?index=news&q=$q&limit=$limit")
+          .toURL.openStream()
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      }
+      val words = view.collect().map(_.getString(0)).filter(_.nonEmpty).sorted
+      val prefixes = Seq.fill(12) {
+        val w = words(rng.nextInt(words.length))
+        w.take(1 + rng.nextInt(math.min(3, w.length)))
+      } :+ "zzqx"
+      for (p <- prefixes; limit <- Seq(1, 5, 8, 100)) {
+        val want = Json.write(Json.obj("completions" ->
+          Json.Raw(Serve.render(TextIndex.suggestFrom(view, p, limit), limit))))
+        assert(served(p, limit) === want, s"prefix '$p' limit $limit")
+      }
+      assert(served("zzqx", 5).contains("\"n\":0"), "a prefix with no match")
+    }
   }
 
   test("driver completions break df ties in Spark's string order and escape like toJSON") {

@@ -142,11 +142,10 @@ class TextVectorSpec extends SparkSpec {
   }
 
   test("the documents corpus dictionary's text slice is the vocabOf fold") {
-    // /suggest and /search?fuzzy=1 read this slice as their (w, df)
-    // vocabulary: with doc_id unique, counting each document's distinct
-    // tokens per term is vocabOf's grouped (doc_id, w) distinct. The
-    // per-call corpus folds it in Spark; the cached one Serve builds
-    // serves it from its driver dictionary.
+    // /suggest and /search?fuzzy=1 read this slice, held on the driver,
+    // as their (w, df) vocabulary: with doc_id unique, counting each
+    // document's distinct tokens per term is vocabOf's grouped
+    // (doc_id, w) distinct.
     val docs = Tables.load(spark, sf0001, "documents")
     assert(docs.select("doc_id").distinct().count() === docs.count())
     val fold = graft.queries.TextIndex.vocabOf(docs, "text", "doc_id")
@@ -154,8 +153,8 @@ class TextVectorSpec extends SparkSpec {
       df.collect().map(r => r.getAs[String]("w") -> r.getAs[Long]("df")).toSet
     def columns(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
     val cached = TextAnalysis.documentsCorpus(spark, sf0001, cache = true)
-    try Seq(TextAnalysis.documentsCorpus(spark, sf0001, cache = false), cached).foreach { c =>
-      val slice = c.vocab("text")
+    try {
+      val slice = cached.vocabulary("text").toDF(spark)
       assert(rows(fold).nonEmpty && rows(slice) === rows(fold))
       assert(columns(slice) === columns(fold))
     } finally cached.rows.unpersist()
