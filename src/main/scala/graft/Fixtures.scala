@@ -11,11 +11,12 @@ import java.nio.file.Files
   */
 object Fixtures {
 
-  /** Fixture root, overridable via `GRAFT_FIXTURES_DIR` so the repo (or
-    * the fixtures) can relocate without code edits; every fixture path —
+  /** Fixture root: `GRAFT_FIXTURES_DIR`, else `fixtures/` under the
+    * working directory (the checkout root for sbt runs and tests), so
+    * every checkout reads its own fixtures; every fixture path —
     * ingestion CSVs and the news landing dir — resolves through here. */
   val dir: String =
-    sys.env.getOrElse("GRAFT_FIXTURES_DIR", "/root/repo/fixtures")
+    sys.env.getOrElse("GRAFT_FIXTURES_DIR", s"${System.getProperty("user.dir")}/fixtures")
 
   /** Crawler landing directory (EP2 input contract). */
   val newsLanding: String = s"$dir/news_landing"

@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graft.SinkLogShim
+import org.apache.spark.sql.types.StructType
 
 /** Striped per-path locks serializing in-process writers of the same
   * lake (two concurrent commits would race version allocation; two
@@ -140,8 +145,7 @@ object LakeCommit {
     while (it.hasNext) {
       val st = it.next()
       if (st.getPath.getName.endsWith(".parquet")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
         try n += r.getRecordCount finally r.close()
       }
     }
@@ -203,16 +207,62 @@ object LakeCommit {
       s"version $version of lake $path was never committed")
     if (!fs.exists(data)) throw new java.io.FileNotFoundException(
       s"version $version of lake $path is outside the retention window (GC'd)")
-    spark.read.parquet(data.toString)
+    pinnedRead(spark, data.toString)
   }
 
   /** The current version of `path` as a DataFrame pinned to that
     * version's immutable directory ([[resolve]]), or None for an absent
     * lake — later commits and their GC (within the grace window) cannot
     * change or break this plan. Every current-version read goes through
-    * here, so how a lake version is read is decided in one place. */
+    * here, so how a lake version is read is decided in one place: by
+    * [[pinnedRead]], whose schema comes from one footer read
+    * in-process, so the read submits no Spark job. */
   def current(spark: SparkSession, path: String): Option[DataFrame] =
-    resolve(spark, path).map(spark.read.parquet(_))
+    resolve(spark, path).map(pinnedRead(spark, _))
+
+  /** `dir` — a lake version, a flat lake or a streaming sink — read with
+    * the schema of one data file's footer, converted in-process by
+    * the per-file step of Spark's own parquet schema inference
+    * (`ParquetFileFormat.readSchemaFromFooter`), so the read submits no
+    * inference job. Partition columns stay with Spark's discovery, so
+    * the schema holds the data columns only. A sink's file comes from
+    * its `_spark_metadata` listing: a file the log does not list may be
+    * a failed batch's torn write. A directory with no data file is left
+    * to inference, which throws as it always has. [[current]],
+    * [[readVersion]] and a compaction's input all read through here. */
+  private[graft] def pinnedRead(spark: SparkSession, dir: String): DataFrame = {
+    val reader = spark.read
+    dataFile(spark, dir).fold(reader)(f => reader.schema(footerSchema(spark, f))).parquet(dir)
+  }
+
+  /** Names a reader skips: `_SUCCESS`, `_spark_metadata`, `_commits`,
+    * `.crc` files, staging directories. */
+  private[graft] def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
+
+  /** One data file a reader of `dir` would scan, if any: the first the
+    * sink log lists, or else the first in name order of a depth-first
+    * walk (partitioned layouts keep theirs under `k=v` directories). */
+  private def dataFile(spark: SparkSession, dir: String): Option[FileStatus] = {
+    val root = new Path(dir)
+    val fs = fsFor(root, spark)
+    def first(p: Path): Option[FileStatus] = {
+      val (dirs, files) = fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName))
+        .sortBy(_.getPath.getName).partition(_.isDirectory)
+      files.headOption.orElse(dirs.iterator.flatMap(d => first(d.getPath)).nextOption())
+    }
+    if (SinkLogShim.hasMetadata(spark, dir))
+      SinkLogShim.listedFiles(spark, dir).headOption
+    else first(root)
+  }
+
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** [[current]], throwing for an absent lake. */
   def read(spark: SparkSession, path: String): DataFrame =

@@ -164,7 +164,13 @@ object Schedule {
     * per-source indices): a streaming file sink owns its directory
     * through the `_spark_metadata` commit log, so a batch upsert
     * swapping the same directory would orphan that log and corrupt the
-    * next incremental fire — one writer per directory is the contract. */
+    * next incremental fire — one writer per directory is the contract.
+    *
+    * A tick runs no metadata jobs: each CSV source's header is read
+    * in-process ([[CasesIngest.readCsv]]), each lake read takes its
+    * schema from one footer ([[LakeCommit.pinnedRead]]), and the news
+    * crawl ends with its last data batch ([[NewsStream.runOnce]]), its
+    * watermark's state eviction riding the next tick's data batch. */
   def defaultFlows(spark: SparkSession, lakeDir: String,
       newsLanding: String = Fixtures.newsLanding,
       tweetsLanding: Option[String] = None): Seq[Flow] = {

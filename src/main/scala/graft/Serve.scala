@@ -314,14 +314,18 @@ object Serve {
   def registerLake(spark: SparkSession, lakeDir: String): Seq[String] = {
     // Per-view try: a brand-new lake with nothing committed yet, or a
     // flat directory mid-first-write, fails schema inference — skip it
-    // and let the next tick's re-registration pick it up, never fail
-    // the whole registration (or the server boot) over one flow.
-    def load(name: String): Option[DataFrame] =
-      try LakeCommit.current(spark, s"$lakeDir/$name")
+    // (saying why) and let the next tick's re-registration pick it up,
+    // never fail the whole registration (or the server boot) over one flow.
+    def load(name: String): Option[DataFrame] = {
+      val path = s"$lakeDir/$name"
+      try LakeCommit.current(spark, path)
       catch {
-        case _: org.apache.spark.sql.AnalysisException => None
-        case _: java.io.IOException => None
+        case e @ (_: org.apache.spark.sql.AnalysisException | _: java.io.IOException) =>
+          println(s"registerLake skipped view $name at $path: " +
+            s"${e.getClass.getName}: ${e.getMessage}")
+          None
       }
+    }
     val loaded = (Schedule.IngestOutputs :+ Schedule.VocabOutput)
       .flatMap(n => load(n).map(n -> _))
     loaded.foreach { case (n, df) => df.createOrReplaceTempView(n) }

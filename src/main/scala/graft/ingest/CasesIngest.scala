@@ -1,8 +1,12 @@
 package graft.ingest
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The EP1 ingestion slice (SURVEY.md §3, §7.2 step 2): multi-dialect CSV →
   * synonym coalesce → multi-format + ISO-week date parse → broadcast geo
@@ -37,12 +41,20 @@ object CasesIngest {
     Seq(s"$FixtureDir/contamination_a.csv", s"$FixtureDir/vaccination_b.csv")
   val LookupPath = s"$FixtureDir/geo_lookup.csv"
 
-  /** First 10 kB of `path` through the Hadoop FileSystem API, so any FS
-    * URI Spark itself can scan (bare local path, file://, hdfs://,
-    * s3a:// …) works here too (S1); a glob pattern reads its first
-    * match — the reference sniffs one object per bucket listing the same
-    * way (insert_owid.py:203-214). Bounded: never loads the file. */
-  private def headBytes(path: String): String = {
+  /** The longest header line [[headerLine]] reads before it gives up. */
+  val MaxHeaderBytes: Int = 1 << 20
+
+  /** The header line of `path`: its first non-blank line (the line
+    * Spark's CSV reader takes the header from), without a trailing `\r`;
+    * "" for a file with no such line. Read through the Hadoop FileSystem
+    * API, so any FS URI Spark itself can scan (bare local path, file://,
+    * hdfs://, s3a:// …) works here too (S1); a glob pattern reads its
+    * first match — the reference sniffs one object per bucket listing
+    * the same way (insert_owid.py:203-214). Bounded: reads up to the
+    * header's line break and never loads the file; a file whose header
+    * is not complete within [[MaxHeaderBytes]] fails, naming the path,
+    * rather than yielding a truncated header. */
+  private def headerLine(path: String): String = {
     val conf = SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
@@ -50,28 +62,57 @@ object CasesIngest {
     val fs = p.getFileSystem(conf)
     val target = Option(fs.globStatus(p)).filter(_.nonEmpty)
       .map(_.head.getPath).getOrElse(p)
-    val in = fs.open(target)
+    val in = new java.io.BufferedInputStream(fs.open(target))
     try {
-      val buf = new Array[Byte](10240)
-      var off = 0
-      var n = 0
-      while (off < buf.length && n >= 0) { // FS reads may return short
-        n = in.read(buf, off, buf.length - off)
-        if (n > 0) off += n
+      val line = new java.io.ByteArrayOutputStream
+      var read = 0
+      var b = in.read()
+      while (b >= 0 && (b != '\n' || line.toString("UTF-8").trim.isEmpty)) {
+        if (b == '\n') line.reset() else line.write(b)
+        read += 1
+        if (read > MaxHeaderBytes) throw new java.io.IOException(
+          s"$target: no header line within the first $MaxHeaderBytes bytes")
+        b = in.read()
       }
-      new String(buf, 0, off, "UTF-8")
+      val header = line.toString("UTF-8").stripSuffix("\r")
+      if (header.trim.isEmpty) "" else header
     } finally in.close()
   }
 
-  /** S4: sniff the delimiter from the first 10 kB (driver-side, like the
-    * reference's clevercsv sniff window) — Spark's CSV reader then gets an
+  /** S4: sniff the delimiter from the header line (in-process, like the
+    * reference's clevercsv sniff) — Spark's CSV reader then gets an
     * explicit dialect. */
-  def sniffDelimiter(path: String): String =
-    delimiterOf(headBytes(path).takeWhile(_ != '\n'))
+  def sniffDelimiter(path: String): String = delimiterOf(headerLine(path))
 
   /** The candidate delimiter occurring most often in a header line. */
   private def delimiterOf(header: String): String =
     Seq(",", ";", "\t", "|").maxBy(d => header.count(_ == d.head))
+
+  /** The reader options and the all-string schema a header `line` gives:
+    * the sniffed delimiter, and the column names as Spark's own header
+    * inference makes them (univocity with Spark's parser settings, then
+    * `makeSafeHeader` for empty and duplicate names); an empty schema
+    * for an empty file, as inference gives. */
+  private def dialect(spark: SparkSession, line: String): (Map[String, String], StructType) = {
+    val options = Map("header" -> "true", "sep" -> delimiterOf(line))
+    val conf = spark.sessionState.conf
+    val parsed = new CSVOptions(options, conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val row = if (line.isEmpty) null else new CsvParser(parsed.asParserSettings).parseLine(line)
+    val names =
+      if (row == null) Array.empty[String]
+      else CSVUtils.makeSafeHeader(row, conf.caseSensitiveAnalysis, parsed)
+    (options, StructType(names.map(StructField(_, StringType))))
+  }
+
+  /** Every CSV source read in graft: `path` (a file, URI or glob) with
+    * its header's delimiter and column names, all columns strings. The
+    * header comes from one in-process read of its first line
+    * ([[headerLine]]), so the read submits no job; the schema equals the
+    * one Spark's header inference gives (`IngestSchemaSpec` pins it). */
+  def readCsv(spark: SparkSession, path: String): DataFrame = {
+    val (options, schema) = dialect(spark, headerLine(path))
+    spark.read.options(options).schema(schema).csv(path)
+  }
 
   private[ingest] def nullifEmpty(c: Column): Column =
     when(trim(c) === "", lit(null)).otherwise(trim(c))
@@ -80,7 +121,7 @@ object CasesIngest {
     * with resolvable geo → first-wins (min UID) per name → broadcastable
     * dim (name, uid, iso2, lat, lon). */
   def geoDim(spark: SparkSession, lookupPath: String = LookupPath): DataFrame = {
-    val lk = spark.read.option("header", "true").csv(lookupPath)
+    val lk = readCsv(spark, lookupPath)
     val arms = Seq("Province_State", "Country_Region", "Combined_Key").map { k =>
       lk.select(
         nullifEmpty(col(k)).as("name"),
@@ -103,13 +144,12 @@ object CasesIngest {
   /** F3: malformed-header rejection (parse_insert.py:168-185 — if any
     * required logical column resolves to NO header synonym, the whole
     * file is rejected before Spark ever scans it). Driver-side: reads
-    * only the header line. Returns the rejected files. */
+    * only the header line, named as [[readCsv]] names its columns.
+    * Returns the rejected files. */
   def rejectMalformed(spark: SparkSession, paths: Seq[String]): (Seq[String], Seq[String]) = {
     val required = Seq(dateSyn, locSyn, valSyn)
     paths.partition { p =>
-      val header = headBytes(p).takeWhile(_ != '\n')
-      val cols = header.split(java.util.regex.Pattern.quote(delimiterOf(header)))
-        .map(_.trim).toSet
+      val cols = dialect(spark, headerLine(p))._2.fieldNames.map(_.trim).toSet
       required.forall(_.exists(cols.contains))
     }
   }

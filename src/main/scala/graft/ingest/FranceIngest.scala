@@ -21,7 +21,7 @@ object FranceIngest {
 
   /** ISO-3166 alpha2 → alpha3 dim from the lookup CSV (P6). */
   def isoDim(spark: SparkSession): DataFrame =
-    spark.read.option("header", "true").csv(CasesIngest.LookupPath)
+    CasesIngest.readCsv(spark, CasesIngest.LookupPath)
       .select(col("iso2"), col("iso3")).where(col("iso2").isNotNull)
       .distinct()
 
@@ -30,8 +30,7 @@ object FranceIngest {
     * (insert_france_virtests.py:122 — vs the DEP→FR REWRITE above,
     * insert_france.py:124), P7 empty-count default, P8 ratio guard. */
   def virtests(spark: SparkSession): DataFrame = {
-    val raw = spark.read.option("header", "true")
-      .option("sep", CasesIngest.sniffDelimiter(VirtestsPath)).csv(VirtestsPath)
+    val raw = CasesIngest.readCsv(spark, VirtestsPath)
     raw.select(
         concat(lit("FR-"), col("dep")).as("iso_region2"), // P10 concat variant
         DateParse.dateStart(col("jour")).as("date_start"),
@@ -46,8 +45,7 @@ object FranceIngest {
   }
 
   def franceCases(spark: SparkSession): DataFrame = {
-    val raw = spark.read.option("header", "true")
-      .option("sep", CasesIngest.sniffDelimiter(FrancePath)).csv(FrancePath)
+    val raw = CasesIngest.readCsv(spark, FrancePath)
     val dim = CasesIngest.geoDim(spark)
 
     raw

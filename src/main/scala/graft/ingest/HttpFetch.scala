@@ -12,7 +12,8 @@ import java.time.Duration
   *
   * Driver-side by design: Spark has no HTTP data source, and the
   * reference's fetch is a single-file download, not a distributed scan —
-  * the distributed part starts at `spark.read.csv(stagingDir)`. Never
+  * the distributed part starts where Spark's CSV source reads the
+  * staging dir. Never
   * fetch per-row in executors (the P5 lesson: the reference's per-name
   * remote geocoder is its bottleneck).
   */

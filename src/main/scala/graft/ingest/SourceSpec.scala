@@ -39,8 +39,7 @@ object SourceSpec {
     * the loc values the strict join will see, or the two drift. */
   def normalized(spark: SparkSession, spec: SourceSpec): DataFrame = {
     val raw = spec.paths.map { p =>
-      spark.read.option("header", "true")
-        .option("sep", CasesIngest.sniffDelimiter(p)).csv(p)
+      CasesIngest.readCsv(spark, p)
         .withColumn("filename", regexp_extract(input_file_name(), "([^/]+)$", 1))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
 

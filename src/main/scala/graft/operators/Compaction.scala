@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.SinkLogShim
 
 import graft.{LakeCommit, PathLocks, Sessions}
+import graft.LakeCommit.hidden
 
 /** Small-file compaction — the standard answer to the file accretion an
   * incremental lake design inherits: the crawl sink appends parquet
@@ -84,7 +85,7 @@ object Compaction {
       val fs = fsFor(spark, sinkDir)
       val before = SinkLogShim.listedFiles(spark, sinkDir)
       reapUnlisted(fs, sinkDir, before, cutoffMs = Long.MaxValue): Unit
-      val bytesBefore = before.map(p => fs.getFileStatus(new Path(p)).getLen).sum
+      val bytesBefore = before.map(_.getLen).sum
       // stage the compacted files in a dotted dir INSIDE the sink (same
       // filesystem, so the move below is a metadata op), invisible to
       // both the log-aware reader and the log's batch listing
@@ -162,9 +163,9 @@ object Compaction {
 
   /** Delete the sink-root data files missing from `listed` and last
     * modified before `cutoffMs`; returns the number deleted. */
-  private def reapUnlisted(fs: FileSystem, sinkDir: String, listed: Seq[String],
+  private def reapUnlisted(fs: FileSystem, sinkDir: String, listed: Seq[FileStatus],
       cutoffMs: Long): Long = {
-    val referenced = listed.map(p => new Path(p).toUri.getPath).toSet
+    val referenced = listed.map(_.getPath.toUri.getPath).toSet
     val candidates = fs.listStatus(new Path(sinkDir)).toSeq.filter { st =>
       st.isFile && !hidden(st.getPath.getName) &&
         !referenced(st.getPath.toUri.getPath) && st.getModificationTime < cutoffMs
@@ -173,16 +174,13 @@ object Compaction {
     candidates.size.toLong
   }
 
-  private def hidden(name: String): Boolean =
-    name.startsWith("_") || name.startsWith(".")
-
   /** Read `dir` with scan bin-packing tuned so each input partition —
     * and therefore each output file — approaches `targetBytes`. */
   private def packedRead[T](spark: SparkSession, dir: String, targetBytes: Long)(
       body: org.apache.spark.sql.DataFrame => T): T =
     Sessions.confIsolated(spark) { s =>
       s.conf.set("spark.sql.files.maxPartitionBytes", targetBytes.toString)
-      body(s.read.parquet(dir))
+      body(LakeCommit.pinnedRead(s, dir))
     }
 
   private def fsFor(spark: SparkSession, path: String): FileSystem =

@@ -77,23 +77,34 @@ object NewsStream {
     * deduped store, with the shaping moved crawler-side → Spark-side. */
   def runOnceFanout(spark: SparkSession, newsLanding: String,
       tweetsLanding: String, sinkDir: String, checkpointDir: String): Unit =
-    StateStores.runToParquet(spark, sinkDir, checkpointDir) { s =>
-      val news = NewsShaping.shapeGoogleNews(
-        s.readStream.schema(googleNewsRawSchema).json(newsLanding))
-      val tweets = NewsShaping.shapeTweet(
-        s.readStream.schema(tweetRawSchema).json(tweetsLanding))
-      dedup(news.unionByName(tweets))
-    }
+    StateStores.runToParquet(spark, sinkDir, checkpointDir, noDataBatches = false)(
+      fannedOut(_, newsLanding, tweetsLanding))
 
   /** Run the landing → sink pipeline to completion (AvailableNow) through
     * the one streaming lifecycle ([[StateStores.runToParquet]]): the
     * query builds on a conf-isolated streaming session (RocksDB state,
     * state-sized shuffle width), so the streaming confs never leak into —
     * or race with — concurrent work on `spark`; inside a recorded cadence
-    * tick the run reports the rows it landed. */
+    * tick the run reports the rows it landed.
+    *
+    * Both news flows are dedups, which emit each row in the batch that
+    * brings it, so they run without the empty batch (`noDataBatches =
+    * false`): the run ends with its last data batch, and the next run's
+    * first data batch evicts the expired state. */
   def runOnce(spark: SparkSession, landingDir: String, sinkDir: String,
       checkpointDir: String): Unit =
-    StateStores.runToParquet(spark, sinkDir, checkpointDir)(deduped(_, landingDir))
+    StateStores.runToParquet(spark, sinkDir, checkpointDir, noDataBatches = false)(
+      deduped(_, landingDir))
+
+  /** The two landing dirs' records, shaped and unioned, as a deduped
+    * stream built on `s`. */
+  def fannedOut(s: SparkSession, newsLanding: String, tweetsLanding: String): DataFrame = {
+    val news = NewsShaping.shapeGoogleNews(
+      s.readStream.schema(googleNewsRawSchema).json(newsLanding))
+    val tweets = NewsShaping.shapeTweet(
+      s.readStream.schema(tweetRawSchema).json(tweetsLanding))
+    dedup(news.unionByName(tweets))
+  }
 
   /** The landing dir's documents as a deduped stream built on `s`. */
   def deduped(s: SparkSession, landingDir: String): DataFrame =

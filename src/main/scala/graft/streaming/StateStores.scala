@@ -60,10 +60,29 @@ object StateStores {
     * streaming session ([[streamingSession]]), and [[run]] appends it to
     * `sink` over `checkpoint`. Only inside a recorded tick does the
     * output carry the rows-landed observation, so catalog runs keep
-    * their plans and pay nothing. */
-  def runToParquet(spark: SparkSession, sink: String, checkpoint: String)(
-      build: SparkSession => Dataset[_]): Unit =
-    streamingSession(spark) { s =>
+    * their plans and pay nothing.
+    *
+    * `noDataBatches = false` runs the stream on a session with
+    * `spark.sql.streaming.noDataMicroBatches.enabled=false`: the run
+    * ends after its last data batch instead of firing one more, empty
+    * batch that only moves the watermark and evicts expired state. The
+    * commit log carries the new watermark to the next run, whose first
+    * data batch evicts instead. That batch must also drop late rows by
+    * that watermark: by default a batch filters late rows by the
+    * PREVIOUS batch's watermark, which without the empty batch is one
+    * run stale, so the session also sets
+    * `spark.sql.streaming.statefulOperator.allowMultiple=false`, whose
+    * single-watermark rule filters and evicts by the batch's own. A
+    * query with one stateful operator that emits rows as they arrive (a
+    * dedup) and one data batch per run then lands the same rows
+    * (ScheduleSpec pins this over six ticks). Both
+    * [[NewsStream]] flows are such dedups and pass it. The catalog's
+    * aggregate stream_* entries keep the default: an append-mode
+    * aggregate emits the windows a watermark closes only from a later
+    * batch, and their results are read after one run. */
+  def runToParquet(spark: SparkSession, sink: String, checkpoint: String,
+      noDataBatches: Boolean = true)(build: SparkSession => Dataset[_]): Unit =
+    streamingSession(spark, noDataBatches) { s =>
       val out = build(s)
       val counted =
         if (graft.Schedule.FlowRuns.active) out.observe(RowsLanded, count(lit(1)).as("rows"))
@@ -95,15 +114,18 @@ object StateStores {
     * shuffle width would silently apply to unrelated concurrent batch
     * queries.
     *
-    * The clone is MEMOIZED per (parent, state width) — the
+    * The clone is MEMOIZED per (parent, state width, no-data batches) — the
     * [[graft.Sessions.confIsolatedCached]] lifecycle the CC loop uses —
     * so a multi-fire lifecycle (stream_left_join fires twice; Bench
     * re-fires per pass) pays session construction + lazy SessionState
     * init once, not per fire. The width rides in the cache key, so a
     * runtime change of `graft.stream.statePartitions` still takes
-    * effect on the next lifecycle (ServeSpec pins this). Builders must
-    * NOT set session confs on the clone: it is shared across entries and
-    * snapshots the parent conf only at first use.
+    * effect on the next lifecycle (ServeSpec pins this); without
+    * `noDataBatches` the clone also sets the two confs [[runToParquet]]
+    * names, under a key of its own, so the clone the catalog entries
+    * share never changes. A `build` function must NOT set session confs
+    * on the clone: it is shared across entries and snapshots the parent conf
+    * only at first use.
     *
     * Changelog checkpointing: each RocksDB commit ships the batch's
     * CHANGE set instead of a full snapshot per partition per batch —
@@ -113,13 +135,19 @@ object StateStores {
     * commitTimeMs ≈ 2/3 of addBatch on the sessionize probe; ~28% off
     * the whole lifecycle), and at production cadence it is the same
     * setting Spark documents for frequent-commit workloads. */
-  private def streamingSession[T](spark: SparkSession)(body: SparkSession => T): T = {
+  private def streamingSession[T](spark: SparkSession, noDataBatches: Boolean)(
+      body: SparkSession => T): T = {
     val width = spark.conf.getOption("graft.stream.statePartitions").getOrElse("8")
-    graft.Sessions.confIsolatedCached(spark, s"streaming-state-$width") { s =>
+    val key = s"streaming-state-$width" + (if (noDataBatches) "" else "-noDataMicroBatches-off")
+    graft.Sessions.confIsolatedCached(spark, key) { s =>
       useRocksDB(s)
       s.conf.set(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       s.conf.set("spark.sql.shuffle.partitions", width)
+      if (!noDataBatches) {
+        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        s.conf.set("spark.sql.streaming.statefulOperator.allowMultiple", "false")
+      }
     }(body)
   }
 }

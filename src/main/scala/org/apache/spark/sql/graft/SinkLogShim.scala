@@ -40,10 +40,14 @@ object SinkLogShim {
   }
 
   /** The data files the sink log currently lists (what any log-aware
-    * reader — batch or streaming — actually reads). */
-  def listedFiles(spark: SparkSession, sinkDir: String): Seq[String] = {
+    * reader — batch or streaming — actually reads). The log stores each
+    * path as an encoded URI, so the statuses come from the entries' own
+    * decoding (`SinkFileStatus.toFileStatus`): a `new Path(entry)` would
+    * quote its `%` escapes again, naming a file that does not exist when
+    * the sink's path holds a space or a `%`. */
+  def listedFiles(spark: SparkSession, sinkDir: String): Seq[FileStatus] = {
     val log = sinkLog(spark, sinkDir)
-    log.allFiles().toSeq.map(_.path)
+    log.allFiles().toSeq.map(_.toFileStatus)
   }
 
   /** Replace the log's live window so it lists exactly `files`:

@@ -140,13 +140,13 @@ class CompactionSpec extends SparkSpec {
     shim.writeJournal(spark, sink, Seq(fs.getFileStatus(dst)))
     assert(shim.listedFiles(spark, sink).size >= 1)
     assert(!shim.listedFiles(spark, sink)
-      .map(p => new org.apache.hadoop.fs.Path(p).getName).contains(part.getName),
+      .map(_.getPath.getName).contains(part.getName),
       "log rewritten before the crash point - the test proves nothing")
     // recovery replays the journal and the listing lands on the
     // compacted file, content unchanged; a second recover is a no-op
     assert(shim.recover(spark, sink), "journal not found")
     assert(shim.listedFiles(spark, sink)
-      .map(p => new org.apache.hadoop.fs.Path(p).getName) === Seq(part.getName))
+      .map(_.getPath.getName) === Seq(part.getName))
     assert(contentHash(spark.read.parquet(sink)) === before)
     assert(!shim.recover(spark, sink), "journal must be consumed")
     // and gcUnreferenced now safely reaps the pre-compaction files

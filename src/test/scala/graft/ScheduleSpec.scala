@@ -3,7 +3,11 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+
+import graft.streaming.{NewsStream, StateStores}
 
 /** [[Schedule]] — the 24 h cadence driver — driven with MANUAL ticks
   * (injected sleep, bounded tick count): no wall-clock waits anywhere.
@@ -149,6 +153,123 @@ class ScheduleSpec extends SparkSpec {
     // over the same checkpoint with no new files and lands none
     assert(runs.map(_.rows) === Seq(Some(6L), Some(0L)))
     assert(spark.read.parquet(s"$lake/news_crawl").count() === 6L)
+  }
+
+  private def newsDoc(link: String, date: String, title: String): String =
+    s"""{"title":"$title","desc":"","date":"$date","link":"$link","img":"","lang":"en",""" +
+      """"source":{"crawler":"googlenews","website":"news.example","author":"a",""" +
+      """"url":"https://news.example","tweet":null}}"""
+
+  test("a cadence tick runs no metadata job and no empty micro-batch") {
+    val lake = Fixtures.scratchDir("sched_jobs") + "/lake"
+    val landing = Fixtures.scratchDir("sched_jobs_landing")
+    ServeSpec.copyLanding(landing)
+    val flows = Schedule.defaultFlows(spark, lake, newsLanding = landing) :+
+      Schedule.vocabIndexFlow(spark, lake) :+ Schedule.compactionFlow(spark, lake, maxFiles = 0)
+    val hist = new Schedule.FlowHistory()
+    def tick(t: Long): Unit = {
+      Schedule.runTick(flows, t, Some(hist)).outcomes.foreach { case (n, err) =>
+        assert(err.isEmpty, s"tick $t flow $n failed: $err") }
+      Serve.registerLake(spark, lake): Unit
+    }
+    try {
+      tick(0)
+      Files.writeString(Paths.get(landing, "news_c.json"),
+        newsDoc("https://news.example/c1", "2021-03-04T10:00:00", "Clinics extend hours") + "\n")
+      val events = eventsDuring(tick(1))
+      val jobs = events.collect { case j: SparkListenerJobStart => j }
+      val metadata = jobs.filter(j => SparkSpec.csvHeader(j) || SparkSpec.parquetInference(j))
+      assert(metadata.isEmpty, metadata.map(SparkSpec.callSite).mkString("metadata jobs: ", ", ", ""))
+      // Controls: the reads a tick used to make do show as metadata jobs.
+      assert(jobsDuring(spark.read.parquet(LakeCommit.resolve(spark, s"$lake/cases").get).schema)
+        .exists(SparkSpec.parquetInference))
+      assert(jobsDuring(spark.read.option("header", "true").csv(s"${Fixtures.dir}/france_c.csv")
+        .schema).exists(SparkSpec.csvHeader))
+      // the news flow's one micro-batch lands the new document
+      val batches = events.collect { case p: QueryProgressEvent => p.progress.numInputRows }
+      assert(batches === Seq(1L), s"news micro-batches (input rows): $batches")
+      assert(hist.snapshot.toMap.apply("news_crawl").map(_.rows) === Seq(Some(6L), Some(1L)))
+    } finally Serve.LakeViewNames.foreach(spark.catalog.dropTempView)
+  }
+
+  /** Tick t's documents as (key, days after 2021-01-01, title): the
+    * fresh one twice, tick t-1's pair again (inside the 7-day watermark,
+    * so the dedup state must still hold it), and two late ones, 3 days
+    * (inside the watermark) and 9 days (behind it) older than t-1's.
+    * `shift` moves every date, so two sources can run apart. */
+  private def tickDocs(t: Int, shift: Int = 0): Seq[(String, Int, String)] = {
+    val fresh = (s"t$t", 10 * t + shift, s"News of tick $t")
+    if (t == 0) Seq(fresh, fresh)
+    else Seq(fresh, fresh, (s"t${t - 1}", 10 * (t - 1) + shift, s"News of tick ${t - 1}"),
+      (s"late$t", 10 * (t - 1) + shift - 3, s"Late news $t"),
+      (s"old$t", 10 * (t - 1) + shift - 9, s"Old news $t"))
+  }
+
+  private def at(days: Int): String =
+    s"${java.time.LocalDate.parse("2021-01-01").plusDays(days.toLong)}T12:00:00"
+
+  private def land(dir: String, file: String, lines: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(dir))
+    Files.writeString(Paths.get(dir, file), lines.mkString("", "\n", "\n")): Unit
+  }
+
+  /** Six ticks of a news pipeline in two arms over the same landings: the
+    * reference, `StateStores.runToParquet` with its empty batch, and the
+    * cadence's `NewsStream` flow without it. `landTick(root, t)` lands
+    * tick t's documents, and each arm runs as `(root, sink, checkpoint)`.
+    * After every tick both sinks hold the same rows, and both arms
+    * report `landed` rows per tick to `/flows`. */
+  private def assertSameWithoutEmptyBatch(prefix: String, landTick: (String, Int) => Unit,
+      reference: (String, String, String) => Unit, cadence: (String, String, String) => Unit,
+      landed: Seq[Option[Long]]): Unit = {
+    val root = Fixtures.scratchDir(prefix)
+    def flow(arm: String, run: (String, String, String) => Unit) =
+      Schedule.Flow(arm, _ => run(root, s"$root/$arm", s"$root/_${arm}_ckpt"))
+    val flows = Seq(flow("with_empty", reference), flow("without_empty", cadence))
+    val hist = new Schedule.FlowHistory()
+    for (t <- 0 until 6) {
+      landTick(root, t)
+      Schedule.runTick(flows, t.toLong, Some(hist)).outcomes.foreach { case (n, err) =>
+        assert(err.isEmpty, s"tick $t flow $n failed: $err") }
+      assert(sortedRows(s"$root/with_empty") === sortedRows(s"$root/without_empty"), s"tick $t")
+    }
+    val runs = hist.snapshot.toMap
+    assert(runs("with_empty").map(_.rows) === landed)
+    assert(runs("without_empty").map(_.rows) === landed)
+    assert(sortedRows(s"$root/without_empty").size === landed.flatten.sum)
+    // one batch per tick without the empty batch, more with it
+    def batches(arm: String): Int = new java.io.File(s"$root/_${arm}_ckpt/commits")
+      .list().count(_.forall(_.isDigit))
+    assert(batches("without_empty") === 6)
+    assert(batches("with_empty") > 6)
+  }
+
+  test("the news lake and its /flows row counts are the same with and without the empty batch") {
+    assertSameWithoutEmptyBatch("sched_nodata",
+      (root, t) => land(s"$root/landing", s"tick_$t.json", tickDocs(t).map {
+        case (key, days, title) => newsDoc(s"https://news.example/$key", at(days), title) }),
+      (root, sink, ckpt) =>
+        StateStores.runToParquet(spark, sink, ckpt)(NewsStream.deduped(_, s"$root/landing")),
+      (root, sink, ckpt) => NewsStream.runOnce(spark, s"$root/landing", sink, ckpt),
+      // the fresh document each tick, plus the in-watermark late one after tick 0
+      landed = Some(1L) +: Seq.fill(5)(Some(2L)))
+  }
+
+  test("the fan-out lake of news and tweets is the same with and without the empty batch") {
+    // both sources land every tick, the tweets a day after the news
+    def landTick(root: String, t: Int): Unit = {
+      land(s"$root/gnews", s"tick_$t.json", tickDocs(t).map { case (key, days, title) =>
+        s"""{"title":"$title","desc":"","date":"${at(days)}","link":"news.example/$key",""" +
+          s""""img":"","site":"news.example","author":"a","lang":"en","tag":"covid"}""" })
+      land(s"$root/tweets", s"tick_$t.json", tickDocs(t, shift = 1).map { case (key, days, title) =>
+        s"""{"user":"u","content":"$title","date":"${at(days)}","tweet_id":"$key","lang":"en"}""" })
+    }
+    assertSameWithoutEmptyBatch("sched_nodata_fanout", landTick,
+      (root, sink, ckpt) => StateStores.runToParquet(spark, sink, ckpt)(
+        NewsStream.fannedOut(_, s"$root/gnews", s"$root/tweets")),
+      (root, sink, ckpt) =>
+        NewsStream.runOnceFanout(spark, s"$root/gnews", s"$root/tweets", sink, ckpt),
+      landed = Some(2L) +: Seq.fill(5)(Some(4L)))
   }
 
   test("alerts: consecutive failures page at the threshold, one success resets; staleness needs the interval") {

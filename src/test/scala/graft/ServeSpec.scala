@@ -733,6 +733,30 @@ class ServeSpec extends SparkSpec {
     assert(jobs === 0, s"a warm /suggest ran $jobs jobs")
   }
 
+  test("registerLake says why it skips a view, and registers it once data lands") {
+    val lake = Fixtures.scratchDir("serve_lake_no_news")
+    // an empty landing: the crawl's sink holds only its _spark_metadata log
+    val landing = Fixtures.scratchDir("serve_lake_no_news_landing")
+    val flows = Schedule.defaultFlows(spark, lake, newsLanding = landing)
+    def tick(t: Long): Unit = Schedule.runTick(flows, t).outcomes.foreach { case (n, err) =>
+      assert(err.isEmpty, s"tick $t flow $n failed: $err") }
+    try {
+      tick(0)
+      assert(new java.io.File(s"$lake/news_crawl").list().toSet === Set("_spark_metadata"))
+      val out = new java.io.ByteArrayOutputStream
+      val views = Console.withOut(out)(Serve.registerLake(spark, lake))
+      assert(views === Seq("cases", "france_cases", "virtests"))
+      val said = out.toString("UTF-8")
+      assert(said.contains(s"registerLake skipped view news_crawl at $lake/news_crawl: " +
+        "org.apache.spark.sql.AnalysisException: "), said)
+      ServeSpec.copyLanding(landing)
+      tick(1)
+      assert(Serve.registerLake(spark, lake) ===
+        Seq("cases", "france_cases", "virtests", "news_crawl", "news"))
+      assert(spark.table("news").count() === 6L)
+    } finally Serve.LakeViewNames.foreach(spark.catalog.dropTempView)
+  }
+
   test("a warm news /suggest runs 0 Spark jobs") {
     // the vocab view is collected once per version it reads
     ServeSpec.withNewsServer(spark, sf0001, "serve_news_warm") { (srv, _, _) =>
@@ -1040,12 +1064,9 @@ object ServeSpec {
     * spec's lake test reads. */
   def withNewsServer[T](spark: SparkSession, dir: String, prefix: String)(
       f: (com.sun.net.httpserver.HttpServer, String, String) => T): T = {
-    import java.nio.file.{Files, Paths}
     val lake = Fixtures.scratchDir(prefix)
     val landing = Fixtures.scratchDir(s"${prefix}_landing")
-    val files = Files.list(Paths.get(Fixtures.newsLanding))
-    try files.forEach(f => Files.copy(f, Paths.get(landing, f.getFileName.toString)))
-    finally files.close()
+    copyLanding(landing)
     indexNews(spark, lake, landing, 0)
     val srv = Serve.start(spark, dir, port = 0, lakeDir = Some(lake))
     try f(srv, lake, landing)
@@ -1053,6 +1074,14 @@ object ServeSpec {
       srv.stop(0)
       Serve.LakeViewNames.foreach(spark.catalog.dropTempView)
     }
+  }
+
+  /** Copies the news landing fixture's files into `dir`. */
+  def copyLanding(dir: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val files = Files.list(Paths.get(Fixtures.newsLanding))
+    try files.forEach(f => Files.copy(f, Paths.get(dir, f.getFileName.toString)))
+    finally files.close()
   }
 
   /** One tick of the news crawl over `landing`, then of vocab_index. */

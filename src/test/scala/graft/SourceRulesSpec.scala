@@ -117,6 +117,26 @@ class SourceRulesSpec extends AnyFunSuite {
     offending("suggestFrom\\(|\\.vocab\\(", "graft/Serve.scala")()
   }
 
+  // A CSV read of its own infers its header with a Spark job, and may
+  // name the columns differently from every other source.
+  rule("one CSV header read: ingest reads CSV only through CasesIngest.readCsv",
+      "read CSV sources with CasesIngest.readCsv, which reads the header without a Spark job") {
+    val helper = block("graft/ingest/CasesIngest.scala", "def readCsv(")
+    assert(helper.isDefined, "no `def readCsv(` in graft/ingest/CasesIngest.scala")
+    offending("option\\(\"header\"|\\.csv\\(", "graft/ingest")((f, n) =>
+      f == "graft/ingest/CasesIngest.scala" && helper.exists(_.contains(n)))
+  }
+
+  // A bare parquet read of a lake infers its schema with a Spark job on
+  // every call, where the pinned read takes it from one footer.
+  rule("one lake read: the cadence and Serve read lakes only through LakeCommit.pinnedRead",
+      "read lakes through LakeCommit.current / readVersion / pinnedRead") {
+    val lakeCode = Set("graft/LakeCommit.scala", "graft/operators/Compaction.scala",
+      "graft/Schedule.scala", "graft/Serve.scala")
+    offending("read\\.parquet\\(")((f, _) =>
+      !(lakeCode(f) || f.startsWith("graft/streaming/")))
+  }
+
   // The benchmark and a deployment launch Serve with a plain `java`, so
   // the JDK's nodelay property must come from Serve.start itself, ahead
   // of the server it configures (the JDK reads it once); without it

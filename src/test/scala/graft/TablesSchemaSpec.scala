@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** Pins the declared schemas in [[Tables]] against the test tables.
   *
   * A declared schema reads a renamed or retyped column as null (or fails
@@ -28,24 +23,11 @@ class TablesSchemaSpec extends SparkSpec {
     }
   }
 
-  /** Jobs submitted while `body` runs, counted after the bus drains. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain(sc) } finally sc.removeSparkListener(listener)
-    jobs.get
-  }
-
   test("Tables.load resolves its schema without a Spark job") {
     // Control: inference does run a job, so the listener can see one.
-    assert(jobsDuring(spark.read.parquet(s"$sf0001/orders.parquet").schema) > 0)
+    assert(jobsDuring(spark.read.parquet(s"$sf0001/orders.parquet").schema).nonEmpty)
     Tables.names.foreach { name =>
-      assert(jobsDuring(Tables.load(spark, sf0001, name).schema) == 0, name)
+      assert(jobsDuring(Tables.load(spark, sf0001, name).schema).isEmpty, name)
     }
   }
 }
