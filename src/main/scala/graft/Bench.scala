@@ -107,7 +107,7 @@ object Bench {
     val extCpuThreshold = sys.env.get("SPARK_GRAFT_EXT_CPU")
       .flatMap(_.toDoubleOption).getOrElse(0.20)
     val detailPath = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_DETAIL", "/root/repo/BENCH_DETAIL.json")
+      "SPARK_GRAFT_BENCH_DETAIL", s"${System.getProperty("user.dir")}/BENCH_DETAIL.json")
 
     // Previous round's per-query minima, read BEFORE this run overwrites
     // the file.

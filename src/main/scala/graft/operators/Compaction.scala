@@ -30,7 +30,7 @@ import graft.LakeCommit.hidden
   *    the stream is stopped; the checkpointed writer then resumes
   *    appending batch `latest+1` as if nothing happened. Old data files
   *    stay on disk as the grace window for already-planned readers
-  *    until the next compaction (or [[gcUnreferenced]]) reaps them.
+  *    until the next [[compactSink]] of the sink reaps them.
   *
   * Sizing: the input is re-read with
   * `spark.sql.files.maxPartitionBytes = targetBytes` on a conf-isolated
@@ -84,7 +84,7 @@ object Compaction {
       SinkLogShim.recover(spark, sinkDir): Unit // finish any crashed rewrite first
       val fs = fsFor(spark, sinkDir)
       val before = SinkLogShim.listedFiles(spark, sinkDir)
-      reapUnlisted(fs, sinkDir, before, cutoffMs = Long.MaxValue): Unit
+      reapUnlisted(fs, sinkDir, before)
       val bytesBefore = before.map(_.getLen).sum
       // stage the compacted files in a dotted dir INSIDE the sink (same
       // filesystem, so the move below is a metadata op), invisible to
@@ -150,28 +150,13 @@ object Compaction {
       compactLake(spark, path, targetBytes, partitionBy = parts)
     }
 
-  /** Delete sink-root data files the metadata log no longer references
-    * and whose modification time is older than `graceMs` — the
-    * compaction grace window for readers that planned against the old
-    * listing. Returns the number deleted. */
-  def gcUnreferenced(spark: SparkSession, sinkDir: String, graceMs: Long = 0L): Long =
-    PathLocks.lockFor(sinkDir).synchronized {
-      SinkLogShim.recover(spark, sinkDir): Unit // never GC against a torn listing
-      reapUnlisted(fsFor(spark, sinkDir), sinkDir, SinkLogShim.listedFiles(spark, sinkDir),
-        System.currentTimeMillis() - graceMs)
-    }
-
-  /** Delete the sink-root data files missing from `listed` and last
-    * modified before `cutoffMs`; returns the number deleted. */
-  private def reapUnlisted(fs: FileSystem, sinkDir: String, listed: Seq[FileStatus],
-      cutoffMs: Long): Long = {
+  /** Delete the sink-root data files missing from `listed`. */
+  private def reapUnlisted(fs: FileSystem, sinkDir: String, listed: Seq[FileStatus]): Unit = {
     val referenced = listed.map(_.getPath.toUri.getPath).toSet
-    val candidates = fs.listStatus(new Path(sinkDir)).toSeq.filter { st =>
-      st.isFile && !hidden(st.getPath.getName) &&
-        !referenced(st.getPath.toUri.getPath) && st.getModificationTime < cutoffMs
-    }
-    candidates.foreach(st => fs.delete(st.getPath, false))
-    candidates.size.toLong
+    fs.listStatus(new Path(sinkDir)).toSeq
+      .filter(st => st.isFile && !hidden(st.getPath.getName) &&
+        !referenced(st.getPath.toUri.getPath))
+      .foreach(st => fs.delete(st.getPath, false))
   }
 
   /** Read `dir` with scan bin-packing tuned so each input partition —

@@ -55,7 +55,7 @@ object ZOrder {
     * the order and the tiles degenerate to stripes (measured in
     * ZOrderSpec's first draft). Floor division via double is exact
     * while (hi−lo)·65535 stays under 2^53. */
-  private def norm(v: Column, lo: Column, hi: Column): Column =
+  private[graft] def norm(v: Column, lo: Column, hi: Column): Column =
     floor(((v - lo).cast("long") * ((1L << Bits) - 1)) /
       greatest((hi - lo).cast("long"), lit(1L))).cast("long")
 

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ingest.{CasesIngest, GeoExtend, GeoResolver, SourceSpec}
+import graft.ingest.{CasesIngest, GeoExtend, SourceSpec}
 
 /** Correctness queries over the EP1 ingestion pipeline
   * ([[graft.ingest.CasesIngest]]); the DuckDB oracles replicate the whole
@@ -162,13 +162,12 @@ object Ingestion {
   /** P5 tail end-to-end: ingest a source whose locations are partly
     * unknown to the geo dim, with the [[GeoExtend]] dim-extension job in
     * between — previously-dropped rows (Atlantis, Narnia) resolve on the
-    * re-ingest; names the resolver can't place (Mu) still drop, as does
+    * re-ingest; names the job can't place (Mu) still drop, as does
     * the World poison. The oracle replays the whole loop in SQL with the
-    * fixture resolver's formula inlined. */
+    * job's placing formula inlined. */
   def geoExtendIngest(spark: SparkSession, dir: String): DataFrame = {
     val dim = CasesIngest.geoDim(spark)
-    val ext = GeoExtend.extension(
-      spark, Seq(CasesIngest.extendSpec), dim, GeoResolver.Fixture)
+    val ext = GeoExtend.extension(spark, Seq(CasesIngest.extendSpec), dim)
     SourceSpec.ingest(spark, CasesIngest.extendSpec, GeoExtend.extendedDim(dim, ext))
       .select(
         col("location_name"), col("iso_code2"),
@@ -333,16 +332,10 @@ object Ingestion {
     val bounds = orders.agg(
       min(col("o_custkey")).as("cmin"), max(col("o_custkey")).as("cmax"),
       min(col("yd")).as("dmin"), max(col("yd")).as("dmax"))
-    // floor division via double is exact here: numerator ≤ 1.5e4·65535
-    // ≈ 9.8e8 (exact in double) and quotients are ≥ 1/d above any
-    // integer they exceed, far outside double's rounding error
-    def norm(v: Column, lo: Column, hi: Column): Column =
-      floor(((v - lo).cast("long") * ((1L << Z.Bits) - 1)) /
-        greatest(hi - lo, lit(1L))).cast("long")
     orders.crossJoin(broadcast(bounds))
       .withColumn("z", Z.zValue(
-        norm(col("o_custkey"), col("cmin"), col("cmax")),
-        norm(col("yd"), col("dmin"), col("dmax"))))
+        Z.norm(col("o_custkey"), col("cmin"), col("cmax")),
+        Z.norm(col("yd"), col("dmin"), col("dmax"))))
       .withColumn("bucket", shiftrightunsigned(col("z"), 2 * Z.Bits - 5))
       .groupBy(col("bucket"))
       .agg(

@@ -61,8 +61,8 @@ object SinkLogShim {
     * log writer already requires of this filesystem). Caller must hold
     * exclusive WRITE access (stream stopped); batch readers that
     * already planned keep working because the files they resolved stay
-    * on disk until the next compaction of the sink (or
-    * [[graft.operators.Compaction.gcUnreferenced]]) reaps them. */
+    * on disk until the next
+    * [[graft.operators.Compaction.compactSink]] of the sink reaps them. */
   def rewriteListing(spark: SparkSession, sinkDir: String,
       files: Seq[FileStatus]): Unit = {
     val entries = writeJournal(spark, sinkDir, files)

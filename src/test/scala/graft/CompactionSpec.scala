@@ -90,14 +90,16 @@ class CompactionSpec extends SparkSpec {
       s"only ${report.filesBefore} -> ${report.filesAfter} files")
     assert(contentHash(spark.read.parquet(sink)) === before, "content changed")
 
-    // replaced files still on disk (reader grace), then GC'd on demand
+    // replaced files still on disk (reader grace) until the next
+    // compaction of the sink reaps them first, keeping its own inputs
     val physical = () => new File(sink).listFiles()
       .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
     assert(physical() >= 21 + report.filesAfter.toInt, "grace files deleted too early")
-    val reaped = Compaction.gcUnreferenced(spark, sink)
-    assert(reaped >= 21, s"only $reaped reaped")
-    assert(physical() === report.filesAfter.toInt)
-    assert(contentHash(spark.read.parquet(sink)) === before, "content changed by GC")
+    val reaping = Compaction.compactSink(spark, sink)
+    assert(reaping.filesBefore === report.filesAfter)
+    assert(physical() === (report.filesAfter + reaping.filesAfter).toInt,
+      "the next compaction must reap exactly the replaced files")
+    assert(contentHash(spark.read.parquet(sink)) === before, "content changed by the reaping")
 
     // the stream RESUMES from its checkpoint: a new tick appends on top
     // of the compacted listing, nothing lost, nothing doubled
@@ -149,8 +151,16 @@ class CompactionSpec extends SparkSpec {
       .map(_.getPath.getName) === Seq(part.getName))
     assert(contentHash(spark.read.parquet(sink)) === before)
     assert(!shim.recover(spark, sink), "journal must be consumed")
-    // and gcUnreferenced now safely reaps the pre-compaction files
-    assert(Compaction.gcUnreferenced(spark, sink) >= 1)
+    // and the next compaction now safely reaps the pre-compaction
+    // files, keeping the recovered listing's file as its own grace
+    val dataFiles = () => new File(sink).listFiles().toSeq
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(_.getName).toSet
+    val unlisted = dataFiles() - part.getName
+    assert(unlisted.nonEmpty)
+    Compaction.compactSink(spark, sink): Unit
+    assert(dataFiles().contains(part.getName), "grace file deleted too early")
+    assert((dataFiles() intersect unlisted).isEmpty, "pre-compaction files not reaped")
     assert(contentHash(spark.read.parquet(sink)) === before)
   }
 }

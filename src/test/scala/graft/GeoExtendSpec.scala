@@ -1,12 +1,7 @@
 package graft
 
-import java.net.{InetSocketAddress, URLDecoder}
-import java.nio.charset.StandardCharsets
-import java.util.concurrent.atomic.AtomicInteger
-
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.functions._
-import graft.ingest.{CasesIngest, GeoExtend, GeoResolver, HttpGeoResolver, SourceSpec}
+import graft.ingest.{CasesIngest, GeoExtend, SourceSpec}
 
 /** Golden test for the P5 geocoder-tail extension job
   * (reference: flow/scripts/insert_owid.py:81-87 calls Nominatim per
@@ -14,9 +9,9 @@ import graft.ingest.{CasesIngest, GeoExtend, GeoResolver, HttpGeoResolver, Sourc
   * job between ingests — see [[GeoExtend]]).
   *
   * Fixture contamination_x.csv carries France (resolves in the base
-  * dim), Atlantis + Narnia (unknown, resolvable by the fixture
-  * resolver), Mu (unknown AND too short for the resolver — the
-  * geocode-miss branch), World (poison), and EL (alias).
+  * dim), Atlantis + Narnia (unknown, placed by the extension job),
+  * Mu (unknown AND too short to place — the geocode-miss branch),
+  * World (poison), and EL (alias).
   */
 class GeoExtendSpec extends SparkSpec {
 
@@ -38,7 +33,7 @@ class GeoExtendSpec extends SparkSpec {
   }
 
   test("extension resolves what the resolver can place; misses stay out") {
-    val ext = GeoExtend.extension(spark, Seq(spec), dim, GeoResolver.Fixture)
+    val ext = GeoExtend.extension(spark, Seq(spec), dim)
     val rows = ext.collect().map(r => r.getAs[String]("name") ->
       (r.getAs[String]("iso2"), r.getAs[Double]("lat"), r.getAs[Double]("lon"))).toMap
     assert(rows.keySet === Set("Atlantis", "Narnia")) // Mu: len 2 → miss
@@ -46,30 +41,13 @@ class GeoExtendSpec extends SparkSpec {
     assert(rows("Narnia") === (("NA", 6.0, 'N'.toInt.toDouble)))
   }
 
-  test("a rate-declaring resolver refuses multi-slot extension runs") {
-    // Pacing is JVM-wide per endpoint, but slots on different executors
-    // are different JVMs — extension() must fail loudly rather than let
-    // numSlots>1 silently violate the declared rate floor.
-    val paced = new GeoResolver {
-      override val minIntervalMs = 1000L
-      def resolve(name: String) = None
-    }
-    val e = intercept[IllegalArgumentException] {
-      GeoExtend.extension(spark, Seq(spec), dim, paced, numSlots = 2)
-    }
-    assert(e.getMessage.contains("numSlots must be 1"))
-    // unpaced resolvers keep the multi-slot path
-    GeoExtend.extension(spark, Seq(spec), dim, GeoResolver.Fixture, numSlots = 2)
-      .collect()
-  }
-
   test("re-ingest against the extended dim recovers the dropped rows") {
-    val ext = GeoExtend.extension(spark, Seq(spec), dim, GeoResolver.Fixture)
+    val ext = GeoExtend.extension(spark, Seq(spec), dim)
     val again = SourceSpec.ingest(spark, spec, GeoExtend.extendedDim(dim, ext))
       .cache()
     val names = again.select("location_name").as[String](
       org.apache.spark.sql.Encoders.STRING).collect().toSet
-    // Atlantis + Narnia now land; Mu (resolver miss) and World still drop.
+    // Atlantis + Narnia now land; Mu (a miss) and World still drop.
     assert(names === Set("France", "Greece", "Atlantis", "Narnia"))
     val atlantis = again.filter(col("location_name") === "Atlantis").collect()
     assert(atlantis.length === 1)
@@ -77,116 +55,11 @@ class GeoExtendSpec extends SparkSpec {
     assert(atlantis(0).getAs[String]("iso_code2") === "AT")
   }
 
-  test("HTTP resolver resolves end-to-end against a live Nominatim-style server") {
-    // Nominatim-shaped answers: Atlantis/Narnia place (string lat/lon +
-    // address.country_code), Mu returns a candidate WITHOUT country_code
-    // — the reference's geocode-miss branch (insert_owid.py:90-96).
-    val answers = Map(
-      "Atlantis" -> """[{"lat":"12.5","lon":"-44.25","address":{"country_code":"at"}}]""",
-      "Narnia" -> """[{"lat":"51.0","lon":"3.5","address":{"country_code":"na"}}]""",
-      "Mu" -> """[{"lat":"0.0","lon":"0.0","address":{}}]""")
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    val count = new AtomicInteger(0)
-    server.createContext("/search", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        // First request 503s to prove the retry path, like HttpFetchSpec.
-        if (count.getAndIncrement() < 1) {
-          ex.sendResponseHeaders(503, -1); ex.close(); return
-        }
-        val q = ex.getRequestURI.getQuery.split("&")
-          .map(_.split("=", 2)).collectFirst {
-            case Array("q", v) => URLDecoder.decode(v, StandardCharsets.UTF_8)
-          }.getOrElse("")
-        val body = answers.getOrElse(q, "[]").getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.add("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, body.length)
-        ex.getResponseBody.write(body); ex.close()
-      }
-    })
-    server.start()
-    try {
-      val resolver = new HttpGeoResolver(
-        s"http://127.0.0.1:${server.getAddress.getPort}/search",
-        retries = 3, backoffMs = 1)
-      val ext = GeoExtend.extension(spark, Seq(spec), dim, resolver)
-      val rows = ext.collect().map(r => r.getAs[String]("name") ->
-        (r.getAs[String]("iso2"), r.getAs[Double]("lat"), r.getAs[Double]("lon"))).toMap
-      assert(rows.keySet === Set("Atlantis", "Narnia")) // Mu: no country_code
-      assert(rows("Atlantis") === (("AT", 12.5, -44.25)))
-      assert(rows("Narnia") === (("NA", 51.0, 3.5)))
-    } finally server.stop(0)
-  }
-
-  test("HTTP resolver accepts numeric coords and treats an empty result as a miss") {
-    val answers = Map(
-      // Some Nominatim proxies serialize coords as JSON numbers, not
-      // strings — both must parse.
-      "Numville" -> """[{"lat":7.25,"lon":-3.5,"address":{"country_code":"nu"}}]""")
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/search", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val q = ex.getRequestURI.getQuery.split("&")
-          .map(_.split("=", 2)).collectFirst {
-            case Array("q", v) => URLDecoder.decode(v, StandardCharsets.UTF_8)
-          }.getOrElse("")
-        val body = answers.getOrElse(q, "[]").getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(200, body.length)
-        ex.getResponseBody.write(body); ex.close()
-      }
-    })
-    server.start()
-    try {
-      val resolver = new HttpGeoResolver(
-        s"http://127.0.0.1:${server.getAddress.getPort}/search",
-        retries = 2, backoffMs = 1)
-      assert(resolver.resolve("Numville") ===
-        Some(GeoResolver.Hit("NU", 7.25, -3.5)))
-      assert(resolver.resolve("Nowhere") === None) // empty JSON array
-    } finally server.stop(0)
-  }
-
-  test("minIntervalMs paces consecutive requests; malformed 2xx JSON fails fast") {
-    val hits = new AtomicInteger(0)
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/search", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val n = hits.incrementAndGet()
-        // Request 4+ answers HTML — the "endpoint changed under us" case.
-        val body = (if (n <= 3)
-          """[{"lat":"1.0","lon":"2.0","address":{"country_code":"xx"}}]"""
-        else "<html>maintenance</html>").getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(200, body.length)
-        ex.getResponseBody.write(body); ex.close()
-      }
-    })
-    server.start()
-    try {
-      val url = s"http://127.0.0.1:${server.getAddress.getPort}/search"
-      val polite = new HttpGeoResolver(url, retries = 2, backoffMs = 1,
-        minIntervalMs = 150)
-      val t0 = System.nanoTime()
-      (1 to 3).foreach(i => assert(polite.resolve(s"Place$i").isDefined))
-      // 3 sends, 2 enforced gaps → ≥ 300 ms wall (politeness floor).
-      assert((System.nanoTime() - t0) / 1e6 >= 300,
-        "minIntervalMs did not pace consecutive requests")
-
-      // Malformed 2xx body: fails fast (single request), never retried
-      // with backoff as if it were a transport error.
-      val blunt = new HttpGeoResolver(url, retries = 3, backoffMs = 60000)
-      val before = hits.get()
-      val t1 = System.nanoTime()
-      intercept[Exception](blunt.resolve("Anything"))
-      assert(hits.get() === before + 1, "malformed body was retried")
-      assert((System.nanoTime() - t1) / 1e6 < 10000,
-        "malformed body burned the retry backoff budget")
-    } finally server.stop(0)
-  }
-
   test("extension uids are deterministic and never collide with the dim") {
-    val ext = GeoExtend.extension(spark, Seq(spec), dim, GeoResolver.Fixture)
+    val ext = GeoExtend.extension(spark, Seq(spec), dim)
     val extNames = ext.select("name")
     assert(extNames.join(dim, extNames("name") === dim("name")).count() === 0)
-    val twice = GeoExtend.extension(spark, Seq(spec), dim, GeoResolver.Fixture)
+    val twice = GeoExtend.extension(spark, Seq(spec), dim)
     assert(ext.exceptAll(twice).count() === 0 && twice.exceptAll(ext).count() === 0)
   }
 }

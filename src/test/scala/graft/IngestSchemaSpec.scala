@@ -122,9 +122,16 @@ class IngestSchemaSpec extends SparkSpec {
     finally Serve.LakeViewNames.foreach(spark.catalog.dropTempView)
     // the compaction lists, rewrites and reaps by the decoded paths: a
     // listed file misread as unlisted would be deleted as an orphan
+    val listedNames = () =>
+      org.apache.spark.sql.graft.SinkLogShim.listedFiles(spark, sink).map(_.getPath.getName).toSet
+    val landed = listedNames()
     Compaction.compactAny(spark, sink): Unit
     assert(rows(LakeCommit.read(spark, sink)) === content)
-    assert(Compaction.gcUnreferenced(spark, sink) >= 1)
+    val compacted = listedNames()
+    Compaction.compactAny(spark, sink): Unit
+    val onDisk = new java.io.File(sink).list().toSet
+    assert(compacted.subsetOf(onDisk), "grace files deleted too early")
+    assert((landed intersect onDisk).isEmpty, "replaced files not reaped")
     assert(rows(spark.read.parquet(sink)) === content)
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.regex.Pattern
 
 import scala.jdk.CollectionConverters._
 
@@ -135,6 +136,24 @@ class SourceRulesSpec extends AnyFunSuite {
       "graft/Schedule.scala", "graft/Serve.scala")
     offending("read\\.parquet\\(")((f, _) =>
       !(lakeCode(f) || f.startsWith("graft/streaming/")))
+  }
+
+  // A checkout's absolute path baked into a default sends a run from
+  // any other checkout (a scratch copy, a benchmark checkout) to that
+  // one's files. Caught as a quoted path that starts with this
+  // checkout's root or runs into a name at a checkout's top level; a
+  // path in a comment is not quoted and stays allowed.
+  rule("no checkout paths: no literal absolute path into a checkout",
+      "resolve checkout files against System.getProperty(\"user.dir\"), " +
+        "or take them from the environment") {
+    val checkout = Paths.get("").toAbsolutePath.normalize
+    val topLevel = {
+      val ls = Files.list(checkout)
+      try ls.iterator.asScala.map(p => Pattern.quote(p.getFileName.toString)).toSeq
+      finally ls.close()
+    }
+    offending("\"" + Pattern.quote(checkout.toString) + "|" +
+      "\"(/[^/\"\\s]+)+/(" + topLevel.mkString("|") + ")[/\"]")()
   }
 
   // The benchmark and a deployment launch Serve with a plain `java`, so
